@@ -263,8 +263,9 @@ def artifact_cache_dir(sf_dir: str, kind: str, table: str) -> str:
     second (or with preserved mtimes but different bytes) must miss the
     cache; nanosecond stamps plus the byte count make a silent collision
     require an identical-length rewrite inside one filesystem timestamp
-    quantum. One helper for every artifact kind (it previously lived as
-    two near-identical copies in pipeline_extras and round9_extras)."""
+    quantum. Every query-side artifact cache keys through this one
+    helper (IVF/band/winnow/text indexes, bucketed and partitioned
+    table twins, models, logs)."""
     import hashlib
     import tempfile
 

@@ -44,7 +44,7 @@ AFFECTED SUBGRAPH:
   tombstones that latest-wins serves as absence.
 
 Registered query twin: ``dedup_cluster_incremental``
-(queries/round11_extras.py) replays the SimHash pair set in three
+(queries/dedup_clusters.py) replays the SimHash pair set in three
 batches through this state machine and must hash-match the
 dedup_cluster_cc oracle — the incremental engine is judged against the
 trusted full-recompute recursive CTE.

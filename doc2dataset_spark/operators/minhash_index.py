@@ -21,7 +21,7 @@ new-vs-corpus dedup is the cross-batch band join, never a rebuild.
 Band hashes are the exact expressions of the query surface
 (``dedup.bands_of``), so index-served candidates — and therefore the
 verified output — are hash-identical to the in-query path (locked by
-the shared oracle in round9_extras.dedup_minhash_indexed and
+the shared oracle in dedup_detectors.dedup_minhash_indexed and
 tests/test_minhash_index.py).
 """
 

@@ -26,7 +26,7 @@ Complements embedding_mrl_recall: the prefix truncation is what you get
 for free from MRL-trained embeddings; this is the trained linear
 compressor for embeddings that were NOT trained matryoshka-style
 (measured on the fixture: recall@3 0.411 for PCA-32 vs 0.226 for
-prefix-32). ann_pca_recall (queries/round11_extras.py) serves the
+prefix-32). ann_pca_recall (queries/ann_extras.py) serves the
 comparison as a registry row.
 """
 

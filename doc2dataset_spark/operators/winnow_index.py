@@ -29,7 +29,7 @@ write of a new batch_id partition — idempotent per batch_id, existing
 partitions untouched — and new-vs-corpus dedup joins the new batch's
 postings (a partition-pruned read) against batches <= the requested one.
 
-Fingerprints are the exact ``round9_extras.winnow_fingerprints``
+Fingerprints are the exact ``dedup_detectors.winnow_fingerprints``
 expressions, so index-served pairs are hash-identical to the in-query
 path (locked by the shared oracle on dedup_winnow_indexed and
 tests/test_winnow_index.py).
@@ -42,7 +42,7 @@ import posixpath
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from doc2dataset_spark.queries.round9_extras import (
+from doc2dataset_spark.queries.dedup_detectors import (
     WINNOW_MAXDF,
     WINNOW_THRESHOLD,
     WINNOW_W,

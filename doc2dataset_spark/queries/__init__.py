@@ -7,6 +7,14 @@ registry load rather than silently shrink the query surface the driver
 gates on. Optional heavy codecs (PIL, fitz, pycld2 …) are import-gated at
 CALL time inside operators/, never at module import time — keep it that
 way when adding modules.
+
+Registry order is data, not import order: the round driver snapshots
+only the FIRST 50 registered queries into CORRECTNESS_r{N}.json, and
+that set is ``gate.FROZEN_GATE``. Once every module below is imported,
+the registry is rebuilt as FROZEN_GATE followed by every other query in
+import order. To add a query, register it in its family's module (or a
+new module imported below); it lands in the tail. To change which
+queries the driver records, edit FROZEN_GATE in gate.py — nothing else.
 """
 
 from doc2dataset_spark.queries.core import (  # noqa: F401
@@ -14,547 +22,62 @@ from doc2dataset_spark.queries.core import (  # noqa: F401
     QuerySpec,
     all_oracles,
     all_queries,
-    gate_swap,
     query,
 )
 
-# Each import registers its queries. ORDER IS LOAD-BEARING: the round
-# driver snapshots only the FIRST 50 registered queries into
-# CORRECTNESS_r{N}.json, so the scale-critical / oracle-backed surface
-# must register first. Layout (counts as of round 3):
-#   dedup(9) similarity(2) scale(2) extras(11) textops(6) ml(1)
-#   udfs(6) windows(13)            -> exactly 50 driver-gated rows
-#   relational(21)                 -> q01-q19: trivially SQL-equivalent,
-#                                     driver-green in rounds 1 and 2,
-#                                     verified locally via scripts/check_oracle.py
-#   pipeline_demo(1) multimodal_demo(3)  -> rows-only demos, no oracle
-#   ann_extras(1)                        -> post-gate oracle-backed extras
-#   pipeline_extras(11) analytics_extras(9)  -> round-5 training-pipeline +
-#                                     analytics ops, all post-gate, all
-#                                     oracle-backed (check_oracle.py green
-#                                     at sf0.001/0.01/0.1)
-#   curation_extras(+text_gopher_rules r6)
-#   sql_surface(8) corpus_extras(7 + r6 PQ rerank pair)  -> modern-SQL
-#                                     dialect surface (recursive CTE,
-#                                     LATERAL, SQL UDF, LISTAGG, GROUPING
-#                                     SETS, relational CMS) + substring
-#                                     rewrite / trained PQ / grouped-agg
-#                                     UDAF — post-gate, oracle-backed
-# If you ADD a query, append its module (or register late in an existing
-# module) and re-check `python scripts/registry_order.py` so the gate set
-# doesn't silently shift — that displacement is exactly what round 2 was
-# dinged for.
-from doc2dataset_spark.queries import dedup  # noqa: F401, E402
-from doc2dataset_spark.queries import similarity  # noqa: F401, E402
-from doc2dataset_spark.queries import scale  # noqa: F401, E402
-from doc2dataset_spark.queries import extras  # noqa: F401, E402
-from doc2dataset_spark.queries import textops  # noqa: F401, E402
-from doc2dataset_spark.queries import ml  # noqa: F401, E402
-from doc2dataset_spark.queries import udfs  # noqa: F401, E402
-from doc2dataset_spark.queries import windows  # noqa: F401, E402
-from doc2dataset_spark.queries import relational  # noqa: F401, E402
-from doc2dataset_spark.queries import pipeline_demo  # noqa: F401, E402
-from doc2dataset_spark.queries import multimodal_demo  # noqa: F401, E402
-from doc2dataset_spark.queries import ann_extras  # noqa: F401, E402
-from doc2dataset_spark.queries import pipeline_extras  # noqa: F401, E402
-from doc2dataset_spark.queries import analytics_extras  # noqa: F401, E402
-from doc2dataset_spark.queries import curation_extras  # noqa: F401, E402
-from doc2dataset_spark.queries import sql_surface  # noqa: F401, E402
-from doc2dataset_spark.queries import corpus_extras  # noqa: F401, E402
-from doc2dataset_spark.queries import search_extras  # noqa: F401, E402
-
-# round-7 modules (all post-gate, registration order is append-only):
-# session 1 — multi-table OR-amplified hyperplane LSH + recall eval;
-# TPC-H Q10/Q18, percentile-cutoff curriculum buckets, source-overlap
-# matrix, language fertility, cluster-balanced sampling, index-served
-# IVF probe, salted replicated join, hybrid RRF.
-# session 2 — TPC-H completion (tpch_more Q4..Q22 adaptations,
-# tpch_partsupp Q2/Q11/Q16/Q20 over derived partsupp), bucketed
-# co-located join, CDC merge + MV refresh, dynamic partition pruning,
-# bottom-k/KMV sketch, RFM + basket-lift retail analytics.
-from doc2dataset_spark.queries import ann_multilsh  # noqa: F401, E402
-from doc2dataset_spark.queries import round7_extras  # noqa: F401, E402
-from doc2dataset_spark.queries import tpch_more  # noqa: F401, E402
-from doc2dataset_spark.queries import bucketed_join  # noqa: F401, E402
-from doc2dataset_spark.queries import maintenance_ops  # noqa: F401, E402
-from doc2dataset_spark.queries import dpp_join  # noqa: F401, E402
-from doc2dataset_spark.queries import tpch_partsupp  # noqa: F401, E402
-from doc2dataset_spark.queries import sketch_sample  # noqa: F401, E402
-from doc2dataset_spark.queries import retail_analytics  # noqa: F401, E402
-
-# Round-6 deliberate gate edit: the two rows-only sketches can never
-# hash-match in the driver's CORRECTNESS file (they read as `err` to any
-# outside auditor), so swap them out of the first-50 snapshot for two
-# oracle-backed queries. Their accuracy stays pytest-asserted
-# (tests/test_registry_smoke.py ≤5% envelopes); the promoted pair gains a
-# driver-recorded hash row. Pinned by tests/test_registry_gate.py.
-gate_swap(
-    promote=["q37_recursive_cte", "q40_listagg"],
-    demote=["agg_percentiles_approx", "q16c_hll_sketch"],
+# Each import registers its queries (a module may pull in the modules it
+# shares helpers with first; the tail order is whatever registration
+# order results).
+from doc2dataset_spark.queries import (  # noqa: F401, E402
+    dedup,
+    similarity,
+    scale,
+    extras,
+    textops,
+    ml,
+    udfs,
+    windows,
+    relational,
+    pipeline_demo,
+    multimodal_demo,
+    ann_extras,
+    pipeline_extras,
+    analytics_extras,
+    curation_extras,
+    sql_surface,
+    corpus_extras,
+    search_extras,
+    ann_multilsh,
+    tpch_more,
+    bucketed_join,
+    maintenance_ops,
+    dpp_join,
+    tpch_partsupp,
+    sketch_sample,
+    retail_analytics,
+    timeseries_extras,
+    cbo_join,
+    prefix_join,
+    graph_extras,
+    text_models,
+    quality_classifier,
+    dedup_detectors,
+    dedup_clusters,
+    timeseries_asof,
+    timeseries_hypertable,
 )
-
-# Round-7 deliberate gate rotation (round-6 verdict, Next round #2):
-# 8 windows-surface rows have been gate-green since round 1 — their
-# continued presence in the external snapshot proves nothing new, while
-# the round-5/6 flagship ops (TPC-H Q3/Q5, lateral top-k, BM25, the
-# substring-rewrite dedup, trained PQ search, the 4-stage curation
-# chain, Misra-Gries heavy hitters) have never had a driver-recorded
-# hash row. Rotate them in; the demoted rows keep full coverage via the
-# local mirror (scripts/driver_mirror.py) + pytest. Pinned by
-# tests/test_registry_gate.py.
-gate_swap(
-    promote=[
-        "q45_tpch_q3",
-        "q46_tpch_q5",
-        "q38_lateral_topk",
-        "search_bm25_topk",
-        "dedup_substring_rewrite",
-        "sim_ann_pq",
-        "curate_corpus",
-        "text_heavy_hitters",
-    ],
-    demote=[
-        "q20_ranking_windows",
-        "q21_analytic_windows",
-        "q23_set_ops",
-        "q24_correlated_subquery",
-        "q25_not_exists",
-        "q26_explode",
-        "q27_array_fns",
-        "q28_json_fns",
-    ],
-)
-
-# Round-7 second rotation (same rationale): the session's new flagships
-# — two join-heaviest TPC-H shapes, the zero-shuffle bucketed join, and
-# the two dataset-maintenance ops — get driver-recorded hash rows;
-# five more round-1-stable windows rows move to the tail where the
-# degated-parity pytest and the mirror keep hash-checking them.
-gate_swap(
-    promote=[
-        "q55_tpch_q7",
-        "q56_tpch_q8",
-        "join_bucketed_colocated",
-        "merge_cdc_apply",
-        "rollup_incremental_merge",
-    ],
-    demote=[
-        "q22_frame_windows",
-        "q29_pivot",
-        "q30_time_bucket",
-        "q31_sessionize",
-        "q32_asof_join",
-    ],
-)
-from doc2dataset_spark.queries import timeseries_extras  # noqa: F401, E402
-from doc2dataset_spark.queries import cbo_join  # noqa: F401, E402
-
-# Gate rotation #3 (round-7 session 4): surface this session's flagships
-# in the driver's externally-recorded 50-row snapshot — the CBO reorder
-# lifecycle and the two bit-exact time-series regularizers — in place of
-# three dialect rows that have been gate-green since round 3 and remain
-# hash-checked by the degated-parity pytest and the mirror.
-gate_swap(
-    promote=[
-        "join_cbo_reordered",
-        "events_resample_interp",
-        "events_ewma",
-    ],
-    demote=[
-        "q28b_variant",
-        "q17b_cube",
-        "q29b_unpivot",
-    ],
-)
-
-# round-7 session-4 tail: drift monitoring + lambda surface (post-gate)
-from doc2dataset_spark.queries import round7d_extras  # noqa: F401, E402
-
-# Gate rotation #4 (round-7 session 4): surface the PSI drift monitor
-# and the lambda-fold battery in the driver's 50-row snapshot, in place
-# of two relational rows stable since round 2 (both remain hash-checked
-# by the degated-parity pytest and the mirror).
-gate_swap(
-    promote=["quality_psi_drift", "q74_higher_order_fns"],
-    demote=["fuzzy_levenshtein_pairs", "sample_stratified"],
-)
-
-# round-7 session-5 tail: prefix-filtered similarity join (post-gate)
-from doc2dataset_spark.queries import prefix_join  # noqa: F401, E402
-from doc2dataset_spark.queries import graph_extras  # noqa: F401, E402
-from doc2dataset_spark.queries import round7e_extras  # noqa: F401, E402
-from doc2dataset_spark.queries import round7f_extras  # noqa: F401, E402
-from doc2dataset_spark.queries import round7g_extras  # noqa: F401, E402
-
-# Gate rotation #5 (round-7 sessions 5-7): surface the newest flagship
-# families in the driver's 50-row snapshot — the PPJoin prefix join, the
-# two near-dup-graph analytics (clustering coefficient, k-core), the
-# temperature mixture sampler, and the model-driven curation quartet
-# (bigram-LM perplexity, DSIR weights, in-engine LR classifier training,
-# BPE merge training). Demoted: four textops rows gate-green since round
-# 1 (the promoted set keeps text analysis over-represented in the gate)
-# and four of the six q36 UDF-surface rows (pandas_udf +
-# apply_in_pandas stay as the UDF representatives). All demoted rows
-# remain hash-checked by the degated-parity pytest and the mirror.
-gate_swap(
-    promote=[
-        "dedup_jaccard_prefix",
-        "graph_clustering_coef",
-        "graph_kcore",
-        "sample_temperature_mix",
-        "text_lm_perplexity",
-        "quality_dsir_weights",
-        "quality_classifier_lr",
-        "text_bpe_merges",
-    ],
-    demote=[
-        "q35_term_freq",
-        "text_token_count",
-        "text_langid",
-        "text_fingerprint",
-        "q36_map_in_pandas",
-        "q36_explode_udtf",
-        "q36_python_udtf",
-        "q36_map_in_arrow",
-    ],
-)
-
-# Gate rotation #6 (round 9): surface the two join-heaviest TPC-H shapes
-# (Q21 4-way + double-correlated exists/not-exists, Q2 correlated-min
-# over derived partsupp), the PPJoin blocking-contract stats row, the
-# OR-amplified multi-table LSH, and the corpus profiler — none of which
-# has ever had a driver-recorded hash row — over five rows gate-green
-# since round 1 (all remain hash-checked by the degated-parity pytest
-# and the mirror). The full rotation rationale and the resulting frozen
-# list live in queries/gate.py (single source; import-time asserted).
-gate_swap(
-    promote=[
-        "q69_tpch_q21",
-        "q64_tpch_q2",
-        "dedup_prefix_stats",
-        "sim_ann_hyperplane_multi",
-        "profile_documents",
-    ],
-    demote=[
-        "agg_percentiles",
-        "sample_deterministic",
-        "q40_listagg",
-        "text_quality_score",
-        "text_boilerplate",
-    ],
-)
-
-# round-9 tail: BPE encode (train-then-apply lifecycle) + model-scored
-# curation (post-gate, oracle-backed)
-from doc2dataset_spark.queries import round9_extras  # noqa: E402
-
-# Gate rotation #7 (round 10): surface the round-9 flagship operators in
-# the driver's externally-recorded 50-row snapshot — the applied
-# tokenizer, the model-scored curation chain, the index-served LSH, the
-# winnowing detector, and its precision/recall evaluation row — over
-# five rows gate-green since round 1 (all remain hash-checked by the
-# degated-parity pytest and the mirror; the demoted SimHash detectors
-# additionally gain the post-gate dedup_simhash_recall end-to-end judge).
-# Full rationale + the resulting frozen list live in queries/gate.py.
-gate_swap(
-    promote=[
-        "text_bpe_encode",
-        "curate_corpus_scored",
-        "dedup_minhash_indexed",
-        "dedup_winnow",
-        "dedup_winnow_recall",
-    ],
-    demote=[
-        "dedup_exact",
-        "dedup_simhash",
-        "dedup_simhash_pairs",
-        "dedup_ngram_containment",
-        "sim_cosine_topk",
-    ],
-)
-
-# round-10 tail: detector-evaluation completion (SimHash + SemDeDup cell
-# precision/recall rows) + the winnowing warm path (post-gate,
-# oracle-backed)
-from doc2dataset_spark.queries import round10_extras  # noqa: E402
-
-# Gate rotation #8 (round 11): driver-record the round-10 operators —
-# the two detector evaluations that completed the precision/recall
-# family (SimHash hamming-band and SemDeDup cell blocking, each judged
-# against its exact ground truth), the index-served winnowing twin, and
-# the train/holdout leakage audit — over four rows whose families keep
-# other gate representation (dedup_prefix_stats for PPJoin, five TPC-H
-# joins, curate_corpus for sampling/curation) or that have been
-# gate-green since round 7 with no new information (q38_lateral_topk,
-# text_heavy_hitters). All demoted rows remain hash-checked by the
-# degated-parity pytest sweep and scripts/driver_mirror.py. Full
-# rationale + the resulting frozen list live in queries/gate.py.
-gate_swap(
-    promote=[
-        "dedup_simhash_recall",
-        "dedup_embedding_cell_recall",
-        "dedup_winnow_indexed",
-        "curate_split_leakage",
-    ],
-    demote=[
-        "dedup_jaccard_prefix",
-        "q38_lateral_topk",
-        "text_heavy_hitters",
-        "q55_tpch_q7",
-    ],
-)
-
-# round-11 tail: detection -> decision operators (cluster retention
-# manifest, CCNet perplexity strata, Matryoshka truncated-dim recall) —
-# post-gate, oracle-backed
-from doc2dataset_spark.queries import round11_extras  # noqa: E402
-
-# Gate rotation #9 (round 11, second rotation this round — the r7
-# precedent of multiple rotations per round): give the round-11
-# flagship operators externally-recorded correctness rows in THIS
-# round's snapshot rather than next round's — the retention manifest,
-# the incremental cluster engine judged against the full-recompute
-# oracle, the CCNet stratifier, and the Matryoshka recall row — over
-# four rows whose families keep stronger gate representation:
-# sample_temperature_mix (sampling keeps curate_corpus + the promoted
-# ccnet policy row), graph_clustering_coef (graph keeps graph_kcore),
-# events_resample_interp (events keeps events_ewma), text_bpe_merges
-# (the tokenizer lifecycle keeps text_bpe_encode, whose oracle embeds
-# the merge training end-to-end). All demoted rows stay hash-checked by
-# the degated-parity pytest sweep and scripts/driver_mirror.py.
-gate_swap(
-    promote=[
-        "dedup_cluster_keep_best",
-        "dedup_cluster_incremental",
-        "curate_ccnet_buckets",
-        "embedding_mrl_recall",
-    ],
-    demote=[
-        "sample_temperature_mix",
-        "graph_clustering_coef",
-        "events_resample_interp",
-        "text_bpe_merges",
-    ],
-)
-
-# round-12 tail: as-of joins (backward attribution + tolerance report,
-# oracle = DuckDB's native ASOF LEFT JOIN) and Z-order layout keys —
-# post-gate, oracle-backed
-from doc2dataset_spark.queries import round12_extras  # noqa: E402
-
-# Gate rotation #10 (round 12): driver-record the round-11 second wave —
-# the warm state-served retention manifest (shares the keep_best oracle
-# VERBATIM, so the gate now proves warm == cold externally), the
-# per-source dedup health report, and the token-budgeted mixture
-# selector — over three rows whose families keep stronger gate
-# representation: curate_corpus (curation keeps curate_corpus_scored,
-# whose oracle embeds the same 5-stage chain plus the model gate, plus
-# ccnet/split_leakage), q45_tpch_q3 (TPC-H keeps its four join-heaviest
-# gated shapes: Q21, Q2, Q5, Q8), text_lm_perplexity (the bigram-LM NLL
-# scoring is embedded end-to-end in curate_ccnet_buckets' gated oracle).
-# All demoted rows stay hash-checked by the degated-parity pytest sweep
-# and scripts/driver_mirror.py.
-gate_swap(
-    promote=[
-        "dedup_keep_best_incremental",
-        "dedup_cluster_stats",
-        "sample_token_budget",
-    ],
-    demote=[
-        "curate_corpus",
-        "q45_tpch_q3",
-        "text_lm_perplexity",
-    ],
-)
-
-# Gate rotation #11 (round 12, second rotation this round): driver-record
-# the round-12 operators in THIS round's snapshot — the linear-state
-# AS-OF carry judged against DuckDB's NATIVE ASOF LEFT JOIN (the one
-# oracle that is itself a real ASOF engine), the as-of + tolerance
-# attribution report on the same carry, and the Morton layout keys (the
-# OPTIMIZE ZORDER primitive, oracle-backed since round 5 but never
-# driver-recorded; its file-skipping claim is measured by
-# tests/test_pipeline_extras.py on real layouts) — over
-# events_ewma (the events family upgrades its slot to the as-of pair;
-# the EWMA fold stays pytest-pinned by its reference-fold identities),
-# q37_recursive_cte (the recursive-CTE oracle shape stays gated inside
-# dedup_cluster_cc and the cluster family's closure oracles), and
-# profile_documents (corpus profiling is gate-represented by
-# dedup_cluster_stats' per-source health report). All demoted rows stay
-# hash-checked by the degated-parity pytest sweep and
-# scripts/driver_mirror.py.
-gate_swap(
-    promote=[
-        "events_asof_join",
-        "events_asof_tolerance",
-        "layout_zorder",
-    ],
-    demote=[
-        "events_ewma",
-        "q37_recursive_cte",
-        "profile_documents",
-    ],
-)
-
-# round-13 tail: as-of contract completion (strict matches judged
-# against DuckDB's native strict ASOF; the bucketed forward carry
-# sharing the plain forward oracle verbatim) — post-gate, oracle-backed
-from doc2dataset_spark.queries import round13_extras  # noqa: E402
-
-# Gate rotation #12 (round 13, VERDICT r12 Next-round #1): driver-record
-# the round-12 flagships that were mirror-green but absent from the
-# frozen 50 — the two-sided nearest as-of, the forward as-of (next-event
-# attribution), and the hypertable continuous aggregate (hour→day→month
-# re-aggregation proven lossless against direct-from-raw oracles) — over
-# three rows whose families keep stronger gate representation:
-# dedup_winnow_recall (the detector-evaluation family keeps
-# dedup_simhash_recall + dedup_embedding_cell_recall gated; winnowing
-# keeps dedup_winnow + dedup_winnow_indexed), sim_ann_pq (ANN keeps
-# sim_ann_hyperplane, sim_ann_ivf, sim_ann_hyperplane_multi gated; PQ
-# stays in the bench HEADLINE and the mirror), rollup_incremental_merge
-# (the rollup family UPGRADES its slot to the hypertable cagg, which
-# embeds the same partial-merge refresh across three granularities).
-# All demoted rows stay hash-checked by the degated-parity pytest sweep
-# and scripts/driver_mirror.py.
-gate_swap(
-    promote=[
-        "events_asof_nearest",
-        "events_asof_forward",
-        "events_hypertable_rollup",
-    ],
-    demote=[
-        "dedup_winnow_recall",
-        "sim_ann_pq",
-        "rollup_incremental_merge",
-    ],
-)
-
-# Gate rotation #13 (round 13, second rotation this round — the r11/r12
-# same-round-promotion precedent): driver-record the round-13 flagships
-# in THIS round's snapshot — the strict as-of judged against DuckDB's
-# native strict ASOF, the bucketed forward carry sharing the plain
-# forward oracle verbatim (gate proves bucketed == plain == real ASOF
-# engine), and the incremental hypertable cagg + its compacted log
-# (both sharing the direct-from-raw rollup oracle verbatim: fold ==
-# recompute, compaction invisible) — over four rows whose families keep
-# stronger gate representation (see gate.py rotation log r13 #13). All
-# demoted rows stay hash-checked by the degated-parity pytest sweep and
-# scripts/driver_mirror.py.
-gate_swap(
-    promote=[
-        "events_asof_strict",
-        "rollup_hypertable_incremental",
-        "events_asof_forward_bucketed",
-        "rollup_hypertable_compacted",
-    ],
-    demote=[
-        "events_asof_tolerance",
-        "dedup_substring_rewrite",
-        "quality_psi_drift",
-        "curate_split_leakage",
-    ],
-)
-
-# round-14 tail: late-data handling for the incremental cagg (the
-# watermarked ingest judged by an out-of-order replay against the
-# direct-from-raw oracle; the sealed-prefix finality surface judged
-# against the oracle's own end-≤-watermark filter)
-from doc2dataset_spark.queries import round14_extras  # noqa: E402
-
-# Gate rotation #14 (round 14): driver-record the hypertable lifecycle's
-# completion — the time-travel × incremental-cagg composition the r13
-# verdict asked for (rollup_hypertable_asof, mirror-green in r13 but
-# absent from the frozen 50), the watermarked late-data replay sharing
-# the direct-from-raw rollup oracle VERBATIM (rollup_hypertable_late),
-# and the sealed-prefix finality surface with its own end-≤-watermark
-# oracle (rollup_hypertable_final) — over three rows whose contracts
-# keep externally-recorded twins: events_hypertable_rollup's SQL IS the
-# shared oracle the gated incremental/late rows still hash against;
-# events_asof_forward's oracle is shared VERBATIM by the gated
-# events_asof_forward_bucketed; dedup_winnow_indexed's family keeps
-# dedup_winnow gated. All demoted rows stay hash-checked by the
-# degated-parity pytest sweep and scripts/driver_mirror.py. Full
-# rationale in queries/gate.py's rotation log.
-gate_swap(
-    promote=[
-        "rollup_hypertable_asof",
-        "rollup_hypertable_late",
-        "rollup_hypertable_final",
-    ],
-    demote=[
-        "events_hypertable_rollup",
-        "events_asof_forward",
-        "dedup_winnow_indexed",
-    ],
-)
-
-# Gate rotation #15 (round 15, r14 verdict Next #1): driver-record the
-# round-14 mirror-only trio so EVERY round-14 operator has external
-# evidence — the bucket="auto" plan chooser (sharing events_asof_join's
-# native-ASOF oracle VERBATIM, budget forced low so the gate judges the
-# BUCKETED branch of the CBO decision), the gapfill+LOCF serve from the
-# persisted cagg, and the dead-letter drop mode (kept set stated as a
-# constant oracle predicate) — over three rows gate-green since rounds
-# 7-9 whose families keep stronger gate representation (see gate.py
-# rotation log r15 #15). All demoted rows stay hash-checked by the
-# degated-parity pytest sweep and scripts/driver_mirror.py.
-gate_swap(
-    promote=[
-        "events_asof_auto",
-        "rollup_hypertable_gapfill",
-        "rollup_hypertable_deadletter",
-    ],
-    demote=[
-        "q74_higher_order_fns",
-        "q56_tpch_q8",
-        "join_bucketed_colocated",
-    ],
-)
-
-# round-15 tail: right-to-be-forgotten for the hypertable cagg (lawful
-# erasure of a cohort from a watermark-sealed log, hash-matched to the
-# direct-from-raw oracle over the post-deletion corpus; the persisted
-# seal-audit journal hash-matched to the cohort's own predicate)
-from doc2dataset_spark.queries import round15_extras  # noqa: E402
-
-# Gate rotation #16 (round 15, after the RTBF build — the same-round
-# promotion precedent of r11/r12/r13): every round-15 operator ships
-# with driver-recorded evidence in its own round. The RTBF trio
-# (post-deletion serve / seal-audit journal / audited sealed prefix)
-# and the counter-driven autocompact row (sharing the rollup oracle
-# VERBATIM over a log the cadence actually reshaped) promote over four
-# rows whose families keep gated twins — notably
-# rollup_hypertable_compacted, whose compaction-invisibility claim
-# autocompact judges as a strict superset with the SAME oracle. Full
-# rationale in queries/gate.py's rotation log r15 #16.
-gate_swap(
-    promote=[
-        "rollup_hypertable_autocompact",
-        "rollup_hypertable_rtbf",
-        "rollup_hypertable_rtbf_audit",
-        "rollup_hypertable_rtbf_final",
-    ],
-    demote=[
-        "rollup_hypertable_compacted",
-        "dedup_prefix_stats",
-        "dedup_cluster_stats",
-        "events_asof_strict",
-    ],
-)
-
-# Post-rotation invariant: the registry's first-50 must equal the frozen
-# contract in gate.py. Asserted here (import time) in addition to the
-# pytest pin so any drift crashes every entry point, not just the suite.
-from doc2dataset_spark.queries.gate import (  # noqa: E402
-    DRIVER_GATE_SIZE,
-    FROZEN_GATE,
-    MUST_BE_GATED,
-)
+from doc2dataset_spark.queries.gate import FROZEN_GATE  # noqa: E402
 
 # Explicit raise, not assert: `python -O` strips asserts, which would
-# silently disable the one invariant this block exists to enforce.
-if list(REGISTRY)[:DRIVER_GATE_SIZE] != FROZEN_GATE:
+# silently disable the one invariant the gate rests on.
+_unregistered = [n for n in FROZEN_GATE if n not in REGISTRY]
+if _unregistered:
     raise RuntimeError(
-        "registry first-50 drifted from queries/gate.py FROZEN_GATE — "
-        "update the gate_swap calls and gate.py together in the same commit"
+        f"queries/gate.py FROZEN_GATE names unregistered queries: "
+        f"{_unregistered}"
     )
+_ordered = {n: REGISTRY[n] for n in FROZEN_GATE}
+_ordered.update(REGISTRY)
+REGISTRY.clear()
+REGISTRY.update(_ordered)
+del _ordered, _unregistered

@@ -22,6 +22,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from doc2dataset_spark.queries.core import query
+from doc2dataset_spark.queries.pipeline_extras import HEAD_WORDS
 from doc2dataset_spark.queries.textops import _DTOKS, _TOKS
 from doc2dataset_spark.session import load_table
 
@@ -1111,5 +1112,312 @@ def events_funnel_windowed(spark, sf_dir):
                 / F.col("n_viewed"),
                 4,
             ).alias("conversion"),
+        )
+    )
+
+
+# ---------------------------------------------------------------------------
+# corpus accounting: source overlap, language fertility, profiling
+# ---------------------------------------------------------------------------
+@query(
+    "corpus_source_overlap",
+    oracle=f"""
+    WITH fp AS (
+      SELECT DISTINCT
+             md5(array_to_string({_DTOKS}[1:{HEAD_WORDS}], ' ')) AS fp,
+             source
+      FROM documents WHERE len({_DTOKS}) > 0
+    )
+    SELECT a.source AS source_a, b.source AS source_b,
+           count(*)::BIGINT AS shared_heads
+    FROM fp a JOIN fp b ON a.fp = b.fp AND a.source < b.source
+    GROUP BY a.source, b.source
+    """,
+    tags=("dedup", "documents", "accounting"),
+)
+def corpus_source_overlap(spark, sf_dir):
+    """Cross-source contamination matrix: for every source pair, how
+    many distinct head-fingerprints they share — the measurement that
+    decides cross-source dedup priorities (dedup_cross_source) and
+    flags a source as a re-crawl of another.
+
+    Scale shape: fingerprints are row-local md5s; the distinct
+    (fp, source) frame is corpus-bounded; the pair join is an equi-join
+    on fp whose per-key fan-out is bounded by the source count (≤ S rows
+    per fingerprint after distinct), so worst-case join output is
+    S²/2 per fingerprint — a parameter, not data."""
+    fp = (
+        load_table(spark, sf_dir, "documents")
+        .filter(F.size(F.expr(_TOKS)) > 0)
+        .select(
+            F.md5(
+                F.expr(f"array_join(slice({_TOKS}, 1, {HEAD_WORDS}), ' ')")
+            ).alias("fp"),
+            "source",
+        )
+        .distinct()
+    )
+    a = fp.alias("a")
+    b = fp.select(
+        F.col("fp").alias("fp_b"), F.col("source").alias("source_b")
+    )
+    return (
+        a.join(
+            b,
+            (F.col("fp") == F.col("fp_b"))
+            & (F.col("source") < F.col("source_b")),
+        )
+        .groupBy(F.col("source").alias("source_a"), "source_b")
+        .agg(F.count("*").alias("shared_heads"))
+    )
+
+
+@query(
+    "text_lang_fertility",
+    oracle=f"""
+    SELECT lang,
+           count(*)::BIGINT AS n_docs,
+           sum(len({_DTOKS}))::BIGINT AS n_tokens,
+           sum(n_chars)::BIGINT AS total_chars,
+           round(sum(n_chars)::DOUBLE
+                 / greatest(sum(len({_DTOKS})), 1), 4) AS chars_per_token
+    FROM documents
+    GROUP BY lang
+    """,
+    tags=("text", "documents", "accounting"),
+)
+def text_lang_fertility(spark, sf_dir):
+    """Per-language tokenizer-fertility accounting: docs, tokens, chars,
+    and chars/token per language — the table that calibrates per-language
+    token budgets (fertility differences are why 'equal bytes' is not
+    'equal tokens' across languages).
+
+    Scale shape: one map-side-combinable aggregate keyed by lang (all
+    inputs integral, ratio derived post-agg from exact sums — bit-equal
+    on both engines)."""
+    d = load_table(spark, sf_dir, "documents")
+    return d.groupBy("lang").agg(
+        F.count("*").alias("n_docs"),
+        F.sum(F.size(F.expr(_TOKS))).cast("bigint").alias("n_tokens"),
+        F.sum("n_chars").cast("bigint").alias("total_chars"),
+        F.round(
+            F.sum("n_chars").cast("double")
+            / F.greatest(F.sum(F.size(F.expr(_TOKS))), F.lit(1)),
+            4,
+        ).alias("chars_per_token"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# one-pass column profiling (the SUMMARIZE / data-profiling workload)
+# ---------------------------------------------------------------------------
+_PROFILE_COLS = ["doc_id", "lang", "source", "n_chars"]
+
+
+@query(
+    "profile_documents",
+    oracle="\n    UNION ALL\n".join(
+        f"""
+    SELECT '{c}' AS col_name,
+           count(*)::BIGINT AS n_rows,
+           (count(*) - count({c}))::BIGINT AS n_null,
+           count(DISTINCT {c})::BIGINT AS n_distinct,
+           min({c})::VARCHAR AS min_str,
+           max({c})::VARCHAR AS max_str
+    FROM documents"""
+        for c in _PROFILE_COLS
+    ),
+    tags=("quality", "documents", "profiling"),
+)
+def profile_documents(spark, sf_dir):
+    """Column profiling in ONE scan: per-column row/null/exact-distinct
+    counts and min/max (stringified for a uniform schema) — the
+    SUMMARIZE / data-contract baseline a quality dashboard reads.
+
+    Scale shape: a single wide aggregate computes every column's
+    profile in one pass (Catalyst plans the multiple exact DISTINCTs via
+    one Expand — one shuffle, rows×|cols| expanded but map-side
+    combined), then a literal-keyed stack reshapes the 1-row result into
+    one row per column — no per-column re-scan, no second pass over the
+    data. text is profiled via the quality/fertility queries instead
+    (distinct-count on a long text column is a hash of the whole corpus
+    — wasteful next to the fingerprint ops that already exist)."""
+    d = load_table(spark, sf_dir, "documents")
+    aggs = []
+    for c in _PROFILE_COLS:
+        aggs += [
+            F.count("*").alias(f"{c}__n"),
+            (F.count("*") - F.count(c)).alias(f"{c}__null"),
+            F.countDistinct(c).alias(f"{c}__dist"),
+            F.min(c).cast("string").alias(f"{c}__min"),
+            F.max(c).cast("string").alias(f"{c}__max"),
+        ]
+    wide = d.agg(*aggs)
+    stacked = wide.select(
+        F.explode(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(c).alias("col_name"),
+                        F.col(f"{c}__n").alias("n_rows"),
+                        F.col(f"{c}__null").alias("n_null"),
+                        F.col(f"{c}__dist").alias("n_distinct"),
+                        F.col(f"{c}__min").alias("min_str"),
+                        F.col(f"{c}__max").alias("max_str"),
+                    )
+                    for c in _PROFILE_COLS
+                ]
+            )
+        ).alias("p")
+    )
+    return stacked.select("p.*")
+
+
+# ---------------------------------------------------------------------------
+# event path mining: top event-type n-grams
+# ---------------------------------------------------------------------------
+PATH_N = 3  # event-type n-gram width
+PATH_TOPK = 20
+
+
+@query(
+    "events_top_paths",
+    oracle=f"""
+    WITH seq AS (
+      SELECT user_id,
+             list(event_type ORDER BY ts, event_id) AS evs
+      FROM events GROUP BY user_id
+    ), grams AS (
+      SELECT unnest(list_transform(
+               range(1, len(evs) - {PATH_N} + 2),
+               i -> array_to_string(evs[i:i + {PATH_N} - 1], '>')
+             )) AS path
+      FROM seq WHERE len(evs) >= {PATH_N}
+    )
+    SELECT path, count(*)::BIGINT AS n FROM grams
+    GROUP BY path
+    ORDER BY n DESC, path
+    LIMIT {PATH_TOPK}
+    """,
+    tags=("events", "analytics", "paths"),
+)
+def events_top_paths(spark, sf_dir):
+    """User-journey path mining: the PATH_TOPK most common length-PATH_N
+    event-type sequences across per-user ordered streams — the
+    "what do users do before X" table behind funnel design.
+
+    Scale shape: per-user state is bounded by that user's event count
+    (collect_list keyed by user_id — same bound every sessionization
+    op carries); n-grams explode row-locally from the collected array;
+    the count is map-side combinable on the path string (≤ |types|^N
+    distinct keys — a parameter); the top-k is TakeOrderedAndProject.
+    Ordering inside a user is (ts, event_id) — a total order, so both
+    engines build identical sequences."""
+    ev = load_table(spark, sf_dir, "events")
+    seq = (
+        ev.groupBy("user_id")
+        .agg(
+            F.expr(
+                "transform(array_sort(collect_list(struct(ts, event_id,"
+                " event_type))), s -> s.event_type)"
+            ).alias("evs")
+        )
+        .filter(F.size("evs") >= PATH_N)
+    )
+    grams = seq.select(
+        F.explode(
+            F.expr(
+                f"transform(sequence(0, size(evs) - {PATH_N}),"
+                f" i -> array_join(slice(evs, i + 1, {PATH_N}), '>'))"
+            )
+        ).alias("path")
+    )
+    return (
+        grams.groupBy("path")
+        .agg(F.count("*").alias("n"))
+        .orderBy(F.desc("n"), "path")
+        .limit(PATH_TOPK)
+    )
+
+
+# ---------------------------------------------------------------------------
+# corpus health report
+# ---------------------------------------------------------------------------
+@query(
+    "corpus_health_report",
+    oracle="""
+    WITH d AS (
+      SELECT doc_id, source, lang, n_chars, md5(text) AS digest
+      FROM documents
+    ), top_lang AS (
+      SELECT lang, count(*) AS n FROM d GROUP BY lang
+      ORDER BY n DESC, lang LIMIT 1
+    )
+    SELECT count(*)::BIGINT AS n_docs,
+           count(DISTINCT source)::BIGINT AS n_sources,
+           count(DISTINCT lang)::BIGINT AS n_langs,
+           round(1.0 - count(DISTINCT digest)::DOUBLE / count(*), 6)
+             AS exact_dup_rate,
+           round(SUM(CAST(n_chars AS DECIMAL(38,6)))::DOUBLE / count(*), 2)
+             AS mean_chars,
+           (SELECT lang FROM top_lang) AS top_lang,
+           round((SELECT n FROM top_lang)::DOUBLE / count(*), 4)
+             AS top_lang_share
+    FROM d
+    """,
+    tags=("curation", "documents", "reporting"),
+)
+def corpus_health_report(spark, sf_dir):
+    """The one-row corpus dashboard: volume, source/language breadth,
+    exact-digest duplicate rate, mean document length, dominant
+    language and its share — the numbers a curation run prints first,
+    composed from the registry's own primitives into a single pass plus
+    one tiny top-1 aggregate.
+
+    Scale shape: one scan feeds a global aggregate whose distinct
+    counts are exact (shuffle on each distinct key, partial-aggregated);
+    the top-language pick is a 1-row TakeOrdered over |langs| rows with
+    a name tiebreak, broadcast back. All ratios divide exact
+    counts/decimal sums in double (retention precedent)."""
+    d = load_table(spark, sf_dir, "documents").select(
+        "doc_id", "source", "lang", "n_chars", F.md5("text").alias("digest")
+    )
+    top = (
+        d.groupBy("lang")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .orderBy(F.desc("n"), "lang")
+        .limit(1)
+        .select(
+            F.col("lang").alias("top_lang"), F.col("n").alias("top_n")
+        )
+    )
+    return (
+        d.agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_docs"),
+            F.countDistinct("source").cast("bigint").alias("n_sources"),
+            F.countDistinct("lang").cast("bigint").alias("n_langs"),
+            F.round(
+                1.0
+                - F.countDistinct("digest").cast("double")
+                / F.count(F.lit(1)),
+                6,
+            ).alias("exact_dup_rate"),
+            F.round(
+                F.sum(F.col("n_chars").cast("decimal(38,6)")).cast("double")
+                / F.count(F.lit(1)),
+                2,
+            ).alias("mean_chars"),
+        )
+        .crossJoin(F.broadcast(top))
+        .select(
+            "n_docs",
+            "n_sources",
+            "n_langs",
+            "exact_dup_rate",
+            "mean_chars",
+            "top_lang",
+            F.round(
+                F.col("top_n").cast("double") / F.col("n_docs"), 4
+            ).alias("top_lang_share"),
         )
     )

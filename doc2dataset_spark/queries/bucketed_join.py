@@ -45,32 +45,15 @@ only — SURVEY §2.1 P1-P3).
 
 from __future__ import annotations
 
-import hashlib
 import os
-import posixpath
-import tempfile
 
 from pyspark.sql import functions as F
 
-from doc2dataset_spark.fsio import ensure_local_cache_dir
+from doc2dataset_spark.fsio import artifact_cache_dir, ensure_local_cache_dir
 from doc2dataset_spark.queries.core import dsum, query, sql_dsum
 from doc2dataset_spark.session import load_table
 
 N_BUCKETS = 8
-
-
-def _bkt_cache_root(sf_dir: str, table: str) -> str:
-    """Deterministic per-corpus cache dir, keyed by absolute path + table
-    file mtime so a regenerated corpus never serves stale buckets (the
-    _cached_index_dir convention)."""
-    src = os.path.join(sf_dir, f"{table}.parquet")
-    mtime = int(os.path.getmtime(src)) if os.path.exists(src) else 0
-    key = hashlib.sha256(
-        f"{posixpath.abspath(sf_dir)}|{table}|{mtime}|v1".encode()
-    ).hexdigest()[:16]
-    return os.path.join(
-        tempfile.gettempdir(), f"doc2dataset_bkt_{table}_{key}"
-    )
 
 
 def _bucketed_table(spark, sf_dir: str, table: str, key: str):
@@ -84,7 +67,7 @@ def _bucketed_table(spark, sf_dir: str, table: str, key: str):
     CREATE TABLE … CLUSTERED BY over the published LOCATION — bucket
     membership is carried by Spark's bucketed-file naming, so any
     session can re-attach to the files."""
-    path = _bkt_cache_root(sf_dir, table)
+    path = artifact_cache_dir(sf_dir, f"bkt_{table}", table)
     tname = f"bkt_{table}_{os.path.basename(path).rsplit('_', 1)[-1]}"
     if spark.catalog.tableExists(tname):
         return spark.table(tname)

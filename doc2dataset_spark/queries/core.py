@@ -58,32 +58,6 @@ def all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     return {name: spec.builder for name, spec in REGISTRY.items()}
 
 
-def gate_swap(promote: list[str], demote: list[str]) -> None:
-    """Deliberate FROZEN_GATE edit (round-5 verdict, Next round #1).
-
-    The driver snapshots only the FIRST 50 registered queries into
-    CORRECTNESS_r{N}.json. Rows-only sketch queries (no oracle by design)
-    can never hash-match there and read as ``err`` to an outside auditor,
-    wasting externally-verified slots. This swaps each ``demote[i]`` (moved
-    to the registry tail, where the pytest tolerance tests still cover it)
-    with ``promote[i]`` (an oracle-backed query pulled forward into the
-    vacated slot). Runs once at the end of queries/__init__.py; the swap is
-    pinned by tests/test_registry_gate.py's FROZEN_GATE list.
-    """
-    assert len(promote) == len(demote)
-    names = list(REGISTRY)
-    for p, d in zip(promote, demote):
-        di = names.index(d)
-        pi = names.index(p)
-        assert pi > di, f"{p} already registers before {d}; swap is a no-op"
-        names[di] = p
-        del names[pi]
-        names.append(d)
-    reordered = {n: REGISTRY[n] for n in names}
-    REGISTRY.clear()
-    REGISTRY.update(reordered)
-
-
 def all_oracles() -> dict[str, str]:
     return {
         name: spec.oracle for name, spec in REGISTRY.items() if spec.oracle is not None

@@ -45,7 +45,7 @@ from __future__ import annotations
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from doc2dataset_spark.queries.core import query
+from doc2dataset_spark.queries.core import REGISTRY, query
 from doc2dataset_spark.queries.dedup import (
     N_EMB_BLOCKS,
     NORM_EMB_DUCK,
@@ -441,7 +441,7 @@ def knn_edges_from(spark, n, k: int = KNN_K):
     window sort; measured ~37% faster at sf0.1, bit-identical output
     (OPTIMIZATION_r15.md). Parameterized on the input frame so variant
     embeddings (dimension-truncated, quantized) reuse the exact shape
-    (round11_extras.embedding_mrl_recall)."""
+    (ann_extras.embedding_mrl_recall)."""
     from doc2dataset_spark.functions.vecmath import topk_edges_blocked
 
     partial = topk_edges_blocked(n, k, N_EMB_BLOCKS)
@@ -730,3 +730,571 @@ def text_clean_invisible(spark, sf_dir):
         F.length(clean).cast("bigint").alias("clean_len"),
         F.md5(clean).alias("clean_md5"),
     )
+
+
+# ---------------------------------------------------------------------------
+# curriculum_length_buckets — exact-percentile decile buckets
+# ---------------------------------------------------------------------------
+N_BUCKETS = 10
+_PCTS = [i / N_BUCKETS for i in range(1, N_BUCKETS)]  # 0.1 .. 0.9
+_PCTS_SQL = ", ".join(str(p) for p in _PCTS)
+
+
+@query(
+    "curriculum_length_buckets",
+    oracle=f"""
+    WITH t AS (
+      SELECT doc_id, len({_DTOKS})::BIGINT AS n_tokens FROM documents
+      WHERE len({_DTOKS}) > 0
+    ), cuts AS (
+      SELECT quantile_cont(n_tokens, [{_PCTS_SQL}]) AS cs FROM t
+    )
+    SELECT doc_id, n_tokens,
+           (len(list_filter(cuts.cs, c -> n_tokens > c)) + 1)::INT
+             AS bucket
+    FROM t CROSS JOIN cuts
+    """,
+    tags=("curation", "documents", "sampling"),
+)
+def curriculum_length_buckets(spark, sf_dir):
+    """Curriculum / length-stratified bucketing: every document assigned
+    to one of N_BUCKETS deciles of the token-length distribution — the
+    stratification key behind length-curriculum schedules and
+    bucket-balanced batch sampling.
+
+    The naive spelling is ``ntile(10) OVER (ORDER BY n_tokens)`` — a
+    global-sort single-partition window, exactly what the registry plan
+    gate bans. The scale-safe plan computes the 9 exact interpolated
+    percentile cutoffs ONCE (scalar aggregate, partial-merged), then
+    assigns buckets row-locally against the broadcast 1-row cutoff
+    array: zero global sort, one tiny shuffle for the cutoff agg, one
+    codegen stage for assignment. (Semantics differ from ntile only on
+    ties/equal-count guarantees — cutoff-bucketing is the one that's
+    actually wanted for curricula, since equal VALUES land in equal
+    buckets.) Spark `percentile` == DuckDB `quantile_cont` (both
+    interpolate at rank (n-1)p — the agg_percentiles precedent)."""
+    t = (
+        load_table(spark, sf_dir, "documents")
+        .select(
+            "doc_id",
+            F.size(F.expr(_TOKS)).cast("bigint").alias("n_tokens"),
+        )
+        .filter(F.col("n_tokens") > 0)
+    )
+    pcts = ", ".join(str(p) for p in _PCTS)
+    cuts = t.agg(
+        F.expr(f"percentile(n_tokens, array({pcts}))").alias("cs")
+    )
+    return t.crossJoin(F.broadcast(cuts)).select(
+        "doc_id",
+        "n_tokens",
+        (
+            F.size(F.expr("filter(cs, c -> n_tokens > c)")) + 1
+        ).cast("int").alias("bucket"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# cluster-balanced diversity sampling
+# ---------------------------------------------------------------------------
+CLUSTER_CAP = 25  # max docs kept per embedding cell
+
+
+@query(
+    "sample_cluster_balanced",
+    oracle=None,  # set below (needs the shared _IVF_ASSIGN_DUCK import)
+    tags=("sampling", "embeddings", "documents", "curation"),
+)
+def sample_cluster_balanced(spark, sf_dir):
+    """Diversity sampling: cap the corpus at CLUSTER_CAP documents per
+    embedding cell, keeping the highest-quality docs (distinct-token
+    fraction in ppm — integer, engine-exact) with doc_id tiebreak. The
+    SemDeDup-adjacent recipe for flattening over-represented semantic
+    modes without dropping rare ones.
+
+    Scale shape: cell assignment is the shared 16-row-broadcast argmax
+    (dedup.cell_assignments). A naive per-cell rank is a window over
+    cent_id — K=16 partitions means corpus/16 rows through ONE task's
+    sort at 100 TB. This plan is the exact TWO-PHASE top-k instead:
+    a local top-CAP per (cell, input partition) — any global winner is
+    necessarily a local winner — then the final per-cell rank sees at
+    most P×CAP rows per cell. Both windows are bounded; no
+    corpus-scale sort anywhere."""
+    from doc2dataset_spark.queries.dedup import cell_assignments
+    from pyspark.sql import Window as W
+
+    # integer DIV end-to-end: the oracle uses exact // and a float
+    # intermediate can shift the ppm by 1 via double rounding (the
+    # sample_mixture_rebalance lesson from the round-6 advisory)
+    d = load_table(spark, sf_dir, "documents").select(
+        "doc_id",
+        F.expr(
+            f"CAST(1000000 * size(array_distinct({_TOKS})) AS BIGINT)"
+            f" DIV size({_TOKS})"
+        ).alias("quality_ppm"),
+    ).filter(F.size(F.expr(_TOKS)) > 0)
+    assigned = (
+        cell_assignments(spark, sf_dir)
+        .select(F.col("vec_id").alias("doc_id"), "cent_id")
+        .join(d, "doc_id")
+    )
+    part = assigned.withColumn("pid", F.spark_partition_id())
+    w_local = W.partitionBy("cent_id", "pid").orderBy(
+        F.desc("quality_ppm"), "doc_id"
+    )
+    local = (
+        part.withColumn("rn", F.row_number().over(w_local))
+        .filter(F.col("rn") <= CLUSTER_CAP)
+        .drop("rn", "pid")
+    )
+    w_final = W.partitionBy("cent_id").orderBy(
+        F.desc("quality_ppm"), "doc_id"
+    )
+    return (
+        local.withColumn("rk", F.row_number().over(w_final))
+        .filter(F.col("rk") <= CLUSTER_CAP)
+        .select("doc_id", "cent_id", "quality_ppm", F.col("rk").cast("int").alias("rk"))
+    )
+
+
+def _set_cluster_balanced_oracle() -> None:
+    from doc2dataset_spark.queries.core import REGISTRY as _reg
+    from doc2dataset_spark.queries.dedup import _IVF_ASSIGN_DUCK
+
+    _reg["sample_cluster_balanced"].oracle = f"""
+    WITH {_IVF_ASSIGN_DUCK},
+    d AS (
+      SELECT doc_id,
+             (1000000 * len(list_distinct({_DTOKS})))
+               // len({_DTOKS}) AS quality_ppm
+      FROM documents WHERE len({_DTOKS}) > 0
+    ),
+    j AS (
+      SELECT a.vec_id AS doc_id, a.cent_id, d.quality_ppm
+      FROM assign a JOIN d ON d.doc_id = a.vec_id
+    )
+    SELECT doc_id, cent_id, quality_ppm, rk FROM (
+      SELECT doc_id, cent_id, quality_ppm,
+             row_number() OVER (
+               PARTITION BY cent_id
+               ORDER BY quality_ppm DESC, doc_id
+             )::INT AS rk
+      FROM j
+    ) WHERE rk <= {CLUSTER_CAP}
+    """
+
+
+_set_cluster_balanced_oracle()
+
+
+# ---------------------------------------------------------------------------
+# deterministic weighted sampling without replacement (Efraimidis-Spirakis)
+# ---------------------------------------------------------------------------
+WS_K = 100
+
+
+@query(
+    "sample_weighted_topk",
+    oracle=f"""
+    WITH t AS (
+      SELECT doc_id,
+             len({_DTOKS})::BIGINT AS w,
+             -- u in (0,1]: 12 md5 hex chars -> uniform integer + 1
+             (('0x' || substr(md5('ws' || doc_id::VARCHAR), 1, 12))::BIGINT
+               + 1) / 281474976710656.0 AS u
+      FROM documents WHERE len({_DTOKS}) > 0
+    ), keyed AS (
+      SELECT doc_id, w, round(-ln(u) / w, 12) AS k FROM t
+    )
+    SELECT doc_id, w, k FROM (
+      SELECT doc_id, w, k,
+             row_number() OVER (ORDER BY k, doc_id) AS rn
+      FROM keyed
+    ) WHERE rn <= {WS_K}
+    """,
+    tags=("sampling", "documents"),
+)
+def sample_weighted_topk(spark, sf_dir):
+    """Weighted sampling WITHOUT replacement, k=WS_K, weight = token
+    count — the Efraimidis-Spirakis A-ES algorithm: each row draws
+    key = −ln(u)/w (u uniform) and the k SMALLEST keys are an exact
+    weighted sample. The distributed-sampling workhorse: key assignment
+    is row-local, selection is a top-k — no sequential pass, no global
+    RNG state. Here u is derandomized from md5(doc_id) (the
+    sample_deterministic discipline), so the sample is reproducible on
+    any engine, any partitioning, any run — and DuckDB can oracle it
+    bit-exactly (ln on identical doubles, round-12 on the key).
+
+    Scale shape: one row-local projection + TakeOrderedAndProject;
+    zero shuffle beyond the top-k merge."""
+    d = load_table(spark, sf_dir, "documents").filter(
+        F.size(F.expr(_TOKS)) > 0
+    )
+    u = (
+        F.expr(
+            "cast(conv(substring(md5(concat('ws', cast(doc_id AS string))),"
+            " 1, 12), 16, 10) AS bigint)"
+        )
+        + 1
+    ) / F.lit(281474976710656.0)  # 16^12
+    keyed = d.select(
+        "doc_id",
+        F.size(F.expr(_TOKS)).cast("bigint").alias("w"),
+        F.round(-F.log(u) / F.size(F.expr(_TOKS)), 12).alias("k"),
+    )
+    return keyed.orderBy("k", "doc_id").limit(WS_K)
+
+
+# ---------------------------------------------------------------------------
+# per-group IQR outlier flagging (Tukey fences)
+# ---------------------------------------------------------------------------
+@query(
+    "quality_iqr_outliers",
+    oracle=f"""
+    WITH t AS (
+      SELECT doc_id, source, len({_DTOKS})::BIGINT AS n_tokens
+      FROM documents WHERE len({_DTOKS}) > 0
+    ), q AS (
+      SELECT source,
+             quantile_cont(n_tokens, 0.25) AS q1,
+             quantile_cont(n_tokens, 0.75) AS q3
+      FROM t GROUP BY source
+    )
+    SELECT t.doc_id, t.source, t.n_tokens,
+           round(q.q1 - 1.5 * (q.q3 - q.q1), 4) AS lo,
+           round(q.q3 + 1.5 * (q.q3 - q.q1), 4) AS hi,
+           (t.n_tokens < q.q1 - 1.5 * (q.q3 - q.q1)
+            OR t.n_tokens > q.q3 + 1.5 * (q.q3 - q.q1)) AS is_outlier
+    FROM t JOIN q USING (source)
+    """,
+    tags=("quality", "documents", "curation"),
+)
+def quality_iqr_outliers(spark, sf_dir):
+    """Tukey-fence outlier flagging per source: documents whose token
+    count falls outside [Q1 − 1.5·IQR, Q3 + 1.5·IQR] of their OWN
+    source's length distribution — the per-stratum anomaly screen that
+    catches a broken extractor flooding one source with stubs or
+    megadocs without punishing legitimately different sources.
+
+    Scale shape: per-source exact quartiles are ONE grouped aggregate
+    (|sources| output rows — broadcast-sized), joined back broadcast;
+    flagging is row-local. The same percentile-cutoff-then-broadcast
+    recipe as curriculum_length_buckets — never a per-group sort window
+    over data rows. Fence comparison uses the UNROUNDED quantiles on
+    both engines (rounding only the displayed fence columns), so the
+    boolean is bit-stable."""
+    t = (
+        load_table(spark, sf_dir, "documents")
+        .select(
+            "doc_id",
+            "source",
+            F.size(F.expr(_TOKS)).cast("bigint").alias("n_tokens"),
+        )
+        .filter(F.col("n_tokens") > 0)
+    )
+    q = t.groupBy("source").agg(
+        F.expr("percentile(n_tokens, 0.25)").alias("q1"),
+        F.expr("percentile(n_tokens, 0.75)").alias("q3"),
+    )
+    lo = F.col("q1") - 1.5 * (F.col("q3") - F.col("q1"))
+    hi = F.col("q3") + 1.5 * (F.col("q3") - F.col("q1"))
+    return t.join(F.broadcast(q), "source").select(
+        "doc_id",
+        "source",
+        "n_tokens",
+        F.round(lo, 4).alias("lo"),
+        F.round(hi, 4).alias("hi"),
+        ((F.col("n_tokens") < lo) | (F.col("n_tokens") > hi)).alias(
+            "is_outlier"
+        ),
+    )
+
+
+# ---------------------------------------------------------------------------
+# sample_temperature_mix — sqrt-temperature mixture sampling
+# ---------------------------------------------------------------------------
+TM_PPM = 1_000_000
+TM_WSCALE = 1_000_000_000  # sqrt-weight quantization (1e-9 resolution)
+
+
+@query(
+    "sample_temperature_mix",
+    oracle=f"""
+    WITH t AS (
+      SELECT doc_id, source, len({_DTOKS})::BIGINT AS n_tokens
+      FROM documents
+    ), st AS (
+      SELECT source, sum(n_tokens)::BIGINT AS src_tokens
+      FROM t GROUP BY source
+    ), tot AS (
+      SELECT sum(src_tokens)::BIGINT AS total FROM st
+    ), w AS (
+      SELECT source, src_tokens,
+             CAST(round(sqrt(src_tokens::DOUBLE / (SELECT total FROM tot))
+                        * {TM_WSCALE}) AS BIGINT) AS wi
+      FROM st
+    ), sw AS (
+      SELECT sum(wi)::BIGINT AS sumw FROM w
+    ), rates AS (
+      SELECT source,
+             CAST(least({TM_PPM}::HUGEINT,
+                        ((SELECT total FROM tot)::HUGEINT * wi * {TM_PPM})
+                        // ((SELECT sumw FROM sw)::HUGEINT * src_tokens))
+                  AS BIGINT) AS rate_ppm
+      FROM w
+    )
+    SELECT t.doc_id, t.source, r.rate_ppm
+    FROM t JOIN rates r USING (source)
+    WHERE ('0x' || substr(md5('tm' || t.doc_id::VARCHAR), 1, 12))::BIGINT
+          % {TM_PPM} < r.rate_ppm
+    """,
+    tags=("pipeline", "sampling", "mixing"),
+)
+def sample_temperature_mix(spark, sf_dir):
+    """α=1/2 temperature mixture: keep rates ∝ min(1, budget_i/tokens_i)
+    with budget_i = total·sqrt(p_i)/Σ√p — sqrt-flattened source shares,
+    exact-integer ppm rates, deterministic md5 keep set."""
+    d = load_table(spark, sf_dir, "documents").select(
+        "doc_id",
+        "source",
+        F.size(F.expr(_TOKS)).cast("bigint").alias("n_tokens"),
+    )
+    st = d.groupBy("source").agg(F.sum("n_tokens").alias("src_tokens"))
+    tot = st.agg(F.sum("src_tokens").cast("bigint").alias("total"))
+    w = st.crossJoin(F.broadcast(tot)).select(
+        "source",
+        "src_tokens",
+        "total",
+        F.expr(
+            f"CAST(round(sqrt(CAST(src_tokens AS DOUBLE) / total)"
+            f" * {TM_WSCALE}) AS BIGINT)"
+        ).alias("wi"),
+    )
+    sw = w.agg(F.sum("wi").cast("bigint").alias("sumw"))
+    rates = w.crossJoin(F.broadcast(sw)).select(
+        "source",
+        F.expr(
+            f"CAST(least(CAST({TM_PPM} AS DECIMAL(38,0)),"
+            f" (CAST(total AS DECIMAL(38,0)) * wi * {TM_PPM})"
+            f" div (CAST(sumw AS DECIMAL(38,0)) * src_tokens))"
+            f" AS BIGINT)"
+        ).alias("rate_ppm"),
+    )
+    h = F.expr(
+        "cast(conv(substring(md5(concat('tm', cast(doc_id AS string))),"
+        " 1, 12), 16, 10) AS bigint)"
+    )
+    return (
+        d.join(F.broadcast(rates), "source")
+        .filter(h % TM_PPM < F.col("rate_ppm"))
+        .select("doc_id", "source", "rate_ppm")
+    )
+
+
+# ---------------------------------------------------------------------------
+# curate_split_leakage — train/holdout near-dup leakage audit
+# ---------------------------------------------------------------------------
+# deterministic 10% holdout: md5-hash bucket 0 of 10 (the hash split a
+# real pipeline uses so membership is stable under re-runs and appends)
+SPLIT_BUCKETS = 10
+_SPLIT_SPARK = (
+    "pmod(cast(conv(substring(md5(cast(doc_id AS string)), 1, 12), 16, 10) "
+    f"AS bigint), {SPLIT_BUCKETS}) = 0"
+)
+_SPLIT_DUCK = (
+    "('0x' || substr(md5(doc_id::VARCHAR), 1, 12))::BIGINT "
+    f"% {SPLIT_BUCKETS} = 0"
+)
+
+
+def _split_leakage_oracle(exact_oracle: str) -> str:
+    return f"""
+WITH pairs AS MATERIALIZED (
+  SELECT da, db FROM ({exact_oracle})
+),
+s AS MATERIALIZED (
+  SELECT doc_id, {_SPLIT_DUCK} AS hold FROM documents
+),
+f AS MATERIALIZED (
+  SELECT p.da, p.db, sa.hold AS ha, sb.hold AS hb
+  FROM pairs p
+  JOIN s sa ON sa.doc_id = p.da
+  JOIN s sb ON sb.doc_id = p.db
+),
+leaked AS (
+  SELECT count(DISTINCT doc_id) AS n FROM (
+    SELECT da AS doc_id FROM f WHERE ha AND NOT hb
+    UNION ALL
+    SELECT db AS doc_id FROM f WHERE hb AND NOT ha
+  )
+),
+d AS (
+  SELECT CAST(COALESCE(SUM(CASE WHEN hold THEN 0 ELSE 1 END), 0) AS BIGINT)
+           AS n_train,
+         CAST(COALESCE(SUM(CASE WHEN hold THEN 1 ELSE 0 END), 0) AS BIGINT)
+           AS n_holdout
+  FROM s
+),
+pf AS (
+  SELECT CAST(count(*) AS BIGINT) AS n_pairs,
+         CAST(COALESCE(SUM(CASE WHEN ha <> hb THEN 1 ELSE 0 END), 0)
+              AS BIGINT) AS n_cross
+  FROM f
+)
+SELECT d.n_train, d.n_holdout, pf.n_pairs, pf.n_cross,
+       CAST(l.n AS BIGINT) AS n_leaked_holdout,
+       round(l.n::DOUBLE / d.n_holdout, 4) AS leak_rate
+FROM d CROSS JOIN pf CROSS JOIN leaked l
+"""
+
+
+@query(
+    "curate_split_leakage",
+    oracle=None,  # assigned below: composes the exact detector's oracle
+    tags=("pipeline", "dedup", "eval"),
+)
+def curate_split_leakage(spark, sf_dir):
+    """Train/holdout split LEAKAGE AUDIT — the decontamination check a
+    training pipeline runs before trusting its eval numbers: with a
+    deterministic 10% hash holdout (stable under re-runs and appends,
+    like every production split), count the exact near-dup pairs
+    (shingle-Jaccard >= 0.5, the dedup_ngram_jaccard ground truth) that
+    CROSS the split, and the distinct holdout documents contaminated by
+    a train-side twin. A holdout doc with a near-duplicate in train
+    inflates eval scores without any literal overlap tooling noticing —
+    this is the Lee et al. 2022 ("Deduplicating Training Data Makes
+    Language Models Better") eval-leakage measurement as one oracle-
+    gated row.
+
+    Columns: n_train / n_holdout (split sizes), n_pairs (all near-dup
+    pairs), n_cross (pairs straddling the split — E[2·p·(1-p)·n_pairs]
+    under independence, so a clustered corpus shows up as an excess),
+    n_leaked_holdout (distinct contaminated eval docs — the actionable
+    set), leak_rate (fraction of the holdout that is contaminated).
+
+    Scale shape: the detector's own blocked plan + two broadcast-sized
+    flag joins on the pair list + one scalar aggregate row; the split
+    flag is a row-local md5 bucket, never a shuffle key."""
+    from doc2dataset_spark.queries.dedup import dedup_ngram_jaccard
+
+    d = load_table(spark, sf_dir, "documents")
+    s = d.select("doc_id", F.expr(_SPLIT_SPARK).alias("hold"))
+    pairs = dedup_ngram_jaccard(spark, sf_dir).select("da", "db")
+    f = (
+        pairs.join(
+            s.select(F.col("doc_id").alias("da"), F.col("hold").alias("ha")),
+            "da",
+        )
+        .join(
+            s.select(F.col("doc_id").alias("db"), F.col("hold").alias("hb")),
+            "db",
+        )
+        .localCheckpoint()
+    )
+    leaked = (
+        f.filter(F.col("ha") & ~F.col("hb"))
+        .select(F.col("da").alias("doc_id"))
+        .unionAll(
+            f.filter(F.col("hb") & ~F.col("ha")).select(
+                F.col("db").alias("doc_id")
+            )
+        )
+        .agg(F.countDistinct("doc_id").alias("n"))
+    )
+    dcounts = s.agg(
+        F.sum(F.when(F.col("hold"), 0).otherwise(1))
+        .cast("bigint")
+        .alias("n_train"),
+        F.sum(F.when(F.col("hold"), 1).otherwise(0))
+        .cast("bigint")
+        .alias("n_holdout"),
+    )
+    pcounts = f.agg(
+        F.count("*").cast("bigint").alias("n_pairs"),
+        F.coalesce(
+            F.sum((F.col("ha") != F.col("hb")).cast("int")), F.lit(0)
+        )
+        .cast("bigint")
+        .alias("n_cross"),
+    )
+    return (
+        dcounts.crossJoin(F.broadcast(pcounts))
+        .crossJoin(F.broadcast(leaked))
+        .select(
+            "n_train",
+            "n_holdout",
+            "n_pairs",
+            "n_cross",
+            F.col("n").cast("bigint").alias("n_leaked_holdout"),
+            F.round(
+                F.col("n").cast("double") / F.col("n_holdout"), 4
+            ).alias("leak_rate"),
+        )
+    )
+
+
+REGISTRY["curate_split_leakage"].oracle = _split_leakage_oracle(
+    REGISTRY["dedup_ngram_jaccard"].oracle
+)
+
+
+# ---------------------------------------------------------------------------
+# sample_token_budget — token-budgeted mixture selection
+# ---------------------------------------------------------------------------
+
+TOKEN_BUDGET = 700  # per-source token allowance (fixture-strict subset)
+_TOKN_SPARK = f"coalesce(size({_TOKS}), 0)"
+_ORD_HASH_SPARK = "md5(cast(doc_id AS string))"
+_ORD_HASH_DUCK = "md5(doc_id::VARCHAR)"
+
+
+@query(
+    "sample_token_budget",
+    oracle=f"""
+    WITH t AS (
+      SELECT doc_id, source,
+             coalesce(len(list_filter(string_split_regex(lower(text),
+                                                         '\\s+'),
+                                      x -> x <> '')), 0)::BIGINT AS n_tokens,
+             {_ORD_HASH_DUCK} AS h
+      FROM documents
+    ),
+    c AS (
+      SELECT doc_id, source, n_tokens,
+             SUM(n_tokens) OVER (
+               PARTITION BY source ORDER BY h, doc_id
+               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
+             )::BIGINT AS cum_tokens
+      FROM t
+    )
+    SELECT doc_id, source, n_tokens, cum_tokens
+    FROM c WHERE cum_tokens <= {TOKEN_BUDGET}
+    """,
+    tags=("curation", "documents", "sampling"),
+)
+def sample_token_budget(spark, sf_dir):
+    """Token-budgeted mixture selection: training mixtures are specified
+    in TOKENS, not documents (a source of many short docs must not get
+    the same doc-count allowance as one of long docs). Each source's
+    documents are ranked by a deterministic hash (an unbiased shuffle,
+    the sample_cap_per_key idiom) and kept while the running token sum
+    stays within the per-source budget — rerunnable, engine-independent,
+    and integer-exact.
+
+    Scale shape: token counts are a map-side expression; the running sum
+    is ONE window partitioned by source with a ROWS frame (per-group
+    counter state, no global window); the filter is row-local. At 100 TB
+    this is the same shape as the per-domain cap — a severely hot source
+    would call for the two-phase salted variant."""
+    d = load_table(spark, sf_dir, "documents")
+    w = (
+        W.partitionBy("source")
+        .orderBy(F.expr(_ORD_HASH_SPARK), "doc_id")
+        .rowsBetween(W.unboundedPreceding, W.currentRow)
+    )
+    c = d.select(
+        "doc_id",
+        "source",
+        F.expr(_TOKN_SPARK).cast("bigint").alias("n_tokens"),
+    ).withColumn("cum_tokens", F.sum("n_tokens").over(w).cast("bigint"))
+    return c.filter(F.col("cum_tokens") <= TOKEN_BUDGET)

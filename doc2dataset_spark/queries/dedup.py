@@ -331,7 +331,7 @@ def dedup_minhash_lsh(spark, sf_dir):
 def minhash_verify(spark, sf_dir, cand):
     """Exact-Jaccard verification of an LSH candidate-pair frame
     (da, db): the verify stage of dedup_minhash_lsh, shared with the
-    persisted-band-index serve path (round9_extras
+    persisted-band-index serve path (dedup_detectors
     dedup_minhash_indexed) so both produce hash-identical output.
 
     Verifies only candidate docs: at scale candidates << corpus, so the
@@ -533,7 +533,7 @@ NORM_EMB_DUCK = """
 
 N_EMB_BLOCKS = 16  # pair-space tiling factor; ~sqrt(target parallelism)
 # the exact near-dup threshold (ONE definition: the query, its oracle,
-# and the detector-evaluation row in round10_extras all read this name,
+# and the detector-evaluation row in dedup_detectors all read this name,
 # so the ground truth and its judges cannot silently diverge)
 EMB_COS_THRESHOLD = 0.4
 

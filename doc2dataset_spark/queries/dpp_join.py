@@ -24,34 +24,20 @@ glob → full iteration).
 
 from __future__ import annotations
 
-import hashlib
-import os
-import posixpath
-import tempfile
-
 from pyspark.sql import functions as F
 
-from doc2dataset_spark.fsio import ensure_local_cache_dir
+from doc2dataset_spark.fsio import artifact_cache_dir, ensure_local_cache_dir
 from doc2dataset_spark.queries.core import dsum, query, sql_dsum
 from doc2dataset_spark.session import load_table
 
 DPP_QUARTER = "1997-1"  # the dim-side filter: first quarter of 1997
 
 
-def _part_cache_root(sf_dir: str) -> str:
-    src = os.path.join(sf_dir, "lineitem.parquet")
-    mtime = int(os.path.getmtime(src)) if os.path.exists(src) else 0
-    key = hashlib.sha256(
-        f"{posixpath.abspath(sf_dir)}|lineitem_by_month|{mtime}|v1".encode()
-    ).hexdigest()[:16]
-    return os.path.join(tempfile.gettempdir(), f"doc2dataset_dpp_{key}")
-
-
 def partitioned_lineitem(spark, sf_dir: str):
     """Build-once month-partitioned twin of lineitem (hive layout,
     ``ship_month=YYYY-MM/``), read back through the partition-discovery
     path so ship_month is a partition column DPP can prune on."""
-    path = _part_cache_root(sf_dir)
+    path = artifact_cache_dir(sf_dir, "dpp", "lineitem")
 
     def build(tmp: str) -> None:
         (

@@ -496,16 +496,6 @@ def _curate_corpus_plan(spark, sf_dir, index_dir: str | None = None):
     )
 
 
-def _cached_index_dir(sf_dir: str) -> str:
-    """Deterministic per-corpus cache location for the curation-serving
-    IVF index — fsio.artifact_cache_dir keyed on the embeddings table
-    (size + mtime_ns, so a regenerated corpus never serves stale
-    postings even when rewritten within one second)."""
-    from doc2dataset_spark.fsio import artifact_cache_dir
-
-    return artifact_cache_dir(sf_dir, "ivf", "embeddings")
-
-
 @query(
     "curate_corpus_indexed",
     oracle=REGISTRY["curate_corpus"].oracle,
@@ -526,11 +516,11 @@ def curate_corpus_indexed(spark, sf_dir):
     pure reads. Scale shape: identical to curate_corpus minus the
     per-run quantization pass — the postings scan is cell-partitioned
     parquet."""
-    from doc2dataset_spark.fsio import ensure_local_cache_dir
+    from doc2dataset_spark.fsio import artifact_cache_dir, ensure_local_cache_dir
     from doc2dataset_spark.operators.vector_index import build_ivf_index
 
     idx = ensure_local_cache_dir(
-        _cached_index_dir(sf_dir),
+        artifact_cache_dir(sf_dir, "ivf", "embeddings"),
         "centroids",
         lambda tmp: build_ivf_index(spark, sf_dir, tmp),
     )

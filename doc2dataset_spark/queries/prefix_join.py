@@ -47,7 +47,7 @@ shuffle key is the *rare-prefix* shingle, cutting the frequency head out
 of the quadratic blow-up; verification touches candidate pairs only and
 is row-local over per-document (hence bounded) arrays.
 
-Relation to ``dedup_prefix_filter`` (round7_extras.py): that op applies
+Relation to ``dedup_prefix_filter`` (dedup_detectors.py): that op applies
 the bare prefix filter to distinct TOKENS at τ = 0.9 against the naive
 all-pairs oracle (completeness test). This module applies the full
 PPJoin stack — prefix + length + POSITIONAL filters — to the word-3-gram

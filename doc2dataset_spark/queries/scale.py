@@ -140,3 +140,67 @@ def agg_salted_two_phase(spark, sf_dir):
         F.sum("pn").alias("n"),
         F.round(F.sum("psum"), 4).cast("double").alias("total"),
     )
+
+
+# ---------------------------------------------------------------------------
+# salted replicated join: the skewed-key JOIN twin of agg_salted_two_phase
+# ---------------------------------------------------------------------------
+JOIN_SALT = 8
+
+
+@query(
+    "join_salted_replicated",
+    oracle=f"""
+    WITH dim AS (
+      SELECT source, count(*)::BIGINT AS src_docs,
+             sum(n_chars)::BIGINT AS src_chars
+      FROM documents GROUP BY source
+    )
+    SELECT d.doc_id, d.source, m.src_docs,
+           (d.n_chars * 1000000 // m.src_chars)::BIGINT AS char_share_ppm
+    FROM documents d JOIN dim m USING (source)
+    """,
+    tags=("relational", "scale", "skew"),
+)
+def join_salted_replicated(spark, sf_dir):
+    """Skew-mitigated equi-join by SALT REPLICATION: the fact side's hot
+    join key (source — a handful of values owning the whole corpus, the
+    canonical skew shape) is extended with salt = xxhash64(doc_id) % S,
+    and the dim side is exploded into S replicas, so each hot key's rows
+    spread across S reducer partitions instead of ONE straggler task.
+    agg_salted_two_phase covers the aggregation flavor; this is the join
+    flavor — the other half of the skew playbook (used when the dim is
+    too big to broadcast; AQE's skew-join split is the automatic cousin,
+    this is the declarative form that also works pre-AQE and for
+    deliberate partitioning).
+
+    The oracle is the PLAIN join — rewrite equality IS the test (the
+    q12b discipline). Integer share math keeps both engines bit-equal.
+    Plan-asserted: the salted join is a shuffle join on (source, salt),
+    never a broadcast (which would mask the pattern)."""
+    d = load_table(spark, sf_dir, "documents")
+    dim = d.groupBy("source").agg(
+        F.count("*").alias("src_docs"),
+        F.sum("n_chars").cast("bigint").alias("src_chars"),
+    )
+    salted_dim = dim.select(
+        "*", F.explode(F.array(*[F.lit(i) for i in range(JOIN_SALT)])).alias("salt")
+    )
+    fact = d.select(
+        "doc_id",
+        "source",
+        "n_chars",
+        F.pmod(F.xxhash64("doc_id"), F.lit(JOIN_SALT)).alias("salt"),
+    )
+    return (
+        fact.hint("SHUFFLE_HASH")
+        .join(salted_dim, ["source", "salt"])
+        .select(
+            "doc_id",
+            "source",
+            "src_docs",
+            F.expr("CAST(n_chars * 1000000 DIV src_chars AS BIGINT)").alias(
+                "char_share_ppm"
+            ),
+        )
+    )

@@ -477,24 +477,6 @@ def text_pmi_pairs(spark, sf_dir):
 # ---------------------------------------------------------------------------
 # index-served BM25 (round 7): the persisted-inverted-index serve path
 # ---------------------------------------------------------------------------
-def _cached_text_index_dir(sf_dir: str) -> str:
-    """Deterministic per-corpus cache for the serving index, keyed by the
-    absolute sf_dir and the documents table's mtime (the
-    curate_corpus_indexed recipe) — a regenerated corpus never serves a
-    stale index."""
-    import hashlib
-    import os
-    import posixpath
-    import tempfile
-
-    doc = os.path.join(sf_dir, "documents.parquet")
-    mtime = int(os.path.getmtime(doc)) if os.path.exists(doc) else 0
-    key = hashlib.md5(
-        f"{os.path.abspath(sf_dir)}|{mtime}|text".encode()
-    ).hexdigest()[:12]
-    return posixpath.join(tempfile.gettempdir(), f"d2d_text_cache_{key}")
-
-
 @query(
     "search_bm25_indexed",
     oracle=None,  # set below: identical to search_bm25_topk by design
@@ -509,14 +491,14 @@ def search_bm25_indexed(spark, sf_dir):
     driver hash-verifies that index-served ranking equals the corpus-
     scan ranking. First call per corpus builds the index into an
     mtime-keyed temp cache; subsequent calls are pure bucket reads."""
-    from doc2dataset_spark.fsio import ensure_local_cache_dir
+    from doc2dataset_spark.fsio import artifact_cache_dir, ensure_local_cache_dir
     from doc2dataset_spark.operators.text_index import (
         build_text_index,
         probe_text_index,
     )
 
     idx = ensure_local_cache_dir(
-        _cached_text_index_dir(sf_dir),
+        artifact_cache_dir(sf_dir, "text", "documents"),
         "stats",
         lambda tmp: build_text_index(spark, sf_dir, tmp),
     )
@@ -529,3 +511,168 @@ def search_bm25_indexed(spark, sf_dir):
 from doc2dataset_spark.queries.core import REGISTRY as _REG  # noqa: E402
 
 _REG["search_bm25_indexed"].oracle = _REG["search_bm25_topk"].oracle
+
+
+# ---------------------------------------------------------------------------
+# hybrid retrieval: BM25 + vector-cosine reciprocal-rank fusion
+# ---------------------------------------------------------------------------
+RRF_K = 60
+RRF_TOPK = 10
+HYBRID_QVEC = 0  # query vector id (doc ids and vec ids share the key space)
+
+
+@query(
+    "search_hybrid_rrf",
+    oracle=None,  # set below (reuses the BM25 oracle text + NORM_EMB_DUCK)
+    tags=("search", "similarity", "documents", "embeddings"),
+)
+def search_hybrid_rrf(spark, sf_dir):
+    """Hybrid retrieval with reciprocal-rank fusion: the BM25 ranking
+    for QUERY_TERMS and the exact-cosine ranking for query vector
+    HYBRID_QVEC are fused as sum(1/(RRF_K + rank)) — the standard
+    score-scale-free way to combine lexical and semantic retrieval.
+    Ranks (not scores) make the fusion deterministic: both rank lists
+    carry doc_id tiebreaks, and the fused score is a sum of two exact
+    rationals rounded to 6 (identical on both engines).
+
+    Scale shape: each side is its own already-scale-audited plan (BM25:
+    pruned postings, no global window; cosine: brute-force against ONE
+    query vector — corpus-linear, map-side top-k). Each side's top-200
+    cut is a TakeOrderedAndProject (distributed partial top-k); the rank
+    windows then run AFTER the limit, over ≤200 rows already sitting in
+    the limit's single partition — parameter-bounded by construction,
+    whitelisted as such in the registry plan gate. The fusion is a tiny
+    outer join on doc_id. At serve time both sides read the persisted
+    indexes instead (search_bm25_indexed / sim_ann_ivf_indexed paths)."""
+    from pyspark.sql import Window as W
+
+    from doc2dataset_spark.queries.dedup import normalized_embeddings, spark_dot
+    from doc2dataset_spark.queries.search_extras import _bm25_scored
+
+    PER_SIDE = 200  # candidate cut per retriever before fusion
+
+    # lexical side: the full BM25 scored frame (not the top-20 query),
+    # top-PER_SIDE via TakeOrdered, then rank within the bounded cut
+    bm = (
+        _bm25_scored(spark, sf_dir)
+        .orderBy(F.desc("score"), "doc_id")
+        .limit(PER_SIDE)
+    )
+    w_bm = W.orderBy(F.desc("score"), "doc_id")
+    lex = bm.withColumn(
+        "r_lex", F.row_number().over(w_bm)
+    ).select("doc_id", "r_lex")
+
+    n = normalized_embeddings(spark, sf_dir)
+    qv = n.filter(F.col("vec_id") == HYBRID_QVEC).select(
+        F.col("ne").alias("qne")
+    )
+    cos = (
+        n.filter(F.col("vec_id") != HYBRID_QVEC)
+        .crossJoin(F.broadcast(qv))
+        .select(
+            F.col("vec_id").alias("doc_id"),
+            spark_dot(F.col("ne"), F.col("qne")).alias("cos"),
+        )
+        .orderBy(F.desc("cos"), "doc_id")
+        .limit(PER_SIDE)
+    )
+    w_cos = W.orderBy(F.desc("cos"), "doc_id")
+    sem = cos.withColumn("r_sem", F.row_number().over(w_cos)).select(
+        "doc_id", "r_sem"
+    )
+
+    fused = (
+        lex.join(sem, "doc_id", "full_outer")
+        .select(
+            "doc_id",
+            F.coalesce("r_lex", F.lit(0)).cast("int").alias("r_lex"),
+            F.coalesce("r_sem", F.lit(0)).cast("int").alias("r_sem"),
+            F.round(
+                F.when(
+                    F.col("r_lex").isNotNull(),
+                    1.0 / (RRF_K + F.col("r_lex")),
+                ).otherwise(0.0)
+                + F.when(
+                    F.col("r_sem").isNotNull(),
+                    1.0 / (RRF_K + F.col("r_sem")),
+                ).otherwise(0.0),
+                6,
+            ).alias("rrf"),
+        )
+    )
+    return fused.orderBy(F.desc("rrf"), "doc_id").limit(RRF_TOPK)
+
+
+def _set_hybrid_oracle() -> None:
+    from doc2dataset_spark.queries.core import REGISTRY as _reg
+    from doc2dataset_spark.queries.dedup import NORM_EMB_DUCK
+    from doc2dataset_spark.queries.search_extras import (
+        BM25_B,
+        BM25_K1,
+        _TERMS_SQL,
+    )
+
+    _reg["search_hybrid_rrf"].oracle = f"""
+    WITH tok AS (
+      SELECT doc_id, unnest({_DTOKS}) AS term FROM documents
+    ), dl AS (
+      SELECT doc_id, count(*)::BIGINT AS dl FROM tok GROUP BY doc_id
+    ), stats AS (
+      SELECT count(*)::BIGINT AS n,
+             (SELECT sum(dl)::DOUBLE / count(*) FROM dl) AS avgdl
+      FROM dl
+    ), tf AS (
+      SELECT doc_id, term, count(*)::BIGINT AS tf FROM tok
+      WHERE term IN ({_TERMS_SQL}) GROUP BY doc_id, term
+    ), dfx AS (
+      SELECT term, count(DISTINCT doc_id)::BIGINT AS df FROM tf GROUP BY term
+    ), scored AS (
+      SELECT tf.doc_id,
+             round(sum(
+               ln((s.n - dfx.df + 0.5) / (dfx.df + 0.5) + 1.0)
+               * (tf.tf * ({BM25_K1} + 1.0))
+               / (tf.tf + {BM25_K1} * (1.0 - {BM25_B}
+                  + {BM25_B} * dl.dl / s.avgdl))
+             ), 4) AS score
+      FROM tf
+      JOIN dfx USING (term)
+      JOIN dl USING (doc_id)
+      CROSS JOIN stats s
+      GROUP BY tf.doc_id
+    ), lex AS (
+      SELECT doc_id, rn AS r_lex FROM (
+        SELECT doc_id,
+               row_number() OVER (ORDER BY score DESC, doc_id) AS rn
+        FROM scored
+      ) WHERE rn <= 200
+    ), nv AS ({NORM_EMB_DUCK}),
+    qv AS (SELECT ne AS qne FROM nv WHERE vec_id = {HYBRID_QVEC}),
+    cosd AS (
+      SELECT nv.vec_id AS doc_id,
+             list_dot_product(nv.ne, qv.qne) AS cos
+      FROM nv CROSS JOIN qv WHERE nv.vec_id <> {HYBRID_QVEC}
+    ), sem AS (
+      SELECT doc_id, rn AS r_sem FROM (
+        SELECT doc_id,
+               row_number() OVER (ORDER BY cos DESC, doc_id) AS rn
+        FROM cosd
+      ) WHERE rn <= 200
+    ), fused AS (
+      SELECT coalesce(l.doc_id, s.doc_id) AS doc_id,
+             coalesce(l.r_lex, 0)::INT AS r_lex,
+             coalesce(s.r_sem, 0)::INT AS r_sem,
+             round(
+               coalesce(1.0 / ({RRF_K} + l.r_lex), 0.0)
+               + coalesce(1.0 / ({RRF_K} + s.r_sem), 0.0), 6) AS rrf
+      FROM lex l FULL OUTER JOIN sem s USING (doc_id)
+    )
+    SELECT doc_id, r_lex, r_sem, rrf FROM (
+      SELECT doc_id, r_lex, r_sem, rrf,
+             row_number() OVER (ORDER BY rrf DESC, doc_id) AS rn
+      FROM fused
+    ) WHERE rn <= {RRF_TOPK}
+    """
+
+
+_set_hybrid_oracle()

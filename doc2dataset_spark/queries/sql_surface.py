@@ -882,3 +882,392 @@ def q47_distribution_windows(spark, sf_dir):
         F.round(F.percent_rank().over(w), 6).alias("pr"),
         F.round(F.cume_dist().over(w), 6).alias("cd"),
     )
+
+
+# ---------------------------------------------------------------------------
+# lateral column aliases (Spark 3.4+ dialect surface)
+# ---------------------------------------------------------------------------
+@query(
+    "q51_lateral_alias",
+    oracle="""
+    SELECT l_orderkey, l_linenumber,
+           round(l_extendedprice * (1 - l_discount), 4) AS disc_price,
+           round(disc_price * (1 + l_tax), 4) AS charge,
+           round(charge - disc_price, 4) AS tax_amount
+    FROM lineitem WHERE l_orderkey < 100
+    """,
+    tags=("sql", "dialect"),
+)
+def q51_lateral_alias(spark, sf_dir):
+    """Lateral column aliases: later SELECT expressions reference
+    earlier aliases in the same list (disc_price → charge →
+    tax_amount) — the Spark 3.4+ dialect feature that kills the
+    nested-subquery boilerplate for derived-metric chains. DuckDB
+    supports the same referencing, so the oracle is the identical
+    statement. Catalyst inlines the chain into one projection — the
+    plan is a single codegen stage over the pruned scan, alias depth
+    has no runtime cost."""
+    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView(
+        "lineitem_v"
+    )
+    return spark.sql(
+        """
+        SELECT l_orderkey, l_linenumber,
+               round(l_extendedprice * (1 - l_discount), 4) AS disc_price,
+               round(disc_price * (1 + l_tax), 4) AS charge,
+               round(charge - disc_price, 4) AS tax_amount
+        FROM lineitem_v WHERE l_orderkey < 100
+        """
+    )
+
+
+# ---------------------------------------------------------------------------
+# null-semantics battery
+# ---------------------------------------------------------------------------
+@query(
+    "q52_null_semantics",
+    oracle="""
+    WITH t AS (
+      SELECT o_orderkey,
+             CASE WHEN o_orderkey % 7 = 0 THEN NULL
+                  ELSE o_orderpriority END AS prio,
+             CASE WHEN o_orderkey % 11 = 0 THEN NULL
+                  ELSE o_totalprice END AS price
+      FROM orders WHERE o_orderkey < 2000
+    )
+    SELECT coalesce(prio, '<null>') AS prio,
+           count(*)::BIGINT AS n_rows,
+           count(price)::BIGINT AS n_price,          -- count skips nulls
+           count(*) FILTER (WHERE price IS NULL)::BIGINT AS n_null_price,
+           round(sum(price), 2) AS sum_price,        -- sum skips nulls
+           sum(CASE WHEN price IS NOT DISTINCT FROM NULL
+                    THEN 1 ELSE 0 END)::BIGINT AS n_nsafe
+    FROM t
+    GROUP BY prio
+    """,
+    tags=("sql", "semantics"),
+)
+def q52_null_semantics(spark, sf_dir):
+    """Null-semantics battery on one grouped aggregate: NULL group keys
+    form their OWN group (surfaced via coalesce so both engines label it
+    identically), COUNT(col)/SUM skip nulls while COUNT(*) does not,
+    FILTER counts them explicitly, and null-safe comparison
+    (Spark ``<=>`` == SQL ``IS NOT DISTINCT FROM``) treats NULL=NULL as
+    true. The contract every downstream aggregate silently depends on —
+    locked as an oracle hash so an engine upgrade that shifts null
+    grouping or null-safe-eq behavior fails loudly.
+
+    Scale shape: one pruned scan + one map-side-combinable aggregate."""
+    o = load_table(spark, sf_dir, "orders").filter(F.col("o_orderkey") < 2000)
+    t = o.select(
+        F.when(F.col("o_orderkey") % 7 == 0, None)
+        .otherwise(F.col("o_orderpriority"))
+        .alias("prio"),
+        F.when(F.col("o_orderkey") % 11 == 0, None)
+        .otherwise(F.col("o_totalprice"))
+        .alias("price"),
+    )
+    return t.groupBy(
+        F.coalesce("prio", F.lit("<null>")).alias("prio")
+    ).agg(
+        F.count("*").alias("n_rows"),
+        F.count("price").alias("n_price"),
+        F.count_if(F.col("price").isNull()).alias("n_null_price"),
+        F.round(F.sum("price"), 2).alias("sum_price"),
+        F.sum(
+            F.when(F.col("price").eqNullSafe(F.lit(None)), 1).otherwise(0)
+        ).alias("n_nsafe"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# ORDER BY ALL dialect + deterministic full ordering
+# ---------------------------------------------------------------------------
+@query(
+    "q53_order_by_all",
+    oracle="""
+    SELECT o_orderpriority, o_orderstatus, count(*)::BIGINT AS n
+    FROM orders GROUP BY o_orderpriority, o_orderstatus
+    ORDER BY ALL
+    """,
+    tags=("sql", "dialect"),
+)
+def q53_order_by_all(spark, sf_dir):
+    """ORDER BY ALL (Spark 4 / DuckDB dialect): order by every select
+    column left-to-right — the deterministic-output shorthand for small
+    grouped reports. The result set here is |priorities|×|statuses|
+    rows, so the global sort is over a parameter-bounded frame (the
+    driver compare is order-insensitive anyway; this query exists for
+    dialect parity, and the aggregate beneath is the scalable part)."""
+    load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders_v")
+    return spark.sql(
+        """
+        SELECT o_orderpriority, o_orderstatus, count(*) AS n
+        FROM orders_v GROUP BY o_orderpriority, o_orderstatus
+        ORDER BY ALL
+        """
+    )
+
+
+# ---------------------------------------------------------------------------
+# NOT IN null trap vs NOT EXISTS
+# ---------------------------------------------------------------------------
+@query(
+    "q70_not_in_null_trap",
+    oracle="""
+    WITH probe AS (
+      SELECT o_custkey FROM orders WHERE o_orderkey < 1000
+    ), dirty AS (
+      SELECT CASE WHEN c_custkey % 50 = 0 THEN NULL
+             ELSE c_custkey END AS k
+      FROM customer WHERE c_custkey < 200
+    ), clean AS (
+      SELECT k FROM dirty WHERE k IS NOT NULL
+    )
+    SELECT
+      (SELECT count(*) FROM probe
+        WHERE o_custkey NOT IN (SELECT k FROM clean))::BIGINT
+        AS n_not_in_clean,
+      (SELECT count(*) FROM probe
+        WHERE o_custkey NOT IN (SELECT k FROM dirty))::BIGINT
+        AS n_not_in_poisoned,
+      (SELECT count(*) FROM probe p
+        WHERE NOT EXISTS (SELECT 1 FROM dirty d
+                          WHERE d.k = p.o_custkey))::BIGINT
+        AS n_not_exists
+    """,
+    tags=("sql", "dialect", "nulls"),
+)
+def q70_not_in_null_trap(spark, sf_dir):
+    """The NOT IN null trap, pinned as an oracle contract: with a NULL
+    in the subquery, ``x NOT IN (…)`` is never TRUE (three-valued logic:
+    x <> NULL is UNKNOWN, so the conjunction can't reach TRUE) and the
+    poisoned count is 0 — while NOT EXISTS with an equality correlate is
+    null-immune and returns the real complement. Both engines implement
+    ANSI semantics; the hash locks that the engine's NOT IN stays a
+    null-aware anti-join (Spark plans exactly that) and that the two
+    spellings diverge in the documented way. The third count equals the
+    first: NOT EXISTS over the dirty set == NOT IN over the cleaned set.
+
+    Scale shape: three bounded-probe anti-join counts joined as scalar
+    1-row frames; the null-aware anti-join (NOT IN) is the expensive
+    spelling at scale (it must broadcast-and-null-check), which is WHY
+    production code should write NOT EXISTS — this query is the
+    documented receipt."""
+    o = load_table(spark, sf_dir, "orders")
+    c = load_table(spark, sf_dir, "customer")
+    o.filter(F.col("o_orderkey") < 1000).select("o_custkey").createOrReplaceTempView(
+        "q70_probe"
+    )
+    c.filter(F.col("c_custkey") < 200).select(
+        F.when(F.col("c_custkey") % 50 == 0, None)
+        .otherwise(F.col("c_custkey"))
+        .alias("k")
+    ).createOrReplaceTempView("q70_dirty")
+    return spark.sql(
+        """
+        SELECT
+          (SELECT count(*) FROM q70_probe
+            WHERE o_custkey NOT IN (SELECT k FROM q70_dirty
+                                    WHERE k IS NOT NULL))
+            AS n_not_in_clean,
+          (SELECT count(*) FROM q70_probe
+            WHERE o_custkey NOT IN (SELECT k FROM q70_dirty))
+            AS n_not_in_poisoned,
+          (SELECT count(*) FROM q70_probe p
+            WHERE NOT EXISTS (SELECT 1 FROM q70_dirty d
+                              WHERE d.k = p.o_custkey))
+            AS n_not_exists
+        """
+    ).select(
+        F.col("n_not_in_clean").cast("bigint").alias("n_not_in_clean"),
+        F.col("n_not_in_poisoned").cast("bigint").alias("n_not_in_poisoned"),
+        F.col("n_not_exists").cast("bigint").alias("n_not_exists"),
+    )
+
+
+@query(
+    "q71_intdiv_mod_contract",
+    oracle="""
+    WITH t AS (
+      SELECT o_orderkey,
+             (o_orderkey % 100) - 50 AS a,
+             CASE WHEN o_orderkey % 3 = 0 THEN -7 ELSE 7 END AS b
+      FROM orders WHERE o_orderkey < 500
+    )
+    SELECT a, b,
+           (a // b)::BIGINT AS int_div,
+           (a % b)::BIGINT AS mod_c,
+           (((a % b) + b) % b)::BIGINT AS mod_floored,
+           count(*)::BIGINT AS n
+    FROM t GROUP BY a, b
+    """,
+    tags=("sql", "dialect"),
+)
+def q71_intdiv_mod_contract(spark, sf_dir):
+    """Integer division/modulo sign contract over negative operands:
+    both engines truncate integer division toward zero (``DIV`` ==
+    DuckDB ``//`` for integers) and give ``%`` the DIVIDEND's sign
+    (C semantics) — and the floored ("python-style", always
+    b-signed) modulo is recoverable as ``((a % b) + b) % b`` (Spark's
+    ``pmod`` for positive b). Locked as an oracle hash because silent
+    sign disagreement here corrupts every hash-bucketing and
+    salting expression built on %.
+
+    Scale shape: scan-filter + a ≤200-group aggregate."""
+    o = load_table(spark, sf_dir, "orders").filter(F.col("o_orderkey") < 500)
+    t = o.select(
+        ((F.col("o_orderkey") % 100) - 50).alias("a"),
+        F.when(F.col("o_orderkey") % 3 == 0, -7).otherwise(7).alias("b"),
+    )
+    return t.groupBy("a", "b").agg(
+        F.expr("a DIV b").cast("bigint").alias("int_div"),
+        (F.col("a") % F.col("b")).cast("bigint").alias("mod_c"),
+        (((F.col("a") % F.col("b")) + F.col("b")) % F.col("b"))
+        .cast("bigint")
+        .alias("mod_floored"),
+        F.count(F.lit(1)).cast("bigint").alias("n"),
+    )
+
+
+@query(
+    "q72_datetime_contract",
+    oracle="""
+    SELECT strftime(date_trunc('week', o_orderdate), '%Y-%m-%d')
+             AS week_start,
+           isodow(min(o_orderdate))::INT AS iso_dow_first,
+           quarter(min(o_orderdate))::INT AS q_first,
+           epoch(min(o_orderdate))::BIGINT AS epoch_first,
+           count(*)::BIGINT AS n
+    FROM orders
+    WHERE o_orderkey < 2000
+    GROUP BY date_trunc('week', o_orderdate)
+    """,
+    tags=("sql", "dialect", "datetime"),
+)
+def q72_datetime_contract(spark, sf_dir):
+    """Datetime cross-engine contract: the PORTABLE spellings for the
+    calendar primitives where the engines' native functions disagree —
+    Spark ``dayofweek`` is 1=Sunday while DuckDB ``dayofweek`` is
+    0=Sunday, so the ISO day (1=Mon..7=Sun) must be spelled
+    ``((dayofweek(ts)+5)%7)+1`` on Spark vs ``isodow`` on DuckDB; both
+    engines truncate ``date_trunc('week')`` to Monday and agree on
+    quarter and epoch seconds (UTC session pinned by load_table). A
+    weekly roll-up locks all four at once.
+
+    Scale shape: pruned scan, map-side-combinable weekly aggregate."""
+    o = load_table(spark, sf_dir, "orders").filter(F.col("o_orderkey") < 2000)
+    return (
+        o.groupBy(
+            F.date_format(
+                F.date_trunc("week", "o_orderdate"), "yyyy-MM-dd"
+            ).alias("week_start")
+        )
+        .agg(
+            (((F.dayofweek(F.min("o_orderdate")) + 5) % 7) + 1)
+            .cast("int")
+            .alias("iso_dow_first"),
+            F.quarter(F.min("o_orderdate")).cast("int").alias("q_first"),
+            F.unix_timestamp(F.min("o_orderdate"))
+            .cast("bigint")
+            .alias("epoch_first"),
+            F.count(F.lit(1)).cast("bigint").alias("n"),
+        )
+    )
+
+
+@query(
+    "q73_string_contract",
+    oracle="""
+    SELECT c_custkey,
+           substr(c_name, 10, 5) AS sub_1based,
+           strpos(c_name, '#')::INT AS instr_1based,
+           lpad(c_custkey::VARCHAR, 8, '0') AS key_padded,
+           split_part(c_name, '#', 2) AS after_hash,
+           length(c_name)::INT AS n_chars,
+           upper(substr(c_name, 1, 3)) AS up3
+    FROM customer WHERE c_custkey < 100
+    """,
+    tags=("sql", "dialect", "strings"),
+)
+def q73_string_contract(spark, sf_dir):
+    """String-function cross-engine contract: 1-based substring and
+    instr/strpos, lpad zero-padding, split_part field extraction,
+    character (not byte) length, ASCII case mapping — pinned as hashes
+    because every key-formatting expression in the pipeline
+    (operators/sharding.py's shard keys, the text index's terms) assumes
+    these exact conventions.
+
+    Scale shape: row-local projection, pruned scan, no shuffle."""
+    c = load_table(spark, sf_dir, "customer").filter(F.col("c_custkey") < 100)
+    return c.select(
+        "c_custkey",
+        F.substring("c_name", 10, 5).alias("sub_1based"),
+        F.instr(F.col("c_name"), "#").cast("int").alias("instr_1based"),
+        F.lpad(F.col("c_custkey").cast("string"), 8, "0").alias(
+            "key_padded"
+        ),
+        F.split_part(F.col("c_name"), F.lit("#"), F.lit(2)).alias(
+            "after_hash"
+        ),
+        F.length("c_name").cast("int").alias("n_chars"),
+        F.upper(F.substring("c_name", 1, 3)).alias("up3"),
+    )
+
+
+HOF_BIG = 0.25  # exactly representable in binary — safe float/double cmp
+
+
+@query(
+    "q74_higher_order_fns",
+    oracle=f"""
+    SELECT vec_id,
+           len(embedding) AS dim,
+           len(list_filter(embedding, x -> x > 0)) AS n_pos,
+           len(list_filter(embedding, x -> x > {HOF_BIG})) > 0 AS has_big,
+           len(list_filter(embedding, x -> NOT (abs(x::DOUBLE) < 1.0))) = 0
+             AS all_small,
+           round(list_reduce(
+             list_transform(embedding, x -> abs(x::DOUBLE)),
+             (a, x) -> a + x), 4) AS l1,
+           round(list_reduce(
+             list_transform(embedding, x -> x::DOUBLE * x::DOUBLE),
+             (a, x) -> a + x), 4) AS sq_sum
+    FROM embeddings
+    """,
+    tags=("relational", "nested", "lambda"),
+)
+def q74_higher_order_fns(spark, sf_dir):
+    """SQL higher-order functions (SPARK-23908) over array<float>:
+    filter, exists, forall, and aggregate (fold), each reduced to a
+    scalar. The lambda surface q27_array_fns deliberately left out.
+
+    Exactness: elements cast to DOUBLE before arithmetic (identical
+    float→double widening both engines); folds are left-folds with an
+    exact 0.0 identity, so the accumulation order — and thus the
+    rounded result — is bit-identical to DuckDB's list_reduce over
+    list_transform. Scale shape: embarrassingly-parallel per-row
+    codegen expressions, one scan, no shuffle, no UDF."""
+    e = load_table(spark, sf_dir, "embeddings")
+    return e.select(
+        "vec_id",
+        F.size("embedding").alias("dim"),
+        F.size(F.expr("filter(embedding, x -> x > 0)")).alias("n_pos"),
+        F.expr(f"exists(embedding, x -> x > {HOF_BIG})").alias("has_big"),
+        F.expr("forall(embedding, x -> abs(CAST(x AS DOUBLE)) < 1.0)").alias(
+            "all_small"
+        ),
+        F.round(
+            F.expr(
+                "aggregate(embedding, 0D, (a, x) -> a + abs(CAST(x AS DOUBLE)))"
+            ),
+            4,
+        ).alias("l1"),
+        F.round(
+            F.expr(
+                "aggregate(embedding, 0D,"
+                " (a, x) -> a + CAST(x AS DOUBLE) * CAST(x AS DOUBLE))"
+            ),
+            4,
+        ).alias("sq_sum"),
+    )

@@ -1,49 +1,45 @@
-"""Round-12 queries: the AS-OF join family.
+"""AS-OF join queries over the events table.
 
-The one canonical "Spark lacks this, compose it" operator the engine
-was still missing:
+Spark has no ASOF JOIN; every row here is served by the one-shuffle
+union-tag + per-key ordered carry in operators/asof.py, and every oracle
+is DuckDB's native ``ASOF LEFT JOIN`` (or a direct SQL restatement of
+the same contract), so the rewrite's equality to a real ASOF engine IS
+the test.
 
-- ``events_asof_join``       backward AS-OF join (attribution): for each
-                             purchase, the same user's most recent view
-                             at-or-before the purchase instant. Spark has
-                             no ASOF JOIN; the scalable rewrite is
-                             union-tag + one per-key ordered window with
-                             a last-non-null carry — one shuffle, no
-                             range explosion (the Flink temporal-join /
-                             pandas merge_asof shape). The oracle is
-                             DuckDB's native ``ASOF LEFT JOIN``, so the
-                             rewrite's equality to a real ASOF engine IS
-                             the test. This is the LINEAR-STATE twin of
-                             ``q32_asof_join`` (windows.py), which keeps
-                             the naive range-join + row_number=1 plan: at
-                             100 TB, q32 materializes every (purchase ×
-                             all prior views) candidate before discarding
-                             all but one, where the carry touches each
-                             event exactly once; q32 is also INNER (drops
-                             view-less purchases) — this one is LEFT.
-- ``events_asof_tolerance``  the attribution report built on the same
-                             carry: per-user purchase counts, matches,
-                             matches within a 3-day tolerance window
-                             (ASOF + tolerance, pandas ``merge_asof
-                             (tolerance=...)`` semantics), and the mean
-                             attributed view→purchase gap.
-(The round also gate-promotes ``layout_zorder`` — pipeline_extras' Morton
-layout keys, the OPTIMIZE ZORDER primitive — which was oracle-backed but
-never driver-recorded; see gate rotation #11 in queries/__init__.py.)
+- ``events_asof_join``             backward as-of (attribution): each
+                                   purchase gets the same user's latest
+                                   view at-or-before it. The LINEAR-STATE
+                                   twin of ``q32_asof_join`` (windows.py),
+                                   which keeps the naive range-join +
+                                   row_number=1 plan and is INNER.
+- ``events_asof_tolerance``        the attribution report on the same
+                                   carry: matches within a 3-day
+                                   tolerance (pandas ``merge_asof(
+                                   tolerance=...)`` semantics).
+- ``events_asof_nearest``          two-sided nearest as-of (dual carry).
+- ``events_asof_forward``          next-event attribution.
+- ``events_asof_strict``           allow_exact_matches=False, judged
+                                   against DuckDB's strict ``>`` ASOF.
+- ``events_asof_forward_bucketed`` the forward direction served by the
+                                   BUCKETED two-phase carry, sharing
+                                   events_asof_forward's oracle VERBATIM
+                                   (bucketed == plain == native ASOF).
+- ``events_asof_auto``             the ``bucket="auto"`` plan chooser,
+                                   sharing events_asof_join's oracle with
+                                   the budget forced low so the BUCKETED
+                                   branch is the one judged.
 
-Reference parity: the reference pipeline (doc2dataset) has no join or
-layout surface at all (its one join-adjacent op is a URL
-``dropDuplicates``, /root/reference/examples/get_pdf_links_from_cc.py:126);
-these extend the declared query families per SURVEY §2.3's growth rule.
+Scale shape: the carry is ONE window partitioned by ``user_id`` ordered
+by ``(ts, side, id)`` — no inequality join, no per-row range scan, no
+candidate explosion. Strictness lives entirely in the within-window
+order key of same-ts rows (operators/asof._order_key). The bucketed
+variants partition by (user_id, week-bucket), bounded by per-bucket
+volume however hot a user key is.
 
-Scale shape notes:
-- The as-of carry is ONE window partitioned by ``user_id`` ordered by
-  ``(ts, side, id)`` — per-key sequential state, massively parallel
-  across keys, and the only shuffle is the hash partition by key. No
-  inequality join, no per-row range scan, no candidate explosion. A
-  severely hot key (one user with millions of events) would call for
-  the time-bucketed two-phase variant; event keys here are users, whose
-  per-key volume is organically bounded.
+Reference parity: the reference pipeline (doc2dataset) has no join
+surface (its one join-adjacent op is a URL ``dropDuplicates``,
+reference examples/get_pdf_links_from_cc.py:126); these extend the
+declared query families per SURVEY §2.3's growth rule.
 """
 
 from __future__ import annotations
@@ -51,8 +47,9 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from doc2dataset_spark.operators.asof import asof_join
-from doc2dataset_spark.queries.core import query
+from doc2dataset_spark.queries.core import REGISTRY, query
 from doc2dataset_spark.session import load_table
+
 
 # ---------------------------------------------------------------------------
 # events_asof_join — backward as-of (attribution) via union + ordered carry
@@ -367,79 +364,170 @@ def events_asof_forward(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# events_hypertable_rollup — multi-granularity continuous aggregate
+# events_asof_strict / events_asof_forward_bucketed — contract completion
 # ---------------------------------------------------------------------------
-
-_HT_FMT = "yyyy-MM-dd HH:mm:ss"
-
-
-def _ht_level(df, src_bucket: str, granularity: str):
-    """Re-aggregate finer partials into one coarser granularity —
-    exact-decimal sums, so the fold is algebraically lossless."""
-    return (
-        df.groupBy(
-            F.date_trunc(granularity, F.col(src_bucket)).alias("bucket")
-        )
-        .agg(
-            F.sum("n_events").cast("bigint").alias("n_events"),
-            F.sum("dec_total").cast("decimal(38,6)").alias("dec_total"),
-        )
+def _views_purchases(spark, sf_dir):
+    e = load_table(spark, sf_dir, "events")
+    views = (
+        e.filter(F.col("event_type") == "view")
+        .groupBy("user_id", "ts")
+        .agg(F.max_by("value", "event_id").alias("v_value"))
     )
-
-
-def _ht_emit(df, granularity: str):
-    return df.select(
-        F.lit(granularity).alias("granularity"),
-        F.date_format("bucket", _HT_FMT).alias("bucket"),
-        "n_events",
-        F.round(F.col("dec_total"), 4).cast("double").alias("total"),
+    purchases = e.filter(F.col("event_type") == "purchase").select(
+        "event_id", "user_id", "ts"
     )
-
-
-_HT_DUCK_LEVEL = """
-  SELECT '{g}' AS granularity,
-         strftime(date_trunc('{g}', ts), '%Y-%m-%d %H:%M:%S') AS bucket,
-         count(*)::BIGINT AS n_events,
-         round(SUM(CAST(value AS DECIMAL(38,6))), 4)::DOUBLE AS total
-  FROM events GROUP BY 2
-"""
+    return views, purchases
 
 
 @query(
-    "events_hypertable_rollup",
-    oracle=" UNION ALL ".join(
-        _HT_DUCK_LEVEL.format(g=g) for g in ("hour", "day", "month")
-    ),
-    tags=("events", "rollup", "timeseries"),
+    "events_asof_strict",
+    oracle=f"""
+    WITH v AS ({_VIEWS_DUCK}),
+    p AS (
+      SELECT event_id, user_id, ts
+      FROM events WHERE event_type = 'purchase'
+    )
+    SELECT p.event_id, p.user_id,
+           strftime(p.ts, '%Y-%m-%d %H:%M:%S') AS purchase_ts,
+           strftime(v.ts, '%Y-%m-%d %H:%M:%S') AS prior_view_ts,
+           v.v_value AS prior_view_value,
+           (epoch_us(p.ts) - epoch_us(v.ts))::BIGINT AS gap_us
+    FROM p ASOF LEFT JOIN v ON p.user_id = v.user_id AND p.ts > v.ts
+    """,
+    tags=("events", "join", "asof"),
 )
-def events_hypertable_rollup(spark, sf_dir):
-    """Hypertable-style continuous aggregate (TimescaleDB's cagg /
-    materialized rollup shape): ONE pass computes hourly partials
-    (count + exact-decimal sum, map-side combinable), then day and
-    month are served by RE-AGGREGATING the finer level — hour → day →
-    month, each fold algebraically lossless because the partials stay
-    DECIMAL(38,6) until the final round. The oracle computes every
-    granularity DIRECTLY from raw events, so the hash equality proves
-    the re-aggregation chain loses nothing — the contract that lets a
-    100 TB deployment persist only hourly partials and serve any
-    coarser granularity without touching raw data again. The hourly
-    frame is localCheckpoint'd (modeling the materialized partial
-    store) so the three-level union reads raw events once."""
+def events_asof_strict(spark, sf_dir):
+    """STRICT backward as-of (``allow_exact_matches=False``): each
+    purchase picks the same user's latest view STRICTLY BEFORE it — a
+    view at the exact purchase instant no longer matches (the "don't
+    attribute to a simultaneous event" contract; pandas merge_asof's
+    flag, full parity pinned by tests/test_asof_operator.py across all
+    three directions and the bucketed path). One operator argument on
+    the same one-exchange carry; the oracle is DuckDB's native ASOF
+    LEFT JOIN with its strict ``>`` predicate. gap_us is strictly
+    positive wherever matched."""
+    views, purchases = _views_purchases(spark, sf_dir)
+    j = asof_join(
+        purchases,
+        views,
+        on="ts",
+        by=("user_id",),
+        direction="backward",
+        how="left",
+        suffix="v_",
+        allow_exact_matches=False,
+    )
+    return j.select(
+        "event_id",
+        "user_id",
+        F.date_format("ts", "yyyy-MM-dd HH:mm:ss").alias("purchase_ts"),
+        F.date_format("v_ts", "yyyy-MM-dd HH:mm:ss").alias("prior_view_ts"),
+        F.col("v_v_value").alias("prior_view_value"),
+        F.col("asof_gap").alias("gap_us"),
+    )
+
+
+_WEEK_US = 7 * 24 * 3600 * 1_000_000  # bucket span: one week in µs
+
+
+@query(
+    "events_asof_forward_bucketed",
+    oracle=f"""
+    WITH v AS ({_VIEWS_DUCK}),
+    p AS (
+      SELECT event_id, user_id, ts
+      FROM events WHERE event_type = 'purchase'
+    )
+    SELECT p.event_id, p.user_id,
+           strftime(p.ts, '%Y-%m-%d %H:%M:%S') AS purchase_ts,
+           strftime(v.ts, '%Y-%m-%d %H:%M:%S') AS next_view_ts,
+           v.v_value AS next_view_value,
+           (epoch_us(p.ts) - epoch_us(v.ts))::BIGINT AS gap_us
+    FROM p ASOF LEFT JOIN v ON p.user_id = v.user_id AND p.ts <= v.ts
+    """,
+    tags=("events", "join", "asof", "skew"),
+)
+def events_asof_forward_bucketed(spark, sf_dir):
+    """events_asof_forward served by the BUCKETED two-phase forward
+    carry (``bucket=`` one week): phase 1 carries each (user, week)'s
+    FIRST view across weeks as the seed from strictly later buckets;
+    phase 2 sorts only within (user, week) partitions — bounded by
+    per-week volume no matter how hot a user key is (the skewed-forward
+    hole the round-12 verdict flagged). The oracle is the SAME SQL as
+    events_asof_forward, so the driver's hash row externally proves
+    bucketed == plain == DuckDB's native forward ASOF."""
+    views, purchases = _views_purchases(spark, sf_dir)
+    j = asof_join(
+        purchases,
+        views,
+        on="ts",
+        by=("user_id",),
+        direction="forward",
+        how="left",
+        suffix="v_",
+        bucket=_WEEK_US,
+    )
+    return j.select(
+        "event_id",
+        "user_id",
+        F.date_format("ts", "yyyy-MM-dd HH:mm:ss").alias("purchase_ts"),
+        F.date_format("v_ts", "yyyy-MM-dd HH:mm:ss").alias("next_view_ts"),
+        F.col("v_v_value").alias("next_view_value"),
+        F.col("asof_gap").alias("gap_us"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# events_asof_auto — the bucket="auto" plan chooser
+# ---------------------------------------------------------------------------
+@query(
+    "events_asof_auto",
+    oracle=None,  # set below: events_asof_join's oracle VERBATIM
+    tags=("events", "join", "asof", "cbo"),
+)
+def events_asof_auto(spark, sf_dir):
+    """The backward attribution served by ``bucket="auto"`` (the
+    CBO-style plan choice, operators/asof.resolve_auto_bucket): one
+    ANALYZE aggregate picks plain-vs-bucketed from the hottest key's
+    (rows, time-span), then the chosen carry runs. Shares
+    events_asof_join's oracle VERBATIM — the driver hash row externally
+    proves auto == plain == DuckDB's native ASOF LEFT JOIN, whichever
+    physical plan the stats picked (the warm==cold /
+    bucketed==plain gate trick applied to the plan chooser). The budget
+    is forced below the corpus's hot-key volume so the row exercises
+    the BUCKETED branch of the decision (the plain branch is the
+    default everywhere else the oracle already judges)."""
+    from doc2dataset_spark.operators.asof import asof_join
+
     e = load_table(spark, sf_dir, "events")
-    hourly = (
-        e.groupBy(F.date_trunc("hour", F.col("ts")).alias("bucket"))
-        .agg(
-            F.count("*").cast("bigint").alias("n_events"),
-            F.sum(F.col("value").cast("decimal(38,6)"))
-            .cast("decimal(38,6)")
-            .alias("dec_total"),
-        )
-        .localCheckpoint(eager=False)
+    views = (
+        e.filter(F.col("event_type") == "view")
+        .groupBy("user_id", "ts")
+        .agg(F.max_by("value", "event_id").alias("v_value"))
     )
-    daily = _ht_level(hourly, "bucket", "day").localCheckpoint(eager=False)
-    monthly = _ht_level(daily, "bucket", "month")
-    return (
-        _ht_emit(hourly, "hour")
-        .unionByName(_ht_emit(daily, "day"))
-        .unionByName(_ht_emit(monthly, "month"))
+    purchases = e.filter(F.col("event_type") == "purchase").select(
+        "event_id", "user_id", "ts", F.col("value").alias("purchase_value")
     )
+    j = asof_join(
+        purchases,
+        views,
+        on="ts",
+        by=("user_id",),
+        direction="backward",
+        how="left",
+        suffix="v_",
+        bucket="auto",
+        auto_partition_budget=8,  # force the bucketed branch
+    )
+    return j.select(
+        "event_id",
+        "user_id",
+        F.date_format("ts", "yyyy-MM-dd HH:mm:ss").alias("purchase_ts"),
+        "purchase_value",
+        F.date_format("v_ts", "yyyy-MM-dd HH:mm:ss").alias("last_view_ts"),
+        F.col("v_v_value").alias("last_view_value"),
+        F.col("asof_gap").alias("gap_us"),
+    )
+
+
+REGISTRY["events_asof_auto"].oracle = REGISTRY["events_asof_join"].oracle

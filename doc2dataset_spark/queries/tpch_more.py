@@ -757,3 +757,169 @@ def q69_tpch_q21(spark, sf_dir):
         .groupBy("s_name")
         .agg(F.count(F.lit(1)).cast("bigint").alias("numwait"))
     )
+
+
+# ---------------------------------------------------------------------------
+# TPC-H Q10 (returned-item revenue) and Q18 (large-volume orders)
+# ---------------------------------------------------------------------------
+Q48_START = "1995-07-01"
+Q48_END = "1995-10-01"
+Q48_TOPK = 20
+Q49_MIN_QTY = 150
+
+
+@query(
+    "q48_tpch_q10",
+    oracle=f"""
+    SELECT c.c_custkey, c.c_name, n.n_name,
+           {sql_dsum("l.l_extendedprice * (1 - l.l_discount)", "revenue")},
+           round(c.c_acctbal, 2) AS c_acctbal
+    FROM customer c
+    JOIN orders o ON c.c_custkey = o.o_custkey
+    JOIN lineitem l ON l.l_orderkey = o.o_orderkey
+    JOIN nation n ON c.c_nationkey = n.n_nationkey
+    WHERE o.o_orderdate >= TIMESTAMP '{Q48_START}'
+      AND o.o_orderdate < TIMESTAMP '{Q48_END}'
+      AND l.l_returnflag = 'R'
+    GROUP BY c.c_custkey, c.c_name, n.n_name, c.c_acctbal
+    ORDER BY revenue DESC, c_custkey
+    LIMIT {Q48_TOPK}
+    """,
+    tags=("sql", "tpch"),
+)
+def q48_tpch_q10(spark, sf_dir):
+    """TPC-H Q10 (returned-item reporting, adapted to the shipped
+    columns): top-20 customers by revenue on returned lineitems in a
+    quarter. The canonical fact⋈fact⋈dim⋈dim report plan.
+
+    Scale shape: the date window prunes orders and the returnflag
+    literal prunes lineitem AT THE SCAN; the l⋈o join shuffles on
+    orderkey, customer/nation broadcast after filtering; the grouped sum
+    is decimal-exact (order-independent) and the top-20 is
+    TakeOrderedAndProject."""
+    c = load_table(spark, sf_dir, "customer")
+    n = load_table(spark, sf_dir, "nation")
+    o = load_table(spark, sf_dir, "orders").filter(
+        (F.col("o_orderdate") >= Q48_START)
+        & (F.col("o_orderdate") < Q48_END)
+    )
+    li = load_table(spark, sf_dir, "lineitem").filter(
+        F.col("l_returnflag") == "R"
+    )
+    return (
+        li.join(o, F.col("l_orderkey") == F.col("o_orderkey"))
+        .join(c, F.col("o_custkey") == F.col("c_custkey"))
+        .join(F.broadcast(n), F.col("c_nationkey") == F.col("n_nationkey"))
+        .groupBy("c_custkey", "c_name", "n_name", "c_acctbal")
+        .agg(
+            dsum(
+                F.col("l_extendedprice") * (1 - F.col("l_discount")),
+                "revenue",
+            )
+        )
+        .select(
+            "c_custkey",
+            "c_name",
+            "n_name",
+            "revenue",
+            F.round("c_acctbal", 2).alias("c_acctbal"),
+        )
+        .orderBy(F.desc("revenue"), "c_custkey")
+        .limit(Q48_TOPK)
+    )
+
+
+@query(
+    "q49_tpch_q18",
+    oracle=f"""
+    WITH big AS (
+      SELECT l_orderkey, sum(l_quantity)::BIGINT AS total_qty
+      FROM lineitem GROUP BY l_orderkey
+      HAVING sum(l_quantity) > {Q49_MIN_QTY}
+    )
+    SELECT c.c_custkey, c.c_name, o.o_orderkey,
+           strftime(o.o_orderdate, '%Y-%m-%d %H:%M:%S') AS o_orderdate,
+           round(o.o_totalprice, 2) AS o_totalprice,
+           b.total_qty
+    FROM big b
+    JOIN orders o ON o.o_orderkey = b.l_orderkey
+    JOIN customer c ON c.c_custkey = o.o_custkey
+    """,
+    tags=("sql", "tpch"),
+)
+def q49_tpch_q18(spark, sf_dir):
+    """TPC-H Q18 (large-volume customers): orders whose lineitems total
+    more than Q49_MIN_QTY units, joined back to order and customer
+    detail — the aggregate-derived-table semi-join plan (GROUP BY +
+    HAVING feeding a join, not a correlated subquery per row).
+
+    Scale shape: the quantity aggregate is map-side combinable on the
+    natural lineitem key (l_orderkey — bounded rows per key), its
+    HAVING output is a tiny fraction of orders (AQE broadcast-eligible),
+    and both detail joins are key-equi. l_quantity is integral in the
+    data, so the BIGINT total is exact on both engines."""
+    li = load_table(spark, sf_dir, "lineitem")
+    big = (
+        li.groupBy("l_orderkey")
+        .agg(F.sum("l_quantity").cast("bigint").alias("total_qty"))
+        .filter(F.col("total_qty") > Q49_MIN_QTY)
+    )
+    o = load_table(spark, sf_dir, "orders")
+    c = load_table(spark, sf_dir, "customer")
+    return (
+        big.join(o, big["l_orderkey"] == o["o_orderkey"])
+        .join(c, o["o_custkey"] == c["c_custkey"])
+        .select(
+            "c_custkey",
+            "c_name",
+            "o_orderkey",
+            F.date_format("o_orderdate", "yyyy-MM-dd HH:mm:ss").alias(
+                "o_orderdate"
+            ),
+            F.round("o_totalprice", 2).alias("o_totalprice"),
+            "total_qty",
+        )
+    )
+
+
+# ---------------------------------------------------------------------------
+# TPC-H Q6 (forecasting revenue change)
+# ---------------------------------------------------------------------------
+Q50_START = "1996-01-01"
+Q50_END = "1997-01-01"
+
+
+@query(
+    "q50_tpch_q6",
+    oracle=f"""
+    SELECT {sql_dsum("l_extendedprice * l_discount", "revenue")},
+           count(*)::BIGINT AS n_lines
+    FROM lineitem
+    WHERE l_shipdate >= TIMESTAMP '{Q50_START}'
+      AND l_shipdate < TIMESTAMP '{Q50_END}'
+      AND l_discount BETWEEN 0.05 AND 0.07
+      AND l_quantity < 24
+    """,
+    tags=("sql", "tpch"),
+)
+def q50_tpch_q6(spark, sf_dir):
+    """TPC-H Q6 (forecasting revenue change): pure scan-filter-aggregate
+    — the query that measures pushdown + codegen with zero joins. All
+    three predicates reach the parquet scan; the sum is decimal-exact.
+
+    Scale shape: no shuffle except the 1-row final aggregate merge;
+    at 100 TB this is bounded by scan bandwidth alone."""
+    li = load_table(spark, sf_dir, "lineitem")
+    return (
+        li.filter(
+            (F.col("l_shipdate") >= Q50_START)
+            & (F.col("l_shipdate") < Q50_END)
+            & (F.col("l_discount") >= 0.05)
+            & (F.col("l_discount") <= 0.07)
+            & (F.col("l_quantity") < 24)
+        )
+        .agg(
+            dsum(F.col("l_extendedprice") * F.col("l_discount"), "revenue"),
+            F.count("*").alias("n_lines"),
+        )
+    )

@@ -1,6 +1,6 @@
 """Streaming AS-OF attribution: the as-of join at ingest time.
 
-Batch side: ``queries/round12_extras.events_asof_join`` attributes every
+Batch side: ``queries/timeseries_asof.events_asof_join`` attributes every
 purchase to the user's last at-or-before view with one ordered carry
 (``operators/asof.asof_join``). Production wants the same answer as
 events ARRIVE: each micro-batch's purchases attributed immediately,

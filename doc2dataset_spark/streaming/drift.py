@@ -1,7 +1,7 @@
 """Streaming distribution-drift monitor: per-micro-batch PSI against a
 frozen reference histogram.
 
-The batch query ``quality_psi_drift`` (queries/round7d_extras.py)
+The batch query ``quality_psi_drift`` (queries/text_models.py)
 answers "which sources in this corpus drift from the corpus-wide length
 distribution". A live INGEST pipeline needs the monitoring form: as
 document batches arrive, score each batch's sources against a
@@ -39,7 +39,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from doc2dataset_spark.queries.round7d_extras import (
+from doc2dataset_spark.queries.text_models import (
     binned_docs,
     psi_from_counts,
 )

@@ -1,6 +1,6 @@
 """Incremental hypertable continuous aggregate: the hourly-partial LOG.
 
-``queries/round12_extras.events_hypertable_rollup`` proves the
+``queries/timeseries_hypertable.events_hypertable_rollup`` proves the
 granularity chain (hour → day → month re-aggregation is lossless) but
 recomputes the hourly partials FROM RAW on every call. A 100 TB cagg
 never does that: new events land as per-batch HOURLY PARTIALS
@@ -22,8 +22,8 @@ Pieces, each on an established idiom:
 - ``serve_hypertable``        fold partials per hour, emit the
                               hour/day/month union — SHARED expressions
                               with the batch query (imported from
-                              round12_extras), so stream == batch is
-                              structural.
+                              timeseries_hypertable), so stream ==
+                              batch is structural.
 - ``compact_hypertable_partials``  merge batches ``<= upto`` into ONE
                               folded ``batch_id=upto`` partition (the
                               log stays O(hours), not O(hours×batches))
@@ -32,7 +32,7 @@ Pieces, each on an established idiom:
                               swap_in_compacted rollback + horizon
                               sidecar written BEFORE the publish.
 
-Batch twins live in queries/round13_extras (``rollup_hypertable_
+Batch twins live in queries/timeseries_hypertable (``rollup_hypertable_
 incremental`` / ``_compacted``), both hash-matched against the SAME
 direct-from-raw DuckDB oracle as events_hypertable_rollup — the
 external proof that N incremental batches, folded (and compacted),
@@ -47,14 +47,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from doc2dataset_spark import fsio
-from doc2dataset_spark.queries.round12_extras import _ht_emit, _ht_level
+from doc2dataset_spark.queries.timeseries_hypertable import _ht_emit, _ht_level
 
 
 def hourly_partial(events: DataFrame) -> DataFrame:
     """One batch's hourly partials: (bucket, n_events, dec_total) with
     the sum kept DECIMAL(38,6) — the exact-mergeable partial the whole
     module rests on (identical expressions to the batch query's hourly
-    level, round12_extras.events_hypertable_rollup)."""
+    level, timeseries_hypertable.events_hypertable_rollup)."""
     return events.groupBy(
         F.date_trunc("hour", F.col("ts")).alias("bucket")
     ).agg(
@@ -441,7 +441,7 @@ def serve_hypertable_asof_ts(
 #
 # stream == batch under any in-bound arrival order: the full serve
 # (serve_hypertable) still hash-matches the direct-from-raw oracle —
-# queries/round14_extras.rollup_hypertable_late replays an out-of-order
+# queries/timeseries_hypertable.rollup_hypertable_late replays an out-of-order
 # slicing through this exact per-batch core.
 
 
@@ -493,7 +493,7 @@ def ingest_hypertable_late_batch(
 ) -> dict:
     """ONE batch through the watermarked ingest — the shared core of the
     streaming foreachBatch closure and the batch-side log builder
-    (queries/round14_extras), so stream == batch is structural.
+    (queries/timeseries_hypertable), so stream == batch is structural.
 
     ``on_late`` decides what happens to events below the PRIOR
     watermark (the lateness contract violated — their hour buckets were
@@ -849,7 +849,7 @@ def serve_hypertable_gapfill(spark: SparkSession, out_dir: str) -> DataFrame:
     cagg: densify the folded hourly level to a gapless grid (empty
     hours emit n_events=0, total NULL) and carry the last observed
     total forward. ONE chain shared by the batch registry row
-    (queries/round14_extras.rollup_hypertable_gapfill — where the scale
+    (queries/timeseries_hypertable.rollup_hypertable_gapfill — where the scale
     shape is documented: sequence() grid from the fold's own min/max,
     LOCF as the engine's own BUCKETED backward as-of join, no
     unpartitioned window) and the streaming serve-after-ingest twin

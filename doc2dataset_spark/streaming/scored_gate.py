@@ -2,7 +2,7 @@
 ingest.
 
 The batch side trains the fixed-point quality classifier and gates the
-corpus at its median score (queries/round9_extras.curate_corpus_scored);
+corpus at its median score (queries/quality_classifier.curate_corpus_scored);
 production then applies that FROZEN model to every arriving batch — the
 model is the stream's only state, loaded once from the persisted
 artifact (save_fx_model: weights + bias + the threshold calibrated on
@@ -11,8 +11,8 @@ the training corpus).
 Per micro-batch of (doc_id, source, text):
 
 1. featurize with the SAME hashed-bigram x8 = rha(c*U/n) expressions the
-   trainer uses (round9_extras.fx_features_of — every feature is a pure
-   per-document function, so per-batch scoring is bit-identical to
+   trainer uses (quality_classifier.fx_features_of — every feature is a
+   pure per-document function, so per-batch scoring is bit-identical to
    corpus-wide scoring: no drift between stream and batch by
    construction, pytest-locked);
 2. score under the reloaded fixed-point weights (_fx_score — integer
@@ -34,7 +34,10 @@ import posixpath
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from doc2dataset_spark.queries.round9_extras import _fx_score, fx_features_of
+from doc2dataset_spark.queries.quality_classifier import (
+    _fx_score,
+    fx_features_of,
+)
 
 
 def load_fx_model(spark, model_dir: str):

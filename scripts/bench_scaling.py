@@ -522,7 +522,7 @@ def run_scored_gate(spark) -> None:
 
     from pyspark.sql import functions as F
 
-    from doc2dataset_spark.queries.round9_extras import save_fx_model
+    from doc2dataset_spark.queries.quality_classifier import save_fx_model
     from doc2dataset_spark.streaming.scored_gate import (
         load_fx_model,
         score_batch,
@@ -1239,7 +1239,7 @@ def run_ht_depth(
 
     from pyspark.sql import functions as F  # noqa: PLC0415
 
-    from doc2dataset_spark.queries.round12_extras import (  # noqa: PLC0415
+    from doc2dataset_spark.queries.timeseries_hypertable import (  # noqa: PLC0415
         events_hypertable_rollup,
     )
     from doc2dataset_spark.streaming.hypertable import (  # noqa: PLC0415

@@ -1,17 +1,17 @@
 """Print the driver-gate view of the query registry.
 
 The round driver snapshots only the first 50 registered queries into
-CORRECTNESS_r{N}.json, so registration order (set by the import order in
-doc2dataset_spark/queries/__init__.py) decides which queries get a
-driver-recorded correctness row. Run this after adding/moving any query:
+CORRECTNESS_r{N}.json. doc2dataset_spark/queries/__init__.py orders the
+registry as queries/gate.py FROZEN_GATE followed by every other query in
+import order, so a query registered in any module lands after the gate.
+To change which queries the driver records, edit FROZEN_GATE (and, for
+the scale-critical subset, MUST_BE_GATED) in gate.py — the single source
+this script, the registry and tests/test_registry_*.py all read.
 
     python scripts/registry_order.py
 
-Exits non-zero if the gate drifts from the frozen contract. Both lists
-(the frozen 50 and the scale-critical MUST_BE_GATED subset) live in
-doc2dataset_spark/queries/gate.py — the single source this script, the
-registry import-time assert, and tests/test_registry_*.py all read, so
-they cannot drift apart again (rounds 7-8 shipped exactly that drift).
+Exits non-zero if the gate differs from FROZEN_GATE or a MUST_BE_GATED
+query sits outside it.
 """
 
 from __future__ import annotations

@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 
 from doc2dataset_spark.queries import REGISTRY
 from doc2dataset_spark.queries.dedup import _TOKS
-from doc2dataset_spark.queries.round9_extras import bpe_encode_types
+from doc2dataset_spark.queries.text_models import bpe_encode_types
 from doc2dataset_spark.session import load_table
 
 

@@ -10,7 +10,7 @@ from doc2dataset_spark.operators.minhash_index import (
     candidates_from_index,
 )
 from doc2dataset_spark.queries import REGISTRY
-from doc2dataset_spark.queries.round9_extras import (
+from doc2dataset_spark.queries.quality_classifier import (
     fx_score_from,
     fx_train_score,
     save_fx_model,

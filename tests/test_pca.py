@@ -34,7 +34,9 @@ def test_full_rank_rotation_preserves_topk_exactly(spark, sf_dir):
     """k = d is a pure rotation: dot products and norms are preserved
     (uncentered fit — the reason centering is deliberately absent), so
     the projected top-k IS the truth: recall exactly 1.0 everywhere."""
-    from doc2dataset_spark.queries.round11_extras import mrl_recall_frame  # noqa: F401
+    from doc2dataset_spark.queries.ann_extras import (  # noqa: F401
+        mrl_recall_frame,
+    )
     from doc2dataset_spark.queries.curation_extras import knn_edges_from
     from doc2dataset_spark.queries.dedup import (
         normalized_embeddings,
@@ -60,7 +62,7 @@ def test_pca_beats_prefix_at_equal_dims(spark, sf_dir):
     out-recall the free 32-dim prefix on the clustered fixture (probed
     margins ~0.41 vs ~0.23 at sf0.01; asserted as strict inequality on
     the means so a regression to prefix-equivalent behavior fails)."""
-    from doc2dataset_spark.queries.round11_extras import mrl_recall_frame
+    from doc2dataset_spark.queries.ann_extras import mrl_recall_frame
 
     pca = REGISTRY["ann_pca_recall"].builder(spark, sf_dir)
     pref = mrl_recall_frame(spark, sf_dir, 32)

@@ -7,10 +7,15 @@ gate (dedup_embedding_cell pushed sim_ann_hyperplane out). This test
 makes the gate set an explicit contract: changing it requires editing
 the frozen list here, in the same diff, on purpose.
 
-New queries belong AFTER the gate (late module in queries/__init__.py or
-late registration within a module); promoting one into the gate means
-choosing which current member it evicts.
+queries/__init__.py puts FROZEN_GATE first and every other query after
+it, so a query registered in any module lands after the gate; promoting
+one into the gate means editing FROZEN_GATE and choosing which current
+member it evicts.
 """
+
+import subprocess
+import sys
+from pathlib import Path
 
 import pytest
 
@@ -22,19 +27,39 @@ from doc2dataset_spark.queries.gate import DRIVER_GATE_SIZE, FROZEN_GATE
 def test_driver_gate_set_is_frozen():
     got = list(REGISTRY)[:DRIVER_GATE_SIZE]
     assert got == FROZEN_GATE, (
-        "the first 50 registered queries changed — a new registration "
-        "displaced a gate member. Register new queries after the gate, "
-        "or update FROZEN_GATE deliberately in the same commit.\n"
+        "the first 50 registered queries differ from FROZEN_GATE — "
+        "queries/__init__.py must put FROZEN_GATE first; change the gate "
+        "only by editing FROZEN_GATE in queries/gate.py.\n"
         f"evicted: {sorted(set(FROZEN_GATE) - set(got))}\n"
         f"intruded: {sorted(set(got) - set(FROZEN_GATE))}"
     )
 
 
+def test_unregistered_gate_member_fails_the_registry_load():
+    """A FROZEN_GATE name no module registers must crash the registry
+    load — with an explicit raise, so it also holds under ``python -O``."""
+    stub = (
+        "import sys, types\n"
+        "g = types.ModuleType('doc2dataset_spark.queries.gate')\n"
+        "g.FROZEN_GATE = ['no_such_query']\n"
+        "sys.modules[g.__name__] = g\n"
+        "import doc2dataset_spark.queries\n"
+    )
+    r = subprocess.run(
+        [sys.executable, "-O", "-c", stub],
+        cwd=Path(__file__).resolve().parent.parent,
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert r.returncode != 0
+    assert "no_such_query" in r.stderr
+
+
 def test_gate_members_are_oracle_backed():
     """Every gated query must carry a DuckDB oracle (hash-compared by the
-    driver). Round 6 swapped the two rows-only sketches out of the gate
-    (queries/__init__.py gate_swap), so no exemptions remain: a clean
-    50/50 CORRECTNESS file is the contract."""
+    driver). The two rows-only sketches left the gate in round 6, so no
+    exemptions remain: a clean 50/50 CORRECTNESS file is the contract."""
     for name in list(REGISTRY)[:DRIVER_GATE_SIZE]:
         spec = REGISTRY[name]
         assert spec.oracle, f"gated query {name} has no oracle SQL"

@@ -18,8 +18,8 @@ def test_scale_critical_queries_inside_driver_gate():
     missing = MUST_BE_GATED - gated
     assert not missing, (
         f"scale-critical queries displaced outside the driver's "
-        f"{DRIVER_SNAPSHOT_ROWS}-row gate: {sorted(missing)} — fix the import "
-        f"order in doc2dataset_spark/queries/__init__.py"
+        f"{DRIVER_SNAPSHOT_ROWS}-row gate: {sorted(missing)} — add them to "
+        f"FROZEN_GATE in doc2dataset_spark/queries/gate.py"
     )
 
 
@@ -35,9 +35,9 @@ def test_scripts_checker_reads_the_same_single_source():
 
 
 def test_gated_slots_are_oracle_backed():
-    # rows-only demos must not burn gate slots: round 6 swapped the two
-    # approx sketches to the registry tail (queries/__init__.py gate_swap),
-    # so every gate slot must now carry a DuckDB oracle.
+    # rows-only demos must not burn gate slots: the two approx sketches
+    # live in the registry tail since round 6, so every gate slot must
+    # carry a DuckDB oracle.
     oracles = all_oracles()
     gated = list(REGISTRY)[:DRIVER_SNAPSHOT_ROWS]
     unbacked = [n for n in gated if n not in oracles]

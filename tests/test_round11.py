@@ -7,11 +7,8 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from doc2dataset_spark.queries import REGISTRY
-from doc2dataset_spark.queries.round11_extras import (
-    CCNET_BUCKETS,
-    MRL_DIMS,
-    mrl_recall_frame,
-)
+from doc2dataset_spark.queries.ann_extras import MRL_DIMS, mrl_recall_frame
+from doc2dataset_spark.queries.text_models import CCNET_BUCKETS
 
 
 # ---------------------------------------------------------------------------

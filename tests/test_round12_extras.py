@@ -11,7 +11,7 @@ from __future__ import annotations
 import pandas as pd
 
 from doc2dataset_spark.queries.core import REGISTRY
-from doc2dataset_spark.queries.round12_extras import (
+from doc2dataset_spark.queries.timeseries_asof import (
     ASOF_TOL_US,
     _asof_carried,
 )

@@ -12,7 +12,7 @@ import time as _time
 
 from pyspark.sql import functions as F
 
-from doc2dataset_spark.queries.round12_extras import _asof_carried
+from doc2dataset_spark.queries.timeseries_asof import _asof_carried
 from doc2dataset_spark.session import load_table
 from doc2dataset_spark.streaming.asof import (
     attributed_purchases,

@@ -13,7 +13,9 @@ import time as _time
 
 from pyspark.sql import functions as F
 
-from doc2dataset_spark.queries.round12_extras import events_hypertable_rollup
+from doc2dataset_spark.queries.timeseries_hypertable import (
+    events_hypertable_rollup,
+)
 from doc2dataset_spark.session import load_table
 from doc2dataset_spark.streaming.hypertable import (
     compact_hypertable_partials,
@@ -207,7 +209,10 @@ def test_hypertable_asof_prefix_and_ts(spark, tmp_path):
     go()
     e = load_table(spark, SF, "events").select(*COLS)
     # prefix truth: direct rollup over batches 0-1's events (mod slices)
-    from doc2dataset_spark.queries.round12_extras import _ht_emit, _ht_level
+    from doc2dataset_spark.queries.timeseries_hypertable import (
+        _ht_emit,
+        _ht_level,
+    )
     from doc2dataset_spark.streaming.hypertable import hourly_partial
 
     prefix = e.filter(F.pmod("event_id", F.lit(3)) <= 1)
@@ -278,7 +283,7 @@ def test_batch_built_log_serves_by_timestamp(spark, tmp_path):
     does, or serve_hypertable_asof_ts refuses on every batch-built log
     despite its docstring."""
     from doc2dataset_spark.operators.time_travel import batch_times
-    from doc2dataset_spark.queries.round13_extras import _build_ht_log
+    from doc2dataset_spark.queries.timeseries_hypertable import _build_ht_log
     from doc2dataset_spark.streaming.hypertable import (
         serve_hypertable_asof,
         serve_hypertable_asof_ts,
@@ -620,7 +625,10 @@ def test_drop_mode_through_the_real_stream(spark, tmp_path):
     flowing (no refusal), dead-letters exactly that slice, and serves
     the rollup over the kept rows — stream == batch for the dead-letter
     contract, not just the per-batch core."""
-    from doc2dataset_spark.queries.round12_extras import _ht_emit, _ht_level
+    from doc2dataset_spark.queries.timeseries_hypertable import (
+        _ht_emit,
+        _ht_level,
+    )
     from doc2dataset_spark.streaming.hypertable import (
         hourly_partial,
         rejected_hypertable_rows,

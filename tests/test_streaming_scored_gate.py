@@ -12,7 +12,7 @@ import time
 import pytest
 from pyspark.sql import functions as F
 
-from doc2dataset_spark.queries.round9_extras import (
+from doc2dataset_spark.queries.quality_classifier import (
     fx_score_from,
     save_fx_model,
 )

@@ -6,7 +6,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from doc2dataset_spark.queries import REGISTRY
-from doc2dataset_spark.queries.round9_extras import (
+from doc2dataset_spark.queries.dedup_detectors import (
     WINNOW_W,
     winnow_fingerprints,
 )
