@@ -78,13 +78,6 @@ class DownloadConfig:
     extract_exif: bool = True
     oom_shard_count: int = 5
     oom_sample_per_shard: int = 5
-    # Engine extension (no reference twin): key assignment strategy.
-    # False (default) = dense global index from per-partition offsets — no
-    # global sort, no single-partition window, scale-safe at any input
-    # size. True = the reference's exact contiguous url-ordered layout via
-    # a global row_number window (single-task sort — byte-parity/test path
-    # only; fine up to ~10^8 rows, a scale-killer beyond).
-    contiguous_keys: bool = False
     # T10: digits stripped only when BOTH remove_digits is on and figures
     # are off (reference `extractor.py:163-164`)
     remove_digits: bool = False

@@ -8,15 +8,13 @@ feather files (`reader.py:125-145`) and builds a global sample key
 
 Spark mapping: the shard is a *logical* key, not a materialized file — the
 shuffle plays the ``_tmp`` role. Global contiguity is not semantically
-required (only key uniqueness and the digit layout are observable), so at
-scale we derive ``shard_id`` from a monotonic id without a global sort; a
-``row_number`` path exists for small inputs where byte-parity with the
-reference's contiguous slicing matters.
+required (only key uniqueness and the digit layout are observable), so we
+derive ``shard_id`` from a monotonic id without a global sort.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from doc2dataset_spark.config import DownloadConfig
@@ -36,58 +34,43 @@ def _mid_local(col: str = "_mid"):
     return F.col(col).bitwiseAND((1 << 33) - 1)
 
 
-def assign_keys(
-    df: DataFrame, cfg: DownloadConfig, contiguous: bool | None = None
-) -> DataFrame:
+def assign_keys(df: DataFrame, cfg: DownloadConfig) -> DataFrame:
     """Add ``shard_id`` and the zero-padded ``key`` string.
 
-    ``contiguous`` defaults to ``cfg.contiguous_keys`` (False): the
-    scale-safe path computes a DENSE global index without a global sort
-    (the zipWithIndex shape) — per-partition row counts (one tiny job, one
-    row per partition on the driver) turned into broadcast offsets, plus
-    the partition-local index carried in ``monotonically_increasing_id``'s
+    Computes a DENSE global index without a global sort (the zipWithIndex
+    shape): per-partition row counts (one tiny job, one row per partition
+    on the driver) turned into broadcast offsets, plus the
+    partition-local index carried in ``monotonically_increasing_id``'s
     low 33 bits. Raw monotonic ids would NOT work here — partition 1
     starts at 2^33, so ``shard_id * 10^oom`` would blow past the fixed
-    zero-pad width the reference's key layout contract requires.
-
-    contiguous=True reproduces the reference's url-ordered row layout
-    exactly via a global row_number — a single-partition window that
-    funnels the whole url table through one task. Byte-parity/test path
-    only; round-5 verdict flagged it as the scale-killer default, so it is
-    now opt-in."""
-    if contiguous is None:
-        contiguous = cfg.contiguous_keys
+    zero-pad width the reference's key layout contract requires."""
     n_per_shard = cfg.number_sample_per_shard
     width = cfg.oom_sample_per_shard + cfg.oom_shard_count
-    if contiguous:
-        w = Window.orderBy("url")
-        df = df.withColumn("_rid", F.row_number().over(w) - 1)
-    else:
-        mid = F.monotonically_increasing_id()
-        df = df.withColumn("_mid", mid).localCheckpoint(eager=True)
-        # _mid layout: (partition_index << 33) | partition_local_row
-        pid = _mid_pid()
-        local = _mid_local()
-        counts = (
-            df.select(pid.alias("_pid"))
-            .groupBy("_pid")
-            .count()
-            .orderBy("_pid")
-            .collect()
-        )
-        offsets, acc = [], 0
-        for r in counts:
-            offsets.append((r["_pid"], acc))
-            acc += r["count"]
-        spark = df.sparkSession
-        off = spark.createDataFrame(offsets, "_pid long, _off long")
-        df = (
-            df.withColumn("_pid", pid)
-            .withColumn("_local", local)
-            .join(F.broadcast(off), "_pid")
-            .withColumn("_rid", F.col("_off") + F.col("_local"))
-            .drop("_pid", "_local", "_off", "_mid")
-        )
+    mid = F.monotonically_increasing_id()
+    df = df.withColumn("_mid", mid).localCheckpoint(eager=True)
+    # _mid layout: (partition_index << 33) | partition_local_row
+    pid = _mid_pid()
+    local = _mid_local()
+    counts = (
+        df.select(pid.alias("_pid"))
+        .groupBy("_pid")
+        .count()
+        .orderBy("_pid")
+        .collect()
+    )
+    offsets, acc = [], 0
+    for r in counts:
+        offsets.append((r["_pid"], acc))
+        acc += r["count"]
+    spark = df.sparkSession
+    off = spark.createDataFrame(offsets, "_pid long, _off long")
+    df = (
+        df.withColumn("_pid", pid)
+        .withColumn("_local", local)
+        .join(F.broadcast(off), "_pid")
+        .withColumn("_rid", F.col("_off") + F.col("_local"))
+        .drop("_pid", "_local", "_off", "_mid")
+    )
     df = df.withColumn(
         "shard_id", F.expr(f"_rid DIV {n_per_shard}")
     ).withColumn(

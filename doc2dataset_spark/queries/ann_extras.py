@@ -1,6 +1,6 @@
 """ANN recall extensions, registered AFTER the frozen driver gate
 (tests/test_registry_gate.py) — locally oracle-checked like everything
-else via scripts/check_oracle.py.
+else via scripts/driver_mirror.py.
 
 ``sim_ann_ivf_probe2`` is ``sim_ann_ivf`` with nprobe=2, the standard
 IVF recall knob: a query vector probes its TWO nearest coarse cells

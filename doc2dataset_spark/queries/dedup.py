@@ -471,7 +471,11 @@ def dedup_simhash_pairs(spark, sf_dir):
     instead of 4-banded (da, ha, db, hb) candidates. Equivalence:
     hamming is a row-local function of a candidate pair, so
     distinct∘filter∘project ≡ project∘filter∘distinct, and (da, db)
-    determines (ha, hb)."""
+    determines (ha, hb).
+
+    Building the plan runs the fingerprint job, because the
+    ``localCheckpoint`` is eager; that is why EXPLAIN and
+    scripts/plan_report.py pay for it."""
     fp = dedup_simhash(spark, sf_dir).localCheckpoint(eager=True)
     bands = fp.select(
         "doc_id",

@@ -2,7 +2,7 @@
 100 TB LLM data pipeline runs between raw dedup and the training sink.
 Registered AFTER the frozen driver gate (see queries/__init__.py — the
 driver snapshots the first 50 registrations), locally oracle-checked via
-scripts/check_oracle.py / driver_mirror.py like everything else.
+scripts/driver_mirror.py like everything else.
 
 - ``pack_sequences``            greedy contiguous token packing into
                                 fixed-budget training sequences (the

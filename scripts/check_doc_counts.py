@@ -12,7 +12,7 @@ fails the round close loudly instead of shipping.
 Checked claims (historical "Registry at round-N close" lines are dated
 records and deliberately NOT checked):
 
-- README.md      "<T> tests (<P> pass, <S> env-gated skips)" where T is
+- README.md      "<T> tests (<P> pass + <S> env-gated skips" where T is
                  pytest's collected count, S the env-gated skip count
                  (the real-codec parity gates), P = T - S.
 - COVERAGE.md    "(<O>/<Q>) is hash-matched" where Q = len(REGISTRY)
@@ -71,9 +71,7 @@ def main() -> int:
     failures: list[str] = []
 
     readme = open(os.path.join(ROOT, "README.md")).read()
-    m = re.search(
-        r"(\d+) tests \((\d+) pass, (\d+) env-gated skips\)", readme
-    )
+    m = re.search(r"(\d+) tests \((\d+) pass \+ (\d+) env-gated skips", readme)
     if not m:
         failures.append("README.md: test-tally claim line not found")
     else:

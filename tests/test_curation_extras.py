@@ -1,5 +1,5 @@
 """Invariant tests for the curation extras; value equality is
-oracle-gated (scripts/check_oracle.py), these pin the semantic claims:
+oracle-gated (scripts/driver_mirror.py), these pin the semantic claims:
 the Misra-Gries superset guarantee, split determinism, cap bounds,
 chunk overlap reconstruction, scrub completeness, recall bounds."""
 

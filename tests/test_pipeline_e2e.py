@@ -434,9 +434,9 @@ def test_return_frames_keeps_pages_materialized(spark, corpus, tmp_path):
 
 
 def test_noncontiguous_keys_are_dense_and_fixed_width(spark):
-    """The scalable (no-global-sort) key path must produce the same dense
-    fixed-width layout as the contiguous path — raw monotonic ids from
-    partition >= 1 start at 2^33 and would blow the zero-pad width."""
+    """The scalable (no-global-sort) key path must produce a dense
+    fixed-width layout — raw monotonic ids from partition >= 1 start at
+    2^33 and would blow the zero-pad width."""
     from doc2dataset_spark.operators.sharding import assign_keys
 
     cfg = DownloadConfig(
@@ -445,7 +445,7 @@ def test_noncontiguous_keys_are_dense_and_fixed_width(spark):
     df = spark.range(95).select(
         F.format_string("http://x/%d", F.col("id")).alias("url")
     ).repartition(7)  # force several input partitions
-    keyed = assign_keys(df, cfg, contiguous=False)
+    keyed = assign_keys(df, cfg)
     rows = keyed.select("shard_id", "key").collect()
     width = cfg.oom_sample_per_shard + cfg.oom_shard_count
     assert all(len(r["key"]) == width for r in rows)  # fixed width held

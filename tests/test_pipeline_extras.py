@@ -1,6 +1,6 @@
 """Invariant tests for the training-pipeline extras (queries/
 pipeline_extras.py). Value-level correctness is oracle-gated
-(scripts/check_oracle.py); these pin the semantic properties a trainer
+(scripts/driver_mirror.py); these pin the semantic properties a trainer
 relies on — conservation, contiguity, determinism — which a hash match
 alone wouldn't explain."""
 

@@ -9,7 +9,7 @@ import pytest
 from doc2dataset_spark.queries import REGISTRY, all_oracles
 
 # the iterative/heavy queries have their own dedicated oracle checks; keep
-# the smoke loop fast by running them only via scripts/check_oracle.py
+# the smoke loop fast by running them only via scripts/driver_mirror.py
 _SKIP_SLOW = {"dedup_cluster_cc", "ml_kmeans_lite"}
 
 

@@ -1,6 +1,6 @@
 """Invariant tests for the SQL-dialect surface (sql_surface.py) and the
 corpus-rewrite/PQ extras (corpus_extras.py); value equality is
-oracle-gated (scripts/check_oracle.py), these pin the semantic claims:
+oracle-gated (scripts/driver_mirror.py), these pin the semantic claims:
 spine contiguity + real gap rows, per-group top-k bounds, UDF inlining
 equivalence, ordered-concat lengths, grouping-id algebra, the CMS
 no-underestimate guarantee, substring-rewrite conservation laws, PQ code
