@@ -34,6 +34,21 @@ RESERVED_COLUMNS = (
 INPUT_FORMATS = ("txt", "csv", "tsv", "json", "jsonl", "parquet", "orc", "xml")
 OUTPUT_FORMATS = ("files", "webdataset", "parquet", "orc", "jsonl", "tfrecord", "dummy")
 
+# reference keywords accepted for API parity that no code reads: {name:
+# reference default}; validate() warns when one is set (README "API
+# parity"). Process pools, shard retries and wandb are Spark's scheduler,
+# task retries and observe() metrics here (SURVEY P5); count_words waits
+# for the reference source to pin its semantics.
+IGNORED_PARITY_FIELDS = {
+    "processes_count": 1,
+    "distributor": None,
+    "subjob_size": None,
+    "max_shard_retry": 1,
+    "count_words": True,
+    "enable_wandb": False,
+    "wandb_project": None,
+}
+
 
 @dataclass
 class DownloadConfig:
@@ -43,7 +58,7 @@ class DownloadConfig:
 
     url_list: str
     output_folder: str = "documents"
-    processes_count: int = 1            # subsumed by Spark parallelism
+    processes_count: int = 1            # no effect: Spark parallelism
     thread_count: int = 256             # fetch threads per Arrow batch
     number_sample_per_shard: int = 10_000
     input_format: str = "txt"
@@ -101,17 +116,12 @@ class DownloadConfig:
     def validate(self) -> None:
         import warnings
 
-        for name, default in (
-            ("distributor", None),
-            ("subjob_size", None),
-            ("enable_wandb", False),
-            ("wandb_project", None),
-        ):
+        for name, default in IGNORED_PARITY_FIELDS.items():
             if getattr(self, name) != default:
                 warnings.warn(
                     f"DownloadConfig.{name} is accepted for reference API "
-                    "parity but has no effect: Spark's scheduler/metrics "
-                    "replace it (see README 'API parity')",
+                    "parity but has no effect here (see README 'API "
+                    "parity')",
                     stacklevel=2,
                 )
         if self.input_format not in INPUT_FORMATS:

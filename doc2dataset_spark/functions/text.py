@@ -92,6 +92,26 @@ def image_removal_criteria(
     return False
 
 
+def image_removal_criteria_col(
+    img_tag: Column, min_image_size: int, max_aspect_ratio: float | None
+) -> Column:
+    """Native twin of :func:`image_removal_criteria` over one img-tag
+    Column (missing attrs parse as 0, exactly like get_image_size)."""
+    w, h = (
+        F.coalesce(
+            F.regexp_extract(img_tag, rx.pattern, 1).cast("int"), F.lit(0)
+        )
+        for rx in (_WIDTH_RE, _HEIGHT_RE)
+    )
+    drop = (w < min_image_size) | (h < min_image_size)
+    if max_aspect_ratio is not None:
+        ratio = F.greatest(
+            w / F.nullif(h, F.lit(0)), h / F.nullif(w, F.lit(0))
+        )
+        drop = drop | ((h == 0) | (w == 0) | (ratio > max_aspect_ratio))
+    return drop
+
+
 # ---------------------------------------------------------------------------
 # tag stripping / digit removal (T10, `extractor.py:67-68`)
 # ---------------------------------------------------------------------------
@@ -110,6 +130,12 @@ def remove_digits_col(col: Column) -> Column:
     # \d already matches every Unicode Nd digit (e.g. Arabic-Indic ٠-٩) —
     # without the flag, non-Latin corpora diverge from the reference
     return F.regexp_replace(col, r"(?U)[.\d]+", "")
+
+
+def is_blank_col(col: Column) -> Column:
+    """True when the text holds nothing but whitespace (the Java regex
+    whitespace class: ASCII only) — the F6 empty-page test."""
+    return F.length(F.regexp_replace(col, r"\s", "")) == 0
 
 
 # ---------------------------------------------------------------------------

@@ -359,7 +359,10 @@ def _cell_blocks_default() -> int:
     cell/B slices + the chunked pair matrix, independent of cell size.
     Outputs are pinned bit-identical across B (tests/test_vecmath_
     kernels.py): same pairs, same cosine bits — only task granularity
-    changes, so the shipped default B=1 keeps the bench plan shape."""
+    changes, so the shipped default B=1 keeps the bench plan shape.
+    Covers cell_pairs_blocked and group_topk_blocked only:
+    cogroup_topk_blocked (the nprobe>1 IVF probe) has no block split and
+    keeps the unbounded hot-cell footprint (ROADMAP C4)."""
     try:
         return max(1, int(os.environ.get("SPARK_GRAFT_CELL_BLOCKS", "1")))
     except ValueError:
@@ -659,7 +662,9 @@ def cogroup_topk_blocked(
     (key_cols..., qid, qne) against a corpus frame (key_cols..., cid,
     cne), qid != cid -- the nprobe>1 IVF shape where the query side
     joins more cells than it belongs to. Same preselection argument and
-    chunking as group_topk_blocked."""
+    chunking as group_topk_blocked, but NOT its cell_blocks split:
+    SPARK_GRAFT_CELL_BLOCKS does not reach this kernel, so one task
+    holds a whole (hot) cell's probe and corpus rows (ROADMAP C4)."""
     ce = chunk_elems or CHUNK_ELEMS
 
     def grp(key, l, r):

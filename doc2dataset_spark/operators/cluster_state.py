@@ -205,20 +205,16 @@ def compact_labels(
     becomes the batch_id=upto_batch partition (a partition-pruned
     scan), later batches' partition dirs are renamed into the new root
     byte-untouched, and the served state is invariant (pytest-pinned).
-    Cost is O(head), not O(log)."""
-    import uuid
-
-    from doc2dataset_spark import fsio
+    Cost is O(head), not O(log). Published through index_maintenance's
+    compaction protocol, horizon upto_batch."""
     from doc2dataset_spark.operators.index_maintenance import (
         _batch_of,
-        _write_horizon,
-        check_no_leftover_compaction,
+        compaction_fs,
         list_batch_dirs,
-        swap_in_compacted,
+        publish_compaction,
     )
 
-    fs, p = fsio.url_to_fs(_labels_path(state_dir))
-    check_no_leftover_compaction(fs, p)
+    fs, p = compaction_fs(_labels_path(state_dir))
     tail_dirs = [
         d for d in list_batch_dirs(fs, p) if _batch_of(d) > upto_batch
     ]
@@ -233,20 +229,19 @@ def compact_labels(
         .withColumn("batch_id", F.lit(upto_batch))
         .select("doc_id", "cluster_id", "batch_id")
     )
-    # Spark write goes to the URL form; the swap gets the stripped twin
-    # (Spark resolves scheme-less paths against its default fs)
-    tmp_url = f"{_labels_path(state_dir).rstrip('/')}__compact_{uuid.uuid4().hex}"
-    tmp = fsio.url_to_fs(tmp_url)[1]
     # shuffle_partitions: raise it when the corpus-sized head partition
     # would bottleneck or OOM a single shuffle task
-    (
-        head.repartition(max(shuffle_partitions, 1))
-        .write.partitionBy("batch_id")
-        .mode("overwrite")
-        .parquet(tmp_url)
+    publish_compaction(
+        _labels_path(state_dir),
+        lambda tmp_url: (
+            head.repartition(max(shuffle_partitions, 1))
+            .write.partitionBy("batch_id")
+            .mode("overwrite")
+            .parquet(tmp_url)
+        ),
+        tail_dirs,
+        horizon=upto_batch,
     )
-    swap_in_compacted(fs, p, tmp, tail_dirs)
-    _write_horizon(fs, p, upto_batch)
 
 
 def _has_labels(state_dir: str) -> bool:

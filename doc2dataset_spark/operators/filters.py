@@ -2,7 +2,8 @@
 T6-T10, `extractor.py:121-168`, `downloader.py:194-195`).
 
 The reference evaluates all of this in Python per page; here every step is
-a Catalyst expression (whole-stage codegen, no serde):
+a Catalyst expression (whole-stage codegen, no serde), built from the
+Column twins in functions/text.py:
 
 1. image scan           — regexp_extract_all (T7)
 2. removal criteria     — size/aspect predicates over the parsed attrs (F8)
@@ -28,9 +29,11 @@ from pyspark.sql import functions as F
 
 from doc2dataset_spark.config import DownloadConfig
 from doc2dataset_spark.functions.text import (
-    ANY_WORD_SQL,
-    ALL_TAGS_SQL,
-    IMG_TAG_SQL,
+    count_words_col,
+    image_removal_criteria_col,
+    images_in_page_col,
+    is_blank_col,
+    remove_digits_col,
 )
 
 STATUS_SUCCESS = "success"
@@ -42,37 +45,20 @@ def apply_page_filters(df: DataFrame, cfg: DownloadConfig) -> DataFrame:
     """Native page transform + filter pass. Input: extract_pages output.
     Output adds text, total_words, images_per_page, status, error_message.
     """
-    imgs = F.regexp_extract_all(F.col("page_text"), F.lit(IMG_TAG_SQL), 0)
-    w_of = lambda i: F.coalesce(  # noqa: E731
-        F.regexp_extract(i, r'width="(\d+)"', 1).cast("int"), F.lit(0)
+    # F8: undersized or extreme aspect ratio (missing attrs parse as 0
+    # and always fail the size test; h==0 with aspect check on is a drop
+    # — the reference raises ZeroDivisionError there, documented
+    # divergence SURVEY §2.1)
+    df = df.withColumn("_imgs_all", images_in_page_col(F.col("page_text")))
+    df = df.withColumn(
+        "_imgs_rm",
+        F.filter(
+            F.col("_imgs_all"),
+            lambda i: image_removal_criteria_col(
+                i, cfg.min_image_size, cfg.max_aspect_ratio
+            ),
+        ),
     )
-    h_of = lambda i: F.coalesce(  # noqa: E731
-        F.regexp_extract(i, r'height="(\d+)"', 1).cast("int"), F.lit(0)
-    )
-
-    def removable(i):
-        # F8: undersized or extreme aspect ratio (missing attrs parse as 0
-        # and always fail the size test; h==0 with aspect check on is a
-        # drop — the reference raises ZeroDivisionError there, documented
-        # divergence SURVEY §2.1)
-        bad_size = (w_of(i) < cfg.min_image_size) | (h_of(i) < cfg.min_image_size)
-        if cfg.max_aspect_ratio is not None:
-            bad_aspect = (
-                (h_of(i) == 0)
-                | (w_of(i) == 0)
-                | (
-                    F.greatest(
-                        w_of(i) / F.nullif(h_of(i), F.lit(0)),
-                        h_of(i) / F.nullif(w_of(i), F.lit(0)),
-                    )
-                    > cfg.max_aspect_ratio
-                )
-            )
-            return bad_size | bad_aspect
-        return bad_size
-
-    df = df.withColumn("_imgs_all", imgs)
-    df = df.withColumn("_imgs_rm", F.filter(F.col("_imgs_all"), removable))
     # T9: fold the removable tags into literal replaces
     df = df.withColumn(
         "text",
@@ -94,25 +80,16 @@ def apply_page_filters(df: DataFrame, cfg: DownloadConfig) -> DataFrame:
         # T10 gate (`extractor.py:163-164`): digits stripped only when
         # remove_digits is on AND figures are off — both conditions, like
         # the reference
-        # (?U): match Unicode digits like the reference's re.UNICODE pattern
-        df = df.withColumn(
-            "text", F.regexp_replace(F.col("text"), r"(?U)[.\d]+", "")
-        )
+        df = df.withColumn("text", remove_digits_col(F.col("text")))
 
     # T6 word count over the final text
-    stripped = F.regexp_replace(F.col("text"), ALL_TAGS_SQL, "\n")
     df = df.withColumn(
         "total_words",
-        F.when(
-            F.col("text").isNotNull(),
-            F.size(F.regexp_extract_all(stripped, F.lit(ANY_WORD_SQL), 0)),
-        ),
+        F.when(F.col("text").isNotNull(), count_words_col(F.col("text"))),
     )
 
     # status resolution (T14 taxonomy)
-    is_blank = F.col("text").isNotNull() & (
-        F.length(F.regexp_replace(F.col("text"), r"\s", "")) == 0
-    )
+    is_blank = F.col("text").isNotNull() & is_blank_col(F.col("text"))
     too_few_words = (
         (F.col("total_words") < cfg.min_words_per_page)
         if cfg.min_words_per_page is not None

@@ -27,23 +27,41 @@ costs O(head), not O(index). Semantics after compaction:
   it for batches past the replay window, exactly like checkpoint
   truncation in a log-structured system.
 
-Transactional shape (the sinks/maintenance.compact_parquet discipline):
-the compacted head is written to a sibling tmp dir, then swapped in —
-``mv index -> __old_compact``, mv each tail ``batch_id=<n>`` dir from
-the old root into tmp, ``mv tmp -> index`` — so the live index is
-either fully the old tree or fully the new one, never a partial mix
-(during the swap window the path is ABSENT: reads fail loudly instead
-of silently serving a truncated index). Any failure before the first
-rename leaves the index untouched; a Python-level failure inside the
-swap rolls the tail moves back and restores the original root; a hard
-crash (SIGKILL) leaves the ``__old_compact`` sibling plus a
-``__compact_manifest.json`` recording tmp path / tail dirs, the next
-compaction attempt refuses to run over the debris, and
-``recover_compaction`` reassembles from the manifest in one call
-(rolling back or finalizing, whichever the crash point requires).
-Successful compactions persist a ``__compaction_horizon`` sidecar so
-the streaming ingests can refuse the one replay shape compaction
-forecloses (fresh-checkpoint replay of finalized batches).
+THE compaction publish protocol: every persisted log (the posting
+indexes and doclen here, cluster labels, hypertable partials and their
+RTBF rewrite, as-of views, the CDC changelog, the parquet sink output)
+is compacted through ``publish_compaction``; a compactor supplies only
+its fold (a write callback), its untouched tail dirs and its horizon:
+
+1. debris check (``compaction_fs``, which compactors also use to
+   resolve the root before their own reads): refuse over an
+   ``__old_compact`` sibling left by a crashed swap, reclaim the benign
+   debris of a crash before the first rename;
+2. tmp sibling ``<root>__compact_<uuid>``, derived from the root URL:
+   Spark writes to the URL form (it resolves scheme-less paths against
+   its default fs), ``fs`` gets the stripped twin;
+3. the caller's write callback fills tmp (a failed write reclaims it);
+4. the ``__compaction_horizon`` sidecar, when the caller passes one, is
+   written BEFORE the first rename and restored if the swap raises: a
+   crash can leave a conservative horizon over an uncompacted log (loud
+   over-refusal) but never a compacted log without its refusal marker —
+   which would let as-of reads serve compacted content as the past and
+   let a fresh-checkpoint replay's stale sweep delete the history;
+5. ``swap_in_compacted``: a ``__compact_manifest.json`` recording tmp
+   path / tail dirs (plus the caller's ``extra`` tag) lands first, then
+   ``mv root -> __old_compact``, mv each tail ``batch_id=<n>`` dir from
+   the old root into tmp, ``mv tmp -> root``; only then are the old dir
+   and the manifest removed.
+
+The live log is fully the old tree or fully the new one (during the
+swap the path is ABSENT: reads fail loudly instead of serving a
+truncated log). A failure before the first rename leaves the log
+untouched; a Python-level failure inside the swap rolls it back; a
+hard crash leaves ``__old_compact`` + the manifest, which the next
+compaction refuses to run over and ``recover_compaction`` rolls back
+or finalizes in one call. The horizon sidecar is a sibling no rename
+touches; streaming ingests read it to refuse fresh-checkpoint replays
+of finalized batches.
 
 ``delete_from_postings`` (+ the per-family ``delete_docs_*`` wrappers)
 is the other maintenance verb: right-to-be-forgotten removal of
@@ -82,8 +100,18 @@ def list_batch_dirs(fs, root: str) -> list[str]:
     return sorted(names, key=_batch_of)
 
 
+def compaction_manifest(root: str) -> str:
+    """The ``__compact_manifest.json`` sibling a swap writes before its
+    first rename — the one place its name is spelled."""
+    return f"{root.rstrip('/')}__compact_manifest.json"
+
+
+def _old_compact(root: str) -> str:
+    return f"{root.rstrip('/')}__old_compact"
+
+
 def check_no_leftover_compaction(fs, root: str) -> None:
-    old = f"{root.rstrip('/')}__old_compact"
+    old = _old_compact(root)
     if fs.exists(old):  # leftover from a previous crashed swap
         raise RuntimeError(
             f"found leftover {old!r} from an interrupted compaction — "
@@ -94,13 +122,21 @@ def check_no_leftover_compaction(fs, root: str) -> None:
     # benign debris (crash between the manifest write and the first
     # rename): the live root is intact — reclaim the orphaned tmp copy
     # instead of silently overwriting the manifest and leaking it
-    manifest = f"{root.rstrip('/')}__compact_manifest.json"
+    manifest = compaction_manifest(root)
     if fs.exists(manifest):
         with fs.open(manifest, "rb") as fh:
             m = json.loads(fh.read().decode())
         if fs.exists(m["tmp"]):
             fs.rm(m["tmp"], recursive=True)
         fs.rm(manifest)
+
+
+def compaction_fs(root: str):
+    """(fs, path) for the log at URL ``root``, after the debris check —
+    so a compactor's own listing never runs over a half-swapped root."""
+    fs, p = fsio.url_to_fs(root)
+    check_no_leftover_compaction(fs, p)
+    return fs, p
 
 
 def compaction_horizon(fs, root: str) -> int | None:
@@ -117,25 +153,16 @@ def compaction_horizon(fs, root: str) -> int | None:
         return int(json.loads(fh.read().decode())["upto"])
 
 
-def _write_horizon(fs, root: str, upto: int) -> None:
-    prev = compaction_horizon(fs, root)
+def _write_horizon(fs, root: str, upto: int | None) -> None:
+    """Set the horizon sidecar to ``upto``; None removes it (the
+    rollback to a never-compacted log)."""
     marker = f"{root.rstrip('/')}__compaction_horizon.json"
-    with fs.open(marker, "wb") as fh:
-        fh.write(json.dumps({"upto": max(upto, prev or upto)}).encode())
-
-
-def _restore_horizon(fs, root: str, prev: int | None) -> None:
-    """Roll the horizon sidecar back to its pre-compaction value — the
-    rollback twin of _write_horizon for compactions that persist the
-    horizon BEFORE publishing (so the refusal can never lag the
-    compaction it guards) and must undo it when the publish fails."""
-    marker = f"{root.rstrip('/')}__compaction_horizon.json"
-    if prev is None:
+    if upto is None:
         if fs.exists(marker):
             fs.rm(marker)
         return
     with fs.open(marker, "wb") as fh:
-        fh.write(json.dumps({"upto": int(prev)}).encode())
+        fh.write(json.dumps({"upto": int(upto)}).encode())
 
 
 def recover_compaction(root: str) -> dict:
@@ -146,7 +173,7 @@ def recover_compaction(root: str) -> dict:
     already published. Idempotent — running it over a healthy index (no
     manifest, no debris) is a no-op.
 
-    Crash windows and their recovery (order of swap_in_compacted):
+    Crash windows and their recovery (order of publish_compaction):
     - manifest written, root never renamed → live root is intact:
       remove tmp + manifest ("cleaned");
     - root renamed to __old_compact, tail moves / publish unfinished →
@@ -160,8 +187,8 @@ def recover_compaction(root: str) -> dict:
     """
     fs, p = fsio.url_to_fs(root)
     p = p.rstrip("/")
-    manifest = f"{p}__compact_manifest.json"
-    old = f"{p}__old_compact"
+    manifest = compaction_manifest(p)
+    old = _old_compact(p)
     if not fs.exists(manifest):
         if fs.exists(old):
             raise RuntimeError(
@@ -200,35 +227,18 @@ def recover_compaction(root: str) -> dict:
 def swap_in_compacted(
     fs, root: str, tmp: str, tail_dirs: list[str], extra: dict | None = None
 ) -> None:
-    """Publish a compacted head: move the untouched tail ``batch_id=<n>``
-    dirs from the live root into tmp (filesystem renames — the tail is
-    never read or rewritten), then swap tmp in as the new root.
-
-    The live path is absent for the duration of the swap (loud failure
-    beats silently serving a truncated index). Python-level failures
-    roll the tail moves back and restore the original root; a hard crash
-    leaves ``__old_compact`` + the manifest for manual reassembly, and
-    ``check_no_leftover_compaction`` refuses to run over the debris.
-
-    ``extra``: additional keys merged into the manifest so a caller can
-    tag the swap with its own identity (the hypertable RTBF rewrite tags
-    ``rtbf_request``); ``recover_compaction`` ignores unknown keys, so
-    recovery semantics are unchanged.
-    """
+    """Step 5 of the publish protocol (module docstring). On a
+    Python-level failure the old tree is restored, tmp and the manifest
+    reclaimed, and the error re-raised; on return the new tree is live
+    and ``__old_compact`` + the manifest await publish_compaction's
+    cleanup, so a failed cleanup is told apart from a failed swap.
+    ``recover_compaction`` ignores the ``extra`` manifest keys."""
     root = root.rstrip("/")
-    old = f"{root}__old_compact"
-    manifest = f"{root}__compact_manifest.json"
+    old = _old_compact(root)
+    manifest = compaction_manifest(root)
+    record = {"tmp": tmp, "root": root, "tail_dirs": tail_dirs}
     with fs.open(manifest, "wb") as fh:
-        fh.write(
-            json.dumps(
-                {
-                    "tmp": tmp,
-                    "root": root,
-                    "tail_dirs": tail_dirs,
-                    **(extra or {}),
-                }
-            ).encode()
-        )
+        fh.write(json.dumps({**record, **(extra or {})}).encode())
     fs.mv(root, old)
     try:
         for d in tail_dirs:
@@ -247,8 +257,45 @@ def swap_in_compacted(
             fs.rm(tmp, recursive=True)
         fs.rm(manifest)
         raise
-    fs.rm(old, recursive=True)
-    fs.rm(manifest)
+
+
+def publish_compaction(
+    root: str,
+    write,
+    tail_dirs=(),
+    horizon: int | None = None,
+    extra: dict | None = None,
+    on_rollback=None,
+):
+    """Run the publish protocol (module docstring) for the log at URL
+    ``root`` and return what ``write(tmp_url)`` returns. ``tail_dirs``:
+    the live ``batch_id=<n>`` dirs the fold left alone (renamed in
+    untouched); ``horizon``: the highest batch the fold finalizes (None:
+    this log keeps no horizon); ``extra``: manifest tag; ``on_rollback``:
+    called once a failed swap has restored the old tree and horizon."""
+    fs, p = compaction_fs(root)
+    tmp_url = f"{root.rstrip('/')}__compact_{uuid.uuid4().hex}"
+    tmp = fsio.url_to_fs(tmp_url)[1]
+    try:
+        out = write(tmp_url)
+    except BaseException:
+        if fs.exists(tmp):
+            fs.rm(tmp, recursive=True)
+        raise
+    if horizon is not None:
+        prev_horizon = compaction_horizon(fs, p)
+        _write_horizon(fs, p, max(horizon, prev_horizon or horizon))
+    try:
+        swap_in_compacted(fs, p, tmp, list(tail_dirs), extra)
+    except BaseException:
+        if horizon is not None:
+            _write_horizon(fs, p, prev_horizon)
+        if on_rollback is not None:
+            on_rollback()
+        raise
+    fs.rm(_old_compact(p), recursive=True)
+    fs.rm(compaction_manifest(p))
+    return out
 
 
 def compact_index_history(
@@ -270,8 +317,7 @@ def compact_index_history(
 
     Returns {batches_before, batches_after, files_before, files_after}.
     """
-    fs, p = fsio.url_to_fs(postings_path)
-    check_no_leftover_compaction(fs, p)
+    fs, p = compaction_fs(postings_path)
     files_before = sum(1 for f in fs.find(p) if f.endswith(".parquet"))
     batch_dirs = list_batch_dirs(fs, p)
     tail_dirs = [d for d in batch_dirs if _batch_of(d) > upto_batch]
@@ -284,25 +330,24 @@ def compact_index_history(
         .withColumn("batch_id", F.lit(upto_batch))
     )
     parts = ["batch_id", *partition_cols]
-    # Spark write goes to the URL form; the swap gets the stripped twin
-    # (Spark resolves scheme-less paths against its default fs)
-    tmp_url = f"{postings_path.rstrip('/')}__compact_{uuid.uuid4().hex}"
-    tmp = fsio.url_to_fs(tmp_url)[1]
     # repartition(n, cols) HASH-partitions by cols: all rows of one
     # (batch_id, band/tb/cent_id) combo land in a single task, so each
     # hive partition dir gets exactly one file regardless of n — n only
     # spreads DISTINCT combos across tasks (hence the name: it is the
     # shuffle width, not a files-per-dir knob).
-    (
-        head.repartition(
-            max(shuffle_partitions, 1), *[F.col(c) for c in parts]
-        )
-        .write.partitionBy(*parts)
-        .mode("overwrite")
-        .parquet(tmp_url)
+    publish_compaction(
+        postings_path,
+        lambda tmp_url: (
+            head.repartition(
+                max(shuffle_partitions, 1), *[F.col(c) for c in parts]
+            )
+            .write.partitionBy(*parts)
+            .mode("overwrite")
+            .parquet(tmp_url)
+        ),
+        tail_dirs,
+        horizon=upto_batch,
     )
-    swap_in_compacted(fs, p, tmp, tail_dirs)
-    _write_horizon(fs, p, upto_batch)
 
     return {
         "batches_before": len(batch_dirs),

@@ -5,8 +5,9 @@ The small-files problem is the canonical one: a resume-driven pipeline
 (append-mode shard-partitioned writes, sinks/writer.py) accretes one file
 per (shard, run) — thousands of KB-sized files whose per-file open/footer
 cost eventually dominates every scan. ``compact_parquet`` rewrites a
-directory to ~target-sized files with a transactional tmp-dir + rename,
-preserving hive partitioning.
+directory to ~target-sized files, preserving hive partitioning, and
+publishes the rewrite through the engine's one compaction protocol
+(operators/index_maintenance docstring).
 
 No reference twin: the reference's output is one feather/parquet per
 shard forever (`writer.py:60-80`); compaction is an engine extension in
@@ -17,11 +18,13 @@ directories.
 from __future__ import annotations
 
 import math
-import uuid
 
 from pyspark.sql import SparkSession
 
-from doc2dataset_spark import fsio
+from doc2dataset_spark.operators.index_maintenance import (
+    compaction_fs,
+    publish_compaction,
+)
 
 DEFAULT_TARGET_BYTES = 128 * 1024 * 1024  # the classic HDFS-block target
 
@@ -47,21 +50,13 @@ def compact_parquet(
 ) -> dict:
     """Rewrite a parquet directory into ~``target_bytes`` files.
 
-    Transactional shape: write the compacted copy to a sibling tmp dir,
-    then swap directories with two renames. On any failure before the
-    swap, the original directory is untouched and the tmp dir is
-    abandoned for the orphan sweep (same discipline as the webdataset
-    sink's two-phase commit).
-
-    The swap itself is two renames, NOT one atomic operation: between
-    ``mv(p, old)`` and ``mv(tmp, p)`` a concurrent reader sees the
-    dataset path missing — run compaction when the path is quiesced (the
-    OPTIMIZE model) or behind a catalog pointer. If the process dies
-    inside that window, the data survives intact under the
-    deterministic ``<path>__old_compact`` sibling: recovery is
-    ``mv(<path>__old_compact, <path>)``, and orphan sweeps can find it
-    by that fixed name. Any in-process failure of the second rename
-    (including non-OSError) triggers automatic rollback.
+    Published through the compaction protocol (operators/
+    index_maintenance docstring; no horizon: this is not a batch log).
+    The swap is renames, NOT one atomic operation: during it a
+    concurrent reader sees the dataset path missing — run compaction
+    when the path is quiesced (the OPTIMIZE model) or behind a catalog
+    pointer. A hard crash inside the swap is finished or rolled back by
+    ``recover_compaction(path)``.
 
     Sizing: file count = ceil(on-disk bytes / target). Parquet re-encodes
     with the same codec so output sizes track input sizes closely; a
@@ -74,7 +69,7 @@ def compact_parquet(
     (partition values become plain columns; data intact, pruning lost).
 
     Returns {files_before, files_after, bytes}."""
-    fs, p = fsio.url_to_fs(path)
+    fs, p = compaction_fs(path)
     files_before = sum(
         1 for f in fs.find(p) if f.endswith(".parquet")
     )
@@ -86,38 +81,17 @@ def compact_parquet(
     # DROP those columns from the compacted copy depending on which file
     # wins — a compactor must always unify
     df = spark.read.option("mergeSchema", "true").parquet(path)
-    # Spark write goes to the URL form; renames get the stripped twin
-    # (Spark resolves scheme-less paths against its default fs)
-    tmp_url = f"{path.rstrip('/')}__compact_{uuid.uuid4().hex}"
-    tmp = fsio.url_to_fs(tmp_url)[1]
-    writer = None
     if partition_by:
         from pyspark.sql import functions as F
 
-        writer = (
-            df.repartition(n_files, *[F.col(c) for c in partition_by])
-            .write.partitionBy(*partition_by)
-        )
+        writer = df.repartition(
+            n_files, *[F.col(c) for c in partition_by]
+        ).write.partitionBy(*partition_by)
     else:
         writer = df.repartition(n_files).write
-    writer.mode("overwrite").parquet(tmp_url)
-
-    # deterministic old-dir name: crash recovery / orphan sweeps can find
-    # it without scanning for uuid-suffixed siblings
-    old = f"{p.rstrip('/')}__old_compact"
-    if fs.exists(old):  # leftover from a previous crashed swap
-        raise RuntimeError(
-            f"found leftover {old!r} from an interrupted compaction — "
-            f"recover it (mv back to {p!r} if {p!r} is missing, else rm) "
-            "before compacting again"
-        )
-    fs.mv(p, old)
-    try:
-        fs.mv(tmp, p)
-    except BaseException:
-        fs.mv(old, p)  # roll back: restore the original directory
-        raise
-    fs.rm(old, recursive=True)
+    publish_compaction(
+        path, lambda tmp_url: writer.mode("overwrite").parquet(tmp_url)
+    )
 
     files_after = sum(1 for f in fs.find(p) if f.endswith(".parquet"))
     return {

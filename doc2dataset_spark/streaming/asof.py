@@ -52,6 +52,8 @@ from doc2dataset_spark import fsio
 from doc2dataset_spark.operators.asof import asof_join
 from doc2dataset_spark.operators.index_maintenance import (
     _batch_of,
+    _old_compact,
+    compaction_manifest,
     list_batch_dirs,
 )
 
@@ -97,14 +99,11 @@ def _read_batches(
     every purchase against ZERO views — silent all-NULL matches instead
     of a loud failure. One recover_compaction() call reassembles."""
     fs, p = fsio.url_to_fs(root)
-    base = p.rstrip("/")
-    if fs.exists(f"{base}__old_compact") or fs.exists(
-        f"{base}__compact_manifest.json"
-    ):
+    debris = [_old_compact(p), compaction_manifest(p)]
+    if any(fs.exists(d) for d in debris):
         raise RuntimeError(
-            f"{root!r} has compaction debris (__old_compact / "
-            "__compact_manifest.json sibling) from an interrupted "
-            "compact_view_state swap — run "
+            f"{root!r} has compaction debris ({' / '.join(debris)}) "
+            "from an interrupted compact_view_state swap — run "
             f"recover_compaction({root!r}) before reading; an empty or "
             "partial log here would silently mis-attribute instead of "
             "failing"
@@ -562,31 +561,19 @@ def compact_view_state(spark: SparkSession, out_dir: str) -> dict:
     watermark never needs the second-newest view below it — ts ties
     resolved by ev, the same argmax as serving, so compaction keeps
     exactly the row serving would have picked). Rewrites the log as one
-    ``batch_id=<max>`` partition under the SAME transactional discipline
-    as compact_index_history (round-12 advice closed the gap this
-    module had): a ``__compact_manifest.json`` sidecar lands before the
-    first rename, the swap is swap_in_compacted's try/rollback (a
-    Python-level failure restores the original log byte-identically; a
-    hard crash leaves the manifest + ``__old_compact`` debris that
-    _read_batches refuses over and recover_compaction reassembles), and
-    the compaction HORIZON is persisted BEFORE the swap publishes — a
-    crash can leave a conservative horizon over an uncompacted log
-    (loud over-refusal of fresh-checkpoint replays) but never a
-    compacted log without its refusal marker (silent history loss).
-    The rollback path restores the prior horizon value."""
-    import uuid as _uuid
-
+    ``batch_id=<max>`` partition through the compaction publish
+    protocol (operators/index_maintenance docstring), horizon = that
+    max batch; the crash debris it can leave is what _read_batches
+    refuses over and recover_compaction reassembles."""
     from doc2dataset_spark.operators.index_maintenance import (
-        _restore_horizon,
-        _write_horizon,
-        check_no_leftover_compaction,
-        compaction_horizon,
-        swap_in_compacted,
+        compaction_fs,
+        publish_compaction,
     )
 
     vdir = _allviews_path(out_dir)
-    fs, vp = fsio.url_to_fs(vdir)
-    check_no_leftover_compaction(fs, vp)
+    # before _read_batches, which refuses over any manifest: benign
+    # debris (a crash before the first rename) is reclaimed here
+    compaction_fs(vdir)
     state = _wm_state(spark, out_dir, before_batch=None)
     if state is None:
         raise ValueError(f"no watermark snapshot under {out_dir!r} yet")
@@ -611,27 +598,12 @@ def compact_view_state(spark: SparkSession, out_dir: str) -> dict:
         )
     )
     kept = fresh.unionByName(older_latest)
-    # the Spark-written tmp is derived from the ORIGINAL URL, not the
-    # scheme-stripped fs path (round-13 advice): Spark resolves
-    # scheme-less paths against its default filesystem, so for a remote
-    # out_dir the data would land on the wrong fs while the swap
-    # published from the remote one. swap_in_compacted gets the stripped
-    # twin — the form `fs` speaks.
-    tmp_url = f"{vdir.rstrip('/')}__compact_{_uuid.uuid4().hex[:8]}"
-    tmp = fsio.url_to_fs(tmp_url)[1]
-    (
-        kept.withColumn("batch_id", F.lit(top))
-        .write.partitionBy("batch_id")
-        .parquet(tmp_url)
-    )
-    n_after = spark.read.parquet(tmp_url).count()  # count the written files
-    prev_horizon = compaction_horizon(fs, vp)
-    _write_horizon(fs, vp, top)  # refusal marker first, publish second
-    try:
-        swap_in_compacted(fs, vp, tmp, tail_dirs=[])
-    except BaseException:
-        # the swap rolled the log back to its pre-compaction tree;
-        # roll the horizon back with it so valid replays aren't refused
-        _restore_horizon(fs, vp, prev_horizon)
-        raise
+
+    def write(tmp_url: str) -> int:
+        kept.withColumn("batch_id", F.lit(top)).write.partitionBy(
+            "batch_id"
+        ).parquet(tmp_url)
+        return spark.read.parquet(tmp_url).count()  # the written files
+
+    n_after = publish_compaction(vdir, write, horizon=top)
     return {"views_before": n_before, "views_after": n_after, "wm_us": int(wm)}

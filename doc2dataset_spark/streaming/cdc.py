@@ -83,7 +83,10 @@ def cdc_serve(spark: SparkSession, out_dir: str) -> DataFrame:
     tombstones drop the row. One ``max_by`` aggregate — no window, no
     self-join; deterministic because (batch_id, seq) is unique per key
     (the feed contract)."""
-    changes = spark.read.parquet(out_dir)
+    return _latest_wins(spark.read.parquet(out_dir))
+
+
+def _latest_wins(changes: DataFrame) -> DataFrame:
     payload = [
         c for c in changes.columns if c not in ("doc_id", "batch_id", "seq")
     ]
@@ -110,38 +113,25 @@ def cdc_compact(spark: SparkSession, out_dir: str) -> dict:
     retained (no late reader merges across the compaction boundary; the
     snapshot IS batch 0).
 
-    Transactional shape: the snapshot is written to a tmp sibling first,
-    then swapped in with the same rename discipline as
-    sinks/maintenance.compact_parquet — readers see the old log or the
-    new one, never a mix. The swap uses POSIX directory renames, so this
-    function is for LOCAL/NFS changelogs; an object-store changelog
-    (no atomic dir rename) needs a manifest-pointer swap instead —
-    out of scope here, documented so nobody assumes S3 safety.
-    The stream's NEXT batch id keeps growing from the checkpoint (ids
-    are never reused), so the snapshot partition (batch_id=0) stays
-    strictly oldest.
+    Published through the compaction protocol (operators/
+    index_maintenance docstring) with horizon = the highest folded
+    batch: readers see the old log or the new one, never a mix, and a
+    crash leaves debris that the next compaction refuses over and
+    ``recover_compaction`` reassembles. The stream's NEXT batch id keeps
+    growing from the checkpoint (ids are never reused), so the snapshot
+    partition (batch_id=0) stays strictly oldest.
 
     Run compaction only while the ingest stream is STOPPED: a batch
     landing between the snapshot read and the directory swap would be
-    dropped by the swap (the rename replaces the whole log). A prior
-    crashed compaction leaves ``<out>__old_compact`` behind; this call
-    then fails fast on the rename (target exists) rather than guessing —
-    recover by restoring or deleting the old dir first."""
-    import os
-    import shutil
-    import uuid
-
-    from doc2dataset_spark import fsio
+    dropped by the swap (the rename replaces the whole log)."""
     from doc2dataset_spark.operators.index_maintenance import (
         _batch_of,
-        _restore_horizon,
-        _write_horizon,
-        compaction_horizon,
+        compaction_fs,
         list_batch_dirs,
+        publish_compaction,
     )
 
-    fs, root = fsio.url_to_fs(out_dir)
-    dirs = list_batch_dirs(fs, root)
+    dirs = list_batch_dirs(*compaction_fs(out_dir))
     if not dirs:
         raise ValueError(
             f"no batch_id=<n> partitions under {out_dir!r} — nothing to "
@@ -159,30 +149,13 @@ def cdc_compact(spark: SparkSession, out_dir: str) -> dict:
         F.lit(0).alias("batch_id"),
     )
     n = snapshot.count()
-    tmp = f"{out_dir.rstrip('/')}__compact_{uuid.uuid4().hex}"
-    snapshot.write.partitionBy("batch_id").parquet(tmp)
-    old = f"{out_dir.rstrip('/')}__old_compact"
-    # Horizon BEFORE publish (round-12 advice): the old order wrote it
-    # only after shutil.rmtree(old), so a crash in that window left a
-    # compacted batch_id=0 snapshot with no horizon marker and
-    # cdc_serve_asof(pre-compaction N) silently served post-compaction
-    # merged content as the past. The sidecar is a SIBLING of out_dir
-    # (renames don't touch it), so writing it first means the refusal
-    # can never lag the compaction it guards; the rollback path restores
-    # the prior value so a failed publish doesn't refuse valid reads.
-    prev_horizon = compaction_horizon(fs, root)
-    _write_horizon(fs, root, folded)
-    try:
-        os.rename(out_dir, old)
-        try:
-            os.rename(tmp, out_dir)
-        except BaseException:
-            os.rename(old, out_dir)  # rollback: the old log returns
-            raise
-    except BaseException:
-        _restore_horizon(fs, root, prev_horizon)
-        raise
-    shutil.rmtree(old)
+    publish_compaction(
+        out_dir,
+        lambda tmp_url: snapshot.write.partitionBy("batch_id").parquet(
+            tmp_url
+        ),
+        horizon=folded,
+    )
     return {"rows": n, "horizon": folded}
 
 
@@ -212,21 +185,10 @@ def cdc_serve_asof(
             "batches into the snapshot, so earlier snapshots are no "
             "longer reconstructable"
         )
-    changes = spark.read.parquet(out_dir).filter(
-        F.col("batch_id") <= F.lit(as_of_batch)
-    )
-    payload = [
-        c for c in changes.columns if c not in ("doc_id", "batch_id", "seq")
-    ]
-    winner = changes.groupBy("doc_id").agg(
-        F.expr(
-            f"max_by(struct({', '.join(payload)}), struct(batch_id, seq))"
-        ).alias("w")
-    )
-    return (
-        winner.filter(F.col("w.op") != DELETE_OP)
-        .select("doc_id", *[F.col(f"w.{c}").alias(c) for c in payload])
-        .drop("op")
+    return _latest_wins(
+        spark.read.parquet(out_dir).filter(
+            F.col("batch_id") <= F.lit(as_of_batch)
+        )
     )
 
 

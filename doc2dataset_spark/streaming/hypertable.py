@@ -27,10 +27,8 @@ Pieces, each on an established idiom:
 - ``compact_hypertable_partials``  merge batches ``<= upto`` into ONE
                               folded ``batch_id=upto`` partition (the
                               log stays O(hours), not O(hours×batches))
-                              under the full transactional discipline of
-                              operators/index_maintenance: manifest +
-                              swap_in_compacted rollback + horizon
-                              sidecar written BEFORE the publish.
+                              through the compaction publish protocol
+                              (operators/index_maintenance docstring).
 
 Batch twins live in queries/timeseries_hypertable (``rollup_hypertable_
 incremental`` / ``_compacted``), both hash-matched against the SAME
@@ -174,28 +172,20 @@ def compact_hypertable_partials(
     are renamed in untouched (cost O(head)). Unlike
     compact_index_history this REDUCES rows (partials of the same hour
     merge), which is exactly why the serve-side fold stays cheap as
-    batches accumulate. Same transactional discipline: manifest before
-    the first rename, swap_in_compacted rollback, horizon BEFORE the
-    publish (restored on rollback) so the fresh-checkpoint-replay
-    refusal can never lag the compaction it guards.
+    batches accumulate. Published through the compaction protocol
+    (operators/index_maintenance docstring), horizon upto_batch.
 
     Returns {batches_before, batches_after, rows_before, rows_after}.
     """
-    import uuid
-
     from doc2dataset_spark.operators.index_maintenance import (
         _batch_of,
-        _restore_horizon,
-        _write_horizon,
-        check_no_leftover_compaction,
-        compaction_horizon,
+        compaction_fs,
         list_batch_dirs,
-        swap_in_compacted,
+        publish_compaction,
     )
 
     hdir = _hourly_path(out_dir)
-    fs, p = fsio.url_to_fs(hdir)
-    check_no_leftover_compaction(fs, p)
+    fs, p = compaction_fs(hdir)
     batch_dirs = list_batch_dirs(fs, p)
     tail_dirs = [d for d in batch_dirs if _batch_of(d) > upto_batch]
 
@@ -204,21 +194,16 @@ def compact_hypertable_partials(
     head = fold_hourly(
         log.filter(F.col("batch_id") <= upto_batch).drop("batch_id")
     ).withColumn("batch_id", F.lit(upto_batch))
-    # Spark write goes to the URL form; the swap gets the stripped twin
-    # (Spark resolves scheme-less paths against its default fs)
-    tmp_url = f"{hdir.rstrip('/')}__compact_{uuid.uuid4().hex}"
-    tmp = fsio.url_to_fs(tmp_url)[1]
-    head.repartition(1, F.col("batch_id")).write.partitionBy(
-        "batch_id"
-    ).parquet(tmp_url)
-
-    prev_horizon = compaction_horizon(fs, p)
-    _write_horizon(fs, p, upto_batch)
-    try:
-        swap_in_compacted(fs, p, tmp, tail_dirs)
-    except BaseException:
-        _restore_horizon(fs, p, prev_horizon)
-        raise
+    publish_compaction(
+        hdir,
+        lambda tmp_url: (
+            head.repartition(1, F.col("batch_id"))
+            .write.partitionBy("batch_id")
+            .parquet(tmp_url)
+        ),
+        tail_dirs,
+        horizon=upto_batch,
+    )
     rows_after = spark.read.parquet(hdir).count()
     # head-size sidecar for decide_hypertable_compaction: the folded
     # head's row count (= hours covered, one row per hour) via a
@@ -926,8 +911,9 @@ def serve_hypertable_gapfill(spark: SparkSession, out_dir: str) -> DataFrame:
 # pre-deletion values). Untouched hours and untouched batch partitions
 # are never read or rewritten.
 #
-# Crash safety rides the compaction swap (manifest + rollback +
-# recover_compaction, tagged ``rtbf_request``) plus a sibling
+# Crash safety rides the compaction publish protocol
+# (operators/index_maintenance docstring; the manifest is tagged
+# ``rtbf_request``, no horizon) plus a sibling
 # ``__rtbf_log.json`` journal written BEFORE the swap as "pending" and
 # flipped to "applied" after. Siblings survive every swap (the horizon
 # and batch-times precedent). The pending record pins the affected
@@ -1060,17 +1046,16 @@ def forget_hypertable_rows(
 
     from doc2dataset_spark.operators.index_maintenance import (
         _batch_of,
-        check_no_leftover_compaction,
+        compaction_fs,
         list_batch_dirs,
-        swap_in_compacted,
+        publish_compaction,
     )
     from doc2dataset_spark.operators.time_travel import forget_batch_time
 
     hdir = _hourly_path(out_dir)
-    fs, p = fsio.url_to_fs(hdir)
+    fs, p = compaction_fs(hdir)
     if not fs.exists(p):
         raise ValueError(f"no hourly partial log under {out_dir!r}")
-    check_no_leftover_compaction(fs, p)
     rdir = _rejected_path(out_dir)
     rfs, rp = fsio.url_to_fs(rdir)
     has_deadletter = rfs.exists(rp)
@@ -1342,31 +1327,28 @@ def forget_hypertable_rows(
         "bucket", "n_events", "dec_total", "batch_id"
     ).unionByName(folded)
 
-    import uuid
-
-    tmp_url = f"{hdir.rstrip('/')}__rtbf_{uuid.uuid4().hex}"
-    tmp = fsio.url_to_fs(tmp_url)[1]
-    new_touched.repartition(
-        max(len(touched), 1), F.col("batch_id")
-    ).write.partitionBy("batch_id").parquet(tmp_url)
-
     tail_dirs = [
         d
         for d in list_batch_dirs(fs, p)
         if _batch_of(d) not in touched
     ]
-    try:
-        swap_in_compacted(
-            fs, p, tmp, tail_dirs, extra={"rtbf_request": request_id}
-        )
-    except BaseException:
-        # python-level failure: the swap rolled itself back — the log is
-        # pre-deletion again, so drop the pending journal entry (a hard
-        # crash instead leaves it pending for the state-decided retry)
-        _write_rtbf_log(
+    publish_compaction(
+        hdir,
+        lambda tmp_url: (
+            new_touched.repartition(max(len(touched), 1), F.col("batch_id"))
+            .write.partitionBy("batch_id")
+            .parquet(tmp_url)
+        ),
+        tail_dirs,
+        extra={"rtbf_request": request_id},
+        # python-level swap failure: the swap rolled itself back — the
+        # log is pre-deletion again, so drop the pending journal entry
+        # (a hard crash instead leaves it pending for the state-decided
+        # retry)
+        on_rollback=lambda: _write_rtbf_log(
             fs, p, [r for r in records if r["request_id"] != request_id]
-        )
-        raise
+        ),
+    )
 
     # a touched partition whose every row was an affected-hour row (and
     # that isn't the anchor) vanished from the rewrite — its landing
@@ -1388,6 +1370,7 @@ def recover_hypertable_rtbf(out_dir: str) -> dict:
     journal entry by state comparison. Returns recover_compaction's
     action dict with the tagged request_id (None for non-RTBF debris)."""
     from doc2dataset_spark.operators.index_maintenance import (
+        compaction_manifest,
         recover_compaction,
     )
 
@@ -1395,7 +1378,7 @@ def recover_hypertable_rtbf(out_dir: str) -> dict:
     fs, p = fsio.url_to_fs(hdir)
     import json
 
-    manifest = f"{p.rstrip('/')}__compact_manifest.json"
+    manifest = compaction_manifest(p)
     req = None
     if fs.exists(manifest):
         with fs.open(manifest, "rb") as fh:

@@ -15,7 +15,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from doc2dataset_spark.config import DownloadConfig
+from doc2dataset_spark.config import IGNORED_PARITY_FIELDS, DownloadConfig
 from doc2dataset_spark.plans.pipeline import build_pipeline, download
 from tests.fixtures import build_corpus, write_url_csv, write_url_txt
 
@@ -262,9 +262,10 @@ def test_migrating_caller_gets_reference_defaults():
     cfg.validate()  # the defaults themselves validate clean
 
 
-def test_ignored_parity_kwargs_warn():
-    cfg = DownloadConfig(url_list="x", distributor="pyspark", subjob_size=100)
-    with pytest.warns(UserWarning, match="no effect"):
+@pytest.mark.parametrize("name", sorted(IGNORED_PARITY_FIELDS))
+def test_ignored_parity_kwargs_warn(name):
+    cfg = DownloadConfig(url_list="x", **{name: "set-by-caller"})
+    with pytest.warns(UserWarning, match=f"{name} .*no effect"):
         cfg.validate()
 
 

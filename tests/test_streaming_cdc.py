@@ -230,7 +230,8 @@ def test_cdc_compact_failed_publish_rolls_horizon_back(
     before = _rows(cdc_serve(spark, out))
     asof0 = _rows(cdc_serve_asof(spark, out, as_of_batch=0))
 
-    real_rename = _os.rename
+    # the swap's renames are LocalFS.mv -> os.replace
+    real_rename = _os.replace
     calls = {"n": 0}
 
     def flaky(a, b):
@@ -239,7 +240,7 @@ def test_cdc_compact_failed_publish_rolls_horizon_back(
             raise OSError("injected publish crash")
         real_rename(a, b)
 
-    monkeypatch.setattr(_os, "rename", flaky)
+    monkeypatch.setattr(_os, "replace", flaky)
     with _pytest.raises(OSError, match="injected publish"):
         cdc_compact(spark, out)
     monkeypatch.undo()
