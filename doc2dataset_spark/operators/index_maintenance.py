@@ -77,12 +77,24 @@ index needs.
 from __future__ import annotations
 
 import json
+import posixpath
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from doc2dataset_spark import fsio
+
+
+def postings_path(index_dir: str) -> str:
+    """The batch-partitioned postings log of the IVF, text and winnow
+    indexes."""
+    return posixpath.join(index_dir, "postings")
+
+
+def meta_path(index_dir: str) -> str:
+    """The build-parameter sidecar of the MinHash and winnow indexes."""
+    return posixpath.join(index_dir, "meta")
 
 
 def _batch_of(dirname: str) -> int:
@@ -509,10 +521,8 @@ def delete_docs_winnow(
     frequency needs no fixup: df is derived from the postings at serve
     time (winnow_index module docstring), so it is consistent the moment
     the rows are gone."""
-    from doc2dataset_spark.operators import winnow_index as wi
-
     return delete_from_postings(
-        spark, wi._postings_path(index_dir), doc_ids,
+        spark, postings_path(index_dir), doc_ids,
         key_col="doc_id", partition_cols=(),
     )
 
@@ -527,7 +537,7 @@ def delete_docs_text(
     from doc2dataset_spark.operators import text_index as ti
 
     out = delete_from_postings(
-        spark, ti._postings_path(index_dir), doc_ids,
+        spark, postings_path(index_dir), doc_ids,
         key_col="doc_id", partition_cols=("tb",),
     )
     dl = delete_from_postings(
@@ -546,10 +556,8 @@ def delete_vecs_ivf(
     codebook is FROZEN state (quantization geometry, not user data) and
     is deliberately untouched — deleting a vector must not re-train the
     index, or every other vector's cell assignment could shift."""
-    from doc2dataset_spark.operators import vector_index as vi
-
     return delete_from_postings(
-        spark, vi._postings_path(index_dir), vec_ids,
+        spark, postings_path(index_dir), vec_ids,
         key_col="vec_id", partition_cols=("cent_id",),
     )
 

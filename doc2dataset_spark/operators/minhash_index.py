@@ -32,6 +32,7 @@ import posixpath
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from doc2dataset_spark.operators.index_maintenance import meta_path
 from doc2dataset_spark.queries.dedup import N_BANDS, ROWS_PER_BAND, bands_of
 from doc2dataset_spark.session import load_table
 
@@ -42,22 +43,19 @@ def _bands_path(index_dir: str) -> str:
     return posixpath.join(index_dir, "bands")
 
 
-def _meta_path(index_dir: str) -> str:
-    return posixpath.join(index_dir, "meta")
-
 
 def _write_meta(
     spark: SparkSession, index_dir: str, bands: int, rows: int
 ) -> None:
     spark.createDataFrame(
         [(int(bands), int(rows))], "bands int, rows int"
-    ).coalesce(1).write.mode("overwrite").parquet(_meta_path(index_dir))
+    ).coalesce(1).write.mode("overwrite").parquet(meta_path(index_dir))
 
 
 def _has_meta(index_dir: str) -> bool:
     from doc2dataset_spark.fsio import read_parquet_dir
 
-    return read_parquet_dir(_meta_path(index_dir)) is not None
+    return read_parquet_dir(meta_path(index_dir)) is not None
 
 
 def index_banding(spark: SparkSession, index_dir: str) -> tuple[int, int]:
@@ -82,7 +80,7 @@ def _read_banding(index_dir: str):
     were paying two metadata round-trips per batch)."""
     from doc2dataset_spark.fsio import read_parquet_dir
 
-    table = read_parquet_dir(_meta_path(index_dir))
+    table = read_parquet_dir(meta_path(index_dir))
     if table is None:
         return None
     row = table.to_pylist()[0]

@@ -37,14 +37,12 @@ import posixpath
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from doc2dataset_spark.operators.index_maintenance import postings_path
 from doc2dataset_spark.queries.search_extras import BM25_B, BM25_K1
 from doc2dataset_spark.queries.textops import _TOKS
 
 N_TERM_BUCKETS = 64  # term hash-bucket count (index parameter)
 
-
-def _postings_path(index_dir: str) -> str:
-    return posixpath.join(index_dir, "postings")
 
 
 def _doclen_path(index_dir: str) -> str:
@@ -80,7 +78,7 @@ def build_text_index(
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     from doc2dataset_spark.operators.time_travel import reset_batch_times
 
-    reset_batch_times(_postings_path(index_dir))  # rebuild = fresh history
+    reset_batch_times(postings_path(index_dir))  # rebuild = fresh history
     _write_index(docs, index_dir, batch_id=0)
 
 
@@ -101,7 +99,7 @@ def _write_index(docs: DataFrame, index_dir: str, batch_id: int) -> None:
         .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("batch_id", "tb")
-        .parquet(_postings_path(index_dir))
+        .parquet(postings_path(index_dir))
     )
     dl = tf.groupBy("doc_id").agg(F.sum("tf").alias("dl"))
     (
@@ -117,7 +115,7 @@ def _write_index(docs: DataFrame, index_dir: str, batch_id: int) -> None:
     # batch ids)
     from doc2dataset_spark.operators.time_travel import record_batch_time
 
-    record_batch_time(_postings_path(index_dir), batch_id)
+    record_batch_time(postings_path(index_dir), batch_id)
 
 
 def refresh_index_stats(spark: SparkSession, index_dir: str) -> None:
@@ -166,7 +164,7 @@ def probe_text_index(
          .select(_term_bucket(F.col("term")).alias("b")).collect()}
     )
     post = (
-        spark.read.parquet(_postings_path(index_dir))
+        spark.read.parquet(postings_path(index_dir))
         # static partition filter: only the query terms' buckets are read
         .filter(F.col("tb").isin(buckets))
         .filter(F.col("term").isin(terms))

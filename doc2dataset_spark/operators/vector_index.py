@@ -28,6 +28,7 @@ import posixpath
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from doc2dataset_spark.operators.index_maintenance import postings_path
 from doc2dataset_spark.queries.dedup import normalized_embeddings, spark_dot
 
 DEFAULT_NPROBE = 1
@@ -37,9 +38,6 @@ DEFAULT_TOPK = 3
 def _centroids_path(index_dir: str) -> str:
     return posixpath.join(index_dir, "centroids")
 
-
-def _postings_path(index_dir: str) -> str:
-    return posixpath.join(index_dir, "postings")
 
 
 def build_ivf_index(
@@ -98,14 +96,14 @@ def build_ivf_index(
     # reset BEFORE the overwrite (build_text_index's ordering): a crash
     # after the write but before a post-write reset would leave the dead
     # incarnation's landing times over the new index
-    reset_batch_times(_postings_path(index_dir))  # rebuild = fresh history
+    reset_batch_times(postings_path(index_dir))  # rebuild = fresh history
     (
         assign.withColumn("batch_id", F.lit(0))
         .write.mode("overwrite")
         .partitionBy("batch_id", "cent_id")
-        .parquet(_postings_path(index_dir))
+        .parquet(postings_path(index_dir))
     )
-    record_batch_time(_postings_path(index_dir), 0)
+    record_batch_time(postings_path(index_dir), 0)
 
 
 def probe_ivf_index(
@@ -144,7 +142,7 @@ def probe_ivf_index(
         r["cent_id"]
         for r in ranked.select("cent_id").distinct().collect()
     ]
-    postings = spark.read.parquet(_postings_path(index_dir)).filter(
+    postings = spark.read.parquet(postings_path(index_dir)).filter(
         F.col("cent_id").isin(cells)
     )
     # probe-vs-postings scoring + per-(cell, qid) top-k as one vectorized
@@ -214,8 +212,8 @@ def append_to_ivf_index(
         .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("batch_id", "cent_id")
-        .parquet(_postings_path(index_dir))
+        .parquet(postings_path(index_dir))
     )
     from doc2dataset_spark.operators.time_travel import record_batch_time
 
-    record_batch_time(_postings_path(index_dir), batch_id)
+    record_batch_time(postings_path(index_dir), batch_id)

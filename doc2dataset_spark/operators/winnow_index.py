@@ -37,11 +37,13 @@ tests/test_winnow_index.py).
 
 from __future__ import annotations
 
-import posixpath
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from doc2dataset_spark.operators.index_maintenance import (
+    meta_path,
+    postings_path,
+)
 from doc2dataset_spark.queries.dedup_detectors import (
     WINNOW_MAXDF,
     WINNOW_THRESHOLD,
@@ -51,18 +53,12 @@ from doc2dataset_spark.queries.dedup_detectors import (
 from doc2dataset_spark.session import load_table
 
 
-def _postings_path(index_dir: str) -> str:
-    return posixpath.join(index_dir, "postings")
-
-
-def _meta_path(index_dir: str) -> str:
-    return posixpath.join(index_dir, "meta")
 
 
 def _write_meta(spark: SparkSession, index_dir: str) -> None:
     spark.createDataFrame(
         [(int(WINNOW_W), int(WINNOW_MAXDF))], "w int, maxdf int"
-    ).coalesce(1).write.mode("overwrite").parquet(_meta_path(index_dir))
+    ).coalesce(1).write.mode("overwrite").parquet(meta_path(index_dir))
 
 
 def _check_meta(index_dir: str) -> None:
@@ -77,7 +73,7 @@ def _check_meta(index_dir: str) -> None:
     index_dir validates the same as a local one."""
     from doc2dataset_spark.fsio import read_parquet_dir
 
-    table = read_parquet_dir(_meta_path(index_dir))
+    table = read_parquet_dir(meta_path(index_dir))
     if table is None:
         return
     row = table.to_pylist()[0]
@@ -111,14 +107,14 @@ def build_winnow_index(
     # reset BEFORE the overwrite (build_text_index's ordering): a crash
     # after the write but before a post-write reset would leave the dead
     # incarnation's landing times over the new index
-    reset_batch_times(_postings_path(index_dir))  # rebuild = fresh history
+    reset_batch_times(postings_path(index_dir))  # rebuild = fresh history
     (
         fps.withColumn("batch_id", F.lit(0))
         .write.mode("overwrite")
         .partitionBy("batch_id")
-        .parquet(_postings_path(index_dir))
+        .parquet(postings_path(index_dir))
     )
-    record_batch_time(_postings_path(index_dir), 0)
+    record_batch_time(postings_path(index_dir), 0)
 
 
 def append_winnow_batch(
@@ -137,7 +133,7 @@ def append_winnow_batch(
     fs, _ = url_to_fs(index_dir)
     # stamp the fresh directory BEFORE the postings land (same crash
     # ordering as build_winnow_index: parameters first, data second)
-    if not fs.exists(_postings_path(index_dir)):
+    if not fs.exists(postings_path(index_dir)):
         _write_meta(spark, index_dir)
     (
         winnow_fingerprints(docs)
@@ -145,15 +141,15 @@ def append_winnow_batch(
         .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("batch_id")
-        .parquet(_postings_path(index_dir))
+        .parquet(postings_path(index_dir))
     )
     from doc2dataset_spark.operators.time_travel import record_batch_time
 
-    record_batch_time(_postings_path(index_dir), batch_id)
+    record_batch_time(postings_path(index_dir), batch_id)
 
 
 def read_postings(spark: SparkSession, index_dir: str) -> DataFrame:
-    return spark.read.parquet(_postings_path(index_dir)).select(
+    return spark.read.parquet(postings_path(index_dir)).select(
         "doc_id", "fp"
     )
 
@@ -227,7 +223,7 @@ def _pruned_postings(
     assertion would need). 4 downstream consumers; checkpoint blocks
     are GC-cleaned, unlike CacheManager entries, so a long-lived ingest
     service calling this per batch does not accumulate pinned blocks."""
-    return spark.read.parquet(_postings_path(index_dir)).filter(
+    return spark.read.parquet(postings_path(index_dir)).filter(
         F.col("batch_id") <= batch_id
     )
 

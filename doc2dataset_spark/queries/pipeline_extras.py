@@ -458,9 +458,9 @@ def _curate_corpus_plan(spark, sf_dir, index_dir: str | None = None):
     # cos >= CELL_THRESHOLD (pairwise greedy-by-id, not transitive
     # closure — SQL-expressible, and what keeps the oracle exact)
     if index_dir is not None:
-        from doc2dataset_spark.operators.vector_index import _postings_path
+        from doc2dataset_spark.operators.index_maintenance import postings_path
 
-        assign = spark.read.parquet(_postings_path(index_dir)).select(
+        assign = spark.read.parquet(postings_path(index_dir)).select(
             "vec_id", "ne", "cent_id"
         )
     else:

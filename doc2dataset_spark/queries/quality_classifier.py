@@ -894,10 +894,8 @@ def curate_corpus_scored_indexed(spark, sf_dir):
     the lifecycle a production pipeline actually runs — train the
     filter at corpus build time, apply it to every batch thereafter."""
     from doc2dataset_spark.fsio import artifact_cache_dir, ensure_local_cache_dir
-    from doc2dataset_spark.operators.vector_index import (
-        _postings_path,
-        build_ivf_index,
-    )
+    from doc2dataset_spark.operators.index_maintenance import postings_path
+    from doc2dataset_spark.operators.vector_index import build_ivf_index
 
     ividx = ensure_local_cache_dir(
         artifact_cache_dir(sf_dir, "ivf", "embeddings"),
@@ -910,7 +908,7 @@ def curate_corpus_scored_indexed(spark, sf_dir):
         lambda tmp: save_fx_model(spark, sf_dir, tmp),
     )
     scored = fx_score_from(spark, sf_dir, midx).localCheckpoint()
-    assign = spark.read.parquet(_postings_path(ividx)).select(
+    assign = spark.read.parquet(postings_path(ividx)).select(
         "vec_id", "ne", "cent_id"
     )
     return _scored_curation_plan(spark, sf_dir, scored, assign)

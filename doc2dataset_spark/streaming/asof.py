@@ -164,6 +164,7 @@ from doc2dataset_spark.streaming.util import (  # noqa: E402
     land_batch as _land,
     land_batch_exact as _land_exact,
     rm_stale_partition as _rm_stale_partition,
+    run_batchwise,
 )
 
 
@@ -261,15 +262,11 @@ def run_asof_attribution(
     latest-view seed would hide the older view a late purchase needs,
     and views arriving after a purchase's batch are never consulted.
     Out-of-order feeds belong on run_asof_attribution_late."""
-    ckpt_fs, ckpt_path = fsio.url_to_fs(checkpoint_dir)
-    fresh_checkpoint = not ckpt_fs.exists(ckpt_path)
-    fired: list[int] = []
     vdir = _views_path(out_dir)
     adir = _attributed_path(out_dir)
     mdir = _maxts_path(out_dir)
 
     def one_batch(batch_df: DataFrame, batch_id: int) -> None:
-        fired.append(batch_id)
         s = batch_df.sparkSession
         batch_df = batch_df.localCheckpoint(eager=True)
         bounds = batch_df.agg(
@@ -313,20 +310,7 @@ def run_asof_attribution(
             # errors against the NEW stream's (valid) timestamps
             _rm_stale_partition(mdir, batch_id)
 
-    q = (
-        events_stream.writeStream.foreachBatch(one_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-
-    if fresh_checkpoint and fired:
-        from doc2dataset_spark.streaming.util import sweep_stale_batches
-
-        sweep_stale_batches(adir, max(fired))
-        sweep_stale_batches(vdir, max(fired))
-        sweep_stale_batches(mdir, max(fired))
+    run_batchwise(events_stream, checkpoint_dir, one_batch, [adir, vdir, mdir])
 
 
 def attributed_purchases(spark: SparkSession, out_dir: str) -> DataFrame:
@@ -449,31 +433,10 @@ def run_asof_attribution_late(
     logs land with dynamic overwrite, so a same-checkpoint replay
     rewrites exactly its own partitions against exactly its original
     inputs."""
-    ckpt_fs, ckpt_path = fsio.url_to_fs(checkpoint_dir)
-    fresh_checkpoint = not ckpt_fs.exists(ckpt_path)
-    fired: list[int] = []
     vdir, adir = _allviews_path(out_dir), _attributed_path(out_dir)
     pdir, wdir = _pending_path(out_dir), _wm_path(out_dir)
-    if fresh_checkpoint:
-        # compact_view_state finalizes pre-watermark view history; a
-        # fresh-checkpoint replay would re-land those views under
-        # renumbered batch ids and the stale-batch sweep would delete
-        # the compacted log — the index-ingest refusal, same hazard.
-        from doc2dataset_spark.operators.index_maintenance import (
-            compaction_horizon,
-        )
-
-        fs_v, vp = fsio.url_to_fs(vdir)
-        if fs_v.exists(vp) and compaction_horizon(fs_v, vp) is not None:
-            raise RuntimeError(
-                f"{vdir!r} has a compaction horizon (compact_view_state "
-                "ran) — a fresh-checkpoint replay is not supported on a "
-                "compacted view log; keep the original checkpoint or "
-                "rebuild from the source"
-            )
 
     def one_batch(batch_df: DataFrame, batch_id: int) -> None:
-        fired.append(batch_id)
         s = batch_df.sparkSession
         batch_df = batch_df.localCheckpoint(eager=True)
 
@@ -515,28 +478,24 @@ def run_asof_attribution_late(
             # pending set unreadable; removing the stale snapshot keeps
             # the on-disk state consistent with it
             _rm_stale_partition(pdir, batch_id)
-        s.createDataFrame(
-            [(int(max_ts), int(wm), int(n_pending))],
-            "max_ts_us bigint, wm_us bigint, n_pending bigint",
-        ).withColumn("batch_id", F.lit(batch_id)).write.mode(
-            "overwrite"
-        ).option("partitionOverwriteMode", "dynamic").partitionBy(
-            "batch_id"
-        ).parquet(wdir)
+        _land(
+            s.createDataFrame(
+                [(int(max_ts), int(wm), int(n_pending))],
+                "max_ts_us bigint, wm_us bigint, n_pending bigint",
+            ),
+            wdir,
+            batch_id,
+        )
 
-    q = (
-        events_stream.writeStream.foreachBatch(one_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+    # compact_view_state finalizes pre-watermark view history, so a
+    # fresh-checkpoint replay onto a compacted view log is refused
+    run_batchwise(
+        events_stream,
+        checkpoint_dir,
+        one_batch,
+        [vdir, adir, pdir, wdir],
+        refuse_roots=[vdir],
     )
-    q.processAllAvailable()
-    q.stop()
-
-    if fresh_checkpoint and fired:
-        from doc2dataset_spark.streaming.util import sweep_stale_batches
-
-        for root in (vdir, adir, pdir, wdir):
-            sweep_stale_batches(root, max(fired))
 
 
 def finalize_asof_attribution(spark: SparkSession, out_dir: str) -> DataFrame:

@@ -7,10 +7,8 @@ spelling of a compacted-topic / change-data-feed consumer.
 Two halves:
 
 - ``run_cdc_ingest``  lands each micro-batch of change records under
-  ``batch_id=<n>`` (dynamic overwrite → same-checkpoint replays rewrite
-  their own partition exactly; fresh-checkpoint replays sweep stale
-  higher ids — the discipline shared with streaming/rollup.py and
-  streaming/sketch.py).
+  ``batch_id=<n>`` (the replay rules in streaming/util.py's module
+  docstring).
 - ``cdc_serve``       materializes the current table: for every key,
   the change with the highest (batch_id, seq) wins (``max_by`` over the
   compound version — one aggregate, no window), and a winning tombstone
@@ -32,6 +30,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from doc2dataset_spark.streaming.util import land_batch, run_batchwise
+
 DELETE_OP = "delete"
 
 
@@ -42,40 +42,15 @@ def run_cdc_ingest(
     checkpoint_dir: str,
 ) -> None:
     """Land the change stream, one ``batch_id=<n>`` partition per
-    micro-batch (idempotent dynamic overwrite + fresh-checkpoint stale
-    sweep). The frame must carry ``doc_id``, ``op`` and ``seq`` plus the
-    payload columns."""
-    from doc2dataset_spark import fsio
+    micro-batch. The frame must carry ``doc_id``, ``op`` and ``seq``
+    plus the payload columns. Blocks until drained."""
+    from doc2dataset_spark.operators.time_travel import record_batch_time
 
-    ckpt_fs, ckpt_path = fsio.url_to_fs(checkpoint_dir)
-    fresh_checkpoint = not ckpt_fs.exists(ckpt_path)
-    fired: list[int] = []
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        fired.append(batch_id)
-        (
-            batch_df.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(out_dir)
-        )
-        from doc2dataset_spark.operators.time_travel import record_batch_time
-
+    def step(batch_df: DataFrame, batch_id: int) -> None:
+        land_batch(batch_df, out_dir, batch_id)
         record_batch_time(out_dir, batch_id)
 
-    q = (
-        changes_stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-
-    if fresh_checkpoint and fired:
-        from doc2dataset_spark.streaming.util import sweep_stale_batches
-
-        sweep_stale_batches(out_dir, max(fired))
+    run_batchwise(changes_stream, checkpoint_dir, step, [out_dir])
 
 
 def cdc_serve(spark: SparkSession, out_dir: str) -> DataFrame:

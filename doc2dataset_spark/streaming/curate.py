@@ -13,8 +13,8 @@ Per micro-batch of (doc_id, text):
    key); within-batch collisions resolve min-doc_id-wins, the
    ``dedup_exact`` canonical rule.
 3. **Idempotent landing** — the batch's verdicts and its NEW digests each
-   land under ``batch=<id>`` with overwrite: a replayed batch id replaces
-   its own output (same discipline as events.run_foreach_batch_upsert).
+   land under ``batch=<id>`` with overwrite, by the replay rules stated
+   in streaming/util.py's module docstring.
 
 Scale: the digest join is a hash equi-join on a 32-byte key — the
 directory side grows linearly with ACCEPTED docs (1 row each); at 100 TB
@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 
 from doc2dataset_spark import fsio
 from doc2dataset_spark.queries.curation_extras import gopher_flags
+from doc2dataset_spark.streaming.util import run_batchwise
 
 
 def digest_directory_exists(state_dir: str) -> bool:
@@ -105,18 +106,15 @@ def run_curate_stream(
     state_dir: str,
     out_dir: str,
     checkpoint_dir: str,
-):
-    """Wire the stream: verdicts → out_dir, digest directory → state_dir,
-    both idempotent per batch id. Returns the StreamingQuery."""
+) -> None:
+    """Drive the stream: verdicts → out_dir, digest directory →
+    state_dir, each under ``batch=<id>``. Blocks until drained."""
     spark = docs_stream.sparkSession
 
     def one_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # Crash-replay idempotence: a replayed batch must NOT see the
-        # digest partition it wrote before the crash (batch=<batch_id>),
-        # or every accepted doc would be flagged dup_earlier against its
-        # own digest and then have its state overwritten with an empty
-        # frame.  Partition discovery exposes the ``batch`` column, so
-        # the directory read is restricted to strictly earlier batches.
+        # strictly earlier batches only (rule 3): a replayed batch that
+        # read its own or a dead incarnation's digest partitions would
+        # flag every accepted doc dup_earlier against its own digest
         directory = (
             spark.read.parquet(state_dir).filter(
                 F.col("batch") < F.lit(int(batch_id))
@@ -132,8 +130,7 @@ def run_curate_stream(
             posixpath.join(state_dir, f"batch={batch_id}")
         )
 
-    return (
-        docs_stream.writeStream.foreachBatch(one_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+    run_batchwise(
+        docs_stream, checkpoint_dir, one_batch, [out_dir, state_dir],
+        prefix="batch=",
     )

@@ -16,11 +16,8 @@ feeding the whole corpus as one micro-batch with the corpus itself as
 reference reproduces ``quality_psi_drift``'s output value-for-value
 (tests/test_streaming_drift.py).
 
-Landing follows the established replay discipline: one verdict frame
-per micro-batch under ``batch_id=<n>`` dynamic-overwrite partitions
-(same-checkpoint restarts rewrite their batch exactly), plus the
-fresh-checkpoint stale-batch sweep (streaming/util.sweep_stale_batches)
-for the lost-checkpoint disaster case.
+One verdict frame lands per micro-batch under ``batch_id=<n>``, by
+the replay rules stated in streaming/util.py's module docstring.
 
 Scale: the reference is |bins|+1 rows collected ONCE and rebuilt as a
 broadcast local relation per batch — no rescan of the reference corpus
@@ -31,7 +28,7 @@ count-min partials (streaming/sketch.py).
 
 Reference basis: the reference engine has no streaming at all
 (SURVEY §2 streaming note); this is public Structured Streaming
-surface (foreachBatch + idempotent partition overwrite).
+surface (a micro-batch sink + idempotent partition overwrite).
 """
 
 from __future__ import annotations
@@ -43,6 +40,7 @@ from doc2dataset_spark.queries.text_models import (
     binned_docs,
     psi_from_counts,
 )
+from doc2dataset_spark.streaming.util import land_batch, run_batchwise
 
 
 def reference_histogram(docs: DataFrame) -> tuple[list, list]:
@@ -80,37 +78,15 @@ def run_drift_monitor(
     checkpoint_dir: str,
 ) -> None:
     """Drive the stream: one PSI verdict frame per micro-batch under
-    ``batch_id=<n>`` (idempotent dynamic overwrite; fresh-checkpoint
-    replays sweep stale higher-id partitions)."""
-    from doc2dataset_spark import fsio
-
-    ckpt_fs, ckpt_path = fsio.url_to_fs(checkpoint_dir)
-    fresh_checkpoint = not ckpt_fs.exists(ckpt_path)
-    fired: list[int] = []
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        fired.append(batch_id)
-        (
-            batch_verdicts(batch_df, binc_rows, tot_rows)
-            .withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(out_dir)
-        )
-
-    q = (
-        doc_stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+    ``batch_id=<n>``. Blocks until drained."""
+    run_batchwise(
+        doc_stream,
+        checkpoint_dir,
+        lambda df, bid: land_batch(
+            batch_verdicts(df, binc_rows, tot_rows), out_dir, bid
+        ),
+        [out_dir],
     )
-    q.processAllAvailable()
-    q.stop()
-
-    if fresh_checkpoint and fired:
-        from doc2dataset_spark.streaming.util import sweep_stale_batches
-
-        sweep_stale_batches(out_dir, max(fired))
 
 
 def drift_serve(spark: SparkSession, out_dir: str) -> DataFrame:

@@ -15,6 +15,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from doc2dataset_spark.streaming.util import land_batch, run_batchwise
+
 
 def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """readStream over the events parquet (one-file micro-batch source —
@@ -82,8 +84,7 @@ def run_to_memory(
     spark: SparkSession, agg: DataFrame, name: str, output_mode: str = "complete"
 ) -> DataFrame:
     """Drive a finite stream to completion into an in-memory table
-    (the local smoke harness; production uses kafka/delta sinks +
-    checkpointLocation)."""
+    (the local smoke harness: no checkpoint, nothing to replay)."""
     q = (
         agg.writeStream.outputMode(output_mode)
         .format("memory")
@@ -110,31 +111,21 @@ def dedup_stream(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
 def run_foreach_batch_upsert(
     spark: SparkSession, agg: DataFrame, out_dir: str, checkpoint_dir: str
 ) -> None:
-    """foreachBatch sink with idempotent-by-batch-id semantics: each
-    micro-batch overwrites ONLY its own partition directory
-    (batch_id=<n>), so a batch replayed after a failure rewrites the same
-    files instead of duplicating them — exactly-once output on top of an
-    at-least-once stream, the standard production pattern when the target
-    (plain parquet here) has no transactions. Spark's offset log +
-    deterministic batch ids make the replay boundary precise."""
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            batch_df.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(out_dir)
-        )
-
-    q = (
-        agg.writeStream.outputMode("update")
-        .foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+    """Micro-batch sink with idempotent-by-batch-id semantics: each
+    micro-batch of the aggregation's update-mode output overwrites ONLY
+    its own ``batch_id=<n>`` partition, so a batch replayed after a
+    failure rewrites the same files instead of duplicating them —
+    exactly-once output on top of an at-least-once stream, the standard
+    production pattern when the target (plain parquet here) has no
+    transactions (replay rules: streaming/util.py). Blocks until
+    drained."""
+    run_batchwise(
+        agg,
+        checkpoint_dir,
+        lambda df, bid: land_batch(df, out_dir, bid),
+        [out_dir],
+        output_mode="update",
     )
-    q.processAllAvailable()
-    q.stop()
 
 
 def interval_join_stream(events: DataFrame, watermark: str = "1 hour") -> DataFrame:

@@ -13,12 +13,9 @@ events are read once — at ingest.
 
 Pieces, each on an established idiom:
 
-- ``run_hypertable_ingest``   foreachBatch → ``hourly/batch_id=<n>``
-                              dynamic-overwrite partitions (the
-                              streaming/rollup.py replay discipline:
-                              same-checkpoint replays rewrite their own
-                              partition; fresh-checkpoint replays sweep
-                              stale higher ids).
+- ``run_hypertable_ingest``   one ``hourly/batch_id=<n>`` partition
+                              per micro-batch (the replay rules in
+                              streaming/util.py's module docstring).
 - ``serve_hypertable``        fold partials per hour, emit the
                               hour/day/month union — SHARED expressions
                               with the batch query (imported from
@@ -46,6 +43,12 @@ from pyspark.sql import functions as F
 
 from doc2dataset_spark import fsio
 from doc2dataset_spark.queries.timeseries_hypertable import _ht_emit, _ht_level
+from doc2dataset_spark.streaming.util import (
+    land_batch,
+    land_batch_exact,
+    rm_stale_partition,
+    run_batchwise,
+)
 
 
 def hourly_partial(events: DataFrame) -> DataFrame:
@@ -67,26 +70,6 @@ def _hourly_path(out_dir: str) -> str:
     return posixpath.join(out_dir, "hourly")
 
 
-def _refuse_fresh_checkpoint_on_compacted(hdir: str) -> None:
-    """A fresh-checkpoint replay renumbers batches from 0 and its stale
-    sweep would delete the folded ``batch_id=<horizon>`` partition — the
-    entire pre-compaction history (round-13 self-review; the same hazard
-    index ingest and the as-of view log refuse)."""
-    from doc2dataset_spark.operators.index_maintenance import (
-        compaction_horizon,
-    )
-
-    fs_h, hp = fsio.url_to_fs(hdir)
-    if fs_h.exists(hp) and compaction_horizon(fs_h, hp) is not None:
-        raise RuntimeError(
-            f"{hdir!r} has a compaction horizon "
-            "(compact_hypertable_partials ran) — a fresh-checkpoint "
-            "replay is not supported on a compacted partial log: its "
-            "stale-batch sweep would delete the folded history; keep "
-            "the original checkpoint or rebuild from the source"
-        )
-
-
 def run_hypertable_ingest(
     spark: SparkSession,
     events_stream: DataFrame,
@@ -94,40 +77,20 @@ def run_hypertable_ingest(
     checkpoint_dir: str,
 ) -> None:
     """Land one hourly-partials frame per micro-batch under
-    ``hourly/batch_id=<n>`` (idempotent dynamic overwrite; zero-row
-    recomputations delete the stale partition — land_batch_exact;
-    fresh-checkpoint replays sweep stale higher-id partitions).
+    ``hourly/batch_id=<n>`` (land_batch_exact: zero-row recomputations
+    delete the stale partition). A fresh-checkpoint replay over a
+    COMPACTED partial log refuses up front. Blocks until drained."""
+    from doc2dataset_spark.operators.time_travel import record_batch_time
 
-    A fresh-checkpoint replay over a COMPACTED partial log refuses up
-    front (_refuse_fresh_checkpoint_on_compacted)."""
-    ckpt_fs, ckpt_path = fsio.url_to_fs(checkpoint_dir)
-    fresh_checkpoint = not ckpt_fs.exists(ckpt_path)
-    fired: list[int] = []
     hdir = _hourly_path(out_dir)
-    if fresh_checkpoint:
-        _refuse_fresh_checkpoint_on_compacted(hdir)
 
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        fired.append(batch_id)
-        from doc2dataset_spark.streaming.util import land_batch_exact
-
+    def step(batch_df: DataFrame, batch_id: int) -> None:
         land_batch_exact(hourly_partial(batch_df), hdir, batch_id)
-        from doc2dataset_spark.operators.time_travel import record_batch_time
-
         record_batch_time(hdir, batch_id)
 
-    q = (
-        events_stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+    run_batchwise(
+        events_stream, checkpoint_dir, step, [hdir], refuse_roots=[hdir]
     )
-    q.processAllAvailable()
-    q.stop()
-
-    if fresh_checkpoint and fired:
-        from doc2dataset_spark.streaming.util import sweep_stale_batches
-
-        sweep_stale_batches(hdir, max(fired))
 
 
 def fold_hourly(partials: DataFrame) -> DataFrame:
@@ -477,7 +440,7 @@ def ingest_hypertable_late_batch(
     on_late: str = "refuse",
 ) -> dict:
     """ONE batch through the watermarked ingest — the shared core of the
-    streaming foreachBatch closure and the batch-side log builder
+    streaming per-batch step and the batch-side log builder
     (queries/timeseries_hypertable), so stream == batch is structural.
 
     ``on_late`` decides what happens to events below the PRIOR
@@ -500,12 +463,6 @@ def ingest_hypertable_late_batch(
     snapshot with this batch's invalidation accounting. Returns the wm
     snapshot dict it persisted (zeros/None fields for an empty batch,
     which advances nothing)."""
-    from doc2dataset_spark.streaming.util import (
-        land_batch,
-        land_batch_exact,
-        rm_stale_partition,
-    )
-
     if on_late not in ("refuse", "drop"):
         raise ValueError(f"on_late={on_late!r}: pass 'refuse' or 'drop'")
     s = batch_df.sparkSession
@@ -683,11 +640,11 @@ def run_hypertable_ingest_late(
 ) -> None:
     """run_hypertable_ingest with a lateness bound: watermarked partial
     ingest + the bucket-finality surface (module comment above). Same
-    replay discipline — dynamic overwrite per batch, fresh-checkpoint
-    sweeps (hourly, wm, AND rejected logs), refusal over a compacted
-    log. ``on_late``: see ingest_hypertable_late_batch — 'refuse'
-    (default) stops the stream on a bound violation; 'drop'
-    dead-letters the violators and keeps going.
+    replay rules (streaming/util.py), swept over the hourly, wm AND
+    rejected logs. Blocks until drained. ``on_late``: see
+    ingest_hypertable_late_batch — 'refuse' (default) stops the stream
+    on a bound violation; 'drop' dead-letters the violators and keeps
+    going.
 
     ``compact="auto"`` (opt-in): after each batch, fold the log head
     whenever decide_hypertable_compaction's sidecar counters say the
@@ -699,15 +656,9 @@ def run_hypertable_ingest_late(
     head (the same-checkpoint replay discipline)."""
     if compact not in (None, "auto"):
         raise ValueError(f"compact={compact!r}: pass None or 'auto'")
-    ckpt_fs, ckpt_path = fsio.url_to_fs(checkpoint_dir)
-    fresh_checkpoint = not ckpt_fs.exists(ckpt_path)
-    fired: list[int] = []
     hdir = _hourly_path(out_dir)
-    if fresh_checkpoint:
-        _refuse_fresh_checkpoint_on_compacted(hdir)
 
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        fired.append(batch_id)
+    def step(batch_df: DataFrame, batch_id: int) -> None:
         ingest_hypertable_late_batch(
             batch_df, out_dir, batch_id, lateness_us, on_late=on_late
         )
@@ -720,20 +671,13 @@ def run_hypertable_ingest_late(
                     batch_df.sparkSession, out_dir, upto_batch=batch_id - 1
                 )
 
-    q = (
-        events_stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+    run_batchwise(
+        events_stream,
+        checkpoint_dir,
+        step,
+        [hdir, _wm_path(out_dir), _rejected_path(out_dir)],
+        refuse_roots=[hdir],
     )
-    q.processAllAvailable()
-    q.stop()
-
-    if fresh_checkpoint and fired:
-        from doc2dataset_spark.streaming.util import sweep_stale_batches
-
-        sweep_stale_batches(hdir, max(fired))
-        sweep_stale_batches(_wm_path(out_dir), max(fired))
-        sweep_stale_batches(_rejected_path(out_dir), max(fired))
 
 
 def _final_before(df: DataFrame, granularity: str, wm_us: int) -> DataFrame:

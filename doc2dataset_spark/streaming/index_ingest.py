@@ -4,11 +4,13 @@ vectors arrive.
 Per micro-batch of (vec_id, embedding float[]): unit-normalize with the
 SAME fold-dot math the batch index uses, quantize against the index's
 FROZEN saved centroids, land under ``batch_id=<n>/cent_id=<k>`` with
-dynamic partition overwrite (``operators/vector_index.append_to_ivf_index``)
-— a replayed batch rewrites its own partitions, so crash-and-retry never
-duplicates postings. Probes (``probe_ivf_index``) see new vectors the
-moment their batch lands; the cent_id partition level keeps probe-side
-pruning intact regardless of how many ingest batches accumulate.
+dynamic partition overwrite (``operators/vector_index.append_to_ivf_index``).
+Every index family here lands stream batch n as ``batch_id=n+1`` (batch
+0 is the initial build's partition), under the replay rules stated in
+streaming/util.py's module docstring. Probes (``probe_ivf_index``) see
+new vectors the moment their batch lands; the cent_id partition level
+keeps probe-side pruning intact regardless of how many ingest batches
+accumulate.
 
 The composition closes the loop with streaming curation: accepted
 documents' embeddings flow straight from the curate stream into the
@@ -24,9 +26,15 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from doc2dataset_spark import fsio
-
+from doc2dataset_spark.operators.index_maintenance import (
+    _batch_of,
+    compact_index_history,
+    list_batch_dirs,
+    postings_path,
+)
 from doc2dataset_spark.operators.vector_index import append_to_ivf_index
 from doc2dataset_spark.queries.dedup import spark_dot
+from doc2dataset_spark.streaming.util import run_batchwise
 
 
 def normalize_vectors(batch: DataFrame) -> DataFrame:
@@ -44,38 +52,21 @@ def run_index_ingest(
     index_dir: str,
     checkpoint_dir: str,
     compact_past_batches: int | None = None,
-):
+) -> None:
     """Wire the stream and block until drained; the index must already
     exist (build_ivf_index) — ingest only ever quantizes against its
-    frozen centroids. Stream batch ids land as ``batch_id + 1`` (batch 0
-    is the initial build's partition).
-
-    Same-checkpoint restarts are exactly idempotent (dynamic partition
-    overwrite rewrites a replayed batch's own partitions). A FRESH
-    checkpoint into an existing index has the run_cms_partials hazard:
-    the replay renumbers batches from 0 and may use fewer batches, so
-    stale higher-numbered ``batch_id=*`` posting partitions from the old
-    incarnation would survive and probe_ivf_index would serve duplicated
-    postings. Guard (same as streaming/sketch.run_cms_partials): when
-    this call starts with no pre-existing checkpoint, every posting
-    partition with ``batch_id > max(fired) + 1`` is deleted after the
-    stream completes."""
-    from doc2dataset_spark.operators.index_maintenance import (
-        compact_index_history,
-    )
-    from doc2dataset_spark.operators.vector_index import _postings_path
-
-    return _run_batchwise_ingest(
+    frozen centroids."""
+    postings = postings_path(index_dir)
+    _run_batchwise_ingest(
         vectors_stream,
         checkpoint_dir,
-        lambda spark, df, bid: append_to_ivf_index(
-            spark, normalize_vectors(df), index_dir, batch_id=bid
+        lambda df, bid: append_to_ivf_index(
+            df.sparkSession, normalize_vectors(df), index_dir, batch_id=bid
         ),
-        [_postings_path(index_dir)],
+        [postings],
         compact_past_batches=compact_past_batches,
         compactor=lambda spark, upto: compact_index_history(
-            spark, _postings_path(index_dir), upto,
-            partition_cols=("cent_id",),
+            spark, postings, upto, partition_cols=("cent_id",)
         ),
     )
 
@@ -85,17 +76,12 @@ def run_text_index_ingest(
     index_dir: str,
     checkpoint_dir: str,
     compact_past_batches: int | None = None,
-):
+) -> None:
     """Streaming inverted-index ingest: micro-batches of (doc_id, text)
     land as ``batch_id=<n>/tb=<b>`` posting partitions via
     ``operators/text_index.append_to_text_index`` (which also rebuilds
     doclen/stats from the full postings, so BM25's df/avgdl/N stay EXACT
     after every batch — not estimates). Blocks until drained.
-
-    Same idempotence contract as run_index_ingest: dynamic partition
-    overwrite makes same-checkpoint replays exact, and a fresh-checkpoint
-    replay sweeps stale higher-numbered batch partitions. Batch ids land
-    as ``batch_id + 1`` (batch 0 is the initial build's partition).
     tests/test_text_index.py locks stream-ingested probes == batch-built
     probes on the same documents."""
     from doc2dataset_spark.operators.text_index import (
@@ -103,52 +89,39 @@ def run_text_index_ingest(
         append_to_text_index,
         refresh_index_stats,
     )
-    from doc2dataset_spark.operators.text_index import (
-        _postings_path as _text_postings,
-    )
 
-    from doc2dataset_spark.operators.index_maintenance import (
-        compact_index_history,
-    )
+    postings, doclen = postings_path(index_dir), _doclen_path(index_dir)
 
     def _compact(spark, upto):
         # both batch-partitioned artifacts compact on the same clock;
         # n/avgdl need no refresh — doclen CONTENT is preserved
-        compact_index_history(
-            spark, _text_postings(index_dir), upto, partition_cols=("tb",)
-        )
-        compact_index_history(spark, _doclen_path(index_dir), upto)
+        compact_index_history(spark, postings, upto, partition_cols=("tb",))
+        compact_index_history(spark, doclen, upto)
 
-    return _run_batchwise_ingest(
+    fired = _run_batchwise_ingest(
         docs_stream,
         checkpoint_dir,
-        lambda spark, df, bid: append_to_text_index(
-            spark, df, index_dir, batch_id=bid
+        lambda df, bid: append_to_text_index(
+            df.sparkSession, df, index_dir, batch_id=bid
         ),
-        # stale partitions exist in BOTH batch-partitioned artifacts
-        [_text_postings(index_dir), _doclen_path(index_dir)],
-        # stats were refreshed from a doclen that included the stale
-        # batches — refresh again from the swept directories
-        after_sweep=lambda spark: refresh_index_stats(spark, index_dir),
+        [postings, doclen],
         compact_past_batches=compact_past_batches,
         compactor=_compact,
     )
+    if fired:
+        # a fresh-checkpoint sweep may have removed doclen batches the
+        # per-batch stats refresh counted — refresh from what remains
+        refresh_index_stats(docs_stream.sparkSession, index_dir)
 
 
 def _run_batchwise_ingest(
-    docs_stream, checkpoint_dir, append, sweep_paths, after_sweep=None,
+    docs_stream, checkpoint_dir, append, roots,
     compact_past_batches=None, compactor=None,
-):
-    """THE foreachBatch wiring for every batch-partitioned index (IVF
-    postings, text postings+doclen, band postings, winnow postings):
-    per micro-batch, ``append(spark, batch_df, batch_id + 1)`` lands one
-    dynamic-overwrite partition (batch 0 is the initial build's); on a
-    fresh checkpoint, stale higher-numbered partitions from an older
-    incarnation are swept from every path in ``sweep_paths`` after the
-    stream drains, then ``after_sweep(spark)`` runs (the text index's
-    stats refresh). One implementation so a fix to the idempotence /
-    sweep contract lands in all four lifecycles at once. Blocks until
-    drained.
+) -> list[int]:
+    """The index families' runner: ``run_batchwise`` with every stream
+    batch landed as ``batch_id + 1`` and ``roots`` both refused when
+    compacted and swept on a fresh checkpoint. Returns the landed ids
+    of the batches that fired.
 
     ``compact_past_batches``: a long-lived stream appends one batch
     partition per micro-batch, forever — unbounded partition
@@ -161,74 +134,32 @@ def _run_batchwise_ingest(
     renamed, never rewritten). Serving results are invariant; only
     replay of the compacted (pre-window) batches is finalized — the
     compact_index_history contract, wired into the stream lifecycle."""
-    from doc2dataset_spark.operators.index_maintenance import (
-        _batch_of,
-        compaction_horizon,
-        list_batch_dirs,
-    )
-    from doc2dataset_spark.streaming.util import sweep_stale_batches
-
     if compact_past_batches is not None and compact_past_batches < 1:
         raise ValueError(
             "compact_past_batches must be >= 1: the newest batch must "
             "stay individually replayable for same-checkpoint restarts"
         )
-    ckpt_fs, ckpt_path = fsio.url_to_fs(checkpoint_dir)
-    fresh_checkpoint = not ckpt_fs.exists(ckpt_path)
-    if fresh_checkpoint:
-        # a COMPACTED index cannot absorb a fresh-checkpoint replay:
-        # pre-horizon batches are finalized, the replay would re-land
-        # their documents under renumbered batch ids (duplicates dynamic
-        # overwrite cannot collapse), and the stale-batch sweep below
-        # would delete the compacted history itself. Refuse up front,
-        # before the stream lands anything.
-        for path in sweep_paths:
-            fs, pp = fsio.url_to_fs(path)
-            if fs.exists(pp) and compaction_horizon(fs, pp) is not None:
-                raise RuntimeError(
-                    f"{path!r} has a compaction horizon (batches were "
-                    "finalized by compact_past_batches or a manual "
-                    "compaction) — a fresh-checkpoint replay is not "
-                    "supported on a compacted index; keep the original "
-                    "checkpoint or rebuild the index from the source"
-                )
-    fired: list[int] = []
-
-    def one_batch(batch_df: DataFrame, batch_id: int) -> None:
-        fired.append(batch_id)
-        append(batch_df.sparkSession, batch_df, batch_id + 1)
-
-    q = (
-        docs_stream.writeStream.foreachBatch(one_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+    fired = run_batchwise(
+        docs_stream, checkpoint_dir, append, roots, offset=1,
+        refuse_roots=roots,
     )
-    q.processAllAvailable()
-    q.stop()
-    if fresh_checkpoint and fired:
-        for path in sweep_paths:
-            sweep_stale_batches(path, max(fired) + 1)
-        if after_sweep is not None:
-            after_sweep(docs_stream.sparkSession)
-    if compact_past_batches is not None and compactor is not None and fired:
-        upto = max(fired) + 1 - compact_past_batches
-        if upto >= 1:  # nothing worth merging below batch 1
-            # no-op guard: if everything <= upto is already one merged
-            # partition, skip — recompacting would re-read and rewrite
-            # the corpus-sized head for zero change on every drain
-            fs0, p0 = fsio.url_to_fs(sweep_paths[0])
-            head_dirs = (
-                [
-                    d
-                    for d in list_batch_dirs(fs0, p0)
-                    if _batch_of(d) <= upto
-                ]
-                if fs0.exists(p0)
-                else []
-            )
-            if head_dirs and head_dirs != [f"batch_id={upto}"]:
-                compactor(docs_stream.sparkSession, upto)
-    return q
+    if not fired or compact_past_batches is None or compactor is None:
+        return fired
+    upto = max(fired) - compact_past_batches
+    if upto < 1:  # nothing worth merging below batch 1
+        return fired
+    # no-op guard: if everything <= upto is already one merged
+    # partition, skip — recompacting would re-read and rewrite the
+    # corpus-sized head for zero change on every drain
+    fs0, p0 = fsio.url_to_fs(roots[0])
+    head_dirs = (
+        [d for d in list_batch_dirs(fs0, p0) if _batch_of(d) <= upto]
+        if fs0.exists(p0)
+        else []
+    )
+    if head_dirs and head_dirs != [f"batch_id={upto}"]:
+        compactor(docs_stream.sparkSession, upto)
+    return fired
 
 
 def run_minhash_index_ingest(
@@ -236,34 +167,30 @@ def run_minhash_index_ingest(
     index_dir: str,
     checkpoint_dir: str,
     compact_past_batches: int | None = None,
-):
+) -> None:
     """Streaming MinHash band-index ingest: micro-batches of
     (doc_id, text) land as ``batch_id=<n>/band=<k>`` posting partitions
     via ``operators/minhash_index.append_minhash_batch`` — signatures are
     the exact ``dedup.bands_of`` expressions, so stream-ingested postings
     are bit-identical to a batch build over the same documents (locked
-    in tests/test_winnow_index.py's streaming twins). Same idempotence /
-    fresh-checkpoint-sweep contract as run_index_ingest. DuckDB cannot
+    in tests/test_winnow_index.py's streaming twins). DuckDB cannot
     oracle a stream; the equality pytest is the twin check."""
     from doc2dataset_spark.operators.minhash_index import (
         _bands_path,
         append_minhash_batch,
     )
 
-    from doc2dataset_spark.operators.index_maintenance import (
-        compact_index_history,
-    )
-
-    return _run_batchwise_ingest(
+    bands = _bands_path(index_dir)
+    _run_batchwise_ingest(
         docs_stream,
         checkpoint_dir,
-        lambda spark, df, bid: append_minhash_batch(
-            spark, df, index_dir, batch_id=bid
+        lambda df, bid: append_minhash_batch(
+            df.sparkSession, df, index_dir, batch_id=bid
         ),
-        [_bands_path(index_dir)],
+        [bands],
         compact_past_batches=compact_past_batches,
         compactor=lambda spark, upto: compact_index_history(
-            spark, _bands_path(index_dir), upto, partition_cols=("band",)
+            spark, bands, upto, partition_cols=("band",)
         ),
     )
 
@@ -273,35 +200,28 @@ def run_winnow_index_ingest(
     index_dir: str,
     checkpoint_dir: str,
     compact_past_batches: int | None = None,
-):
+) -> None:
     """Streaming winnowed-fingerprint index ingest: micro-batches of
     (doc_id, text) land as ``batch_id=<n>`` posting partitions via
     ``operators/winnow_index.append_winnow_batch`` — fingerprints are the
     exact winnow_fingerprints expressions, so stream-ingested postings
-    are bit-identical to a batch build over the same documents. Same
-    idempotence / fresh-checkpoint-sweep contract as run_index_ingest.
-    Note df pruning stays a SERVE-time aggregate over the postings, so
+    are bit-identical to a batch build over the same documents. Note df
+    pruning stays a SERVE-time aggregate over the postings, so
     hub-fingerprint status is always computed against exactly the
     batches ingested so far — nothing to refresh per batch."""
-    from doc2dataset_spark.operators.winnow_index import (
-        _postings_path as _winnow_postings,
-    )
     from doc2dataset_spark.operators.winnow_index import append_winnow_batch
 
-    from doc2dataset_spark.operators.index_maintenance import (
-        compact_index_history,
-    )
-
-    return _run_batchwise_ingest(
+    postings = postings_path(index_dir)
+    _run_batchwise_ingest(
         docs_stream,
         checkpoint_dir,
-        lambda spark, df, bid: append_winnow_batch(
-            spark, df, index_dir, batch_id=bid
+        lambda df, bid: append_winnow_batch(
+            df.sparkSession, df, index_dir, batch_id=bid
         ),
-        [_winnow_postings(index_dir)],
+        [postings],
         compact_past_batches=compact_past_batches,
         compactor=lambda spark, upto: compact_index_history(
-            spark, _winnow_postings(index_dir), upto
+            spark, postings, upto
         ),
     )
 
@@ -312,7 +232,7 @@ def run_cluster_ingest(
     state_dir: str,
     checkpoint_dir: str,
     compact_past_batches: int | None = None,
-):
+) -> None:
     """Streaming near-dup CLUSTER maintenance: per micro-batch of
     (doc_id, text), land the batch's band postings
     (append_minhash_batch), pull exactly the candidate pairs touching it
@@ -323,14 +243,14 @@ def run_cluster_ingest(
     current the moment a batch lands.
 
     The index and the state share the stream's batch clock (both land
-    under the same batch_id), so a same-checkpoint replay rewrites one
-    batch's partitions in BOTH artifacts; a fresh checkpoint sweeps
-    stale higher-numbered partitions from both. DuckDB cannot oracle a
-    stream; tests/test_cluster_state.py locks stream-built labels ==
-    one full CC over the complete candidate set."""
+    under the same batch_id), so the replay rules cover BOTH artifacts.
+    DuckDB cannot oracle a stream; tests/test_cluster_state.py locks
+    stream-built labels == one full CC over the complete candidate
+    set."""
     from doc2dataset_spark.operators.cluster_state import (
         _labels_path,
         apply_batch,
+        compact_labels,
     )
     from doc2dataset_spark.operators.minhash_index import (
         _bands_path,
@@ -338,7 +258,10 @@ def run_cluster_ingest(
         new_batch_candidates,
     )
 
-    def step(spark, df, bid):
+    bands = _bands_path(index_dir)
+
+    def step(df: DataFrame, bid: int) -> None:
+        spark = df.sparkSession
         append_minhash_batch(spark, df, index_dir, batch_id=bid)
         pairs = new_batch_candidates(spark, index_dir, bid).select(
             "da", "db"
@@ -347,25 +270,18 @@ def run_cluster_ingest(
             spark, state_dir, pairs, df.select("doc_id"), batch_id=bid
         )
 
-    from doc2dataset_spark.operators.cluster_state import compact_labels
-    from doc2dataset_spark.operators.index_maintenance import (
-        compact_index_history,
-    )
-
     def _compact(spark, upto):
         # shared batch clock -> shared compaction horizon: the band
         # index relabels losslessly, the label log collapses to its
         # latest-wins state (each family's own verb)
-        compact_index_history(
-            spark, _bands_path(index_dir), upto, partition_cols=("band",)
-        )
+        compact_index_history(spark, bands, upto, partition_cols=("band",))
         compact_labels(spark, state_dir, upto_batch=upto)
 
-    return _run_batchwise_ingest(
+    _run_batchwise_ingest(
         docs_stream,
         checkpoint_dir,
         step,
-        [_bands_path(index_dir), _labels_path(state_dir)],
+        [bands, _labels_path(state_dir)],
         compact_past_batches=compact_past_batches,
         compactor=_compact,
     )

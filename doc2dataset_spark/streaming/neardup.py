@@ -4,7 +4,7 @@ The batch dedup stack (`queries/dedup.py`) answers "which documents in
 this corpus are near-dups of each other". A training-data INGEST pipeline
 needs the incremental form: as new documents arrive, flag the ones that
 near-duplicate anything already accepted — without re-scanning the
-corpus. This module implements that as a ``foreachBatch`` loop over an
+corpus. This module implements that as a micro-batch loop over an
 accumulating **band directory** (the classic LSH index, persisted as
 parquet):
 
@@ -17,9 +17,8 @@ per micro-batch:
      canonical-survivor rule as ``dedup_exact``);
   4. append the batch's bands to the directory and the per-doc verdicts
      to the output, each under a ``batch=<id>`` subdirectory written with
-     overwrite — re-running a batch id after a crash replaces its own
-     output instead of duplicating it (idempotent replay, same discipline
-     as `streaming/events.run_foreach_batch_upsert`).
+     overwrite, by the replay rules stated in streaming/util.py's module
+     docstring.
 
 Scale: the directory join is a (band, bh) hash equi-join — collision-set
 bounded, never all-pairs; the directory grows linearly with accepted docs
@@ -42,6 +41,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from doc2dataset_spark import fsio
 from doc2dataset_spark.queries.dedup import bands_of
+from doc2dataset_spark.streaming.util import run_batchwise
 
 
 def flag_against_directory(
@@ -112,19 +112,20 @@ def run_incremental_neardup(
     state_dir: str,
     out_dir: str,
     checkpoint_dir: str,
-):
-    """Wire the stream: verdicts → ``out_dir``, band directory →
-    ``state_dir``, both idempotent per batch id. Returns the
-    StreamingQuery (caller awaits/stops)."""
+) -> None:
+    """Drive the stream: verdicts → ``out_dir``, band directory →
+    ``state_dir``, each under ``batch=<id>``. Blocks until drained."""
     spark = docs_stream.sparkSession
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         directory = None
         if band_directory_exists(state_dir):
-            directory = spark.read.parquet(state_dir)
-            # replay safety: a re-delivered batch must not match its own
-            # earlier (crashed) write
-            directory = directory.filter(F.col("batch") != batch_id)
+            # strictly earlier batches only (rule 3): a replayed batch
+            # that read its own or a dead incarnation's bands would flag
+            # every doc as a near-dup of itself
+            directory = spark.read.parquet(state_dir).filter(
+                F.col("batch") < F.lit(int(batch_id))
+            )
         verdicts, bands = flag_against_directory(batch_df, directory)
         # the band lineage (tokenize + shingle + 16-perm minhash) feeds
         # BOTH writes and the two collision joins — persist it once
@@ -140,9 +141,7 @@ def run_incremental_neardup(
         finally:
             bands.unpersist()
 
-    return (
-        docs_stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    run_batchwise(
+        docs_stream, checkpoint_dir, process, [out_dir, state_dir],
+        prefix="batch=",
     )

@@ -9,11 +9,8 @@ recompute are provably the same arithmetic — mergeability of exact
 decimal partials is the whole trick, the same law the count-min module
 (streaming/sketch.py) proves for counters.
 
-Batch landing follows the established replay discipline:
-``batch_id=<n>`` dynamic-overwrite partitions (same-checkpoint restarts
-rewrite their batch exactly) plus the fresh-checkpoint stale-batch
-sweep (streaming/util.sweep_stale_batches) for the lost-checkpoint
-disaster case.
+Batches land under ``batch_id=<n>`` by the replay rules stated in
+streaming/util.py's module docstring.
 
 At 100 TB this is the shape of a continuously-maintained metric store:
 each partial is ≤ |days touched by the batch| rows regardless of batch
@@ -25,12 +22,12 @@ raw-fact rescan anywhere.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from doc2dataset_spark.queries.maintenance_ops import (
     mv_merge_partials,
     mv_partial,
 )
+from doc2dataset_spark.streaming.util import land_batch, run_batchwise
 
 
 def run_rollup_partials(
@@ -40,37 +37,13 @@ def run_rollup_partials(
     checkpoint_dir: str,
 ) -> None:
     """Drive the stream, landing one daily-partials frame per
-    micro-batch under ``batch_id=<n>`` (idempotent dynamic overwrite;
-    fresh-checkpoint replays sweep stale higher-id partitions)."""
-    from doc2dataset_spark import fsio
-
-    ckpt_fs, ckpt_path = fsio.url_to_fs(checkpoint_dir)
-    fresh_checkpoint = not ckpt_fs.exists(ckpt_path)
-    fired: list[int] = []
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        fired.append(batch_id)
-        (
-            mv_partial(batch_df)
-            .withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(out_dir)
-        )
-
-    q = (
-        lineitem_stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+    micro-batch under ``batch_id=<n>``. Blocks until drained."""
+    run_batchwise(
+        lineitem_stream,
+        checkpoint_dir,
+        lambda df, bid: land_batch(mv_partial(df), out_dir, bid),
+        [out_dir],
     )
-    q.processAllAvailable()
-    q.stop()
-
-    if fresh_checkpoint and fired:
-        from doc2dataset_spark.streaming.util import sweep_stale_batches
-
-        sweep_stale_batches(out_dir, max(fired))
 
 
 def rollup_serve(spark: SparkSession, out_dir: str) -> DataFrame:

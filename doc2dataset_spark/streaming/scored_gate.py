@@ -20,7 +20,8 @@ Per micro-batch of (doc_id, source, text):
    scores exactly);
 3. verdict keep = score8 >= the frozen threshold;
 4. idempotent landing: the batch's verdicts land under ``batch=<id>``
-   with overwrite (the streaming/curate.py replay discipline).
+   with overwrite, by the replay rules stated in streaming/util.py's
+   module docstring.
 
 Scale: stateless per batch beyond the <= LR_BUCKETS-row broadcast
 weights — no state store, no watermark, nothing grows with history. The
@@ -38,6 +39,7 @@ from doc2dataset_spark.queries.quality_classifier import (
     _fx_score,
     fx_features_of,
 )
+from doc2dataset_spark.streaming.util import run_batchwise
 
 
 def load_fx_model(spark, model_dir: str):
@@ -90,20 +92,16 @@ def run_scored_gate_stream(
     model_dir: str,
     out_dir: str,
     checkpoint_dir: str,
-):
-    """Wire the stream: per-batch verdicts → out_dir/batch=<id>,
-    overwrite per batch id (replay-idempotent). Returns the
-    StreamingQuery."""
-    spark = docs_stream.sparkSession
-    w, b, thr = load_fx_model(spark, model_dir)
+) -> None:
+    """Drive the stream: per-batch verdicts → out_dir/batch=<id>,
+    overwrite per batch id. Blocks until drained."""
+    w, b, thr = load_fx_model(docs_stream.sparkSession, model_dir)
 
     def one_batch(batch_df: DataFrame, batch_id: int) -> None:
         score_batch(batch_df, w, b, thr).write.mode("overwrite").parquet(
             posixpath.join(out_dir, f"batch={batch_id}")
         )
 
-    return (
-        docs_stream.writeStream.foreachBatch(one_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+    run_batchwise(
+        docs_stream, checkpoint_dir, one_batch, [out_dir], prefix="batch="
     )

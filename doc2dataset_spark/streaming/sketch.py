@@ -5,12 +5,11 @@ module proves it on a live stream rather than asserting it.
 
 Each micro-batch computes its own d×w counter matrix (the same seeded
 hash the batch query ``agg_count_min`` uses, imported so batch and
-stream can never drift) and lands it idempotently under its batch_id —
-the overwrite-by-batch replay discipline of
-``events.run_foreach_batch_upsert``. The merged sketch is then a plain
-``groupBy(j, bucket).sum`` over the partials: commutative, associative,
-restart-safe. tests/test_streaming.py locks merged-stream == batch-built
-equality counter by counter.
+stream can never drift) and lands it under its batch_id by the replay
+rules stated in streaming/util.py's module docstring. The merged sketch
+is then a plain ``groupBy(j, bucket).sum`` over the partials:
+commutative, associative, restart-safe. tests/test_streaming.py locks
+merged-stream == batch-built equality counter by counter.
 
 At scale this is the shape of a streaming frequency service: partials
 are d×w rows per batch regardless of batch size, the merge is a
@@ -27,6 +26,7 @@ from doc2dataset_spark.queries.sql_surface import (
     CMS_DEPTH,
     cms_bucket_spark,
 )
+from doc2dataset_spark.streaming.util import land_batch, run_batchwise
 
 
 def cms_partial(batch: DataFrame, key: str = "user_id") -> DataFrame:
@@ -54,55 +54,15 @@ def run_cms_partials(
     key: str = "user_id",
 ) -> None:
     """Drive the stream, landing one partial sketch per micro-batch
-    under batch_id=<n>.
-
-    Idempotence has two distinct cases:
-
-    - **Same checkpoint** (the real streaming guarantee): a restarted
-      query re-fires only uncommitted batches with their original ids;
-      dynamic partition overwrite makes the rewrite exact. Nothing else
-      is touched — previously committed partials stay valid.
-    - **Fresh checkpoint into an existing out_dir** (disaster recovery —
-      the checkpoint was lost): batch numbering restarts at 0, and the
-      rerun may group the input into FEWER batches than the original run
-      (e.g. old batches 0 and 1, replay ingests everything as batch 0).
-      Dynamic overwrite rewrites only the ids the replay fired, so stale
-      higher-id partitions from the old incarnation would survive and
-      cms_merge would double-count them. Guard: when this call starts
-      with no pre-existing checkpoint, every ``batch_id > max(fired)``
-      partition is deleted after the stream completes — a from-scratch
-      replay renumbers contiguously from 0, so anything beyond the new
-      max is provably stale output of a previous incarnation.
-    """
-    from doc2dataset_spark import fsio
-
-    ckpt_fs, ckpt_path = fsio.url_to_fs(checkpoint_dir)
-    fresh_checkpoint = not ckpt_fs.exists(ckpt_path)
-    fired: list[int] = []
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        fired.append(batch_id)
-        (
-            cms_partial(batch_df, key)
-            .withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(out_dir)
-        )
-
-    q = (
-        events.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+    under batch_id=<n>. Blocks until drained; a fresh-checkpoint replay
+    that groups the input into fewer batches sweeps the stale higher
+    ids, which cms_merge would otherwise double-count."""
+    run_batchwise(
+        events,
+        checkpoint_dir,
+        lambda df, bid: land_batch(cms_partial(df, key), out_dir, bid),
+        [out_dir],
     )
-    q.processAllAvailable()
-    q.stop()
-
-    if fresh_checkpoint and fired:
-        from doc2dataset_spark.streaming.util import sweep_stale_batches
-
-        sweep_stale_batches(out_dir, max(fired))
 
 
 def cms_merge(spark: SparkSession, out_dir: str) -> DataFrame:
@@ -128,41 +88,18 @@ def run_bottomk_partials(
     checkpoint_dir: str,
     key: str = "event_id",
 ) -> None:
-    """Land each micro-batch's bottom-k rows under batch_id=<n> (the
-    CMS replay discipline: dynamic overwrite per batch, fresh-checkpoint
-    stale sweep). Each partial is ≤ k rows regardless of batch size —
-    the property that makes the merged stream sample exact
-    (tests/test_streaming.py pins merged == batch-built)."""
-    from doc2dataset_spark import fsio
+    """Land each micro-batch's bottom-k rows under batch_id=<n>. Each
+    partial is ≤ k rows regardless of batch size — the property that
+    makes the merged stream sample exact (tests/test_streaming.py pins
+    merged == batch-built). Blocks until drained."""
     from doc2dataset_spark.queries.sketch_sample import bottomk_sample
 
-    ckpt_fs, ckpt_path = fsio.url_to_fs(checkpoint_dir)
-    fresh_checkpoint = not ckpt_fs.exists(ckpt_path)
-    fired: list[int] = []
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        fired.append(batch_id)
-        (
-            bottomk_sample(batch_df, key)
-            .withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(out_dir)
-        )
-
-    q = (
-        events.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+    run_batchwise(
+        events,
+        checkpoint_dir,
+        lambda df, bid: land_batch(bottomk_sample(df, key), out_dir, bid),
+        [out_dir],
     )
-    q.processAllAvailable()
-    q.stop()
-
-    if fresh_checkpoint and fired:
-        from doc2dataset_spark.streaming.util import sweep_stale_batches
-
-        sweep_stale_batches(out_dir, max(fired))
 
 
 def bottomk_merge(

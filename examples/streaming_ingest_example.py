@@ -16,8 +16,8 @@ sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
 
 from pyspark.sql import functions as F
 
+from doc2dataset_spark.operators.index_maintenance import postings_path
 from doc2dataset_spark.operators.vector_index import (
-    _postings_path,
     build_ivf_index,
     probe_ivf_index,
 )
@@ -43,12 +43,10 @@ if __name__ == "__main__":
         .parquet(src)
     )
     out = os.path.join(root, "verdicts")
-    q = run_curate_stream(
+    run_curate_stream(
         doc_stream, os.path.join(root, "digests"), out,
         os.path.join(root, "ck_curate"),
     )
-    q.processAllAvailable()
-    q.stop()
     verdicts = spark.read.parquet(out)
     accepted = verdicts.filter("accepted")
     print(
@@ -63,7 +61,7 @@ if __name__ == "__main__":
     build_ivf_index(spark, sf_dir, index_dir)
     import shutil
 
-    shutil.rmtree(_postings_path(index_dir))  # ingest provides postings
+    shutil.rmtree(postings_path(index_dir))  # ingest provides postings
     vec_src = os.path.join(root, "vec_arrivals")
     raw = (
         spark.read.parquet(f"{sf_dir}/embeddings.parquet")
@@ -79,7 +77,7 @@ if __name__ == "__main__":
     run_index_ingest(
         vec_stream, index_dir, os.path.join(root, "ck_index")
     )
-    n_postings = spark.read.parquet(_postings_path(index_dir)).count()
+    n_postings = spark.read.parquet(postings_path(index_dir)).count()
     print(f"index holds {n_postings} accepted vectors")
 
     # 3) probe the fresh index

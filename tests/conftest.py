@@ -44,14 +44,11 @@ SLOW_TIER = {
     "test_vector_index.py",
     "test_task_retry.py",
     "test_webdataset_ds.py",
-    "test_streaming_neardup.py",
     "test_stateful_streaming.py",
     "test_streaming_cdc.py",
-    "test_streaming_curate.py",
     "test_streaming_drift.py",
     "test_streaming_packing.py",
     "test_streaming_rollup.py",
-    "test_streaming_scored_gate.py",
     "test_http_e2e.py",
     "test_tws.py",
 }

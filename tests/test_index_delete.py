@@ -110,14 +110,14 @@ def test_delete_text_rescores_identically(spark, sf_dir, tmp_path):
 
 def test_delete_ivf_postings_and_probe(spark, sf_dir, tmp_path):
     from doc2dataset_spark.operators.vector_index import (
-        _postings_path,
+        postings_path,
         build_ivf_index,
         probe_ivf_index,
     )
 
     idx = str(tmp_path / "ivf")
     build_ivf_index(spark, sf_dir, idx)
-    before = spark.read.parquet(_postings_path(idx)).select(
+    before = spark.read.parquet(postings_path(idx)).select(
         "vec_id", "cent_id"
     )
     before_rows = set(_rows(before))
@@ -127,7 +127,7 @@ def test_delete_ivf_postings_and_probe(spark, sf_dir, tmp_path):
 
     after = set(
         _rows(
-            spark.read.parquet(_postings_path(idx)).select(
+            spark.read.parquet(postings_path(idx)).select(
                 "vec_id", "cent_id"
             )
         )
@@ -178,14 +178,14 @@ def test_delete_removes_emptied_partitions(spark, sf_dir, tmp_path):
 
 def test_delete_unknown_keys_is_a_noop(spark, sf_dir, tmp_path):
     from doc2dataset_spark.operators.winnow_index import (
-        _postings_path,
+        postings_path,
         build_winnow_index,
     )
 
     idx = str(tmp_path / "wn_noop")
     build_winnow_index(spark, sf_dir, idx)
     stats = delete_from_postings(
-        spark, _postings_path(idx), [10_000_000, 10_000_001]
+        spark, postings_path(idx), [10_000_000, 10_000_001]
     )
     assert stats == {
         "rows_deleted": 0,
@@ -317,7 +317,7 @@ def test_delete_accepts_dataframe_keys(spark, sf_dir, tmp_path):
         read_postings,
     )
     from doc2dataset_spark.operators.winnow_index import (
-        _postings_path as _wp,
+        postings_path as _wp,
     )
 
     a, b = str(tmp_path / "wn_list"), str(tmp_path / "wn_df")

@@ -19,7 +19,7 @@ from doc2dataset_spark.operators.minhash_index import (
     new_batch_candidates,
 )
 from doc2dataset_spark.operators.winnow_index import (
-    _postings_path as _winnow_postings,
+    postings_path as _winnow_postings,
     append_winnow_batch,
     new_batch_pairs,
     pairs_from_postings,

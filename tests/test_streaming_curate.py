@@ -64,11 +64,9 @@ def _run(spark, src, schema, tmp_path, tag):
     )
     out = (tmp_path / f"out_{tag}").as_posix()
     state = (tmp_path / f"state_{tag}").as_posix()
-    q = run_curate_stream(
+    run_curate_stream(
         stream, state, out, (tmp_path / f"ck_{tag}").as_posix()
     )
-    q.processAllAvailable()
-    q.stop()
     return out, state
 
 
@@ -128,11 +126,9 @@ def test_streaming_curate_replay_idempotent(spark, curate_setup, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    q = run_curate_stream(
+    run_curate_stream(
         stream, state, out, (tmp_path / "ck_rp").as_posix()
     )
-    q.processAllAvailable()
-    q.stop()
     after = sorted(map(tuple, spark.read.parquet(out).collect()))
     assert after == before
 
@@ -159,11 +155,9 @@ def test_streaming_curate_crash_replay_not_self_dup(
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    q = run_curate_stream(
+    run_curate_stream(
         stream, state, out, (tmp_path / "ck_crash2").as_posix()
     )
-    q.processAllAvailable()
-    q.stop()
     after_out = sorted(map(tuple, spark.read.parquet(out).collect()))
     after_state = sorted(map(tuple, spark.read.parquet(state).collect()))
     assert after_out == before_out

@@ -75,13 +75,12 @@ def test_stream_flags_equal_batch_candidates(spark, doc_batches, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    q = run_incremental_neardup(
+    run_incremental_neardup(
         stream,
         state_dir=str(tmp_path / "state"),
         out_dir=str(tmp_path / "out"),
         checkpoint_dir=str(tmp_path / "ckpt"),
     )
-    q.awaitTermination(120)
     got = spark.read.parquet(str(tmp_path / "out"))
     assert got.count() == docs.count()  # every doc got a verdict exactly once
     flagged = {r.doc_id for r in got.filter("is_neardup").collect()}
@@ -152,13 +151,12 @@ def test_stream_with_url_form_dirs(spark, doc_batches, tmp_path):
         .parquet(src)
     )
     state = f"file://{tmp_path}/state"
-    q = run_incremental_neardup(
+    run_incremental_neardup(
         stream,
         state_dir=state,
         out_dir=f"file://{tmp_path}/out",
         checkpoint_dir=str(tmp_path / "ckpt"),
     )
-    q.awaitTermination(120)
     assert band_directory_exists(state)
     got = spark.read.parquet(f"file://{tmp_path}/out")
     flagged = {r.doc_id for r in got.filter("is_neardup").collect()}

@@ -52,11 +52,9 @@ def test_stream_scores_equal_batch_scores(spark, sf_dir, gate_setup, tmp_path):
         .parquet(src)
     )
     out = (tmp_path / "out").as_posix()
-    q = run_scored_gate_stream(
+    run_scored_gate_stream(
         stream, model_dir, out, (tmp_path / "ck").as_posix()
     )
-    q.processAllAvailable()
-    q.stop()
 
     streamed = {
         r.doc_id: (r.p8, r.score, r.keep)

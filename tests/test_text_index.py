@@ -9,7 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from doc2dataset_spark.operators.text_index import (
-    _postings_path,
+    postings_path,
     append_to_text_index,
     build_text_index,
     probe_text_index,
@@ -81,9 +81,9 @@ def test_incremental_append_converges_to_full_build(
 
     # crash-retry replay: re-appending the same batch id rewrites its own
     # partitions, postings count unchanged
-    before = spark.read.parquet(_postings_path(inc_dir)).count()
+    before = spark.read.parquet(postings_path(inc_dir)).count()
     append_to_text_index(spark, rest, inc_dir, batch_id=1)
-    after = spark.read.parquet(_postings_path(inc_dir)).count()
+    after = spark.read.parquet(postings_path(inc_dir)).count()
     assert after == before
     assert (
         _rows(
@@ -148,7 +148,7 @@ def test_streaming_text_ingest_matches_batch_build(
     run_text_index_ingest(
         replay, stream_dir, (tmp_path / "ck_tix2").as_posix()
     )
-    post = spark.read.parquet(_postings_path(stream_dir))
+    post = spark.read.parquet(postings_path(stream_dir))
     assert post.agg(F.max("batch_id")).collect()[0][0] == 1
     assert (
         _rows(
@@ -190,7 +190,7 @@ def test_streaming_text_ingest_auto_compacts_both_artifacts(
             d for d in os.listdir(p) if d.startswith("batch_id=")
         )
 
-    assert _dirs(_postings_path(stream_dir)) == ["batch_id=2", "batch_id=3"]
+    assert _dirs(postings_path(stream_dir)) == ["batch_id=2", "batch_id=3"]
     assert _dirs(_doclen_path(stream_dir)) == ["batch_id=2", "batch_id=3"]
     want = _rows(
         probe_text_index(

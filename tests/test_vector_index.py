@@ -83,15 +83,15 @@ def test_incremental_append_equals_full_build(spark, sf_dir, tmp_path):
     first = n.filter(F.col("vec_id") <= mid)
     second = n.filter(F.col("vec_id") > mid)
     from doc2dataset_spark.operators.vector_index import (
-        _postings_path,
+        postings_path,
         probe_ivf_index,
     )
 
-    spark.read.parquet(_postings_path(inc_dir)).limit(0)  # ensure exists
+    spark.read.parquet(postings_path(inc_dir)).limit(0)  # ensure exists
     # wipe postings, re-add in two stages against the SAME saved centroids
     import shutil
 
-    shutil.rmtree(_postings_path(inc_dir))
+    shutil.rmtree(postings_path(inc_dir))
     append_to_ivf_index(spark, first, inc_dir, batch_id=1)
     append_to_ivf_index(spark, second, inc_dir, batch_id=2)
 
@@ -116,7 +116,7 @@ def test_append_replay_is_idempotent(spark, sf_dir, tmp_path):
     """Re-running an ingest batch id must rewrite its own partitions,
     not duplicate postings (dynamic overwrite on batch_id/cent_id)."""
     from doc2dataset_spark.operators.vector_index import (
-        _postings_path,
+        postings_path,
         append_to_ivf_index,
     )
 
@@ -124,11 +124,11 @@ def test_append_replay_is_idempotent(spark, sf_dir, tmp_path):
     build_ivf_index(spark, sf_dir, d)
     n = normalized_embeddings(spark, sf_dir)
     batch = n.filter(F.col("vec_id") < 50)
-    before = spark.read.parquet(_postings_path(d)).count()
+    before = spark.read.parquet(postings_path(d)).count()
     append_to_ivf_index(spark, batch, d, batch_id=7)
-    once = spark.read.parquet(_postings_path(d)).count()
+    once = spark.read.parquet(postings_path(d)).count()
     append_to_ivf_index(spark, batch, d, batch_id=7)  # crash-retry replay
-    twice = spark.read.parquet(_postings_path(d)).count()
+    twice = spark.read.parquet(postings_path(d)).count()
     assert once == before + 50
     assert twice == once
 
@@ -139,7 +139,7 @@ def test_streaming_ingest_matches_batch_build(spark, sf_dir, tmp_path):
     import os
     import time as _time
 
-    from doc2dataset_spark.operators.vector_index import _postings_path
+    from doc2dataset_spark.operators.vector_index import postings_path
     from doc2dataset_spark.streaming.index_ingest import run_index_ingest
 
     n = normalized_embeddings(spark, sf_dir)
@@ -152,7 +152,7 @@ def test_streaming_ingest_matches_batch_build(spark, sf_dir, tmp_path):
     build_ivf_index(spark, sf_dir, stream_dir)
     import shutil
 
-    shutil.rmtree(_postings_path(stream_dir))
+    shutil.rmtree(postings_path(stream_dir))
 
     # source files: the raw embeddings split in two, arriving in order
     raw = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
@@ -201,7 +201,7 @@ def test_streaming_ingest_matches_batch_build(spark, sf_dir, tmp_path):
     run_index_ingest(
         replay_stream, stream_dir, (tmp_path / "ck_fresh").as_posix()
     )
-    post = spark.read.parquet(_postings_path(stream_dir))
+    post = spark.read.parquet(postings_path(stream_dir))
     assert post.agg(F.max("batch_id")).collect()[0][0] == 1
     assert post.count() == post.select("vec_id").distinct().count()
     got2 = {

@@ -258,7 +258,7 @@ def test_streaming_ingest_auto_compacts_past_replay_window(
         run_winnow_index_ingest,
     )
     from doc2dataset_spark.operators.winnow_index import (
-        _postings_path as _wp,
+        postings_path as _wp,
     )
 
     sidx = str(tmp_path / "wn_stream_c")
@@ -289,7 +289,7 @@ def test_fresh_checkpoint_replay_refused_on_compacted_index(
     import pytest
 
     from doc2dataset_spark.operators.winnow_index import (
-        _postings_path as _wp,
+        postings_path as _wp,
     )
     from doc2dataset_spark.streaming.index_ingest import (
         run_winnow_index_ingest,
