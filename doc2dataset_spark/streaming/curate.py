@@ -34,16 +34,8 @@ import posixpath
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
-from doc2dataset_spark import fsio
 from doc2dataset_spark.queries.curation_extras import gopher_flags
-from doc2dataset_spark.streaming.util import run_batchwise
-
-
-def digest_directory_exists(state_dir: str) -> bool:
-    fs, _ = fsio.url_to_fs(state_dir)
-    if not fs.exists(state_dir):
-        return False
-    return any("batch=" in e for e in fs.find(state_dir))
+from doc2dataset_spark.streaming.util import batch_partitions, run_batchwise
 
 
 def curate_batch(
@@ -119,7 +111,7 @@ def run_curate_stream(
             spark.read.parquet(state_dir).filter(
                 F.col("batch") < F.lit(int(batch_id))
             )
-            if digest_directory_exists(state_dir)
+            if batch_partitions(state_dir, "batch=")
             else None
         )
         verdicts, new_digests = curate_batch(batch_df, directory)

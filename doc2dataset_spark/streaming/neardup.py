@@ -39,9 +39,8 @@ import posixpath
 
 from pyspark.sql import DataFrame, functions as F
 
-from doc2dataset_spark import fsio
 from doc2dataset_spark.queries.dedup import bands_of
-from doc2dataset_spark.streaming.util import run_batchwise
+from doc2dataset_spark.streaming.util import batch_partitions, run_batchwise
 
 
 def flag_against_directory(
@@ -94,19 +93,6 @@ def flag_against_directory(
     return verdicts, bands
 
 
-def band_directory_exists(state_dir: str) -> bool:
-    """True when the persisted band directory has at least one batch.
-
-    Routes through fsio, NOT os.path: a URL-form state_dir (file:///...)
-    is a path Spark's writers accept, and an os.path check on it would be
-    silently False forever — disabling all cross-batch detection without
-    an error."""
-    fs, _ = fsio.url_to_fs(state_dir)
-    if not fs.exists(state_dir):
-        return False
-    return any("batch=" in e for e in fs.find(state_dir))
-
-
 def run_incremental_neardup(
     docs_stream: DataFrame,
     state_dir: str,
@@ -119,7 +105,7 @@ def run_incremental_neardup(
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         directory = None
-        if band_directory_exists(state_dir):
+        if batch_partitions(state_dir, "batch="):
             # strictly earlier batches only (rule 3): a replayed batch
             # that read its own or a dead incarnation's bands would flag
             # every doc as a near-dup of itself

@@ -74,6 +74,28 @@ def land_batch_exact(frame: DataFrame, root: str, batch_id: int) -> int:
     return 0
 
 
+def batch_partitions(
+    root: str, prefix: str = "batch_id="
+) -> list[tuple[str, int]]:
+    """(entry, id) of every ``<prefix><id>`` partition directly under
+    root; [] when root is absent. One top-level listing, never a
+    recursive walk of the part files. Routes through fsio, NOT os.path:
+    a URL-form root (file:///...) is a path Spark's writers accept, and
+    an os.path check on it would be silently empty forever."""
+    fs, path = fsio.url_to_fs(root)
+    if not fs.exists(path):
+        return []
+    found = []
+    for entry in fs.ls(path, detail=False):
+        name = str(entry).rstrip("/").rsplit("/", 1)[-1]
+        if name.startswith(prefix):
+            try:
+                found.append((entry, int(name[len(prefix):])))
+            except ValueError:
+                continue
+    return found
+
+
 def sweep_stale_batches(
     out_dir: str, max_id: int, prefix: str = "batch_id="
 ) -> int:
@@ -83,17 +105,9 @@ def sweep_stale_batches(
     fs, path = fsio.url_to_fs(out_dir)
     if not fs.exists(path):
         return 0
-    removed = 0
-    for entry in fs.ls(path, detail=False):
-        name = str(entry).rstrip("/").rsplit("/", 1)[-1]
-        if name.startswith(prefix):
-            try:
-                bid = int(name[len(prefix):])
-            except ValueError:
-                continue
-            if bid > max_id:
-                fs.rm(entry, recursive=True)
-                removed += 1
+    stale = [e for e, bid in batch_partitions(out_dir, prefix) if bid > max_id]
+    for entry in stale:
+        fs.rm(entry, recursive=True)
     if prefix == "batch_id=":
         # the swept batches' landing times must go with them, or a
         # renumbered replay would inherit the dead incarnation's clock.
@@ -106,7 +120,7 @@ def sweep_stale_batches(
         )
 
         drop_batch_times_above(out_dir, max_id)
-    return removed
+    return len(stale)
 
 
 def _refuse_compacted(root: str) -> None:

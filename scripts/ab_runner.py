@@ -65,6 +65,16 @@ def main() -> None:
     args = ap.parse_args()
 
     tree = os.path.abspath(args.tree)
+    args.sf = os.path.abspath(args.sf)
+    if args.plans:
+        args.plans = os.path.abspath(args.plans)
+    # pandas-UDF workers import module-level functions by reference from
+    # their own sys.path (their cwd first, then PYTHONPATH): run inside
+    # the tree, or a leg started from another checkout runs its kernels
+    os.chdir(tree)
+    os.environ["PYTHONPATH"] = os.pathsep.join(
+        p for p in (tree, os.environ.get("PYTHONPATH")) if p
+    )
     sys.path.insert(0, tree)
     from doc2dataset_spark.queries import REGISTRY  # noqa: E402
     from doc2dataset_spark.session import get_spark, load_table  # noqa: E402

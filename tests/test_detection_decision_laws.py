@@ -1,6 +1,8 @@
-"""Invariants for the round-11 detection→decision operators (their
+"""Laws of the detection→decision operators: keep-best cluster
+selection, CCNet perplexity buckets and MRL truncated-embedding recall
+(the last reaches functions/vecmath.topk_edges_blocked_dual). Their
 value-exactness is pinned by the DuckDB oracles; these tests pin the
-SEMANTIC laws an oracle diff would not explain)."""
+SEMANTIC laws an oracle diff would not explain."""
 
 from __future__ import annotations
 

@@ -141,7 +141,7 @@ def test_stream_with_url_form_dirs(spark, doc_batches, tmp_path):
     """file:///-form state/out dirs (what Spark writers accept) must not
     silently disable cross-batch detection — the directory check routes
     through fsio, not os.path."""
-    from doc2dataset_spark.streaming.neardup import band_directory_exists
+    from doc2dataset_spark.streaming.util import batch_partitions
 
     src, docs = doc_batches
     schema = docs.schema
@@ -157,7 +157,7 @@ def test_stream_with_url_form_dirs(spark, doc_batches, tmp_path):
         out_dir=f"file://{tmp_path}/out",
         checkpoint_dir=str(tmp_path / "ckpt"),
     )
-    assert band_directory_exists(state)
+    assert batch_partitions(state, "batch=")
     got = spark.read.parquet(f"file://{tmp_path}/out")
     flagged = {r.doc_id for r in got.filter("is_neardup").collect()}
     assert flagged == _expected_flags(docs)

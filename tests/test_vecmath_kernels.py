@@ -53,44 +53,92 @@ def test_pair_cos_matrix_matches_spark_dot_bits(spark, sf_dir):
         ), (r["ia"], r["ib"])
 
 
-def test_kernels_chunk_invariant(spark, sf_dir):
-    """Forcing many row chunks must not change a single byte of either
-    kernel's output (same pairs, same top-k winners, same cos bits).
-    chunk_elems is captured by value into the kernel closure, so the
-    override reaches the executor-side Python workers."""
+def _chunk_cases(spark, sf_dir):
+    """(name, build(chunk_elems) -> DataFrame, sort keys) for every public
+    kernel; the three per-group kernels once per cell_blocks in {1, 3}
+    (B=3 is their tiled path)."""
+    from doc2dataset_spark.queries.dedup import cell_assignments
+
     n = normalized_embeddings(spark, sf_dir)
-
-    big_pairs = _collect_sorted(
-        vecmath.cosine_pairs_blocked(n, EMB_COS_THRESHOLD, N_EMB_BLOCKS),
-        ["va", "vb"],
+    both = n.select(
+        "vec_id", F.col("ne").alias("nea"), F.col("ne").alias("neb")
     )
-    big_edges = _collect_sorted(
-        vecmath.topk_edges_blocked(n, 3, N_EMB_BLOCKS), ["qid", "cid", "cos"]
+    assign = cell_assignments(spark, sf_dir)
+    probe = assign.select(
+        F.col("vec_id").alias("qid"), F.col("ne").alias("qne"), "cent_id"
     )
-
-    # a block at sf0.001 has ~12 rows; chunk_elems=16 -> 1-row chunks
-    small_pairs = _collect_sorted(
-        vecmath.cosine_pairs_blocked(
-            n, EMB_COS_THRESHOLD, N_EMB_BLOCKS, chunk_elems=16
+    corpus = assign.select(
+        F.col("vec_id").alias("cid"), F.col("ne").alias("cne"), "cent_id"
+    )
+    cases = [
+        (
+            "cosine_pairs_blocked",
+            lambda ce: vecmath.cosine_pairs_blocked(
+                n, EMB_COS_THRESHOLD, N_EMB_BLOCKS, chunk_elems=ce
+            ),
+            ["va", "vb"],
         ),
-        ["va", "vb"],
-    )
-    small_edges = _collect_sorted(
-        vecmath.topk_edges_blocked(n, 3, N_EMB_BLOCKS, chunk_elems=16),
-        ["qid", "cid", "cos"],
-    )
+        (
+            "topk_edges_blocked",
+            lambda ce: vecmath.topk_edges_blocked(
+                n, 3, N_EMB_BLOCKS, chunk_elems=ce
+            ),
+            ["qid", "cid"],
+        ),
+        (
+            "topk_edges_blocked_dual",
+            lambda ce: vecmath.topk_edges_blocked_dual(
+                both, 3, N_EMB_BLOCKS, chunk_elems=ce
+            ),
+            ["metric", "qid", "cid"],
+        ),
+    ]
+    for b in (1, 3):
+        cases += [
+            (
+                f"cell_pairs_blocked[B={b}]",
+                lambda ce, b=b: vecmath.cell_pairs_blocked(
+                    assign, -1.0, chunk_elems=ce, cell_blocks=b
+                ),
+                ["va", "vb"],
+            ),
+            (
+                f"group_topk_blocked[B={b}]",
+                lambda ce, b=b: vecmath.group_topk_blocked(
+                    assign, ["cent_id"], 3, chunk_elems=ce, cell_blocks=b
+                ),
+                ["qid", "cid"],
+            ),
+            (
+                f"cogroup_topk_blocked[B={b}]",
+                lambda ce, b=b: vecmath.cogroup_topk_blocked(
+                    probe, corpus, ["cent_id"], 3, chunk_elems=ce,
+                    cell_blocks=b,
+                ),
+                ["qid", "cid"],
+            ),
+        ]
+    return cases
 
-    for big, small, keys in (
-        (big_pairs, small_pairs, ["va", "vb"]),
-        (big_edges, small_edges, ["qid", "cid"]),
-    ):
-        assert len(big) == len(small)
+
+def test_kernels_chunk_invariant(spark, sf_dir):
+    """Forcing many row chunks must not change a single byte of any
+    kernel's output (same pairs, same top-k winners, same cos bits),
+    for all six public kernels and, for the three per-group kernels,
+    both the one-task (B=1) and the tiled (B=3) shape. chunk_elems is
+    captured by value into the kernel closure, so the override reaches
+    the executor-side Python workers."""
+    # a block at sf0.001 has ~12 rows; chunk_elems=16 -> 1-row chunks
+    for name, build, keys in _chunk_cases(spark, sf_dir):
+        big = _collect_sorted(build(None), keys)
+        small = _collect_sorted(build(16), keys)
+        assert len(big) == len(small) > 0, name
         for k in keys:
-            assert (big[k].values == small[k].values).all(), k
+            assert (big[k].values == small[k].values).all(), (name, k)
         assert (
             big["cos"].values.view(np.int64)
             == small["cos"].values.view(np.int64)
-        ).all()
+        ).all(), name
 
 
 def test_cogroup_topk_key_type_mismatch(spark, sf_dir):
@@ -236,6 +284,97 @@ def test_cell_blocks_group_topk_preselect_lossless(spark, sf_dir):
     key_tiled = set(zip(tiled_raw["qid"], tiled_raw["cid"]))
     assert key_one <= key_tiled
     assert isinstance(tiled_raw, pd.DataFrame)
+
+
+def _global_topk(pdf, k):
+    """The consumers' global per-qid re-selection: (cos DESC, cid ASC)."""
+    sel = pdf.sort_values(
+        ["qid", "cos", "cid"], ascending=[True, False, True]
+    )
+    sel = sel.groupby("qid", sort=True).head(k)
+    return sel.sort_values(["qid", "cid"]).reset_index(drop=True)
+
+
+def test_cell_blocks_cogroup_topk_preselect_lossless(spark, sf_dir):
+    """cogroup_topk_blocked (the nprobe>1 IVF probe kernel) honours
+    cell_blocks like its siblings: at B=3 each key's pair space is a
+    3×3 tile grid, a query returns up to B·k rows per key, and the
+    global per-qid re-selection equals the B=1 kernel's to the bit,
+    with every B=1 row among the tiled survivors. The probe side joins
+    two cells per query (the nprobe=2 shape)."""
+    k = 3
+    n = normalized_embeddings(spark, sf_dir)
+    probe = n.select(
+        F.col("vec_id").alias("qid"),
+        F.col("ne").alias("qne"),
+        F.pmod(F.col("vec_id"), F.lit(7)).alias("cell"),
+    ).unionByName(
+        n.select(
+            F.col("vec_id").alias("qid"),
+            F.col("ne").alias("qne"),
+            F.pmod(F.col("vec_id") + 1, F.lit(7)).alias("cell"),
+        )
+    )
+    corpus = n.select(
+        F.col("vec_id").alias("cid"),
+        F.col("ne").alias("cne"),
+        F.pmod(F.col("vec_id"), F.lit(7)).alias("cell"),
+    )
+    one_raw = vecmath.cogroup_topk_blocked(
+        probe, corpus, ["cell"], k, cell_blocks=1
+    ).toPandas()
+    tiled_raw = vecmath.cogroup_topk_blocked(
+        probe, corpus, ["cell"], k, cell_blocks=3
+    ).toPandas()
+    one, sel = _global_topk(one_raw, k), _global_topk(tiled_raw, k)
+    assert len(one) == len(sel) > 0
+    for col in ("qid", "cid"):
+        assert (one[col].values == sel[col].values).all(), col
+    assert (
+        one["cos"].values.view(np.int64)
+        == sel["cos"].values.view(np.int64)
+    ).all()
+    key_one = set(zip(one_raw["qid"], one_raw["cid"]))
+    key_tiled = set(zip(tiled_raw["qid"], tiled_raw["cid"]))
+    assert key_one <= key_tiled
+    # the split is real: some query keeps more than k rows per cell
+    assert len(tiled_raw) > len(one_raw)
+
+
+def test_scan_and_tiler_live_in_one_place():
+    """Structure guard: the chunked pair scan and the tile-grid builder
+    are each written once in functions/vecmath.py — pair_cos_matrix and
+    _row_chunks are each called from exactly one module-level function,
+    and exactly one builds the ``ba int, bb int`` tile frame."""
+    import ast
+    import inspect
+
+    tree = ast.parse(inspect.getsource(vecmath))
+    callers: dict[str, set[str]] = {
+        "pair_cos_matrix": set(),
+        "_row_chunks": set(),
+    }
+    tile_builders = set()
+    # module-level functions; a call inside a nested closure counts
+    # for the function that defines the closure
+    for fn in tree.body:
+        if not isinstance(fn, ast.FunctionDef):
+            continue
+        for node in ast.walk(fn):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Name)
+                and node.func.id in callers
+            ):
+                callers[node.func.id].add(fn.name)
+            if (
+                isinstance(node, ast.Constant)
+                and node.value == "ba int, bb int"
+            ):
+                tile_builders.add(fn.name)
+    for name, fns in callers.items():
+        assert len(fns) == 1, (name, sorted(fns))
+    assert len(tile_builders) == 1, sorted(tile_builders)
 
 
 def test_cell_blocks_env_consumer_identical(spark, sf_dir, monkeypatch):
