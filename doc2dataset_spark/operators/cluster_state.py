@@ -57,6 +57,7 @@ import posixpath
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from doc2dataset_spark.operators.time_travel import land_batch, list_batches
 from doc2dataset_spark.queries.dedup import cc_labels_from_pairs
 
 
@@ -106,7 +107,7 @@ def apply_batch(
     new_pairs = new_pairs.select("da", "db").localCheckpoint(eager=True)
     n_new_pairs = new_pairs.count()
 
-    have_state = _has_labels(state_dir)
+    have_state = bool(list_batches(_labels_path(state_dir)))
     if have_state:
         # prior state = batches STRICTLY BEFORE this one: a REPLAY of
         # batch b must see exactly the state its original run saw — if
@@ -172,18 +173,12 @@ def apply_batch(
         .join(fresh, "doc_id", "left_anti")
         .select("doc_id", F.col("doc_id").alias("cluster_id"))
     )
-    upserts = changed.union(singles).localCheckpoint(eager=True)
-    n_upserts = upserts.count()
-    (
-        upserts.withColumn("batch_id", F.lit(batch_id))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(_labels_path(state_dir))
+    n_upserts = land_batch(
+        changed.union(singles),
+        _labels_path(state_dir),
+        batch_id,
+        record_time=True,
     )
-    from doc2dataset_spark.operators.time_travel import record_batch_time
-
-    record_batch_time(_labels_path(state_dir), batch_id)
     return {
         "n_new_pairs": n_new_pairs,
         "n_affected_members": n_members,
@@ -208,16 +203,12 @@ def compact_labels(
     Cost is O(head), not O(log). Published through index_maintenance's
     compaction protocol, horizon upto_batch."""
     from doc2dataset_spark.operators.index_maintenance import (
-        _batch_of,
         compaction_fs,
-        list_batch_dirs,
         publish_compaction,
     )
 
-    fs, p = compaction_fs(_labels_path(state_dir))
-    tail_dirs = [
-        d for d in list_batch_dirs(fs, p) if _batch_of(d) > upto_batch
-    ]
+    compaction_fs(_labels_path(state_dir))
+    tail = [b for b in list_batches(_labels_path(state_dir)) if b > upto_batch]
     head = (
         spark.read.parquet(_labels_path(state_dir))
         .filter(F.col("batch_id") <= upto_batch)
@@ -239,21 +230,9 @@ def compact_labels(
             .mode("overwrite")
             .parquet(tmp_url)
         ),
-        tail_dirs,
+        tail,
         horizon=upto_batch,
     )
-
-
-def _has_labels(state_dir: str) -> bool:
-    from doc2dataset_spark import fsio
-
-    fs, p = fsio.url_to_fs(_labels_path(state_dir))
-    try:
-        return fs.exists(p) and any(
-            f.endswith(".parquet") for f in fs.find(p)
-        )
-    except OSError:
-        return False
 
 
 def forget_docs(
@@ -335,18 +314,12 @@ def forget_docs(
     tombstones = ids.select(
         "doc_id", F.lit(None).cast("bigint").alias("cluster_id")
     )
-    upserts = relabeled.union(tombstones).localCheckpoint(eager=True)
-    n_upserts = upserts.count()
-    (
-        upserts.withColumn("batch_id", F.lit(batch_id))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(_labels_path(state_dir))
+    n_upserts = land_batch(
+        relabeled.union(tombstones),
+        _labels_path(state_dir),
+        batch_id,
+        record_time=True,
     )
-    from doc2dataset_spark.operators.time_travel import record_batch_time
-
-    record_batch_time(_labels_path(state_dir), batch_id)
     return {
         "n_forgotten": len(doc_ids),
         "n_affected_members": n_members,

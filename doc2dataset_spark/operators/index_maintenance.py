@@ -31,7 +31,8 @@ THE compaction publish protocol: every persisted log (the posting
 indexes and doclen here, cluster labels, hypertable partials and their
 RTBF rewrite, as-of views, the CDC changelog, the parquet sink output)
 is compacted through ``publish_compaction``; a compactor supplies only
-its fold (a write callback), its untouched tail dirs and its horizon:
+its fold (a write callback), the ids of its untouched tail batches and
+its horizon:
 
 1. debris check (``compaction_fs``, which compactors also use to
    resolve the root before their own reads): refuse over an
@@ -84,6 +85,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from doc2dataset_spark import fsio
+from doc2dataset_spark.operators.time_travel import batch_dir, list_batches
 
 
 def postings_path(index_dir: str) -> str:
@@ -95,21 +97,6 @@ def postings_path(index_dir: str) -> str:
 def meta_path(index_dir: str) -> str:
     """The build-parameter sidecar of the MinHash and winnow indexes."""
     return posixpath.join(index_dir, "meta")
-
-
-def _batch_of(dirname: str) -> int:
-    return int(dirname.split("=", 1)[1])
-
-
-def list_batch_dirs(fs, root: str) -> list[str]:
-    """Immediate ``batch_id=<n>`` hive partition dir names under root,
-    sorted by batch number — a directory listing, never a data scan."""
-    names = []
-    for child in fs.ls(root):
-        name = child.rstrip("/").rsplit("/", 1)[-1]
-        if name.startswith("batch_id="):
-            names.append(name)
-    return sorted(names, key=_batch_of)
 
 
 def compaction_manifest(root: str) -> str:
@@ -274,17 +261,18 @@ def swap_in_compacted(
 def publish_compaction(
     root: str,
     write,
-    tail_dirs=(),
+    tail_batches=(),
     horizon: int | None = None,
     extra: dict | None = None,
     on_rollback=None,
 ):
     """Run the publish protocol (module docstring) for the log at URL
-    ``root`` and return what ``write(tmp_url)`` returns. ``tail_dirs``:
-    the live ``batch_id=<n>`` dirs the fold left alone (renamed in
-    untouched); ``horizon``: the highest batch the fold finalizes (None:
-    this log keeps no horizon); ``extra``: manifest tag; ``on_rollback``:
-    called once a failed swap has restored the old tree and horizon."""
+    ``root`` and return what ``write(tmp_url)`` returns.
+    ``tail_batches``: the live batch ids the fold left alone (their
+    partition dirs are renamed in untouched); ``horizon``: the highest
+    batch the fold finalizes (None: this log keeps no horizon);
+    ``extra``: manifest tag; ``on_rollback``: called once a failed swap
+    has restored the old tree and horizon."""
     fs, p = compaction_fs(root)
     tmp_url = f"{root.rstrip('/')}__compact_{uuid.uuid4().hex}"
     tmp = fsio.url_to_fs(tmp_url)[1]
@@ -298,7 +286,9 @@ def publish_compaction(
         prev_horizon = compaction_horizon(fs, p)
         _write_horizon(fs, p, max(horizon, prev_horizon or horizon))
     try:
-        swap_in_compacted(fs, p, tmp, list(tail_dirs), extra)
+        swap_in_compacted(
+            fs, p, tmp, [batch_dir(b) for b in tail_batches], extra
+        )
     except BaseException:
         if horizon is not None:
             _write_horizon(fs, p, prev_horizon)
@@ -331,8 +321,7 @@ def compact_index_history(
     """
     fs, p = compaction_fs(postings_path)
     files_before = sum(1 for f in fs.find(p) if f.endswith(".parquet"))
-    batch_dirs = list_batch_dirs(fs, p)
-    tail_dirs = [d for d in batch_dirs if _batch_of(d) > upto_batch]
+    batches = list_batches(postings_path)
 
     head = (
         spark.read.option("mergeSchema", "true")
@@ -357,13 +346,13 @@ def compact_index_history(
             .mode("overwrite")
             .parquet(tmp_url)
         ),
-        tail_dirs,
+        [b for b in batches if b > upto_batch],
         horizon=upto_batch,
     )
 
     return {
-        "batches_before": len(batch_dirs),
-        "batches_after": len(list_batch_dirs(fs, p)),
+        "batches_before": len(batches),
+        "batches_after": len(list_batches(postings_path)),
         "files_before": files_before,
         "files_after": sum(
             1 for f in fs.find(p) if f.endswith(".parquet")

@@ -33,6 +33,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from doc2dataset_spark.operators.index_maintenance import meta_path
+from doc2dataset_spark.operators.time_travel import (
+    land_batch,
+    record_batch_time,
+    reset_batch_times,
+)
 from doc2dataset_spark.queries.dedup import N_BANDS, ROWS_PER_BAND, bands_of
 from doc2dataset_spark.session import load_table
 
@@ -120,11 +125,6 @@ def build_minhash_index(
     # exact recall-loss failure the meta exists to prevent; meta with no
     # postings is harmless: the rerun build overwrites both)
     _write_meta(spark, index_dir, b, r)
-    from doc2dataset_spark.operators.time_travel import (
-        record_batch_time,
-        reset_batch_times,
-    )
-
     # reset BEFORE the overwrite (build_text_index's ordering, round-13
     # advice): a crash between the batch_id=0 write and a post-write
     # reset would leave the dead incarnation's landing times over the
@@ -161,17 +161,13 @@ def append_minhash_batch(
     b, r = got if got is not None else (N_BANDS_DEFAULT, ROWS_DEFAULT)
     if got is None:
         _write_meta(spark, index_dir, b, r)
-    (
-        bands_of(docs, b, r)
-        .withColumn("batch_id", F.lit(batch_id))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id", "band")
-        .parquet(_bands_path(index_dir))
+    land_batch(
+        bands_of(docs, b, r),
+        _bands_path(index_dir),
+        batch_id,
+        partition_cols=("band",),
+        record_time=True,
     )
-    from doc2dataset_spark.operators.time_travel import record_batch_time
-
-    record_batch_time(_bands_path(index_dir), batch_id)
 
 
 def read_bands(spark: SparkSession, index_dir: str) -> DataFrame:

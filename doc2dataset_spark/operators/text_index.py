@@ -38,6 +38,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from doc2dataset_spark.operators.index_maintenance import postings_path
+from doc2dataset_spark.operators.time_travel import (
+    land_batch,
+    reset_batch_times,
+)
 from doc2dataset_spark.queries.search_extras import BM25_B, BM25_K1
 from doc2dataset_spark.queries.textops import _TOKS
 
@@ -61,7 +65,7 @@ def _term_bucket(col):
 
 
 def _tokenize(docs: DataFrame) -> DataFrame:
-    """(doc_id, term) token stream — the search_extras._TOKS tokenizer,
+    """(doc_id, term) token stream — the queries' one _TOKS tokenizer,
     shared so index and in-query results cannot drift."""
     return docs.select(
         "doc_id", F.explode(F.expr(_TOKS)).alias("term")
@@ -76,8 +80,6 @@ def build_text_index(
     from doc2dataset_spark.session import load_table
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    from doc2dataset_spark.operators.time_travel import reset_batch_times
-
     reset_batch_times(postings_path(index_dir))  # rebuild = fresh history
     _write_index(docs, index_dir, batch_id=0)
 
@@ -93,29 +95,21 @@ def _write_index(docs: DataFrame, index_dir: str, batch_id: int) -> None:
     — an append touches O(batch + n_docs), not O(index)."""
     tok = _tokenize(docs)
     tf = tok.groupBy("doc_id", "term").agg(F.count("*").alias("tf"))
-    (
-        tf.withColumn("batch_id", F.lit(batch_id))
-        .withColumn("tb", _term_bucket(F.col("term")))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id", "tb")
-        .parquet(postings_path(index_dir))
+    # the landing-time manifest rides on the postings root, the family's
+    # canonical log (doclen shares its batch ids)
+    land_batch(
+        tf.withColumn("tb", _term_bucket(F.col("term"))),
+        postings_path(index_dir),
+        batch_id,
+        partition_cols=("tb",),
+        record_time=True,
     )
-    dl = tf.groupBy("doc_id").agg(F.sum("tf").alias("dl"))
-    (
-        dl.withColumn("batch_id", F.lit(batch_id))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(_doclen_path(index_dir))
+    land_batch(
+        tf.groupBy("doc_id").agg(F.sum("tf").alias("dl")),
+        _doclen_path(index_dir),
+        batch_id,
     )
     refresh_index_stats(docs.sparkSession, index_dir)
-    # landing-time manifest for timestamp-addressed time travel; the
-    # postings root is the family's canonical log (doclen shares its
-    # batch ids)
-    from doc2dataset_spark.operators.time_travel import record_batch_time
-
-    record_batch_time(postings_path(index_dir), batch_id)
 
 
 def refresh_index_stats(spark: SparkSession, index_dir: str) -> None:

@@ -1,10 +1,32 @@
-"""Snapshot (as-of batch) reads over the persisted batch-partitioned logs.
+"""The batch log: one ``batch_id=<n>`` hive partition per batch, and
+snapshot (as-of batch) reads over it.
 
 Every persisted lifecycle in this engine — the four posting indexes
-(IVF, text, MinHash bands, winnow fingerprints) and the cluster-label
-upsert log — appends one ``batch_id=<n>`` hive partition per ingest
-batch. That log IS a commit history, so Iceberg/Delta-style time travel
-falls out of the layout for free: reading the state "as of batch N" is
+(IVF, text, MinHash bands, winnow fingerprints), the cluster-label
+upsert log, the hypertable partials, the CDC changelog and the
+streaming as-of state — appends one ``batch_id=<n>`` hive partition per
+ingest batch. This module owns that layout; writers and readers go
+through it instead of spelling it:
+
+- ``land_batch``   lands batch n EXACTLY: its rows replace batch n's own
+  partitions (optionally under band / tb / cent_id) by dynamic
+  overwrite; zero rows, which dynamic overwrite alone would not write,
+  clear the batch instead (``clear_batch``), so an empty recompute
+  never keeps a dead incarnation's rows. ``record_time`` records the
+  landing time (forgotten on zero rows).
+- ``list_batches`` / ``latest_batch`` / ``read_snapshot``  the ids from
+  one top-level listing, the newest one (optionally strictly before n:
+  the replay-correct read), and that partition's rows.
+- ``batch_dir`` / ``batch_path``  the one spelling of a partition.
+
+The replay rules these serve are stated in streaming/util.py, the
+compaction protocol in operators/index_maintenance.py. Full rebuilds of
+batch 0, ``delete_from_postings``' multi-partition rewrite and the
+``batch=<n>`` logs of streaming curate / neardup / scored_gate keep
+their own write shapes.
+
+That log IS a commit history, so Iceberg/Delta-style time travel falls
+out of the layout for free: reading the state "as of batch N" is
 a partition-pruned ``batch_id <= N`` scan — no extra metadata, no
 snapshot files, no rewrite.
 
@@ -49,38 +71,111 @@ mandate.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from typing import Sequence
+
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from doc2dataset_spark import fsio
-from doc2dataset_spark.operators.index_maintenance import (
-    _batch_of,
-    compaction_horizon,
-    list_batch_dirs,
-)
+
+BATCH_PREFIX = "batch_id="
 
 
-def _check_horizon(root: str, as_of_batch: int) -> None:
-    fs, p = fsio.url_to_fs(root)
-    horizon = compaction_horizon(fs, p)
-    if horizon is not None and as_of_batch < horizon:
-        raise ValueError(
-            f"as_of_batch={as_of_batch} predates the compaction horizon "
-            f"({horizon}) of {root!r}: batches <= {horizon} were finalized "
-            "into one partition, so earlier snapshots are no longer "
-            "reconstructable (compact only past your time-travel window)"
-        )
+def batch_dir(batch_id: int, prefix: str = BATCH_PREFIX) -> str:
+    """A batch partition's directory name — the one place it is
+    spelled."""
+    return f"{prefix}{batch_id}"
 
 
-def latest_batch(root: str) -> int | None:
-    """Highest landed batch_id under a batch-partitioned root (None if
-    the log is empty) — the 'current snapshot' id, from a directory
-    listing only."""
+def batch_path(root: str, batch_id: int, prefix: str = BATCH_PREFIX) -> str:
+    """Batch ``batch_id``'s partition directory under ``root``."""
+    return f"{root.rstrip('/')}/{batch_dir(batch_id, prefix)}"
+
+
+def list_batches(root: str, prefix: str = BATCH_PREFIX) -> list[int]:
+    """Sorted ids of every ``<prefix><id>`` partition directly under
+    root; [] when root is absent. One top-level listing, never a
+    recursive walk of the part files. Routes through fsio, NOT os.path:
+    a URL-form root (file:///...) is a path Spark's writers accept, and
+    an os.path check on it would be silently empty forever."""
     fs, p = fsio.url_to_fs(root)
     if not fs.exists(p):
-        return None
-    dirs = list_batch_dirs(fs, p)
-    return _batch_of(dirs[-1]) if dirs else None
+        return []
+    ids = []
+    for entry in fs.ls(p, detail=False):
+        name = str(entry).rstrip("/").rsplit("/", 1)[-1]
+        if name.startswith(prefix):
+            try:
+                ids.append(int(name[len(prefix):]))
+            except ValueError:
+                continue
+    return sorted(ids)
+
+
+def latest_batch(root: str, before: int | None = None) -> int | None:
+    """Highest landed batch_id under a batch-partitioned root, strictly
+    below ``before`` when given (None if there is none) — the 'current
+    snapshot' id, from a directory listing only."""
+    ids = [b for b in list_batches(root) if before is None or b < before]
+    return ids[-1] if ids else None
+
+
+def read_snapshot(
+    spark: SparkSession, root: str, before: int | None = None
+) -> DataFrame | None:
+    """The rows of the newest batch partition under ``root`` (strictly
+    before ``before`` when given), or None when there is none — the
+    snapshot-per-batch state read, replay-correct because a replayed
+    batch reads only strictly-prior snapshots."""
+    k = latest_batch(root, before)
+    return None if k is None else spark.read.parquet(batch_path(root, k))
+
+
+def clear_batch(root: str, batch_id: int) -> None:
+    """Delete batch ``batch_id``'s partition (every sub-partition under
+    it) and forget its landing time: what an empty recompute leaves."""
+    fs, p = fsio.url_to_fs(root)
+    stale = batch_path(p, batch_id)
+    if fs.exists(stale):
+        fs.rm(stale, recursive=True)
+    forget_batch_time(root, batch_id)
+
+
+def land_batch(
+    frame: DataFrame,
+    root: str,
+    batch_id: int,
+    partition_cols: Sequence[str] = (),
+    record_time: bool = False,
+) -> int:
+    """Land ``frame`` as batch ``batch_id`` of the log at ``root``,
+    exactly (module docstring): its rows replace the batch's own
+    ``batch_id=<n>[/<col>=<v>]`` partitions by dynamic overwrite, and the
+    write counts them as it goes (an observed metric: no extra job, no
+    materialized copy). Zero rows write nothing, so the batch is then
+    cleared (``clear_batch``) — and an empty first write into a new root
+    leaves no bare root behind. ``record_time``: record the landing time
+    in the root's manifest (a cleared batch's time is always forgotten).
+    Returns the row count."""
+    fs, p = fsio.url_to_fs(root)
+    fresh = not fs.exists(p)
+    rows = Observation()
+    (
+        frame.observe(rows, F.count(F.lit(1)).alias("n"))
+        .withColumn("batch_id", F.lit(batch_id))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("batch_id", *partition_cols)
+        .parquet(root)
+    )
+    n = int(rows.get["n"])
+    if not n:
+        if fresh and fs.exists(p):
+            fs.rm(p, recursive=True)
+        clear_batch(root, batch_id)
+    elif record_time:
+        record_batch_time(root, batch_id)
+    return n
 
 
 def read_postings_asof(
@@ -92,7 +187,20 @@ def read_postings_asof(
     batches' corpus — minus any later right-to-be-forgotten deletions,
     which rewrite history on purpose. Raises when N predates the
     compaction horizon (that history is finalized)."""
-    _check_horizon(root, as_of_batch)
+    # the compaction protocol builds on this layer, so it is imported
+    # here rather than at module level
+    from doc2dataset_spark.operators.index_maintenance import (
+        compaction_horizon,
+    )
+
+    horizon = compaction_horizon(*fsio.url_to_fs(root))
+    if horizon is not None and as_of_batch < horizon:
+        raise ValueError(
+            f"as_of_batch={as_of_batch} predates the compaction horizon "
+            f"({horizon}) of {root!r}: batches <= {horizon} were finalized "
+            "into one partition, so earlier snapshots are no longer "
+            "reconstructable (compact only past your time-travel window)"
+        )
     return spark.read.parquet(root).filter(
         F.col("batch_id") <= F.lit(as_of_batch)
     )
@@ -289,10 +397,8 @@ def serve_labels_asof(
     batch_id)`` over the upsert log restricted to ``batch_id <= N``,
     tombstones (NULL labels) dropped after the fold — the exact
     ``serve_labels`` contract at an earlier point of the log."""
-    root = fsio.join(state_dir, "labels")
-    _check_horizon(root, as_of_batch)
-    log = spark.read.parquet(root).filter(
-        F.col("batch_id") <= F.lit(as_of_batch)
+    log = read_postings_asof(
+        spark, fsio.join(state_dir, "labels"), as_of_batch
     )
     return (
         log.groupBy("doc_id")

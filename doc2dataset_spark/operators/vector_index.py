@@ -29,6 +29,11 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from doc2dataset_spark.operators.index_maintenance import postings_path
+from doc2dataset_spark.operators.time_travel import (
+    land_batch,
+    record_batch_time,
+    reset_batch_times,
+)
 from doc2dataset_spark.queries.dedup import normalized_embeddings, spark_dot
 
 DEFAULT_NPROBE = 1
@@ -88,11 +93,6 @@ def build_ivf_index(
         )
     )
     cents.write.mode("overwrite").parquet(_centroids_path(index_dir))
-    from doc2dataset_spark.operators.time_travel import (
-        record_batch_time,
-        reset_batch_times,
-    )
-
     # reset BEFORE the overwrite (build_text_index's ordering): a crash
     # after the write but before a post-write reset would leave the dead
     # incarnation's landing times over the new index
@@ -207,13 +207,10 @@ def append_to_ivf_index(
             F.col("best.cent_id").alias("cent_id"),
         )
     )
-    (
-        assign.withColumn("batch_id", F.lit(batch_id))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id", "cent_id")
-        .parquet(postings_path(index_dir))
+    land_batch(
+        assign,
+        postings_path(index_dir),
+        batch_id,
+        partition_cols=("cent_id",),
+        record_time=True,
     )
-    from doc2dataset_spark.operators.time_travel import record_batch_time
-
-    record_batch_time(postings_path(index_dir), batch_id)

@@ -44,6 +44,11 @@ from doc2dataset_spark.operators.index_maintenance import (
     meta_path,
     postings_path,
 )
+from doc2dataset_spark.operators.time_travel import (
+    land_batch,
+    record_batch_time,
+    reset_batch_times,
+)
 from doc2dataset_spark.queries.dedup_detectors import (
     WINNOW_MAXDF,
     WINNOW_THRESHOLD,
@@ -99,11 +104,6 @@ def build_winnow_index(
     # leave fingerprinted postings with no parameter record (meta with
     # no postings is harmless — the rerun build overwrites both)
     _write_meta(spark, index_dir)
-    from doc2dataset_spark.operators.time_travel import (
-        record_batch_time,
-        reset_batch_times,
-    )
-
     # reset BEFORE the overwrite (build_text_index's ordering): a crash
     # after the write but before a post-write reset would leave the dead
     # incarnation's landing times over the new index
@@ -135,17 +135,12 @@ def append_winnow_batch(
     # ordering as build_winnow_index: parameters first, data second)
     if not fs.exists(postings_path(index_dir)):
         _write_meta(spark, index_dir)
-    (
-        winnow_fingerprints(docs)
-        .withColumn("batch_id", F.lit(batch_id))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(postings_path(index_dir))
+    land_batch(
+        winnow_fingerprints(docs),
+        postings_path(index_dir),
+        batch_id,
+        record_time=True,
     )
-    from doc2dataset_spark.operators.time_travel import record_batch_time
-
-    record_batch_time(postings_path(index_dir), batch_id)
 
 
 def read_postings(spark: SparkSession, index_dir: str) -> DataFrame:

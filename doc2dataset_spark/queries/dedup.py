@@ -44,6 +44,9 @@ PERMS = [(_rng.randrange(1, P), _rng.randrange(0, P)) for _ in range(N_PERM)]
 N_BANDS, ROWS_PER_BAND = 4, 4
 JACCARD_THRESHOLD = 0.8
 
+# THE token definition, shared by every query and both engines:
+# lowercase, whitespace-split, empty tokens dropped. Spark side is a SQL
+# string so it can sit inside lambdas; the DuckDB side is its twin.
 _TOKS = "filter(split(lower(text), '\\\\s+'), t -> t <> '')"
 _DTOKS = r"list_filter(string_split_regex(lower(text), '\s+'), t -> t <> '')"
 

@@ -24,6 +24,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from doc2dataset_spark.queries.core import query
+from doc2dataset_spark.queries.dedup import _DTOKS, _TOKS
 from doc2dataset_spark.session import compute_parallelism, load_table
 
 # ---------------------------------------------------------------------------
@@ -134,8 +135,6 @@ def agg_percentiles_approx(spark, sf_dir):
 # ---------------------------------------------------------------------------
 # TF-IDF top-k terms per document
 # ---------------------------------------------------------------------------
-_TOKS = "filter(split(lower(text), '\\\\s+'), t -> t <> '')"
-_DTOKS = r"list_filter(string_split_regex(lower(text), '\s+'), t -> t <> '')"
 TFIDF_K = 3
 
 

@@ -3,8 +3,9 @@ north-star text ops: language-ID, quality scoring, token counting, document
 fingerprinting). Everything is JVM-side built-in expressions — no Python in
 the hot path — and every query has an exact DuckDB oracle.
 
-Token definition shared by both engines: lowercase, whitespace-split,
-empty tokens dropped. The reference's word-count semantics (T6,
+Token definition shared by both engines (``queries/dedup._TOKS`` and its
+DuckDB twin ``_DTOKS``): lowercase, whitespace-split, empty tokens
+dropped. The reference's word-count semantics (T6,
 `extractor.py:28-31`) live in q07_regex_fns; these are the richer analysis
 ops a training-data pipeline needs.
 """
@@ -14,12 +15,8 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from doc2dataset_spark.queries.core import query
+from doc2dataset_spark.queries.dedup import _DTOKS, _TOKS
 from doc2dataset_spark.session import load_table
-
-# Spark-side tokens expression (SQL string so it can sit inside lambdas)
-_TOKS = "filter(split(lower(text), '\\\\s+'), t -> t <> '')"
-# DuckDB-side identical tokens
-_DTOKS = r"list_filter(string_split_regex(lower(text), '\s+'), t -> t <> '')"
 
 
 # ---------------------------------------------------------------------------

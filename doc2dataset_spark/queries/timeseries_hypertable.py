@@ -136,24 +136,19 @@ _HT_BATCHES = 4  # event_id-mod slices: every hour overlaps every batch
 def _build_ht_log(spark, sf_dir, tmp: str) -> None:
     """The batch-side twin of streaming/hypertable.run_hypertable_ingest:
     four event_id-mod slices of the events table landed as per-batch
-    hourly partials. Mod slicing (not time slicing) makes every hour
-    bucket overlap every batch, so the serve-side fold genuinely merges
-    cross-batch partials for every row of the result."""
-    from doc2dataset_spark.operators.time_travel import record_batch_time
-    from doc2dataset_spark.streaming.hypertable import hourly_partial
+    hourly partials through the streaming step itself
+    (ingest_hypertable_batch, landing times included — so
+    serve_hypertable_asof_ts works on batch-built logs too). Mod slicing
+    (not time slicing) makes every hour bucket overlap every batch, so
+    the serve-side fold genuinely merges cross-batch partials for every
+    row of the result."""
+    from doc2dataset_spark.streaming.hypertable import ingest_hypertable_batch
 
     e = load_table(spark, sf_dir, "events")
     for i in range(_HT_BATCHES):
-        (
-            hourly_partial(e.filter(F.pmod("event_id", F.lit(_HT_BATCHES)) == i))
-            .withColumn("batch_id", F.lit(i))
-            .write.mode("append")
-            .partitionBy("batch_id")
-            .parquet(f"{tmp}/hourly")
+        ingest_hypertable_batch(
+            e.filter(F.pmod("event_id", F.lit(_HT_BATCHES)) == i), tmp, i
         )
-        # landing-time manifest, exactly as the streaming ingest records
-        # it — serve_hypertable_asof_ts works on batch-built logs too
-        record_batch_time(f"{tmp}/hourly", i)
 
 
 def _cached_ht_log(spark, sf_dir, compacted: bool) -> str:
@@ -734,37 +729,33 @@ def rollup_hypertable_rtbf_audit(spark, sf_dir):
 
 
 def _build_ht_auto_log(spark, sf_dir, tmp: str) -> None:
-    """Six event_id-mod slices through the watermarked per-batch core
-    with the compact='auto' wiring EXACTLY as run_hypertable_ingest_late
-    applies it (decide from the wm counters after each batch, fold up to
-    the previous batch on fire, factor 3 so the knee is crossed inside
-    the six-batch fixture) — asserting the self-tuned cadence actually
+    """Six event_id-mod slices through run_hypertable_ingest_late's own
+    per-batch step with ``compact="auto"`` (ingest_hypertable_late_step:
+    decide from the wm counters after each batch, fold up to the
+    previous batch on fire; factor 3 so the knee is crossed inside the
+    six-batch fixture) — asserting the self-tuned cadence actually
     fired, so the serve is genuinely reading a log the auto-compactor
     reshaped."""
+    from doc2dataset_spark import fsio
     from doc2dataset_spark.operators.index_maintenance import (
         compaction_horizon,
     )
     from doc2dataset_spark.streaming.hypertable import (
         _hourly_path,
-        compact_hypertable_partials,
-        decide_hypertable_compaction,
-        ingest_hypertable_late_batch,
+        ingest_hypertable_late_step,
     )
-    from doc2dataset_spark import fsio
 
     e = load_table(spark, sf_dir, "events")
     n = 6
     for i in range(n):
-        ingest_hypertable_late_batch(
+        ingest_hypertable_late_step(
             e.filter(F.pmod("event_id", F.lit(n)) == i),
             tmp,
             batch_id=i,
             lateness_us=60 * 24 * 3600 * 1_000_000,
+            compact="auto",
+            compact_factor=3,
         )
-        if i > 0:
-            d = decide_hypertable_compaction(spark, tmp, factor=3)
-            if d["fire"]:
-                compact_hypertable_partials(spark, tmp, upto_batch=i - 1)
     fs, p = fsio.url_to_fs(_hourly_path(tmp))
     assert compaction_horizon(fs, p) is not None, (
         "auto-compaction never fired — fixture knee miscalibrated"

@@ -8,7 +8,7 @@ against views from this batch AND every batch before it.
 
 State is the established upsert-log idiom (streaming/cdc.py,
 operators/cluster_state.py): per micro-batch, land THIS batch's
-per-user latest view under ``views/batch_id=<n>`` (dynamic overwrite —
+per-user latest view under ``views/batch_id=<n>`` (``land_batch`` —
 replay rewrites exactly its own partition), and seed the next batch's
 carry with the latest-wins fold of the STRICTLY PRIOR batches
 (``batch_id < n``, the replay-correct read: a replayed batch sees
@@ -51,11 +51,17 @@ from pyspark.sql import functions as F
 from doc2dataset_spark import fsio
 from doc2dataset_spark.operators.asof import asof_join
 from doc2dataset_spark.operators.index_maintenance import (
-    _batch_of,
     _old_compact,
     compaction_manifest,
-    list_batch_dirs,
 )
+from doc2dataset_spark.operators.time_travel import (
+    clear_batch,
+    land_batch,
+    latest_batch,
+    list_batches,
+    read_snapshot,
+)
+from doc2dataset_spark.streaming.util import run_batchwise
 
 # views state rows (both variants): the winning view per (user, ts)
 # plus its event id, the tie-break every fold re-uses
@@ -108,7 +114,7 @@ def _read_batches(
             "partial log here would silently mis-attribute instead of "
             "failing"
         )
-    if not fs.exists(p) or not list_batch_dirs(fs, p):
+    if not list_batches(root):
         return spark.createDataFrame([], schema + ", batch_id bigint")
     return spark.read.parquet(root)
 
@@ -158,16 +164,6 @@ def _attribute(purchases: DataFrame, views: DataFrame) -> DataFrame:
     )
 
 
-# per-batch landing primitives shared by every streaming sink — the
-# zero-row replay guard (_land_exact) is round-12 advice #4's fix
-from doc2dataset_spark.streaming.util import (  # noqa: E402
-    land_batch as _land,
-    land_batch_exact as _land_exact,
-    rm_stale_partition as _rm_stale_partition,
-    run_batchwise,
-)
-
-
 def serve_view_state(
     spark: SparkSession, out_dir: str, before_batch: int | None = None
 ) -> DataFrame:
@@ -198,12 +194,8 @@ def _maxts_state(
     (None = all), from the per-batch maxts sidecar — or None before any
     non-empty batch has landed. Each snapshot carries the running max,
     so only the newest one is read."""
-    mdir = _maxts_path(out_dir)
-    k = _latest_snapshot_batch(mdir, before_batch)
-    if k is None:
-        return None
-    row = spark.read.parquet(posixpath.join(mdir, f"batch_id={k}")).first()
-    return int(row["max_ts_us"])
+    snap = read_snapshot(spark, _maxts_path(out_dir), before_batch)
+    return None if snap is None else int(snap.first()["max_ts_us"])
 
 
 def attribute_batch(
@@ -252,7 +244,7 @@ def run_asof_attribution(
     (event_id, ts, user_id, event_type, value). Lands
     ``attributed/batch_id=<n>`` and ``views/batch_id=<n>`` per batch,
     both idempotent under replay (zero-row recomputations delete the
-    stale partition — _land_exact).
+    stale partition — land_batch).
 
     The event-time-ordered-arrival contract is ENFORCED, not just
     documented (round-12 advice): each batch's max event ts is
@@ -290,8 +282,8 @@ def run_asof_attribution(
             )
         seed = serve_view_state(s, out_dir, before_batch=batch_id)
         attributed, latest = attribute_batch(batch_df, seed)
-        _land_exact(attributed, adir, batch_id)
-        _land_exact(latest, vdir, batch_id)
+        land_batch(attributed, adir, batch_id)
+        land_batch(latest, vdir, batch_id)
         if bounds["hi"] is not None:
             # no `or 0` floor: pre-epoch event times are NEGATIVE µs, and
             # flooring the running max at 0 would make every later batch
@@ -299,7 +291,7 @@ def run_asof_attribution(
             # arrival error (round-13 advice)
             hi = int(bounds["hi"])
             new_max = hi if prior_max is None else max(hi, prior_max)
-            _land(
+            land_batch(
                 s.createDataFrame([(new_max,)], "max_ts_us bigint"),
                 mdir,
                 batch_id,
@@ -308,7 +300,7 @@ def run_asof_attribution(
             # empty recompute: a dead incarnation's maxts for this id
             # would otherwise survive and raise spurious ordered-arrival
             # errors against the NEW stream's (valid) timestamps
-            _rm_stale_partition(mdir, batch_id)
+            clear_batch(mdir, batch_id)
 
     run_batchwise(events_stream, checkpoint_dir, one_batch, [adir, vdir, mdir])
 
@@ -362,31 +354,15 @@ def _wm_path(out_dir: str) -> str:
     return posixpath.join(out_dir, "wm")
 
 
-def _latest_snapshot_batch(root: str, before_batch: int | None) -> int | None:
-    """Newest landed batch number under root (optionally strictly below
-    ``before_batch``) — snapshot-per-batch state, replay-correct because
-    a replayed batch reads only strictly-prior snapshots."""
-    fs, p = fsio.url_to_fs(root)
-    if not fs.exists(p):
-        return None
-    ks = [
-        _batch_of(d)
-        for d in list_batch_dirs(fs, p)
-        if before_batch is None or _batch_of(d) < before_batch
-    ]
-    return max(ks) if ks else None
-
-
 def _wm_state(
     spark: SparkSession, out_dir: str, before_batch: int | None
 ) -> tuple[int, int, int] | None:
     """(max_ts_us, wm_us, n_pending) from the newest wm snapshot, or
     None before any event has been seen."""
-    wdir = _wm_path(out_dir)
-    k = _latest_snapshot_batch(wdir, before_batch)
-    if k is None:
+    snap = read_snapshot(spark, _wm_path(out_dir), before_batch)
+    if snap is None:
         return None
-    row = spark.read.parquet(posixpath.join(wdir, f"batch_id={k}")).first()
+    row = snap.first()
     return int(row["max_ts_us"]), int(row["wm_us"]), int(row["n_pending"])
 
 
@@ -395,13 +371,15 @@ def _pending_state(
 ) -> DataFrame:
     """The pending-purchase snapshot matching the newest wm snapshot —
     empty (with schema) when the count it recorded is zero, so an
-    emptied pending set never silently falls back to an older one."""
+    emptied pending set never silently falls back to an older one.
+    Every batch after the first event lands a wm snapshot, and lands its
+    pending snapshot (none at zero pending) just before it, so the
+    newest pending snapshot is the newest wm snapshot's own."""
     wm = _wm_state(spark, out_dir, before_batch)
     if wm is None or wm[2] == 0:
         return spark.createDataFrame([], _PENDING_SCHEMA)
-    k = _latest_snapshot_batch(_wm_path(out_dir), before_batch)
-    return spark.read.parquet(
-        posixpath.join(_pending_path(out_dir), f"batch_id={k}")
+    return read_snapshot(
+        spark, _pending_path(out_dir), before_batch
     ).drop("batch_id")
 
 
@@ -430,7 +408,7 @@ def run_asof_attribution_late(
     identical expression to the batch query), land sealed rows under
     ``attributed/batch_id=n`` and the still-unsealed purchase SNAPSHOT
     under ``pending/batch_id=n`` (its row count in the wm sidecar). All
-    logs land with dynamic overwrite, so a same-checkpoint replay
+    logs land through ``land_batch``, so a same-checkpoint replay
     rewrites exactly its own partitions against exactly its original
     inputs."""
     vdir, adir = _allviews_path(out_dir), _attributed_path(out_dir)
@@ -440,7 +418,7 @@ def run_asof_attribution_late(
         s = batch_df.sparkSession
         batch_df = batch_df.localCheckpoint(eager=True)
 
-        _land_exact(_batch_views(batch_df), vdir, batch_id)
+        land_batch(_batch_views(batch_df), vdir, batch_id)
 
         prior = _wm_state(s, out_dir, before_batch=batch_id)
         prev_max = prior[0] if prior is not None else None
@@ -452,7 +430,11 @@ def run_asof_attribution_late(
             default=None,
         )
         if max_ts is None:
-            return  # empty batch before any event: nothing to advance
+            # empty batch before any event: nothing to advance, and
+            # nothing of a dead incarnation's batch n may survive
+            for root in (adir, pdir, wdir):
+                clear_batch(root, batch_id)
+            return
         wm = max_ts - lateness_us
 
         new_p = batch_df.filter(F.col("event_type") == "purchase").select(
@@ -465,20 +447,13 @@ def run_asof_attribution_late(
             new_p
         )
         sealed = allp.filter(F.unix_micros("ts") <= F.lit(wm))
-        pending = allp.filter(
-            F.unix_micros("ts") > F.lit(wm)
-        ).localCheckpoint(eager=True)
-        n_pending = pending.count()
+        pending = allp.filter(F.unix_micros("ts") > F.lit(wm))
 
-        _land_exact(_attribute(sealed, _all_views(s, out_dir)), adir, batch_id)
-        if n_pending:
-            _land(pending, pdir, batch_id)
-        else:
-            # the wm sidecar's n_pending=0 already makes an emptied
-            # pending set unreadable; removing the stale snapshot keeps
-            # the on-disk state consistent with it
-            _rm_stale_partition(pdir, batch_id)
-        _land(
+        land_batch(_attribute(sealed, _all_views(s, out_dir)), adir, batch_id)
+        # an emptied pending set lands no snapshot; the wm sidecar's
+        # n_pending=0 already makes it unreadable
+        n_pending = land_batch(pending, pdir, batch_id)
+        land_batch(
             s.createDataFrame(
                 [(int(max_ts), int(wm), int(n_pending))],
                 "max_ts_us bigint, wm_us bigint, n_pending bigint",
@@ -537,7 +512,7 @@ def compact_view_state(spark: SparkSession, out_dir: str) -> dict:
     if state is None:
         raise ValueError(f"no watermark snapshot under {out_dir!r} yet")
     wm = state[1]
-    top = _latest_snapshot_batch(_wm_path(out_dir), None)
+    top = latest_batch(_wm_path(out_dir))
     log = _read_batches(spark, vdir, _VIEWS_SCHEMA).drop("batch_id")
     n_before = log.count()
     fresh = log.filter(F.unix_micros("ts") > F.lit(wm))

@@ -30,7 +30,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from doc2dataset_spark.streaming.util import land_batch, run_batchwise
+from doc2dataset_spark.operators.time_travel import (
+    land_batch,
+    latest_batch,
+    read_postings_asof,
+    resolve_asof_ts,
+)
+from doc2dataset_spark.streaming.util import run_batchwise
 
 DELETE_OP = "delete"
 
@@ -44,13 +50,12 @@ def run_cdc_ingest(
     """Land the change stream, one ``batch_id=<n>`` partition per
     micro-batch. The frame must carry ``doc_id``, ``op`` and ``seq``
     plus the payload columns. Blocks until drained."""
-    from doc2dataset_spark.operators.time_travel import record_batch_time
-
-    def step(batch_df: DataFrame, batch_id: int) -> None:
-        land_batch(batch_df, out_dir, batch_id)
-        record_batch_time(out_dir, batch_id)
-
-    run_batchwise(changes_stream, checkpoint_dir, step, [out_dir])
+    run_batchwise(
+        changes_stream,
+        checkpoint_dir,
+        lambda df, bid: land_batch(df, out_dir, bid, record_time=True),
+        [out_dir],
+    )
 
 
 def cdc_serve(spark: SparkSession, out_dir: str) -> DataFrame:
@@ -100,20 +105,18 @@ def cdc_compact(spark: SparkSession, out_dir: str) -> dict:
     landing between the snapshot read and the directory swap would be
     dropped by the swap (the rename replaces the whole log)."""
     from doc2dataset_spark.operators.index_maintenance import (
-        _batch_of,
         compaction_fs,
-        list_batch_dirs,
         publish_compaction,
     )
 
-    dirs = list_batch_dirs(*compaction_fs(out_dir))
-    if not dirs:
+    compaction_fs(out_dir)
+    # highest batch the snapshot absorbs — the time-travel horizon
+    folded = latest_batch(out_dir)
+    if folded is None:
         raise ValueError(
-            f"no batch_id=<n> partitions under {out_dir!r} — nothing to "
+            f"no batch partitions under {out_dir!r} — nothing to "
             "compact (empty or swept changelog)"
         )
-    # highest batch the snapshot absorbs — the time-travel horizon
-    folded = max(_batch_of(d) for d in dirs)
     served = cdc_serve(spark, out_dir)
     payload = [c for c in served.columns if c != "doc_id"]
     snapshot = served.select(
@@ -146,25 +149,7 @@ def cdc_serve_asof(
     silently serve post-compaction content as the past); at-or-after the
     horizon, the snapshot plus later batches reconstruct the state
     exactly."""
-    from doc2dataset_spark import fsio
-    from doc2dataset_spark.operators.index_maintenance import (
-        compaction_horizon,
-    )
-
-    fs, root = fsio.url_to_fs(out_dir)
-    horizon = compaction_horizon(fs, root)
-    if horizon is not None and as_of_batch < horizon:
-        raise ValueError(
-            f"as_of_batch={as_of_batch} predates the compaction horizon "
-            f"({horizon}) of {out_dir!r}: cdc_compact folded those "
-            "batches into the snapshot, so earlier snapshots are no "
-            "longer reconstructable"
-        )
-    return _latest_wins(
-        spark.read.parquet(out_dir).filter(
-            F.col("batch_id") <= F.lit(as_of_batch)
-        )
-    )
+    return _latest_wins(read_postings_asof(spark, out_dir, as_of_batch))
 
 
 def cdc_serve_asof_ts(
@@ -174,6 +159,4 @@ def cdc_serve_asof_ts(
     through the changelog's landing-time manifest (written per batch by
     run_cdc_ingest), then the same partition-pruned latest-wins fold —
     including the compaction-horizon refusal."""
-    from doc2dataset_spark.operators.time_travel import resolve_asof_ts
-
     return cdc_serve_asof(spark, out_dir, resolve_asof_ts(out_dir, as_of_ts_us))

@@ -34,8 +34,9 @@ import posixpath
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
+from doc2dataset_spark.operators.time_travel import list_batches
 from doc2dataset_spark.queries.curation_extras import gopher_flags
-from doc2dataset_spark.streaming.util import batch_partitions, run_batchwise
+from doc2dataset_spark.streaming.util import run_batchwise
 
 
 def curate_batch(
@@ -111,7 +112,7 @@ def run_curate_stream(
             spark.read.parquet(state_dir).filter(
                 F.col("batch") < F.lit(int(batch_id))
             )
-            if batch_partitions(state_dir, "batch=")
+            if list_batches(state_dir, "batch=")
             else None
         )
         verdicts, new_digests = curate_batch(batch_df, directory)

@@ -36,11 +36,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from doc2dataset_spark.operators.time_travel import land_batch
 from doc2dataset_spark.queries.text_models import (
     binned_docs,
     psi_from_counts,
 )
-from doc2dataset_spark.streaming.util import land_batch, run_batchwise
+from doc2dataset_spark.streaming.util import run_batchwise
 
 
 def reference_histogram(docs: DataFrame) -> tuple[list, list]:

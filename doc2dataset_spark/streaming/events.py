@@ -15,7 +15,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from doc2dataset_spark.streaming.util import land_batch, run_batchwise
+from doc2dataset_spark.operators.time_travel import land_batch
+from doc2dataset_spark.streaming.util import run_batchwise
 
 
 def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:

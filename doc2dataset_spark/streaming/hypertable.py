@@ -42,13 +42,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from doc2dataset_spark import fsio
-from doc2dataset_spark.queries.timeseries_hypertable import _ht_emit, _ht_level
-from doc2dataset_spark.streaming.util import (
+from doc2dataset_spark.operators.time_travel import (
+    clear_batch,
+    forget_batch_time,
     land_batch,
-    land_batch_exact,
-    rm_stale_partition,
-    run_batchwise,
+    list_batches,
+    read_snapshot,
 )
+from doc2dataset_spark.queries.timeseries_hypertable import _ht_emit, _ht_level
+from doc2dataset_spark.streaming.util import run_batchwise
 
 
 def hourly_partial(events: DataFrame) -> DataFrame:
@@ -76,20 +78,33 @@ def run_hypertable_ingest(
     out_dir: str,
     checkpoint_dir: str,
 ) -> None:
-    """Land one hourly-partials frame per micro-batch under
-    ``hourly/batch_id=<n>`` (land_batch_exact: zero-row recomputations
-    delete the stale partition). A fresh-checkpoint replay over a
+    """Land one hourly-partials frame per micro-batch through
+    ``ingest_hypertable_batch``. A fresh-checkpoint replay over a
     COMPACTED partial log refuses up front. Blocks until drained."""
-    from doc2dataset_spark.operators.time_travel import record_batch_time
-
     hdir = _hourly_path(out_dir)
-
-    def step(batch_df: DataFrame, batch_id: int) -> None:
-        land_batch_exact(hourly_partial(batch_df), hdir, batch_id)
-        record_batch_time(hdir, batch_id)
-
     run_batchwise(
-        events_stream, checkpoint_dir, step, [hdir], refuse_roots=[hdir]
+        events_stream,
+        checkpoint_dir,
+        lambda df, bid: ingest_hypertable_batch(df, out_dir, bid),
+        [hdir],
+        refuse_roots=[hdir],
+    )
+
+
+def ingest_hypertable_batch(
+    batch_df: DataFrame, out_dir: str, batch_id: int
+) -> int:
+    """ONE batch through the unbounded ingest — the step of
+    run_hypertable_ingest and of the batch-side log builder
+    (queries/timeseries_hypertable): the batch's hourly partials land
+    exactly under ``hourly/batch_id=<n>`` with their landing time (a
+    zero-row recompute clears the partition and forgets the time).
+    Returns the partial rows landed."""
+    return land_batch(
+        hourly_partial(batch_df),
+        _hourly_path(out_dir),
+        batch_id,
+        record_time=True,
     )
 
 
@@ -141,16 +156,13 @@ def compact_hypertable_partials(
     Returns {batches_before, batches_after, rows_before, rows_after}.
     """
     from doc2dataset_spark.operators.index_maintenance import (
-        _batch_of,
         compaction_fs,
-        list_batch_dirs,
         publish_compaction,
     )
 
     hdir = _hourly_path(out_dir)
     fs, p = compaction_fs(hdir)
-    batch_dirs = list_batch_dirs(fs, p)
-    tail_dirs = [d for d in batch_dirs if _batch_of(d) > upto_batch]
+    batches = list_batches(hdir)
 
     log = spark.read.parquet(hdir)
     rows_before = log.count()
@@ -164,7 +176,7 @@ def compact_hypertable_partials(
             .write.partitionBy("batch_id")
             .parquet(tmp_url)
         ),
-        tail_dirs,
+        [b for b in batches if b > upto_batch],
         horizon=upto_batch,
     )
     rows_after = spark.read.parquet(hdir).count()
@@ -183,8 +195,8 @@ def compact_hypertable_partials(
     )
     _write_compact_stats(fs, p, upto_batch, head_rows)
     return {
-        "batches_before": len(batch_dirs),
-        "batches_after": len(list_batch_dirs(fs, p)),
+        "batches_before": len(batches),
+        "batches_after": len(list_batches(hdir)),
         "rows_before": rows_before,
         "rows_after": rows_after,
     }
@@ -407,14 +419,10 @@ def hypertable_wm_state(
     """{max_ts_us, wm_us, n_late_rows, n_reopened_hours} from the newest
     wm snapshot (optionally strictly before ``before_batch`` — the
     replay-correct read), or None before any event has been seen."""
-    from doc2dataset_spark.streaming.asof import _latest_snapshot_batch
-
-    wdir = _wm_path(out_dir)
-    k = _latest_snapshot_batch(wdir, before_batch)
-    if k is None:
+    snap = read_snapshot(spark, _wm_path(out_dir), before_batch)
+    if snap is None:
         return None
-    row = spark.read.parquet(posixpath.join(wdir, f"batch_id={k}")).first()
-    d = row.asDict()
+    d = snap.first().asDict()
     return {
         "max_ts_us": int(d["max_ts_us"]),
         "wm_us": int(d["wm_us"]),
@@ -458,8 +466,8 @@ def ingest_hypertable_late_batch(
       their full rows, so an operator can inspect, re-window, or
       replay them into a wider-bound table later.
 
-    Lands the (kept) batch's hourly partials (land_batch_exact —
-    zero-row replays delete the stale partition) and the advanced wm
+    Lands the (kept) batch's hourly partials (land_batch — zero-row
+    replays delete the stale partition) and the advanced wm
     snapshot with this batch's invalidation accounting. Returns the wm
     snapshot dict it persisted (zeros/None fields for an empty batch,
     which advances nothing)."""
@@ -487,20 +495,12 @@ def ingest_hypertable_late_batch(
     # discard it AND delete a live incarnation's partition.
     if n_rows == 0:
         # empty recompute: clear any dead incarnation's partitions for
-        # this id — its partials would double-count, and its wm snapshot
-        # would raise spurious lateness errors against the new stream
-        rm_stale_partition(hdir, batch_id)
-        rm_stale_partition(wdir, batch_id)
-        rm_stale_partition(rdir, batch_id)
-        from doc2dataset_spark.operators.time_travel import (
-            forget_batch_time,
-        )
-
-        # the deleted partition's landing time goes with it (the
-        # sweep_stale_batches rationale): a surviving dead-incarnation
-        # entry would clamp the next real batch's time upward and
-        # misdirect timestamp resolution
-        forget_batch_time(hdir, batch_id)
+        # this id — its partials would double-count, its wm snapshot
+        # would raise spurious lateness errors against the new stream,
+        # and its landing time would clamp the next real batch's time
+        # upward and misdirect timestamp resolution
+        for root in (hdir, wdir, rdir):
+            clear_batch(root, batch_id)
         return {
             "max_ts_us": None,
             "wm_us": None,
@@ -530,7 +530,7 @@ def ingest_hypertable_late_batch(
             )
         wm_prior = prior["wm_us"]
         dropped = batch_df.filter(F.unix_micros("ts") < F.lit(wm_prior))
-        n_dropped = land_batch_exact(dropped, rdir, batch_id)
+        n_dropped = land_batch(dropped, rdir, batch_id)
         # NULL-ts rows are NOT provably late (no event time to compare)
         # and must not silently vanish between the two filters: keep
         # them, folding into the NULL hour bucket exactly as the
@@ -547,7 +547,7 @@ def ingest_hypertable_late_batch(
     else:
         # replay correctness: a prior incarnation may have dead-lettered
         # rows under this id that the recompute no longer drops
-        rm_stale_partition(rdir, batch_id)
+        clear_batch(rdir, batch_id)
 
     n_late = n_reopened = 0
     if prior is not None and hi is not None:
@@ -585,18 +585,9 @@ def ingest_hypertable_late_batch(
             # immutable to downstream caches. Mirrors the max_ts clamp.
             wm = max(wm, prior["wm_us"])
 
-    n_partial_rows = land_batch_exact(hourly_partial(batch_df), hdir, batch_id)
-    from doc2dataset_spark.operators.time_travel import (
-        forget_batch_time,
-        record_batch_time,
-    )
-
-    if n_partial_rows:
-        record_batch_time(hdir, batch_id)
-    else:
-        # all rows dead-lettered: the (deleted/absent) partition's
-        # landing time must not survive either
-        forget_batch_time(hdir, batch_id)
+    # zero kept rows (all dead-lettered) clear the partition and forget
+    # its landing time
+    n_partial_rows = ingest_hypertable_batch(batch_df, out_dir, batch_id)
     snap = {
         "max_ts_us": max_ts,
         "wm_us": wm,
@@ -613,7 +604,7 @@ def ingest_hypertable_late_batch(
         # above, but no event time has ever been seen, so no watermark
         # exists yet — writing a NULL snapshot would crash every reader.
         # Clear any dead incarnation's snapshot for this id and return.
-        rm_stale_partition(wdir, batch_id)
+        clear_batch(wdir, batch_id)
         return snap
     land_batch(
         s.createDataFrame(
@@ -657,27 +648,43 @@ def run_hypertable_ingest_late(
     if compact not in (None, "auto"):
         raise ValueError(f"compact={compact!r}: pass None or 'auto'")
     hdir = _hourly_path(out_dir)
-
-    def step(batch_df: DataFrame, batch_id: int) -> None:
-        ingest_hypertable_late_batch(
-            batch_df, out_dir, batch_id, lateness_us, on_late=on_late
-        )
-        if compact == "auto" and batch_id > 0:
-            d = decide_hypertable_compaction(
-                batch_df.sparkSession, out_dir, factor=compact_factor
-            )
-            if d["fire"]:
-                compact_hypertable_partials(
-                    batch_df.sparkSession, out_dir, upto_batch=batch_id - 1
-                )
-
     run_batchwise(
         events_stream,
         checkpoint_dir,
-        step,
+        lambda df, bid: ingest_hypertable_late_step(
+            df, out_dir, bid, lateness_us, on_late, compact, compact_factor
+        ),
         [hdir, _wm_path(out_dir), _rejected_path(out_dir)],
         refuse_roots=[hdir],
     )
+
+
+def ingest_hypertable_late_step(
+    batch_df: DataFrame,
+    out_dir: str,
+    batch_id: int,
+    lateness_us: int,
+    on_late: str = "refuse",
+    compact: str | None = None,
+    compact_factor: int = 8,
+) -> dict:
+    """run_hypertable_ingest_late's per-batch step, shared with the
+    batch-side auto-compaction log builder (queries/
+    timeseries_hypertable): ingest_hypertable_late_batch, then with
+    ``compact="auto"`` fold the head up to the PREVIOUS batch whenever
+    decide_hypertable_compaction fires. Returns the wm snapshot dict."""
+    snap = ingest_hypertable_late_batch(
+        batch_df, out_dir, batch_id, lateness_us, on_late=on_late
+    )
+    if compact == "auto" and batch_id > 0:
+        spark = batch_df.sparkSession
+        if decide_hypertable_compaction(
+            spark, out_dir, factor=compact_factor
+        )["fire"]:
+            compact_hypertable_partials(
+                spark, out_dir, upto_batch=batch_id - 1
+            )
+    return snap
 
 
 def _final_before(df: DataFrame, granularity: str, wm_us: int) -> DataFrame:
@@ -989,12 +996,9 @@ def forget_hypertable_rows(
     from decimal import Decimal
 
     from doc2dataset_spark.operators.index_maintenance import (
-        _batch_of,
         compaction_fs,
-        list_batch_dirs,
         publish_compaction,
     )
-    from doc2dataset_spark.operators.time_travel import forget_batch_time
 
     hdir = _hourly_path(out_dir)
     fs, p = compaction_fs(hdir)
@@ -1187,15 +1191,7 @@ def forget_hypertable_rows(
             # post-swap bookkeeping it may have died before: vanished
             # batches' landing times (idempotent — forget_batch_time on
             # an absent entry is a no-op) and the journal flip.
-            from doc2dataset_spark.operators.index_maintenance import (
-                _batch_of,
-                list_batch_dirs,
-            )
-            from doc2dataset_spark.operators.time_travel import (
-                forget_batch_time,
-            )
-
-            surviving = {_batch_of(d) for d in list_batch_dirs(fs, p)}
+            surviving = set(list_batches(hdir))
             for b in sorted(set(mine["touched"]) - surviving):
                 forget_batch_time(hdir, b)
             mine["status"] = "applied"
@@ -1271,11 +1267,7 @@ def forget_hypertable_rows(
         "bucket", "n_events", "dec_total", "batch_id"
     ).unionByName(folded)
 
-    tail_dirs = [
-        d
-        for d in list_batch_dirs(fs, p)
-        if _batch_of(d) not in touched
-    ]
+    tail = [b for b in list_batches(hdir) if b not in touched]
     publish_compaction(
         hdir,
         lambda tmp_url: (
@@ -1283,7 +1275,7 @@ def forget_hypertable_rows(
             .write.partitionBy("batch_id")
             .parquet(tmp_url)
         ),
-        tail_dirs,
+        tail,
         extra={"rtbf_request": request_id},
         # python-level swap failure: the swap rolled itself back — the
         # log is pre-deletion again, so drop the pending journal entry
@@ -1297,7 +1289,7 @@ def forget_hypertable_rows(
     # a touched partition whose every row was an affected-hour row (and
     # that isn't the anchor) vanished from the rewrite — its landing
     # time must not survive it (the sweep_stale_batches rationale)
-    surviving = {_batch_of(d) for d in list_batch_dirs(fs, p)}
+    surviving = set(list_batches(hdir))
     for b in sorted(touched - surviving):
         forget_batch_time(hdir, b)
 

@@ -25,13 +25,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from doc2dataset_spark import fsio
 from doc2dataset_spark.operators.index_maintenance import (
-    _batch_of,
     compact_index_history,
-    list_batch_dirs,
     postings_path,
 )
+from doc2dataset_spark.operators.time_travel import list_batches
 from doc2dataset_spark.operators.vector_index import append_to_ivf_index
 from doc2dataset_spark.queries.dedup import spark_dot
 from doc2dataset_spark.streaming.util import run_batchwise
@@ -151,13 +149,8 @@ def _run_batchwise_ingest(
     # no-op guard: if everything <= upto is already one merged
     # partition, skip — recompacting would re-read and rewrite the
     # corpus-sized head for zero change on every drain
-    fs0, p0 = fsio.url_to_fs(roots[0])
-    head_dirs = (
-        [d for d in list_batch_dirs(fs0, p0) if _batch_of(d) <= upto]
-        if fs0.exists(p0)
-        else []
-    )
-    if head_dirs and head_dirs != [f"batch_id={upto}"]:
+    head = [b for b in list_batches(roots[0]) if b <= upto]
+    if head and head != [upto]:
         compactor(docs_stream.sparkSession, upto)
     return fired
 

@@ -39,8 +39,9 @@ import posixpath
 
 from pyspark.sql import DataFrame, functions as F
 
+from doc2dataset_spark.operators.time_travel import list_batches
 from doc2dataset_spark.queries.dedup import bands_of
-from doc2dataset_spark.streaming.util import batch_partitions, run_batchwise
+from doc2dataset_spark.streaming.util import run_batchwise
 
 
 def flag_against_directory(
@@ -105,7 +106,7 @@ def run_incremental_neardup(
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         directory = None
-        if batch_partitions(state_dir, "batch="):
+        if list_batches(state_dir, "batch="):
             # strictly earlier batches only (rule 3): a replayed batch
             # that read its own or a dead incarnation's bands would flag
             # every doc as a near-dup of itself

@@ -23,11 +23,12 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from doc2dataset_spark.operators.time_travel import land_batch
 from doc2dataset_spark.queries.maintenance_ops import (
     mv_merge_partials,
     mv_partial,
 )
-from doc2dataset_spark.streaming.util import land_batch, run_batchwise
+from doc2dataset_spark.streaming.util import run_batchwise
 
 
 def run_rollup_partials(

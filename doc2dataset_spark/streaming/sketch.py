@@ -22,11 +22,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from doc2dataset_spark.operators.time_travel import land_batch
 from doc2dataset_spark.queries.sql_surface import (
     CMS_DEPTH,
     cms_bucket_spark,
 )
-from doc2dataset_spark.streaming.util import land_batch, run_batchwise
+from doc2dataset_spark.streaming.util import run_batchwise
 
 
 def cms_partial(batch: DataFrame, key: str = "user_id") -> DataFrame:

@@ -2,17 +2,23 @@
 
 ``run_batchwise`` drives a finite stream through one per-batch ``step``
 and blocks until it is drained; each runner supplies only its step. The
-replay rules, stated once here and relied on by every runner:
+replay rules, stated once here and relied on by every runner. The
+``batch_id=<n>`` log layout they rest on (landing, listing, newest
+batch, snapshot reads, partition paths) lives in
+operators/time_travel.py; this module keeps the runner, the sweep and
+the refusal:
 
 1. **Own partition per batch.** A step lands batch n's output as its own
-   ``<prefix><n>`` partition, overwritten in place (``land_batch``'s
-   dynamic overwrite for ``batch_id=``; a path overwrite for the
-   ``batch=`` logs of curate / neardup / scored_gate). A same-checkpoint
-   restart re-fires only uncommitted batches under their original ids,
-   so it rewrites exactly their partitions and touches nothing else.
+   ``<prefix><n>`` partition, overwritten in place (``time_travel.
+   land_batch``'s dynamic overwrite for ``batch_id=``; a path overwrite
+   for the ``batch=`` logs of curate / neardup / scored_gate). A
+   same-checkpoint restart re-fires only uncommitted batches under their
+   original ids, so it rewrites exactly their partitions and touches
+   nothing else.
 2. **Empty recomputes clear.** Dynamic overwrite writes nothing for zero
-   rows, so a step whose recomputed batch may be empty lands through
-   ``land_batch_exact``, which deletes the stale partition instead.
+   rows, so ``land_batch`` counts the rows it writes and on zero rows
+   deletes the stale partition (and forgets its landing time): every
+   ``batch_id=`` log lands through it.
 3. **Strictly prior reads.** A step that reads its own accumulated log
    (a digest or band directory, a view seed, a watermark snapshot)
    reads only batches ``< n``: a replayed batch then sees exactly the
@@ -36,89 +42,35 @@ from __future__ import annotations
 from typing import Callable, Sequence
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from doc2dataset_spark import fsio
-
-
-def land_batch(frame: DataFrame, root: str, batch_id: int) -> None:
-    """One micro-batch landed as its own ``batch_id=<n>`` partition via
-    dynamic overwrite (rule 1)."""
-    (
-        frame.withColumn("batch_id", F.lit(batch_id))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(root)
-    )
-
-
-def rm_stale_partition(root: str, batch_id: int) -> None:
-    fs, p = fsio.url_to_fs(root)
-    stale = f"{p.rstrip('/')}/batch_id={batch_id}"
-    if fs.exists(stale):
-        fs.rm(stale, recursive=True)
-
-
-def land_batch_exact(frame: DataFrame, root: str, batch_id: int) -> int:
-    """land_batch plus rule 2: materialize the frame once
-    (localCheckpoint), and on zero rows delete the existing partition
-    dir instead of writing. Returns the row count so callers can reuse
-    it."""
-    frame = frame.localCheckpoint(eager=True)
-    n = frame.count()
-    if n:
-        land_batch(frame, root, batch_id)
-        return n
-    rm_stale_partition(root, batch_id)
-    return 0
-
-
-def batch_partitions(
-    root: str, prefix: str = "batch_id="
-) -> list[tuple[str, int]]:
-    """(entry, id) of every ``<prefix><id>`` partition directly under
-    root; [] when root is absent. One top-level listing, never a
-    recursive walk of the part files. Routes through fsio, NOT os.path:
-    a URL-form root (file:///...) is a path Spark's writers accept, and
-    an os.path check on it would be silently empty forever."""
-    fs, path = fsio.url_to_fs(root)
-    if not fs.exists(path):
-        return []
-    found = []
-    for entry in fs.ls(path, detail=False):
-        name = str(entry).rstrip("/").rsplit("/", 1)[-1]
-        if name.startswith(prefix):
-            try:
-                found.append((entry, int(name[len(prefix):])))
-            except ValueError:
-                continue
-    return found
+from doc2dataset_spark.operators.time_travel import (
+    BATCH_PREFIX,
+    batch_path,
+    drop_batch_times_above,
+    list_batches,
+)
 
 
 def sweep_stale_batches(
-    out_dir: str, max_id: int, prefix: str = "batch_id="
+    out_dir: str, max_id: int, prefix: str = BATCH_PREFIX
 ) -> int:
     """Remove ``<prefix><id>`` partitions with id > max_id under out_dir
-    (rule 4). Returns the number of partitions removed. No-op if out_dir
-    is absent."""
+    and, for ``batch_id=`` logs, their landing times (rule 4). Returns
+    the number of partitions removed."""
     fs, path = fsio.url_to_fs(out_dir)
-    if not fs.exists(path):
-        return 0
-    stale = [e for e, bid in batch_partitions(out_dir, prefix) if bid > max_id]
-    for entry in stale:
-        fs.rm(entry, recursive=True)
-    if prefix == "batch_id=":
+    stale = [b for b in list_batches(out_dir, prefix) if b > max_id]
+    for bid in stale:
+        fs.rm(batch_path(path, bid, prefix), recursive=True)
+    if prefix == BATCH_PREFIX:
         # the swept batches' landing times must go with them, or a
         # renumbered replay would inherit the dead incarnation's clock.
-        # UNCONDITIONAL: an empty micro-batch records a landing time but
-        # writes no partition, so gating this on removed>0 would let a
-        # dead incarnation's empty-batch times survive and misdirect
+        # UNCONDITIONAL: a dead incarnation's manifest may hold times of
+        # batches whose partitions are already gone (a landing that
+        # crashed between its write and the manifest update, or a log
+        # written before empty landings forgot their time), so gating
+        # this on removed>0 would let them survive and misdirect
         # timestamp resolution.
-        from doc2dataset_spark.operators.time_travel import (
-            drop_batch_times_above,
-        )
-
         drop_batch_times_above(out_dir, max_id)
     return len(stale)
 
@@ -145,7 +97,7 @@ def run_batchwise(
     checkpoint_dir: str,
     step: Callable[[DataFrame, int], None],
     sweep_roots: Sequence[str],
-    prefix: str = "batch_id=",
+    prefix: str = BATCH_PREFIX,
     offset: int = 0,
     output_mode: str | None = None,
     refuse_roots: Sequence[str] = (),

@@ -38,7 +38,6 @@ SLOW_TIER = {
     "test_property_text.py",
     "test_property_cc_wat.py",
     "test_property_multimodal.py",
-    "test_pipeline_e2e.py",
     "test_text_index.py",
     "test_streaming.py",
     "test_vector_index.py",
@@ -49,7 +48,6 @@ SLOW_TIER = {
     "test_streaming_drift.py",
     "test_streaming_packing.py",
     "test_streaming_rollup.py",
-    "test_http_e2e.py",
     "test_tws.py",
 }
 

@@ -7,9 +7,12 @@
    served doc-id sets must equal the first run's — for curate, neardup
    and the update-mode upsert sink.
 2. One wiring: outside ``run_batchwise`` no package module spells the
-   micro-batch sink wiring, and outside ``land_batch`` no streaming
-   module spells the dynamic-overwrite option (code only; docstrings
-   and comments are free to name them).
+   micro-batch sink wiring; outside the batch-log layer
+   (operators/time_travel.py) no module spells a ``batch_id=``
+   partition or lands one with the dynamic-overwrite option, which only
+   the sink writer and ``delete_from_postings`` share; and the retired
+   private listing / snapshot helpers are spelled nowhere (code only;
+   docstrings and comments are free to name them).
 """
 
 from __future__ import annotations
@@ -220,11 +223,25 @@ def _spellings(word: str, root: Path) -> set[str]:
 
 def test_micro_batch_wiring_lives_in_run_batchwise():
     runner = {"streaming/util.py:run_batchwise"}
-    assert _spellings("foreachBatch", PKG) == runner
-    assert _spellings("checkpointLocation", PKG) == runner
-    assert _spellings("writeStream", PKG) == runner | {
-        "streaming/events.py:run_to_memory"
+    # word -> the only places the package may spell it in code
+    cases = {
+        "foreachBatch": runner,
+        "checkpointLocation": runner,
+        "writeStream": runner | {"streaming/events.py:run_to_memory"},
+        # the batch-log landing, the sink writer and the deletion
+        # rewrite of several partitions at once
+        "partitionOverwriteMode": {
+            "operators/time_travel.py:land_batch",
+            "operators/index_maintenance.py:delete_from_postings",
+            "sinks/writer.py:write_parquet",
+            "sinks/writer.py:write_orc",
+            "sinks/writer.py:_write_meta_sidecar",
+        },
+        # no module but the batch-log layer spells a batch partition
+        "batch_id=": {"operators/time_travel.py:<module>"},
+        # the retired private listing and snapshot helpers
+        "_batch_of": set(),
+        "_latest_snapshot_batch": set(),
     }
-    assert _spellings("partitionOverwriteMode", PKG / "streaming") == {
-        "streaming/util.py:land_batch"
-    }
+    for word, allowed in cases.items():
+        assert _spellings(word, PKG) == allowed, word

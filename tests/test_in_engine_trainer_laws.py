@@ -1,6 +1,7 @@
-"""Hand-computed exactness + invariants for the session-7 in-engine
-training ops (the oracle hash pins fixture values; these pin the math
-on corpora built here, where every step is known by construction)."""
+"""In-engine trainer laws: hand-computed exactness + invariants for
+the BPE merge learner and the logistic-regression classifier trainer
+(the oracle hash pins fixture values; these pin the math on corpora
+built here, where every step is known by construction)."""
 
 from __future__ import annotations
 

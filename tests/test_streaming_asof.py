@@ -362,9 +362,9 @@ def test_ordered_variant_zero_row_replay_clears_stale_partition(
 ):
     """Round-12 advice: dynamic overwrite writes nothing for a zero-row
     frame, so a replay whose recomputed attributed set is empty used to
-    leave the prior run's partition in place. _land_exact must delete
+    leave the prior run's partition in place. land_batch must delete
     it."""
-    from doc2dataset_spark.streaming.asof import _land_exact
+    from doc2dataset_spark.operators.time_travel import land_batch
 
     adir = (tmp_path / "attributed").as_posix()
     frame = spark.createDataFrame(
@@ -373,10 +373,10 @@ def test_ordered_variant_zero_row_replay_clears_stale_partition(
         "purchase_value double, v_ts timestamp, last_view_value double, "
         "gap_us bigint",
     )
-    assert _land_exact(frame, adir, 3) == 1
+    assert land_batch(frame, adir, 3) == 1
     assert os.path.isdir(os.path.join(adir, "batch_id=3"))
     # the replay recomputes batch 3 as EMPTY: the stale partition must go
-    assert _land_exact(frame.limit(0), adir, 3) == 0
+    assert land_batch(frame.limit(0), adir, 3) == 0
     assert not os.path.exists(os.path.join(adir, "batch_id=3"))
 
 

@@ -464,7 +464,7 @@ def test_late_ingest_empty_batch_clears_stale_state(spark, tmp_path):
         hypertable_wm_state,
         ingest_hypertable_late_batch,
     )
-    from doc2dataset_spark.streaming.util import land_batch
+    from doc2dataset_spark.operators.time_travel import land_batch
 
     out = (tmp_path / "hte_out").as_posix()
     two_h = 2 * 3600 * 1_000_000
@@ -531,9 +531,9 @@ def test_final_asof_equals_snapshot_and_is_contained_in_live(spark, tmp_path):
         for g, b, n, t in snap:
             assert live[(g, b)] == (n, t)
     # pre-watermarked-history refusal: no wm snapshot can precede batch 0
-    from doc2dataset_spark.streaming.util import rm_stale_partition
+    from doc2dataset_spark.operators.time_travel import clear_batch
 
-    rm_stale_partition((tmp_path / "hta_out" / "wm").as_posix(), 0)
+    clear_batch((tmp_path / "hta_out" / "wm").as_posix(), 0)
     with _pytest.raises(ValueError, match="watermark snapshot"):
         serve_hypertable_final_asof(spark, out, 0)
 
@@ -727,7 +727,7 @@ def test_empty_recompute_forgets_landing_time(spark, tmp_path):
         hourly_partial,
         ingest_hypertable_late_batch,
     )
-    from doc2dataset_spark.streaming.util import land_batch
+    from doc2dataset_spark.operators.time_travel import land_batch
 
     out = (tmp_path / "htt_out").as_posix()
     hdir = os.path.join(out, "hourly")
@@ -1048,12 +1048,12 @@ def test_decide_compaction_legacy_sidecar_refuses_not_crashes(spark, tmp_path):
         decide_hypertable_compaction,
         hourly_partial,
     )
-    from doc2dataset_spark.streaming.util import land_batch, land_batch_exact
+    from doc2dataset_spark.operators.time_travel import land_batch
 
     out = (tmp_path / "legacy").as_posix()
     for i in range(3):
         frame = _ts_frame(spark, [(10 * i + j, f"0{i}:1{j}", j + 1) for j in range(3)])
-        land_batch_exact(hourly_partial(frame), os.path.join(out, "hourly"), i)
+        land_batch(hourly_partial(frame), os.path.join(out, "hourly"), i)
         # the OLD 5-column wm snapshot shape, pre-n_partial_rows
         land_batch(
             spark.createDataFrame(

@@ -1,6 +1,8 @@
-"""Hand-computed exactness + invariants for the session-6 ops (the
-oracle hash pins fixture values; these pin the math on corpora built
-here, where every count is known by construction)."""
+"""Token-statistics laws: hand-computed exactness + invariants for the
+BPE pair counts, the n-gram LM's negative log-likelihood and the DSIR
+importance weights (the oracle hash pins fixture values; these pin the
+math on corpora built here, where every count is known by
+construction)."""
 
 from __future__ import annotations
 
