@@ -85,7 +85,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from doc2dataset_spark import fsio
-from doc2dataset_spark.operators.time_travel import batch_dir, list_batches
+from doc2dataset_spark.operators.time_travel import (
+    batch_dir,
+    list_batches,
+    partition_columns,
+)
 
 
 def postings_path(index_dir: str) -> str:
@@ -138,6 +142,12 @@ def compaction_fs(root: str):
     return fs, p
 
 
+def horizon_marker(root: str) -> str:
+    """The ``__compaction_horizon.json`` sibling of the log at ``root``
+    — the one place its name is spelled."""
+    return f"{root.rstrip('/')}__compaction_horizon.json"
+
+
 def compaction_horizon(fs, root: str) -> int | None:
     """The highest batch_id ever finalized by compaction under root
     (None if never compacted). Persisted as a ``__compaction_horizon``
@@ -145,7 +155,7 @@ def compaction_horizon(fs, root: str) -> int | None:
     replay is no longer safe: pre-horizon batches are finalized — a
     replay would re-land their documents under renumbered batch ids and
     the stale-batch sweep would delete the compacted history itself."""
-    marker = f"{root.rstrip('/')}__compaction_horizon.json"
+    marker = horizon_marker(root)
     if not fs.exists(marker):
         return None
     with fs.open(marker, "rb") as fh:
@@ -155,7 +165,7 @@ def compaction_horizon(fs, root: str) -> int | None:
 def _write_horizon(fs, root: str, upto: int | None) -> None:
     """Set the horizon sidecar to ``upto``; None removes it (the
     rollback to a never-compacted log)."""
-    marker = f"{root.rstrip('/')}__compaction_horizon.json"
+    marker = horizon_marker(root)
     if upto is None:
         if fs.exists(marker):
             fs.rm(marker)
@@ -304,7 +314,6 @@ def compact_index_history(
     spark: SparkSession,
     postings_path: str,
     upto_batch: int,
-    partition_cols: tuple[str, ...] = (),
     shuffle_partitions: int = 1,
 ) -> dict:
     """Merge ``batch_id <= upto_batch`` partitions into one
@@ -313,15 +322,18 @@ def compact_index_history(
     scan) and rewritten, the tail partition dirs are renamed into the
     new root untouched. Cost is O(head), not O(index).
 
-    ``partition_cols``: the sub-partition columns under batch_id —
-    ("band",) for the MinHash index, ("tb",) for text postings,
-    ("cent_id",) for IVF postings, () for winnow postings / doclen.
+    The merged head keeps the log's own sub-partition columns under
+    batch_id (band for the MinHash index, tb for text postings, cent_id
+    for IVF postings, none for winnow postings / doclen), read from the
+    log's directories (``time_travel.partition_columns``): a family's
+    layout is spelled only in its append.
 
     Returns {batches_before, batches_after, files_before, files_after}.
     """
     fs, p = compaction_fs(postings_path)
     files_before = sum(1 for f in fs.find(p) if f.endswith(".parquet"))
     batches = list_batches(postings_path)
+    parts = ["batch_id", *partition_columns(postings_path)]
 
     head = (
         spark.read.option("mergeSchema", "true")
@@ -330,7 +342,6 @@ def compact_index_history(
         .filter(F.col("batch_id") <= upto_batch)
         .withColumn("batch_id", F.lit(upto_batch))
     )
-    parts = ["batch_id", *partition_cols]
     # repartition(n, cols) HASH-partitions by cols: all rows of one
     # (batch_id, band/tb/cent_id) combo land in a single task, so each
     # hive partition dir gets exactly one file regardless of n — n only
@@ -368,7 +379,6 @@ def delete_from_postings(
     postings_path: str,
     keys: list[int] | DataFrame,
     key_col: str = "doc_id",
-    partition_cols: tuple[str, ...] = (),
 ) -> dict:
     """Remove every posting row whose ``key_col`` is in ``keys`` —
     the GDPR/right-to-be-forgotten primitive for the persisted indexes.
@@ -380,13 +390,14 @@ def delete_from_postings(
 
     Partition-scoped, never a full rewrite: one partition-pruned probe
     finds the (batch_id, band/tb/cent_id) partitions that actually
-    contain the keys, ONLY those partitions are rewritten (dynamic
-    overwrite), and partitions left EMPTY by the deletion are removed
-    explicitly — dynamic overwrite only replaces partitions present in
-    the written data, so an all-rows-deleted partition would otherwise
-    silently keep its old files (the failure this function exists to
-    prevent). At 100 TB a deletion touches O(partitions containing the
-    keys), not O(index).
+    contain the keys (the sub-partition columns read from the log's own
+    directories, ``time_travel.partition_columns``), ONLY those
+    partitions are rewritten (dynamic overwrite), and partitions left
+    EMPTY by the deletion are removed explicitly — dynamic overwrite
+    only replaces partitions present in the written data, so an
+    all-rows-deleted partition would otherwise silently keep its old
+    files (the failure this function exists to prevent). At 100 TB a
+    deletion touches O(partitions containing the keys), not O(index).
 
     Crash contract: survivors are rewritten BEFORE empty partitions are
     removed; a crash in between leaves only already-emptied partitions'
@@ -396,7 +407,7 @@ def delete_from_postings(
     Returns {rows_deleted, partitions_rewritten, partitions_removed}.
     """
     fs, p = fsio.url_to_fs(postings_path)
-    parts = ["batch_id", *partition_cols]
+    parts = ["batch_id", *partition_columns(postings_path)]
     posts = spark.read.parquet(postings_path)
     # cast probe keys to the LOG's own key dtype, not a hard-coded
     # bigint: a string identity column would otherwise cast to all-NULL
@@ -497,10 +508,7 @@ def delete_docs_minhash(
     meta and other batches untouched)."""
     from doc2dataset_spark.operators import minhash_index as mi
 
-    return delete_from_postings(
-        spark, mi._bands_path(index_dir), doc_ids,
-        key_col="doc_id", partition_cols=("band",),
-    )
+    return delete_from_postings(spark, mi._bands_path(index_dir), doc_ids)
 
 
 def delete_docs_winnow(
@@ -510,10 +518,7 @@ def delete_docs_winnow(
     frequency needs no fixup: df is derived from the postings at serve
     time (winnow_index module docstring), so it is consistent the moment
     the rows are gone."""
-    return delete_from_postings(
-        spark, postings_path(index_dir), doc_ids,
-        key_col="doc_id", partition_cols=(),
-    )
+    return delete_from_postings(spark, postings_path(index_dir), doc_ids)
 
 
 def delete_docs_text(
@@ -525,14 +530,8 @@ def delete_docs_text(
     recomputed or every surviving score silently drifts."""
     from doc2dataset_spark.operators import text_index as ti
 
-    out = delete_from_postings(
-        spark, postings_path(index_dir), doc_ids,
-        key_col="doc_id", partition_cols=("tb",),
-    )
-    dl = delete_from_postings(
-        spark, ti._doclen_path(index_dir), doc_ids,
-        key_col="doc_id", partition_cols=(),
-    )
+    out = delete_from_postings(spark, postings_path(index_dir), doc_ids)
+    dl = delete_from_postings(spark, ti._doclen_path(index_dir), doc_ids)
     ti.refresh_index_stats(spark, index_dir)
     out["doclen_rows_deleted"] = dl["rows_deleted"]
     return out
@@ -546,8 +545,7 @@ def delete_vecs_ivf(
     is deliberately untouched — deleting a vector must not re-train the
     index, or every other vector's cell assignment could shift."""
     return delete_from_postings(
-        spark, postings_path(index_dir), vec_ids,
-        key_col="vec_id", partition_cols=("cent_id",),
+        spark, postings_path(index_dir), vec_ids, key_col="vec_id"
     )
 
 

@@ -33,11 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from doc2dataset_spark.operators.index_maintenance import meta_path
-from doc2dataset_spark.operators.time_travel import (
-    land_batch,
-    record_batch_time,
-    reset_batch_times,
-)
+from doc2dataset_spark.operators.time_travel import drop_log, land_batch
 from doc2dataset_spark.queries.dedup import N_BANDS, ROWS_PER_BAND, bands_of
 from doc2dataset_spark.session import load_table
 
@@ -118,45 +114,33 @@ def build_minhash_index(
 
         params = minhash_bands_rows(docs.count())
     b, r = params if params is not None else (N_BANDS_DEFAULT, ROWS_DEFAULT)
-    # banding is INDEX STATE: persist it BEFORE the postings so a crash
-    # between the two writes can never leave banded postings with no
-    # banding record (index_banding would fall back to 4x4 and later
-    # appends would silently produce zero cross-batch candidates — the
-    # exact recall-loss failure the meta exists to prevent; meta with no
-    # postings is harmless: the rerun build overwrites both)
+    # banding is INDEX STATE: drop the old postings, then persist the
+    # banding BEFORE the new postings land, so a crash can never leave
+    # banded postings with no (or another) banding record — appends would
+    # band with the wrong parameters and silently produce zero cross-batch
+    # candidates; meta with no postings is harmless (the rerun build
+    # overwrites both)
+    drop_log(_bands_path(index_dir))
     _write_meta(spark, index_dir, b, r)
-    # reset BEFORE the overwrite (build_text_index's ordering, round-13
-    # advice): a crash between the batch_id=0 write and a post-write
-    # reset would leave the dead incarnation's landing times over the
-    # new index — serving post-rebuild content as pre-rebuild history.
-    # Reset-then-crash-before-write merely loses resolvable timestamps,
-    # which resolve_asof_ts refuses loudly.
-    reset_batch_times(_bands_path(index_dir))  # rebuild = fresh history
-    (
-        bands_of(docs, b, r)
-        .withColumn("batch_id", F.lit(0))
-        .write.mode("overwrite")
-        .partitionBy("batch_id", "band")
-        .parquet(_bands_path(index_dir))
-    )
-    record_batch_time(_bands_path(index_dir), 0)
+    append_minhash_batch(spark, docs, index_dir, 0)
 
 
 def append_minhash_batch(
     spark: SparkSession, docs: DataFrame, index_dir: str, batch_id: int
 ) -> None:
-    """Incremental ingest: signature pass over ONE new batch of
-    (doc_id, text) documents, appended as its own batch_id partition —
-    the existing postings are never read or rewritten. Dynamic partition
-    overwrite scopes the write to this batch's partitions, so a retried
-    ingest job is idempotent (exactly-once per batch_id) while other
-    batches stay untouched. The batch is banded with the INDEX'S OWN
-    persisted (bands, rows) — never a caller-supplied or default value —
-    so appending to an auto-built index keeps cross-batch candidates
-    intact (index_banding). A purely stream-built index (first ever
-    write is an append, no prior build) gets its banding record stamped
-    here — mirroring append_winnow_batch — so the parameters it was
-    born with are persisted, not re-derived from code defaults."""
+    """Incremental ingest (and a build's batch 0): signature pass over
+    ONE new batch of (doc_id, text) documents, appended as its own
+    batch_id partition — the existing postings are never read or
+    rewritten. Dynamic partition overwrite scopes the write to this
+    batch's partitions, so a retried ingest job is idempotent
+    (exactly-once per batch_id) while other batches stay untouched. The
+    batch is banded with the INDEX'S OWN persisted (bands, rows) — never
+    a caller-supplied or default value — so appending to an auto-built
+    index keeps cross-batch candidates intact (index_banding). A purely
+    stream-built index (first ever write is an append, no prior build)
+    gets its banding record stamped here — mirroring append_winnow_batch
+    — so the parameters it was born with are persisted, not re-derived
+    from code defaults."""
     got = _read_banding(index_dir)
     b, r = got if got is not None else (N_BANDS_DEFAULT, ROWS_DEFAULT)
     if got is None:

@@ -38,10 +38,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from doc2dataset_spark.operators.index_maintenance import postings_path
-from doc2dataset_spark.operators.time_travel import (
-    land_batch,
-    reset_batch_times,
-)
+from doc2dataset_spark.operators.time_travel import drop_log, land_batch
 from doc2dataset_spark.queries.search_extras import BM25_B, BM25_K1
 from doc2dataset_spark.queries.textops import _TOKS
 
@@ -76,11 +73,18 @@ def build_text_index(
     spark: SparkSession, sf_dir: str, index_dir: str
 ) -> None:
     """Tokenize the documents table once and persist postings (term-
-    bucketed), document lengths, and corpus stats."""
+    bucketed), document lengths, and corpus stats: the three are dropped
+    and the whole corpus lands as batch 0 through the append's write, so
+    a rebuild keeps none of the old index's batches."""
     from doc2dataset_spark.session import load_table
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    reset_batch_times(postings_path(index_dir))  # rebuild = fresh history
+    for root in (
+        postings_path(index_dir),
+        _doclen_path(index_dir),
+        _stats_path(index_dir),
+    ):
+        drop_log(root)
     _write_index(docs, index_dir, batch_id=0)
 
 
@@ -125,7 +129,7 @@ def refresh_index_stats(spark: SparkSession, index_dir: str) -> None:
 
 
 def append_to_text_index(
-    spark: SparkSession, new_docs: DataFrame, index_dir: str, batch_id: int = 1
+    spark: SparkSession, new_docs: DataFrame, index_dir: str, batch_id: int
 ) -> None:
     """Incremental index update: tokenize ONLY the new documents, land
     their postings under ``batch_id=<n>/tb=<b>`` and their doclen rows

@@ -18,12 +18,18 @@ through it instead of spelling it:
   one top-level listing, the newest one (optionally strictly before n:
   the replay-correct read), and that partition's rows.
 - ``batch_dir`` / ``batch_path``  the one spelling of a partition.
+- ``partition_columns``  the sub-partition columns under ``batch_id``,
+  read from the log's own directories, so compaction and deletion keep
+  a family's layout without being told it.
+- ``drop_log``  remove a whole log, its landing times and its horizon:
+  every index build is a ``drop_log`` followed by the family's append
+  of batch 0, so a family's layout is spelled once, in its append.
 
 The replay rules these serve are stated in streaming/util.py, the
-compaction protocol in operators/index_maintenance.py. Full rebuilds of
-batch 0, ``delete_from_postings``' multi-partition rewrite and the
-``batch=<n>`` logs of streaming curate / neardup / scored_gate keep
-their own write shapes.
+compaction protocol in operators/index_maintenance.py.
+``delete_from_postings``' multi-partition rewrite and the ``batch=<n>``
+logs of streaming curate / neardup / scored_gate keep their own write
+shapes.
 
 That log IS a commit history, so Iceberg/Delta-style time travel falls
 out of the layout for free: reading the state "as of batch N" is
@@ -129,6 +135,52 @@ def read_snapshot(
     batch reads only strictly-prior snapshots."""
     k = latest_batch(root, before)
     return None if k is None else spark.read.parquet(batch_path(root, k))
+
+
+def partition_columns(root: str) -> tuple[str, ...]:
+    """The sub-partition columns under ``batch_id`` in the log at
+    ``root`` (band / tb / cent_id, or none), read from the log itself:
+    one listing per level, down the first ``<col>=<v>`` directory of the
+    oldest batch (part files never carry a ``=``). () when the log
+    holds no batch."""
+    ids = list_batches(root)
+    if not ids:
+        return ()
+    fs, p = fsio.url_to_fs(root)
+    level, cols = batch_path(p, ids[0]), []
+    while True:
+        names = [str(e).rstrip("/").rsplit("/", 1)[-1] for e in fs.ls(level)]
+        subs = [n for n in names if "=" in n]
+        if not subs:
+            return tuple(cols)
+        cols.append(subs[0].split("=", 1)[0])
+        level = f"{level}/{subs[0]}"
+
+
+def drop_log(root: str) -> None:
+    """Remove the log at ``root`` so the next landing starts fresh
+    history — the first step of every index build. Refuses over the
+    ``__old_compact`` debris of a crashed compaction swap, as a
+    compaction does. Order: the landing-time manifest, then the data,
+    then the ``__compaction_horizon`` sidecar. The manifest lives
+    OUTSIDE the data dir, so a rebuilt log that kept it would inherit
+    the dead incarnation's landing times and first-landing-wins would
+    serve post-rebuild content as pre-rebuild history; removing it
+    first means a crash can only lose resolvable timestamps, which
+    ``resolve_asof_ts`` refuses loudly. The horizon goes last, so a
+    crash never leaves compacted history without its horizon: the worst
+    it leaves is a horizon over a dropped log, a loud refusal."""
+    # the compaction protocol builds on this layer, so it is imported
+    # here rather than at module level
+    from doc2dataset_spark.operators.index_maintenance import (
+        compaction_fs,
+        horizon_marker,
+    )
+
+    fs, p = compaction_fs(root)
+    for path in (_times_marker(p), p, horizon_marker(p)):
+        if fs.exists(path):
+            fs.rm(path, recursive=True)
 
 
 def clear_batch(root: str, batch_id: int) -> None:
@@ -299,21 +351,6 @@ def record_batch_time(
     times[batch_id] = t
     _write_times(fs, p, times)
     return t
-
-
-def reset_batch_times(root: str) -> None:
-    """Forget the whole landing-time manifest — called by the build_*
-    functions before their from-scratch ``batch_id=0`` overwrite. The
-    sidecar lives OUTSIDE the data dir (renames/deletes of the log don't
-    touch it), so without this a rebuilt index would inherit the dead
-    incarnation's landing times and first-landing-wins would silently
-    serve post-rebuild content as pre-rebuild history; after the reset,
-    a pre-rebuild timestamp correctly refuses with 'predates the first
-    recorded batch' (round-13 self-review)."""
-    fs, p = fsio.url_to_fs(root)
-    marker = _times_marker(p)
-    if fs.exists(marker):
-        fs.rm(marker)
 
 
 def forget_batch_time(root: str, batch_id: int) -> bool:

@@ -29,11 +29,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from doc2dataset_spark.operators.index_maintenance import postings_path
-from doc2dataset_spark.operators.time_travel import (
-    land_batch,
-    record_batch_time,
-    reset_batch_times,
-)
+from doc2dataset_spark.operators.time_travel import drop_log, land_batch
 from doc2dataset_spark.queries.dedup import normalized_embeddings, spark_dot
 
 DEFAULT_NPROBE = 1
@@ -53,8 +49,9 @@ def build_ivf_index(
 ) -> None:
     """Quantize the embeddings table against its first ``n_centroids``
     vectors (seed centroids — the sim_ann_ivf convention; a trained
-    centroid frame slots in unchanged) and persist centroids + cell-
-    partitioned postings.
+    centroid frame slots in unchanged): persist the centroids, then land
+    every vector as batch 0 through ``append_to_ivf_index`` — the one
+    quantizer, so built and appended postings cannot drift.
 
     ``n_centroids``: the default 16 is the oracle-pinned fixture
     constant; ``"auto"`` computes cells ≈ √n via autoparams.ivf_cells
@@ -67,43 +64,13 @@ def build_ivf_index(
         from doc2dataset_spark.operators.autoparams import ivf_cells
 
         n_centroids = ivf_cells(n.count())
-    cents = n.filter(F.col("vec_id") < n_centroids).select(
+    # drop BEFORE the new centroids land: a crash in between must never
+    # leave the old postings under a codebook they were not quantized by
+    drop_log(postings_path(index_dir))
+    n.filter(F.col("vec_id") < n_centroids).select(
         F.col("vec_id").alias("cent_id"), F.col("ne").alias("ce")
-    )
-    scored = n.crossJoin(F.broadcast(cents)).select(
-        "vec_id", "ne", "cent_id",
-        spark_dot(F.col("ne"), F.col("ce")).alias("sim"),
-    )
-    assign = (
-        scored.groupBy("vec_id")
-        .agg(
-            F.max(
-                F.struct(
-                    F.col("sim"),
-                    (-F.col("cent_id")).alias("neg_cent"),
-                    F.col("cent_id"),
-                    F.col("ne"),
-                )
-            ).alias("best")
-        )
-        .select(
-            "vec_id",
-            F.col("best.ne").alias("ne"),
-            F.col("best.cent_id").alias("cent_id"),
-        )
-    )
-    cents.write.mode("overwrite").parquet(_centroids_path(index_dir))
-    # reset BEFORE the overwrite (build_text_index's ordering): a crash
-    # after the write but before a post-write reset would leave the dead
-    # incarnation's landing times over the new index
-    reset_batch_times(postings_path(index_dir))  # rebuild = fresh history
-    (
-        assign.withColumn("batch_id", F.lit(0))
-        .write.mode("overwrite")
-        .partitionBy("batch_id", "cent_id")
-        .parquet(postings_path(index_dir))
-    )
-    record_batch_time(postings_path(index_dir), 0)
+    ).write.mode("overwrite").parquet(_centroids_path(index_dir))
+    append_to_ivf_index(spark, n, index_dir, 0)
 
 
 def probe_ivf_index(
@@ -172,16 +139,16 @@ def append_to_ivf_index(
     spark: SparkSession,
     new_vectors: DataFrame,
     index_dir: str,
-    batch_id: int = 1,
+    batch_id: int,
 ) -> None:
-    """Incremental index update: quantize NEW vectors against the SAVED
-    centroids (never re-deriving them — the index's quantization must stay
-    frozen or old postings silently live in the wrong cells) and land
-    them under ``batch_id=<n>/cent_id=<k>`` with DYNAMIC partition
-    overwrite — a replayed batch id rewrites exactly its own partitions
-    (the streaming curate/neardup idempotence discipline), so crash-and-
-    retry ingest never duplicates postings. Probes prune on cent_id
-    regardless of the batch level.
+    """Incremental index update (and a build's batch 0): quantize NEW
+    vectors against the SAVED centroids (never re-deriving them — the
+    index's quantization must stay frozen or old postings silently live
+    in the wrong cells) and land them under ``batch_id=<n>/cent_id=<k>``
+    with DYNAMIC partition overwrite — a replayed batch id rewrites
+    exactly its own partitions (the streaming curate/neardup idempotence
+    discipline), so crash-and-retry ingest never duplicates postings.
+    Probes prune on cent_id regardless of the batch level.
 
     ``new_vectors``: (vec_id, ne) unit-normalized."""
     cents = spark.read.parquet(_centroids_path(index_dir))

@@ -44,11 +44,7 @@ from doc2dataset_spark.operators.index_maintenance import (
     meta_path,
     postings_path,
 )
-from doc2dataset_spark.operators.time_travel import (
-    land_batch,
-    record_batch_time,
-    reset_batch_times,
-)
+from doc2dataset_spark.operators.time_travel import drop_log, land_batch
 from doc2dataset_spark.queries.dedup_detectors import (
     WINNOW_MAXDF,
     WINNOW_THRESHOLD,
@@ -66,21 +62,21 @@ def _write_meta(spark: SparkSession, index_dir: str) -> None:
     ).coalesce(1).write.mode("overwrite").parquet(meta_path(index_dir))
 
 
-def _check_meta(index_dir: str) -> None:
+def _check_meta(index_dir: str) -> bool:
     """Fingerprinting parameters are INDEX STATE: fingerprints winnowed
     at a different window W never equal the stored ones, so an append
     from a code version whose WINNOW_W changed would silently produce
     zero cross-batch matches (the banding-mismatch failure mode, caught
     here by refusing the write instead of persisting a parameter — W is
     a module constant, not a call argument, so validation is the right
-    seam). Pre-meta indexes (none shipped) pass through. Resolved
+    seam). Returns whether the index has a parameter record. Resolved
     through fsio.read_parquet_dir → url_to_fs so a memory:// or remote
     index_dir validates the same as a local one."""
     from doc2dataset_spark.fsio import read_parquet_dir
 
     table = read_parquet_dir(meta_path(index_dir))
     if table is None:
-        return
+        return False
     row = table.to_pylist()[0]
     if int(row["w"]) != WINNOW_W:
         raise RuntimeError(
@@ -89,6 +85,7 @@ def _check_meta(index_dir: str) -> None:
             "appending would silently never match the stored "
             "fingerprints; rebuild the index (or run the old code)"
         )
+    return True
 
 
 def build_winnow_index(
@@ -99,41 +96,31 @@ def build_winnow_index(
     cost (row-local shingle/hash/window-min lambdas + one explode); the
     persisted postings are ~2/(W+1) the size of a full shingle index at
     the same detection floor (the winnowing density guarantee)."""
-    fps = winnow_fingerprints(load_table(spark, sf_dir, "documents"))
-    # meta BEFORE postings: a crash between the two writes must never
-    # leave fingerprinted postings with no parameter record (meta with
+    # drop, then meta BEFORE postings: a crash can never leave
+    # fingerprinted postings with no (or another) parameter record, and
+    # the rebuild is never refused over the old index's window (meta with
     # no postings is harmless — the rerun build overwrites both)
+    drop_log(postings_path(index_dir))
     _write_meta(spark, index_dir)
-    # reset BEFORE the overwrite (build_text_index's ordering): a crash
-    # after the write but before a post-write reset would leave the dead
-    # incarnation's landing times over the new index
-    reset_batch_times(postings_path(index_dir))  # rebuild = fresh history
-    (
-        fps.withColumn("batch_id", F.lit(0))
-        .write.mode("overwrite")
-        .partitionBy("batch_id")
-        .parquet(postings_path(index_dir))
+    append_winnow_batch(
+        spark, load_table(spark, sf_dir, "documents"), index_dir, 0
     )
-    record_batch_time(postings_path(index_dir), 0)
 
 
 def append_winnow_batch(
     spark: SparkSession, docs: DataFrame, index_dir: str, batch_id: int
 ) -> None:
-    """Incremental ingest: fingerprint ONE new batch of (doc_id, text)
-    documents, appended as its own batch_id partition — existing
-    postings are never read or rewritten. Dynamic partition overwrite
-    scopes the write to this batch's partition, so a retried ingest job
-    is idempotent (exactly-once per batch_id). Refuses to append when
-    the index's persisted winnow window differs from this code's
-    (_check_meta); a fresh directory is stamped on first append."""
-    from doc2dataset_spark.fsio import url_to_fs
-
-    _check_meta(index_dir)
-    fs, _ = url_to_fs(index_dir)
-    # stamp the fresh directory BEFORE the postings land (same crash
-    # ordering as build_winnow_index: parameters first, data second)
-    if not fs.exists(postings_path(index_dir)):
+    """Incremental ingest (and a build's batch 0): fingerprint ONE new
+    batch of (doc_id, text) documents, appended as its own batch_id
+    partition — existing postings are never read or rewritten. Dynamic
+    partition overwrite scopes the write to this batch's partition, so a
+    retried ingest job is idempotent (exactly-once per batch_id).
+    Refuses to append when the index's persisted winnow window differs
+    from this code's (_check_meta); an index with no parameter record is
+    stamped on its first append, as append_minhash_batch does."""
+    # stamp BEFORE the postings land (same crash ordering as
+    # build_winnow_index: parameters first, data second)
+    if not _check_meta(index_dir):
         _write_meta(spark, index_dir)
     land_batch(
         winnow_fingerprints(docs),

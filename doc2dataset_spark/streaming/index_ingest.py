@@ -54,18 +54,14 @@ def run_index_ingest(
     """Wire the stream and block until drained; the index must already
     exist (build_ivf_index) — ingest only ever quantizes against its
     frozen centroids."""
-    postings = postings_path(index_dir)
     _run_batchwise_ingest(
         vectors_stream,
         checkpoint_dir,
         lambda df, bid: append_to_ivf_index(
             df.sparkSession, normalize_vectors(df), index_dir, batch_id=bid
         ),
-        [postings],
+        [postings_path(index_dir)],
         compact_past_batches=compact_past_batches,
-        compactor=lambda spark, upto: compact_index_history(
-            spark, postings, upto, partition_cols=("cent_id",)
-        ),
     )
 
 
@@ -88,23 +84,16 @@ def run_text_index_ingest(
         refresh_index_stats,
     )
 
-    postings, doclen = postings_path(index_dir), _doclen_path(index_dir)
-
-    def _compact(spark, upto):
-        # both batch-partitioned artifacts compact on the same clock;
-        # n/avgdl need no refresh — doclen CONTENT is preserved
-        compact_index_history(spark, postings, upto, partition_cols=("tb",))
-        compact_index_history(spark, doclen, upto)
-
+    # both batch-partitioned artifacts compact on the same clock;
+    # n/avgdl need no refresh — doclen CONTENT is preserved
     fired = _run_batchwise_ingest(
         docs_stream,
         checkpoint_dir,
         lambda df, bid: append_to_text_index(
             df.sparkSession, df, index_dir, batch_id=bid
         ),
-        [postings, doclen],
+        [postings_path(index_dir), _doclen_path(index_dir)],
         compact_past_batches=compact_past_batches,
-        compactor=_compact,
     )
     if fired:
         # a fresh-checkpoint sweep may have removed doclen batches the
@@ -127,11 +116,13 @@ def _run_batchwise_ingest(
     stream drains the newest N batches are left intact (they stay
     individually replayable — a same-checkpoint restart replays recent
     batches, so the replay window must survive compaction) and
-    everything older is finalized into one partition via the family's
-    ``compactor(spark, upto_batch)`` (head-only: the kept tail is
-    renamed, never rewritten). Serving results are invariant; only
-    replay of the compacted (pre-window) batches is finalized — the
-    compact_index_history contract, wired into the stream lifecycle."""
+    everything older is finalized into one partition via
+    ``compactor(spark, upto_batch)``, by default ``compact_index_history``
+    of every root, which reads each log's layout from its directories
+    (head-only: the kept tail is renamed, never rewritten). Serving
+    results are invariant; only replay of the compacted (pre-window)
+    batches is finalized — the compact_index_history contract, wired
+    into the stream lifecycle."""
     if compact_past_batches is not None and compact_past_batches < 1:
         raise ValueError(
             "compact_past_batches must be >= 1: the newest batch must "
@@ -141,7 +132,7 @@ def _run_batchwise_ingest(
         docs_stream, checkpoint_dir, append, roots, offset=1,
         refuse_roots=roots,
     )
-    if not fired or compact_past_batches is None or compactor is None:
+    if not fired or compact_past_batches is None:
         return fired
     upto = max(fired) - compact_past_batches
     if upto < 1:  # nothing worth merging below batch 1
@@ -151,7 +142,12 @@ def _run_batchwise_ingest(
     # corpus-sized head for zero change on every drain
     head = [b for b in list_batches(roots[0]) if b <= upto]
     if head and head != [upto]:
-        compactor(docs_stream.sparkSession, upto)
+        spark = docs_stream.sparkSession
+        if compactor is not None:
+            compactor(spark, upto)
+        else:
+            for root in roots:
+                compact_index_history(spark, root, upto)
     return fired
 
 
@@ -173,18 +169,14 @@ def run_minhash_index_ingest(
         append_minhash_batch,
     )
 
-    bands = _bands_path(index_dir)
     _run_batchwise_ingest(
         docs_stream,
         checkpoint_dir,
         lambda df, bid: append_minhash_batch(
             df.sparkSession, df, index_dir, batch_id=bid
         ),
-        [bands],
+        [_bands_path(index_dir)],
         compact_past_batches=compact_past_batches,
-        compactor=lambda spark, upto: compact_index_history(
-            spark, bands, upto, partition_cols=("band",)
-        ),
     )
 
 
@@ -204,18 +196,14 @@ def run_winnow_index_ingest(
     batches ingested so far — nothing to refresh per batch."""
     from doc2dataset_spark.operators.winnow_index import append_winnow_batch
 
-    postings = postings_path(index_dir)
     _run_batchwise_ingest(
         docs_stream,
         checkpoint_dir,
         lambda df, bid: append_winnow_batch(
             df.sparkSession, df, index_dir, batch_id=bid
         ),
-        [postings],
+        [postings_path(index_dir)],
         compact_past_batches=compact_past_batches,
-        compactor=lambda spark, upto: compact_index_history(
-            spark, postings, upto
-        ),
     )
 
 
@@ -267,7 +255,7 @@ def run_cluster_ingest(
         # shared batch clock -> shared compaction horizon: the band
         # index relabels losslessly, the label log collapses to its
         # latest-wins state (each family's own verb)
-        compact_index_history(spark, bands, upto, partition_cols=("band",))
+        compact_index_history(spark, bands, upto)
         compact_labels(spark, state_dir, upto_batch=upto)
 
     _run_batchwise_ingest(

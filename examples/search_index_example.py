@@ -47,7 +47,7 @@ def main() -> None:
     # incremental: re-add the top half as if it arrived later
     mid = n.agg(F.max("vec_id")).collect()[0][0] // 2
     append_to_ivf_index(
-        spark, n.filter(F.col("vec_id") > mid), index_dir
+        spark, n.filter(F.col("vec_id") > mid), index_dir, batch_id=1
     )
     print("appended incremental batch")
 

@@ -20,27 +20,22 @@ SF_SMOKE = "/root/testdata/sf0.001"
 # (fast) tier still imports every test module at collection and keeps
 # every suite that pins RESULTS: registry gate/order/smoke, degated
 # oracle parity, plan shapes, recall floors, kernel bit-exactness, the
-# cc fixpoint, cluster-state equivalences, bench contracts. The slow
-# tier is end-to-end lifecycle coverage of the streaming twins and
-# persisted-index maintenance (ingest/delete/compaction/time-travel/
-# RTBF e2e equivalences) — multi-batch foreachBatch pipelines whose
-# wall is scheduling, not logic; their operator semantics stay pinned
-# in the fast tier by their batch-side twins.
+# cc fixpoint, cluster-state equivalences, bench contracts, and the
+# persisted-index lifecycle (build / append / compact / delete / time
+# travel of the four index families). The slow tier is end-to-end
+# coverage of the streaming twins, the hypertable RTBF and the
+# property / retry / dataset-format suites — mostly multi-batch
+# foreachBatch pipelines whose wall is scheduling, not logic; their
+# operator semantics stay pinned in the fast tier by their batch-side
+# twins.
 SLOW_TIER = {
     "test_streaming_asof.py",
     "test_hypertable_rtbf.py",
-    "test_index_delete.py",
-    "test_winnow_index.py",
-    "test_time_travel.py",
-    "test_minhash_index.py",
     "test_streaming_hypertable.py",
-    "test_index_maintenance.py",
     "test_property_text.py",
     "test_property_cc_wat.py",
     "test_property_multimodal.py",
-    "test_text_index.py",
     "test_streaming.py",
-    "test_vector_index.py",
     "test_task_retry.py",
     "test_webdataset_ds.py",
     "test_stateful_streaming.py",

@@ -1,12 +1,19 @@
-"""The batch log's exact landing (operators/time_travel.land_batch).
+"""The batch log's exact landing (operators/time_travel.land_batch) and
+the index lifecycle built on it.
 
-An empty recompute of a landed batch must clear it: a replay of batch 1
-that now carries no rows leaves no ``batch_id=1`` partition, no rows of
-the dead incarnation and no landing time for batch 1, in every index
-family and in the cluster-label log. Plain dynamic overwrite writes
-nothing for zero rows, so before exact landing each of these logs kept
-the dead incarnation's batch (and the text index served its doclen rows
-in BM25's n / avgdl).
+1. An empty recompute of a landed batch must clear it: a replay of
+   batch 1 that now carries no rows leaves no ``batch_id=1`` partition,
+   no rows of the dead incarnation and no landing time for batch 1, in
+   every index family and in the cluster-label log. Plain dynamic
+   overwrite writes nothing for zero rows, so before exact landing each
+   of these logs kept the dead incarnation's batch (and the text index
+   served its doclen rows in BM25's n / avgdl).
+2. A rebuild starts fresh history: after appends and a compaction, a
+   build leaves batch 0 only, one landing time, no compaction horizon,
+   and an as-of-0 read serves the whole index.
+3. Compaction and deletion keep a family's layout without being told
+   it: the band, tb and cent_id sub-partitions survive both, and the
+   served candidates and probes are unchanged.
 """
 
 from __future__ import annotations
@@ -23,8 +30,19 @@ from doc2dataset_spark.operators import (
     vector_index,
     winnow_index,
 )
+from doc2dataset_spark.operators import index_maintenance as im
 from doc2dataset_spark.operators.index_maintenance import postings_path
-from doc2dataset_spark.operators.time_travel import batch_times, land_batch
+from doc2dataset_spark.operators.time_travel import (
+    batch_times,
+    drop_log,
+    land_batch,
+    list_batches,
+    partition_columns,
+    read_postings_asof,
+)
+from doc2dataset_spark.queries.dedup import normalized_embeddings
+from doc2dataset_spark.queries.search_extras import BM25_TOPK, QUERY_TERMS
+from doc2dataset_spark.session import load_table
 
 _TEXTS = {
     1: "the quick brown fox jumps over the lazy dog near the river bank",
@@ -132,3 +150,153 @@ def test_empty_first_landing_leaves_no_root(spark, tmp_path):
         empty = spark.createDataFrame([], "doc_id bigint, band int")
         assert land_batch(empty, root, 3, ("band",), record_time=True) == 0
         assert os.listdir(tmp_path.as_posix()) == []
+
+
+# ---------------------------------------------------------------------------
+# the index lifecycle: build, append, compact, delete, rebuild
+# ---------------------------------------------------------------------------
+SHIFT = 10**9  # appended copies of corpus rows live at id + SHIFT
+
+
+def _copies(spark, sf_dir, lo, hi):
+    """Corpus documents lo <= doc_id < hi under fresh ids: each copy
+    collides with its original in every index family."""
+    docs = load_table(spark, sf_dir, "documents")
+    return docs.filter(F.col("doc_id").between(lo, hi - 1)).select(
+        (F.col("doc_id") + SHIFT).alias("doc_id"), "text"
+    )
+
+
+def _vec_copies(spark, sf_dir, lo, hi):
+    n = normalized_embeddings(spark, sf_dir)
+    return n.filter(F.col("vec_id").between(lo, hi - 1)).select(
+        (F.col("vec_id") + SHIFT).alias("vec_id"), "ne"
+    )
+
+
+def _probe_queries(spark, sf_dir):
+    return (
+        normalized_embeddings(spark, sf_dir)
+        .filter(F.col("vec_id") < 5)
+        .select(F.col("vec_id").alias("qid"), F.col("ne").alias("qne"))
+    )
+
+
+# family -> (build, append(spark, sf_dir, d, lo, hi, batch_id),
+#            served(spark, sf_dir, d), logs(d), delete(spark, d, ids));
+#            the first log carries the landing times and the
+#            sub-partitions; winnow has no sub-partition to keep
+LIFECYCLE = {
+    "text": (
+        text_index.build_text_index,
+        lambda spark, sf, d, lo, hi, b: text_index.append_to_text_index(
+            spark, _copies(spark, sf, lo, hi), d, b
+        ),
+        lambda spark, sf, d: text_index.probe_text_index(
+            spark, d, list(QUERY_TERMS), topk=BM25_TOPK
+        ),
+        lambda d: [postings_path(d), text_index._doclen_path(d)],
+        im.delete_docs_text,
+    ),
+    "vector": (
+        vector_index.build_ivf_index,
+        lambda spark, sf, d, lo, hi, b: vector_index.append_to_ivf_index(
+            spark, _vec_copies(spark, sf, lo, hi), d, b
+        ),
+        lambda spark, sf, d: vector_index.probe_ivf_index(
+            spark, d, _probe_queries(spark, sf), nprobe=2
+        ),
+        lambda d: [postings_path(d)],
+        im.delete_vecs_ivf,
+    ),
+    "minhash": (
+        minhash_index.build_minhash_index,
+        lambda spark, sf, d, lo, hi, b: minhash_index.append_minhash_batch(
+            spark, _copies(spark, sf, lo, hi), d, b
+        ),
+        lambda spark, sf, d: minhash_index.candidates_from_index(spark, d),
+        lambda d: [minhash_index._bands_path(d)],
+        im.delete_docs_minhash,
+    ),
+    "winnow": (
+        winnow_index.build_winnow_index,
+        lambda spark, sf, d, lo, hi, b: winnow_index.append_winnow_batch(
+            spark, _copies(spark, sf, lo, hi), d, b
+        ),
+        None,
+        lambda d: [postings_path(d)],
+        None,
+    ),
+}
+
+
+def _served(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
+@pytest.mark.parametrize("family", list(LIFECYCLE))
+def test_rebuild_starts_fresh_history(spark, sf_dir, tmp_path, family):
+    """Build, append batches 1 and 2, compact up to batch 1, build
+    again: only batch 0 is left in every log, it is the only landing
+    time, no compaction horizon survives, and an as-of-0 read serves
+    every row."""
+    build, append, _, logs, _ = LIFECYCLE[family]
+    d = (tmp_path / "idx").as_posix()
+    build(spark, sf_dir, d)
+    append(spark, sf_dir, d, 0, 10, 1)
+    append(spark, sf_dir, d, 10, 20, 2)
+    for root in logs(d):
+        im.compact_index_history(spark, root, upto_batch=1)
+    build(spark, sf_dir, d)
+
+    for root in logs(d):
+        assert list_batches(root) == [0], root
+        assert not os.path.exists(im.horizon_marker(root)), root
+        assert (
+            read_postings_asof(spark, root, 0).count()
+            == spark.read.parquet(root).count()
+        ), root
+    assert set(batch_times(logs(d)[0])) == {0}
+    if family == "text":
+        stats = spark.read.parquet(text_index._stats_path(d)).first()
+        assert stats["n"] == load_table(spark, sf_dir, "documents").count()
+
+
+@pytest.mark.parametrize(
+    "family, col", [("minhash", "band"), ("text", "tb"), ("vector", "cent_id")]
+)
+def test_compaction_and_deletion_keep_the_layout(
+    spark, sf_dir, tmp_path, family, col
+):
+    """Neither verb is told the sub-partition column: compacting the
+    appended history serves the same result, and deleting the appended
+    copies serves the freshly built index's result again."""
+    build, append, served, logs, delete = LIFECYCLE[family]
+    d = (tmp_path / "idx").as_posix()
+    log = logs(d)[0]
+    build(spark, sf_dir, d)
+    base = _served(served(spark, sf_dir, d))
+    append(spark, sf_dir, d, 0, 10, 1)
+    append(spark, sf_dir, d, 10, 20, 2)
+    appended = _served(served(spark, sf_dir, d))
+    assert appended != base  # the copies collide with their originals
+
+    im.compact_index_history(spark, log, upto_batch=1)
+    assert list_batches(log) == [1, 2]
+    assert partition_columns(log) == (col,)
+    assert _served(served(spark, sf_dir, d)) == appended
+
+    delete(spark, d, [i + SHIFT for i in range(20)])
+    assert partition_columns(log) == (col,)
+    assert _served(served(spark, sf_dir, d)) == base
+
+
+def test_drop_log_refuses_over_compaction_debris(tmp_path):
+    """A crashed compaction swap leaves ``__old_compact``: dropping the
+    log then must refuse (as compacting it does) and remove nothing."""
+    root = (tmp_path / "log").as_posix()
+    os.makedirs(f"{root}/batch_id=0")
+    os.makedirs(f"{root}__old_compact")
+    with pytest.raises(RuntimeError, match="recover_compaction"):
+        drop_log(root)
+    assert os.path.isdir(f"{root}/batch_id=0")

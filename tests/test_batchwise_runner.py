@@ -10,9 +10,11 @@
    micro-batch sink wiring; outside the batch-log layer
    (operators/time_travel.py) no module spells a ``batch_id=``
    partition or lands one with the dynamic-overwrite option, which only
-   the sink writer and ``delete_from_postings`` share; and the retired
-   private listing / snapshot helpers are spelled nowhere (code only;
-   docstrings and comments are free to name them).
+   the sink writer and ``delete_from_postings`` share; only the landing
+   records a landing time; only an index family's append spells its
+   sub-partition columns; and the retired private listing / snapshot
+   helpers are spelled nowhere (code only; docstrings and comments are
+   free to name them).
 """
 
 from __future__ import annotations
@@ -242,6 +244,18 @@ def test_micro_batch_wiring_lives_in_run_batchwise():
         # the retired private listing and snapshot helpers
         "_batch_of": set(),
         "_latest_snapshot_batch": set(),
+        # landing times are recorded by the landing alone, and a rebuild
+        # forgets them through drop_log alone
+        "record_batch_time": {"operators/time_travel.py:land_batch"},
+        "reset_batch_times": set(),
+        # a family's sub-partition layout is spelled in its append only:
+        # builds append batch 0, compaction and deletion read the layout
+        "partition_cols": {
+            "operators/time_travel.py:land_batch",
+            "operators/vector_index.py:append_to_ivf_index",
+            "operators/text_index.py:_write_index",
+            "operators/minhash_index.py:append_minhash_batch",
+        },
     }
     for word, allowed in cases.items():
         assert _spellings(word, PKG) == allowed, word

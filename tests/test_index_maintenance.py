@@ -68,9 +68,7 @@ def test_minhash_history_compaction_preserves_serving(
     tail_before = file_inventory(
         os.path.join(_bands_path(idx), "batch_id=2")
     )
-    stats = compact_index_history(
-        spark, _bands_path(idx), upto_batch=1, partition_cols=("band",)
-    )
+    stats = compact_index_history(spark, _bands_path(idx), upto_batch=1)
     # batches 0+1 merged into batch_id=1; batch 2 untouched — as BYTES:
     # head-only compaction renames the tail dir, never rewrites it
     assert _batch_dirs(_bands_path(idx)) == ["batch_id=1", "batch_id=2"]

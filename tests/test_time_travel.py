@@ -72,7 +72,7 @@ def test_compaction_forecloses_only_pre_horizon_snapshots(
     full = _three_batch_index(spark, sf_dir, str(tmp_path / "full"))
     prefix = _prefix_index(spark, sf_dir, str(tmp_path / "prefix"))
     root = _bands_path(full)
-    compact_index_history(spark, root, upto_batch=1, partition_cols=("band",))
+    compact_index_history(spark, root, upto_batch=1)
     # snapshots at/after the horizon survive compaction content-exact
     # (old rows now carry the merged head's batch id — compare content)
     asof = read_postings_asof(spark, root, 1).drop("batch_id")
@@ -249,7 +249,7 @@ def test_asof_ts_horizon_refusal_and_manifest_rules(spark, sf_dir, tmp_path):
     # discipline), and a stuttering event clock clamps up (monotone)
     assert record_batch_time(root, 1, ts_us=123) == t[1]
     assert record_batch_time(root, 3, ts_us=t[0] - 50) >= t[2]
-    compact_index_history(spark, root, upto_batch=1, partition_cols=("band",))
+    compact_index_history(spark, root, upto_batch=1)
     # a timestamp resolving into finalized history refuses downstream
     with pytest.raises(ValueError, match="compaction horizon"):
         read_postings_asof_ts(spark, root, t[0])
