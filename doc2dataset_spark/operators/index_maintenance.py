@@ -87,6 +87,7 @@ from pyspark.sql import functions as F
 from doc2dataset_spark import fsio
 from doc2dataset_spark.operators.time_travel import (
     batch_dir,
+    batch_path,
     list_batches,
     partition_columns,
 )
@@ -396,8 +397,10 @@ def delete_from_postings(
     EMPTY by the deletion are removed explicitly — dynamic overwrite
     only replaces partitions present in the written data, so an
     all-rows-deleted partition would otherwise silently keep its old
-    files (the failure this function exists to prevent). At 100 TB a
-    deletion touches O(partitions containing the keys), not O(index).
+    files (the failure this function exists to prevent); a
+    ``batch_id=<n>`` directory left with no sub-partition goes too. At
+    100 TB a deletion touches O(partitions containing the keys), not
+    O(index).
 
     Crash contract: survivors are rewritten BEFORE empty partitions are
     removed; a crash in between leaves only already-emptied partitions'
@@ -494,6 +497,14 @@ def delete_from_postings(
         if fs.exists(dirpath):
             fs.rm(dirpath, recursive=True)
             removed += 1
+    # a batch whose every sub-partition went leaves its batch_id=<n>
+    # directory empty: remove it too, so the log lists no batch it
+    # holds no rows of
+    if len(parts) > 1:
+        for b in {combo[0] for combo in affected}:
+            bdir = batch_path(p, b)
+            if fs.exists(bdir) and not fs.ls(bdir):
+                fs.rm(bdir, recursive=True)
     return {
         "rows_deleted": n_before - n_after,
         "partitions_rewritten": len(kept_combos),

@@ -73,17 +73,14 @@ def build_text_index(
     spark: SparkSession, sf_dir: str, index_dir: str
 ) -> None:
     """Tokenize the documents table once and persist postings (term-
-    bucketed), document lengths, and corpus stats: the three are dropped
-    and the whole corpus lands as batch 0 through the append's write, so
-    a rebuild keeps none of the old index's batches."""
+    bucketed), document lengths, and corpus stats: the two batch logs
+    are dropped and the whole corpus lands as batch 0 through the
+    append's write, so a rebuild keeps none of the old index's batches
+    (the one-row stats is overwritten by the append's refresh)."""
     from doc2dataset_spark.session import load_table
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    for root in (
-        postings_path(index_dir),
-        _doclen_path(index_dir),
-        _stats_path(index_dir),
-    ):
+    for root in (postings_path(index_dir), _doclen_path(index_dir)):
         drop_log(root)
     _write_index(docs, index_dir, batch_id=0)
 

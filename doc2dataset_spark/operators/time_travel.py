@@ -141,20 +141,21 @@ def partition_columns(root: str) -> tuple[str, ...]:
     """The sub-partition columns under ``batch_id`` in the log at
     ``root`` (band / tb / cent_id, or none), read from the log itself:
     one listing per level, down the first ``<col>=<v>`` directory of the
-    oldest batch (part files never carry a ``=``). () when the log
-    holds no batch."""
-    ids = list_batches(root)
-    if not ids:
-        return ()
+    oldest batch that holds anything (part files never carry a ``=``;
+    an emptied batch directory says nothing about the layout). () when
+    the log holds no rows."""
     fs, p = fsio.url_to_fs(root)
-    level, cols = batch_path(p, ids[0]), []
-    while True:
-        names = [str(e).rstrip("/").rsplit("/", 1)[-1] for e in fs.ls(level)]
-        subs = [n for n in names if "=" in n]
-        if not subs:
-            return tuple(cols)
-        cols.append(subs[0].split("=", 1)[0])
-        level = f"{level}/{subs[0]}"
+    for b in list_batches(root):
+        level, cols = batch_path(p, b), []
+        while names := [
+            str(e).rstrip("/").rsplit("/", 1)[-1] for e in fs.ls(level)
+        ]:
+            subs = [n for n in names if "=" in n]
+            if not subs:
+                return tuple(cols)
+            cols.append(subs[0].split("=", 1)[0])
+            level = f"{level}/{subs[0]}"
+    return ()
 
 
 def drop_log(root: str) -> None:

@@ -13,7 +13,8 @@ the index lifecycle built on it.
    and an as-of-0 read serves the whole index.
 3. Compaction and deletion keep a family's layout without being told
    it: the band, tb and cent_id sub-partitions survive both, and the
-   served candidates and probes are unchanged.
+   served candidates and probes are unchanged — also after every
+   document of the oldest batch is forgotten.
 """
 
 from __future__ import annotations
@@ -289,6 +290,63 @@ def test_compaction_and_deletion_keep_the_layout(
     delete(spark, d, [i + SHIFT for i in range(20)])
     assert partition_columns(log) == (col,)
     assert _served(served(spark, sf_dir, d)) == base
+
+
+@pytest.mark.parametrize(
+    "family, col, key",
+    [("minhash", "band", "doc_id"), ("text", "tb", "doc_id"),
+     ("vector", "cent_id", "vec_id")],
+)
+def test_forgetting_the_oldest_batch_keeps_the_layout(
+    spark, sf_dir, tmp_path, family, col, key
+):
+    """Forget every document of batch 0: its emptied directory goes
+    with its sub-partitions, so the layout is still read from the log,
+    and a compaction and a second deletion keep it — the log then holds
+    exactly the surviving rows and still serves."""
+    build, append, served, logs, delete = LIFECYCLE[family]
+    d = (tmp_path / "idx").as_posix()
+    log = logs(d)[0]
+    build(spark, sf_dir, d)
+    append(spark, sf_dir, d, 0, 10, 1)
+    append(spark, sf_dir, d, 10, 20, 2)
+    posts = spark.read.parquet(log)
+    delete(spark, d, [
+        r[0] for r in posts.filter("batch_id = 0").select(key).distinct()
+        .collect()
+    ])
+    assert list_batches(log) == [1, 2]
+    assert partition_columns(log) == (col,)
+    forgotten = _served(served(spark, sf_dir, d))
+
+    im.compact_index_history(spark, log, upto_batch=2)
+    assert partition_columns(log) == (col,)
+    assert _served(served(spark, sf_dir, d)) == forgotten
+
+    gone = [i + SHIFT for i in range(10)]
+    survivors = _served(
+        spark.read.parquet(log).drop("batch_id")
+        .filter(~F.col(key).isin(gone))
+    )
+    delete(spark, d, gone)
+    assert partition_columns(log) == (col,)
+    assert _served(spark.read.parquet(log).drop("batch_id")) == survivors
+    served(spark, sf_dir, d).collect()
+
+
+def test_partition_columns_skips_an_emptied_batch(tmp_path):
+    """An empty ``batch_id=<n>`` directory (a deletion that crashed
+    before removing it) says nothing about the layout: the columns come
+    from the next batch that holds rows; a flat log reads as ()."""
+    root = (tmp_path / "log").as_posix()
+    os.makedirs(f"{root}/batch_id=0")
+    os.makedirs(f"{root}/batch_id=1/band=3")
+    open(f"{root}/batch_id=1/band=3/part-0.parquet", "w").close()
+    assert partition_columns(root) == ("band",)
+    flat = (tmp_path / "flat").as_posix()
+    os.makedirs(f"{flat}/batch_id=0")
+    open(f"{flat}/batch_id=0/part-0.parquet", "w").close()
+    assert partition_columns(flat) == ()
 
 
 def test_drop_log_refuses_over_compaction_debris(tmp_path):
