@@ -10,8 +10,8 @@ back ONLY the candidate pairs touching a new batch
 corpus to absorb them throws that pruning away.
 
 This module keeps the cluster labels AS STATE and folds each batch's new
-pairs in by running the identical label propagation on just the
-AFFECTED SUBGRAPH:
+pairs in by running the identical connected-components fixpoint on just
+the AFFECTED SUBGRAPH:
 
     state_dir/labels/  batch_id=<b>/*.parquet  — (doc_id, cluster_id)
 

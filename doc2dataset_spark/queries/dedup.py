@@ -28,6 +28,8 @@ from __future__ import annotations
 
 import random
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import functions as F
 
 from doc2dataset_spark.queries.core import query
@@ -732,20 +734,25 @@ def dedup_cluster_cc(spark, sf_dir):
     dup cluster labeled with the cluster's minimal doc_id — the step that
     turns pairwise dedup output into keep/drop decisions.
 
-    Alternating large-star/small-star (see cc_labels_from_pairs): each
-    round restructures the pair graph toward min-rooted stars instead of
-    propagating labels along edges, so the round count is O(log² n) on
-    ANY component shape — measured 10 → 4 rounds and −28% wall at
-    sf0.5, where every label-propagation lever (Observation fusion,
-    edge pre-partitioning, deeper pointer jumping) had measured flat or
-    worse in round 15. All data stays distributed, each round is
-    edge-sized and shuffle-keyed by node with map-side-combined mins,
-    and lineage is cut via localCheckpoint so plans don't grow with
-    iterations. The fixpoint (min id per component) is independent of
-    the propagation schedule, so DuckDB's recursive-CTE transitive
-    closure remains the exact oracle."""
+    Two paths (see cc_labels_from_pairs): an edge set of at most
+    ``CC_DRIVER_EDGES`` pairs is pulled once and finished with a
+    union-find on the driver; a larger one runs large-star/small-star
+    rounds until a round's edge set fits the budget, then hands off to
+    the same union-find. At small scale the job count, not the row
+    count, bounds this query: 725 pairs at sf0.01 and 83,078 at sf0.1
+    both take the driver path, 10 Spark jobs per pass including the
+    SimHash pairs. The fixpoint (min id per component) is independent of
+    the schedule, so DuckDB's recursive-CTE transitive closure remains
+    the exact oracle."""
     pairs = dedup_simhash_pairs(spark, sf_dir).select("da", "db")
     return cc_labels_from_pairs(pairs)
+
+
+# Largest edge set that connected components finish on the driver. The
+# union-find over 2^20 random edges takes 1.5 s and 320 MB peak RSS on a
+# 4 vCPU host; a driver-side label propagation would need O(diameter)
+# rounds instead.
+CC_DRIVER_EDGES = 1 << 20
 
 
 def cc_labels_from_pairs(pairs):
@@ -755,15 +762,20 @@ def cc_labels_from_pairs(pairs):
     (operators/cluster_state.py) runs the IDENTICAL algorithm on its
     affected subgraphs. Only docs appearing in pairs get a row.
 
-    Alternating large-star/small-star (Kiveris et al., "Connected
-    Components in MapReduce and Beyond", SoCC 2014), replacing the
-    min-label propagation + 2-hop pointer jumping this function used
-    through round 15. Propagation rounds are bound by edge hops (the
-    round-15 measurement: deeper pointer jumping left 10 rounds at
-    10 at sf0.5 while doubling wall), whereas star alternation
-    restructures the graph itself each round and provably converges in
-    O(log² n) alternations — measured 10 → 4 rounds and 17.4 → 12.5 s
-    for the full query at sf0.5, identical label hashes at every SF.
+    The pairs are oriented (src = max, dst = min) and checkpointed once;
+    then ``limit(CC_DRIVER_EDGES + 1)`` of them is pulled through Arrow.
+
+    - Driver path: a pull of at most ``CC_DRIVER_EDGES`` rows is the
+      whole edge list. ``_union_find_roots`` labels its nodes and the
+      labels come back through an Arrow ``createDataFrame``.
+    - Star path: otherwise, alternating large-star/small-star (Kiveris
+      et al., "Connected Components in MapReduce and Beyond", SoCC 2014)
+      runs until the edge set is a min-rooted star forest, or until a
+      round's edge set fits the budget. In the second case the round's
+      edges are pulled and finished by the same union-find. Both star
+      operations keep the node set and the component partition, so the
+      handoff is exact. The edge count comes from the forest test's
+      aggregate, so the check adds no job.
 
     Shape per alternation (everything edge-sized, mins map-side
     combinable so a giant cluster's hot center never ships its degree
@@ -775,20 +787,29 @@ def cc_labels_from_pairs(pairs):
       itself) to the min of that set — then distinct.
     - convergence: one aggregate proves the exact fixpoint — the edge
       set is a min-rooted star forest iff every src has exactly one
-      edge and no node is both a src and a dst (both ops preserve the
-      component partition and the node set, and orientation makes each
+      edge and no node is both a src and a dst (orientation makes each
       star's center its component minimum, so the test passing IS
       result correctness — no sum-collision risk, unlike a probe).
+    On the star path the node universe comes from the checkpointed
+    pairs, and a node that is not a src of any final edge (a star
+    center, or a node seen only in a self-pair) labels itself.
     The fixpoint (min id per component) is schedule-independent, so
     DuckDB's recursive-CTE transitive closure remains the exact oracle.
     """
+    spark = pairs.sparkSession
     # orient (src = max, dst = min) in one pass; self-pairs drop out of
-    # the loop but their endpoints stay in the node universe below
+    # the star loop but their endpoints stay in the node universe
     ini = pairs.select(
         F.greatest("da", "db").alias("src"), F.least("da", "db").alias("dst")
     ).localCheckpoint(eager=True)
+    pulled = ini.limit(CC_DRIVER_EDGES + 1).toArrow()
+    if pulled.num_rows <= CC_DRIVER_EDGES:
+        nodes, roots = _union_find_roots(pulled)
+        return spark.createDataFrame(
+            pa.table({"doc_id": nodes, "cluster_id": roots}),
+            "doc_id bigint, cluster_id bigint",
+        )
     edges = ini.filter(F.col("src") != F.col("dst"))
-    converged = False
     for _ in range(50):  # paper bound is O(log² n); observed 4 at sf0.5
         sym = edges.union(
             edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
@@ -824,10 +845,18 @@ def cc_labels_from_pairs(pairs):
             .where(F.col("src") != F.col("dst"))
         )
         edges = ss.distinct().localCheckpoint(eager=True)
-        if _is_min_star_forest(edges):
-            converged = True
+        forest, n_edges = _star_forest_check(edges)
+        if forest:
             break
-    if not converged:  # pragma: no cover - the paper's convergence bound
+        if n_edges <= CC_DRIVER_EDGES:
+            nodes, roots = _union_find_roots(edges.toArrow())
+            keep = nodes != roots  # a root labels itself below
+            edges = spark.createDataFrame(
+                pa.table({"src": nodes[keep], "dst": roots[keep]}),
+                "src bigint, dst bigint",
+            )
+            break
+    else:  # pragma: no cover - the paper's convergence bound
         raise RuntimeError(
             "large-star/small-star did not converge in 50 alternations"
         )
@@ -843,13 +872,42 @@ def cc_labels_from_pairs(pairs):
     )
 
 
-def _is_min_star_forest(edges):
-    """Exact convergence test for the star alternation: edges (oriented
-    src > dst) form a min-rooted star forest iff every src has exactly
-    one edge AND no node appears as both a src and a dst. One aggregate
-    job over the checkpointed frame: explode each edge into two
-    (node, role) rows, count roles per node (map-side combinable),
-    reduce to two scalars. Empty edge set = empty forest = converged."""
+def _union_find_roots(edges):
+    """(nodes, roots) of an Arrow (src, dst) edge table: every node once,
+    ascending, with the min node of its connected component. Ids are
+    compacted to 0..n-1 in ascending order, so linking the larger root
+    under the smaller keeps every parent at or below its child, and one
+    ascending pass then resolves each node from its already-resolved
+    parent. Path halving keeps the finds short."""
+    src = edges.column("src").to_numpy()
+    dst = edges.column("dst").to_numpy()
+    nodes, inv = np.unique(np.concatenate([src, dst]), return_inverse=True)
+    nodes = nodes.astype(np.int64, copy=False)
+    parent = list(range(len(nodes)))
+    m = len(src)
+    for x, y in zip(inv[:m].tolist(), inv[m:].tolist()):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        while parent[y] != y:
+            parent[y] = parent[parent[y]]
+            y = parent[y]
+        if x < y:
+            parent[y] = x
+        elif y < x:
+            parent[x] = y
+    for i in range(len(parent)):
+        parent[i] = parent[parent[i]]
+    return nodes, nodes[np.asarray(parent, dtype=np.int64)]
+
+
+def _star_forest_check(edges):
+    """(is a min-rooted star forest, edge count) of edges oriented
+    src > dst: a star forest iff every src has exactly one edge AND no
+    node appears as both a src and a dst. One aggregate job over the
+    checkpointed frame: explode each edge into two (node, role) rows,
+    count roles per node (map-side combinable), reduce to three scalars.
+    Empty edge set = empty forest = converged."""
     row = (
         edges.select(
             F.explode(
@@ -875,10 +933,13 @@ def _is_min_star_forest(edges):
             F.max(
                 F.when((F.col("ns") > 0) & (F.col("nd") > 0), 1).otherwise(0)
             ).alias("ov"),
+            F.sum("ns").alias("n"),
         )
         .collect()[0]
     )
-    return row["mx"] is None or (row["mx"] <= 1 and row["ov"] == 0)
+    if row["mx"] is None:
+        return True, 0
+    return row["mx"] <= 1 and row["ov"] == 0, row["n"]
 
 
 # ---------------------------------------------------------------------------
