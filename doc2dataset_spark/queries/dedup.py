@@ -737,11 +737,10 @@ def dedup_cluster_cc(spark, sf_dir):
     Two paths (see cc_labels_from_pairs): an edge set of at most
     ``CC_DRIVER_EDGES`` pairs is pulled once and finished with a
     union-find on the driver; a larger one runs large-star/small-star
-    rounds until a round's edge set fits the budget, then hands off to
-    the same union-find. At small scale the job count, not the row
-    count, bounds this query: 725 pairs at sf0.01 and 83,078 at sf0.1
-    both take the driver path, 10 Spark jobs per pass including the
-    SimHash pairs. The fixpoint (min id per component) is independent of
+    rounds to a min-rooted star forest. At small scale the job count,
+    not the row count, bounds this query: 725 pairs at sf0.01 and
+    83,078 at sf0.1 both take the driver path, 10 Spark jobs per pass
+    including the SimHash pairs. The fixpoint (min id per component) is independent of
     the schedule, so DuckDB's recursive-CTE transitive closure remains
     the exact oracle."""
     pairs = dedup_simhash_pairs(spark, sf_dir).select("da", "db")
@@ -768,14 +767,10 @@ def cc_labels_from_pairs(pairs):
     - Driver path: a pull of at most ``CC_DRIVER_EDGES`` rows is the
       whole edge list. ``_union_find_roots`` labels its nodes and the
       labels come back through an Arrow ``createDataFrame``.
-    - Star path: otherwise, alternating large-star/small-star (Kiveris
-      et al., "Connected Components in MapReduce and Beyond", SoCC 2014)
-      runs until the edge set is a min-rooted star forest, or until a
-      round's edge set fits the budget. In the second case the round's
-      edges are pulled and finished by the same union-find. Both star
-      operations keep the node set and the component partition, so the
-      handoff is exact. The edge count comes from the forest test's
-      aggregate, so the check adds no job.
+    - Star path: otherwise the pull is dropped, and alternating
+      large-star/small-star (Kiveris et al., "Connected Components in
+      MapReduce and Beyond", SoCC 2014) runs until the edge set is a
+      min-rooted star forest. It stays distributed to the end.
 
     Shape per alternation (everything edge-sized, mins map-side
     combinable so a giant cluster's hot center never ships its degree
@@ -787,18 +782,16 @@ def cc_labels_from_pairs(pairs):
       itself) to the min of that set — then distinct.
     - convergence: one aggregate proves the exact fixpoint — the edge
       set is a min-rooted star forest iff every src has exactly one
-      edge and no node is both a src and a dst (orientation makes each
+      edge and no node is both a src and a dst (both ops preserve the
+      component partition and the node set, and orientation makes each
       star's center its component minimum, so the test passing IS
       result correctness — no sum-collision risk, unlike a probe).
-    On the star path the node universe comes from the checkpointed
-    pairs, and a node that is not a src of any final edge (a star
-    center, or a node seen only in a self-pair) labels itself.
     The fixpoint (min id per component) is schedule-independent, so
     DuckDB's recursive-CTE transitive closure remains the exact oracle.
     """
     spark = pairs.sparkSession
     # orient (src = max, dst = min) in one pass; self-pairs drop out of
-    # the star loop but their endpoints stay in the node universe
+    # the loop but their endpoints stay in the node universe below
     ini = pairs.select(
         F.greatest("da", "db").alias("src"), F.least("da", "db").alias("dst")
     ).localCheckpoint(eager=True)
@@ -810,6 +803,7 @@ def cc_labels_from_pairs(pairs):
             "doc_id bigint, cluster_id bigint",
         )
     edges = ini.filter(F.col("src") != F.col("dst"))
+    converged = False
     for _ in range(50):  # paper bound is O(log² n); observed 4 at sf0.5
         sym = edges.union(
             edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
@@ -845,18 +839,10 @@ def cc_labels_from_pairs(pairs):
             .where(F.col("src") != F.col("dst"))
         )
         edges = ss.distinct().localCheckpoint(eager=True)
-        forest, n_edges = _star_forest_check(edges)
-        if forest:
+        if _is_min_star_forest(edges):
+            converged = True
             break
-        if n_edges <= CC_DRIVER_EDGES:
-            nodes, roots = _union_find_roots(edges.toArrow())
-            keep = nodes != roots  # a root labels itself below
-            edges = spark.createDataFrame(
-                pa.table({"src": nodes[keep], "dst": roots[keep]}),
-                "src bigint, dst bigint",
-            )
-            break
-    else:  # pragma: no cover - the paper's convergence bound
+    if not converged:  # pragma: no cover - the paper's convergence bound
         raise RuntimeError(
             "large-star/small-star did not converge in 50 alternations"
         )
@@ -901,13 +887,13 @@ def _union_find_roots(edges):
     return nodes, nodes[np.asarray(parent, dtype=np.int64)]
 
 
-def _star_forest_check(edges):
-    """(is a min-rooted star forest, edge count) of edges oriented
-    src > dst: a star forest iff every src has exactly one edge AND no
-    node appears as both a src and a dst. One aggregate job over the
-    checkpointed frame: explode each edge into two (node, role) rows,
-    count roles per node (map-side combinable), reduce to three scalars.
-    Empty edge set = empty forest = converged."""
+def _is_min_star_forest(edges):
+    """Exact convergence test for the star alternation: edges (oriented
+    src > dst) form a min-rooted star forest iff every src has exactly
+    one edge AND no node appears as both a src and a dst. One aggregate
+    job over the checkpointed frame: explode each edge into two
+    (node, role) rows, count roles per node (map-side combinable),
+    reduce to two scalars. Empty edge set = empty forest = converged."""
     row = (
         edges.select(
             F.explode(
@@ -933,13 +919,10 @@ def _star_forest_check(edges):
             F.max(
                 F.when((F.col("ns") > 0) & (F.col("nd") > 0), 1).otherwise(0)
             ).alias("ov"),
-            F.sum("ns").alias("n"),
         )
         .collect()[0]
     )
-    if row["mx"] is None:
-        return True, 0
-    return row["mx"] <= 1 and row["ov"] == 0, row["n"]
+    return row["mx"] is None or (row["mx"] <= 1 and row["ov"] == 0)
 
 
 # ---------------------------------------------------------------------------

@@ -1,17 +1,12 @@
 """cc_labels_from_pairs on both of its paths — pins the internals the
 oracle rows can't see: the exact star-forest convergence test, and the
 label fixpoint on adversarial small graphs (chains, merged components,
-self-pairs, duplicate and reversed duplicate edges), each run three
+self-pairs, duplicate and reversed duplicate edges), each run both
 ways against the brute-force ``_expected``:
 
 - driver: the default ``CC_DRIVER_EDGES``, so the pairs are pulled once
   and finished by the union-find;
-- star: budget 0, so large-star/small-star runs to a star forest;
-- handoff: budget one below the row count, so the star loop starts and
-  hands its edges to the union-find once a round's edge set fits.
-  A forest input keeps n - c edges every round and never fits; every
-  redundant row (duplicate, reversed, self-pair, cycle edge) opens the
-  handoff."""
+- star: budget 0, so large-star/small-star runs to a star forest."""
 
 from __future__ import annotations
 
@@ -23,7 +18,7 @@ from pyspark.sql import functions as F
 
 from doc2dataset_spark.queries import dedup
 from doc2dataset_spark.queries.dedup import (
-    _star_forest_check,
+    _is_min_star_forest,
     cc_labels_from_pairs,
 )
 
@@ -42,7 +37,7 @@ def _run(spark, rows, budget=None):
     """(sorted labels, per-round forest checks, union-find edge counts)
     of one cc_labels_from_pairs call at ``budget`` (None = default)."""
     rounds, finishes = [], []
-    check, union_find = dedup._star_forest_check, dedup._union_find_roots
+    check, union_find = dedup._is_min_star_forest, dedup._union_find_roots
 
     def spy_check(edges):
         rounds.append(check(edges))
@@ -53,7 +48,7 @@ def _run(spark, rows, budget=None):
         return union_find(edges)
 
     with pytest.MonkeyPatch.context() as mp:
-        mp.setattr(dedup, "_star_forest_check", spy_check)
+        mp.setattr(dedup, "_is_min_star_forest", spy_check)
         mp.setattr(dedup, "_union_find_roots", spy_union_find)
         if budget is not None:
             mp.setattr(dedup, "CC_DRIVER_EDGES", budget)
@@ -65,14 +60,13 @@ def _run(spark, rows, budget=None):
 def _labels(spark, rows):
     """Labels on every path; each path must equal the brute force."""
     want = _expected(rows)
-    budgets = {"driver": None, "star": 0, "handoff": max(len(rows) - 1, 0)}
-    for mode, budget in budgets.items():
+    for mode, budget in {"driver": None, "star": 0}.items():
         got, rounds, finishes = _run(spark, rows, budget)
         assert got == want, mode
         if mode == "driver":
             assert rounds == [] and finishes == [len(rows)]
-        elif mode == "star" and rows:
-            assert rounds[-1][0] and finishes == []
+        elif rows:
+            assert rounds[-1] and finishes == []
     return want
 
 
@@ -134,19 +128,7 @@ def test_empty_pairs(spark):
     # star loop even over an empty edge set
     assert _labels(spark, []) == []
     got, rounds, finishes = _run(spark, [], budget=-1)
-    assert got == [] and rounds == [(True, 0)] and finishes == []
-
-
-def test_handoff_after_one_star_round(spark):
-    # every link twice: 2(n - 1) rows enter the star loop, round one's
-    # distinct edge set (n - 1) fits the budget but is not yet a star
-    # forest, so the union-find finishes exactly that edge set
-    chain = _shuffled_chain(300, seed=3)
-    rows = chain + [(b, a) for a, b in chain]
-    got, rounds, finishes = _run(spark, rows, budget=len(rows) - 1)
-    assert got == _expected(rows)
-    assert rounds == [(False, len(chain))]
-    assert finishes == [len(chain)]
+    assert got == [] and rounds == [True] and finishes == []
 
 
 _GRAPHS = st.lists(
@@ -161,24 +143,22 @@ def test_random_graphs_every_path(spark, rows):
 
 
 def test_min_star_forest_accepts_star(spark):
-    assert _star_forest_check(
+    assert _is_min_star_forest(
         _edges(spark, [(2, 1), (3, 1), (9, 7), (8, 7)])
-    ) == (True, 4)
+    )
 
 
 def test_min_star_forest_rejects_chain(spark):
     # 3 -> 2 -> 1: node 2 is both a src and a dst
-    assert _star_forest_check(_edges(spark, [(3, 2), (2, 1)])) == (False, 2)
+    assert not _is_min_star_forest(_edges(spark, [(3, 2), (2, 1)]))
 
 
 def test_min_star_forest_rejects_multi_edge_src(spark):
     # src 3 still carries two edges: not yet a star forest
-    assert _star_forest_check(
-        _edges(spark, [(3, 1), (3, 2), (2, 1)])
-    ) == (False, 3)
+    assert not _is_min_star_forest(_edges(spark, [(3, 1), (3, 2), (2, 1)]))
 
 
 def test_min_star_forest_accepts_empty(spark):
-    assert _star_forest_check(
+    assert _is_min_star_forest(
         _edges(spark, []).filter(F.col("src") > 0)
-    ) == (True, 0)
+    )
