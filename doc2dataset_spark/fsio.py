@@ -224,14 +224,21 @@ def url_to_fs(path: str):
 def write_parquet_file(table, dir_path: str, filename: str) -> str:
     """Write one pyarrow Table as a parquet part file under dir_path.
     Arrow in/out (not pandas) so nested/map columns survive byte-exact —
-    pair with DataFrame.toArrow() / spark.createDataFrame(table)."""
+    pair with DataFrame.toArrow() / spark.createDataFrame(table).
+
+    The part lands whole or not at all: it is written under a hidden name
+    that does not end in ``.parquet`` (so ``read_parquet_dir`` and Spark's
+    reader skip it), then ``fs.mv``d into place. A writer that dies
+    mid-write leaves only that inert hidden file."""
     import pyarrow.parquet as pq
 
     fs, _ = url_to_fs(dir_path)
     fs.makedirs(dir_path, exist_ok=True)
     target = join(dir_path, filename)
-    with fs.open(target, "wb") as fh:
+    tmp = join(dir_path, f".{filename}.tmp")
+    with fs.open(tmp, "wb") as fh:
         pq.write_table(table, fh)
+    fs.mv(tmp, target)
     return target
 
 

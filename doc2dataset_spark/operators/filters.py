@@ -36,6 +36,9 @@ from doc2dataset_spark.functions.text import (
     remove_digits_col,
 )
 
+MSG_BLANK = "empty page"
+MSG_MAX_IMAGES = "too many images in page"
+MSG_MIN_WORDS = "too few words in page"
 STATUS_SUCCESS = "success"
 STATUS_FAILED_DOWNLOAD = "failed_to_download"
 STATUS_FAILED_EXTRACT = "failed_to_extract"
@@ -111,9 +114,9 @@ def apply_page_filters(df: DataFrame, cfg: DownloadConfig) -> DataFrame:
     error_message = (
         F.when(F.col("fetch_error").isNotNull(), F.col("fetch_error"))
         .when(F.col("doc_error").isNotNull(), F.col("doc_error"))
-        .when(is_blank, F.lit("empty page"))
-        .when(too_many_imgs, F.lit("too many images in page"))
-        .when(too_few_words, F.lit("too few words in page"))
+        .when(is_blank, F.lit(MSG_BLANK))
+        .when(too_many_imgs, F.lit(MSG_MAX_IMAGES))
+        .when(too_few_words, F.lit(MSG_MIN_WORDS))
     )
     return (
         df.withColumn("status", status)

@@ -38,39 +38,34 @@ def assign_keys(df: DataFrame, cfg: DownloadConfig) -> DataFrame:
     """Add ``shard_id`` and the zero-padded ``key`` string.
 
     Computes a DENSE global index without a global sort (the zipWithIndex
-    shape): per-partition row counts (one tiny job, one row per partition
-    on the driver) turned into broadcast offsets, plus the
+    shape): per-partition row counts (one aggregation, one row per
+    partition on the driver) turned into per-partition offsets, plus the
     partition-local index carried in ``monotonically_increasing_id``'s
     low 33 bits. Raw monotonic ids would NOT work here — partition 1
     starts at 2^33, so ``shard_id * 10^oom`` would blow past the fixed
-    zero-pad width the reference's key layout contract requires."""
+    zero-pad width the reference's key layout contract requires.
+
+    The checkpoint is lazy: the counts query materialises it, so it costs
+    no job of its own, and the key expressions below read the same ids.
+    The offsets ride the plan as one literal array indexed by partition
+    id — no offsets frame, so no join and no Python job to build one."""
     n_per_shard = cfg.number_sample_per_shard
     width = cfg.oom_sample_per_shard + cfg.oom_shard_count
     mid = F.monotonically_increasing_id()
-    df = df.withColumn("_mid", mid).localCheckpoint(eager=True)
+    df = df.withColumn("_mid", mid).localCheckpoint(eager=False)
     # _mid layout: (partition_index << 33) | partition_local_row
     pid = _mid_pid()
-    local = _mid_local()
-    counts = (
-        df.select(pid.alias("_pid"))
-        .groupBy("_pid")
-        .count()
-        .orderBy("_pid")
-        .collect()
-    )
+    counts = dict(df.groupBy(pid.alias("_pid")).count().collect())
     offsets, acc = [], 0
-    for r in counts:
-        offsets.append((r["_pid"], acc))
-        acc += r["count"]
-    spark = df.sparkSession
-    off = spark.createDataFrame(offsets, "_pid long, _off long")
-    df = (
-        df.withColumn("_pid", pid)
-        .withColumn("_local", local)
-        .join(F.broadcast(off), "_pid")
-        .withColumn("_rid", F.col("_off") + F.col("_local"))
-        .drop("_pid", "_local", "_off", "_mid")
-    )
+    for p in range(max(counts, default=0) + 1):
+        offsets.append(acc)
+        acc += counts.get(p, 0)
+    # one string literal, not one py4j call per partition; constant
+    # folding turns split + cast into a literal array before execution
+    off = F.split(F.lit(",".join(map(str, offsets))), ",").cast("array<bigint>")
+    df = df.withColumn(
+        "_rid", F.element_at(off, (pid + 1).cast("int")) + _mid_local()
+    ).drop("_mid")
     df = df.withColumn(
         "shard_id", F.expr(f"_rid DIV {n_per_shard}")
     ).withColumn(
@@ -84,12 +79,13 @@ def assign_keys(df: DataFrame, cfg: DownloadConfig) -> DataFrame:
     return df.drop("_rid")
 
 
-def filter_done_shards(df: DataFrame, done_manifest: DataFrame | None) -> DataFrame:
+def filter_done_shards(df: DataFrame, done_shards) -> DataFrame:
     """Incremental resume (reference P4, `main.py:138-151`): drop rows whose
     shard already has a stats record. The reference re-derives done shards
-    by globbing ``*.json`` filenames; here it is a left-anti join against
-    the ``_stats`` manifest — same semantics, no filename parsing."""
-    if done_manifest is None:
+    by globbing ``*.json`` filenames; here ``done_shards`` holds the
+    ``shard_id``s of the ``_stats`` manifest (None: nothing to resume) —
+    same semantics, no filename parsing. A literal IN list, not a join:
+    the manifest is already on the driver, so the filter costs no job."""
+    if not done_shards:
         return df
-    done = done_manifest.select("shard_id").distinct()
-    return df.join(done, "shard_id", "left_anti")
+    return df.filter(~F.col("shard_id").isin(sorted(set(done_shards))))

@@ -8,10 +8,14 @@ cuts jobs."""
 
 from __future__ import annotations
 
+import os
 import uuid
 
+from doc2dataset_spark.config import DownloadConfig
 from doc2dataset_spark.operators.cluster_state import apply_batch
+from doc2dataset_spark.plans.pipeline import download
 from doc2dataset_spark.queries import REGISTRY
+from tests.fixtures import build_corpus, write_url_csv
 
 # dedup_cluster_cc builds and counts in 10 jobs: the parquet listing, the
 # SimHash fingerprint checkpoint, the oriented-pair checkpoint, the pull to
@@ -19,6 +23,10 @@ from doc2dataset_spark.queries import REGISTRY
 CLUSTER_CC_JOBS = 12
 # fold 4 documents and 3 pairs into a 2-document label state: 19 jobs
 APPLY_BATCH_JOBS = 19
+# download() of the fixture corpus into parquet: the CSV header scan,
+# assign_keys' per-partition counts (2), the sink (3) and the one collect
+# of the per-shard stats (3)
+DOWNLOAD_JOBS = 9
 
 
 def _jobs(spark, action):
@@ -59,3 +67,20 @@ def test_apply_batch_job_budget(spark, tmp_path):
         ),
     )
     assert n <= APPLY_BATCH_JOBS, f"apply_batch ran {n} jobs"
+
+
+def test_download_job_budget(spark, tmp_path):
+    root = str(tmp_path)
+    urls = write_url_csv(root, build_corpus(root))
+    cfg = DownloadConfig(
+        url_list=urls,
+        output_folder=os.path.join(root, "out"),
+        input_format="csv",
+        output_format="parquet",
+        compute_hash="sha256",
+        min_words_per_page=5,
+        get_language=True,
+        number_sample_per_shard=4,
+    )
+    n = _jobs(spark, lambda: download(spark, cfg))
+    assert n <= DOWNLOAD_JOBS, f"download ran {n} jobs"

@@ -545,3 +545,104 @@ def test_real_pdf_without_fitz_names_the_cause(spark, tmp_path):
     r = rows[0].asDict()
     assert r["status"] == "failed_to_extract"
     assert "PyMuPDF" in r["error_message"] and "fitz" in r["error_message"]
+
+
+def test_download_observes_filter_drops(spark, corpus, tmp_path):
+    """download()'s own Observation counts the pages each filter dropped:
+    short (1 page) fails min words, images (2 pages of 2 images) fails
+    max_images_per_page=1, empty (1 page) is blank."""
+    root, meta = corpus
+    write_url_csv(root, meta)
+    summary = download(spark, _base_cfg(
+        root, str(tmp_path / "out"), output_format="parquet",
+        max_images_per_page=1,
+    ))
+    drops = ("drop_min_words", "drop_max_images", "drop_blank")
+    assert {k: summary[k] for k in drops} == {
+        "drop_min_words": 1, "drop_max_images": 2, "drop_blank": 1,
+    }
+
+
+@pytest.mark.parametrize("scheme", ["file", "memory"])
+def test_torn_manifest_write_leaves_no_part(spark, corpus, tmp_path,
+                                            monkeypatch, scheme):
+    """A manifest writer that dies mid-write leaves no ``.parquet`` part
+    (the part lands under a hidden temp name, then moves into place), so
+    the next download() neither trips over a torn part nor skips resume."""
+    import pyarrow.parquet as pq
+
+    from doc2dataset_spark import fsio
+
+    root, meta = corpus
+    write_url_csv(root, meta)
+    if scheme == "file":
+        out, fmt = str(tmp_path / "out"), "parquet"
+    else:
+        out, fmt = f"memory://torn-{tmp_path.name}/out", "dummy"
+    cfg = _base_cfg(root, out, output_format=fmt)
+    fs, _ = fsio.url_to_fs(out)
+
+    def torn(table, where, **kw):
+        where.write(b"PAR1 torn")
+        raise OSError("disk full")
+
+    try:
+        with monkeypatch.context() as m:
+            m.setattr(pq, "write_table", torn)
+            with pytest.raises(OSError, match="disk full"):
+                download(spark, cfg)
+        assert not [p for p in fs.find(fsio.join(out, "_stats"))
+                    if p.endswith(".parquet")]
+        summary = download(spark, cfg)
+        assert summary["rows"] == summary["count"] > 0  # every shard ran
+        parts = [p for p in fs.find(fsio.join(out, "_stats"))
+                 if p.endswith(".parquet")]
+        assert len(parts) == 1
+        assert download(spark, cfg)["rows"] == 0  # and now resumes
+    finally:
+        if scheme == "memory" and fs.exists(out):
+            fs.rm(out, recursive=True)
+
+
+def test_resume_from_a_spark_written_manifest(spark, corpus, tmp_path):
+    """An output folder whose ``_stats`` Spark's parquet writer wrote
+    (``part-*.snappy.parquet``, ``_SUCCESS``, ``.crc``) resumes: its shards
+    are not fetched again, and the roll-up sums old and new parts."""
+    import shutil
+
+    from doc2dataset_spark import fsio
+
+    root, meta = corpus
+    full = write_url_csv(str(tmp_path), meta)
+    with open(full) as fh:
+        lines = fh.readlines()
+    first8 = tmp_path / "first8.csv"  # 8 docs: exactly shards 0 and 1
+    first8.write_text("".join(lines[:9]))
+
+    def cfg(urls, out):
+        return _base_cfg(root, str(tmp_path / out), url_list=str(urls),
+                         output_format="parquet")
+
+    whole = download(spark, cfg(full, "whole"))
+    download(spark, cfg(first8, "out"))
+    stats = str(tmp_path / "out" / "_stats")
+    table = fsio.read_parquet_dir(stats)
+    shutil.rmtree(stats)
+    spark.createDataFrame(table).write.parquet(stats)
+    names = os.listdir(stats)
+    assert "_SUCCESS" in names
+    assert any(n.endswith(".crc") for n in names)
+    assert any(n.startswith("part-") and n.endswith(".snappy.parquet")
+               for n in names)
+
+    resumed = download(spark, cfg(full, "out"))
+    assert resumed["docs"] == 1  # only shard 2's one document was fetched
+    # the summary's "successes" is this run's (the Observation's)
+    keys = ("n_shards", "count", "failed_to_download", "failed_to_extract",
+            "success_ratio")
+    assert {k: resumed[k] for k in keys} == {k: whole[k] for k in keys}
+    again = download(spark, cfg(full, "out"))
+    assert again["rows"] == 0
+    assert {k: again[k] for k in keys} == {k: whole[k] for k in keys}
+    # Spark reads the old and the new parts together
+    assert spark.read.parquet(stats).select("shard_id").distinct().count() == 3
